@@ -615,8 +615,8 @@ def fulltext_query_phrase_boost(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("fulltext_query_phrase_boost_indexed", oracle=_PBOOST_ORACLE)
 def fulltext_query_phrase_boost_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The same boosted phrase off the PERSISTED index one-pass: the boost
-    folds into the constant-folded idf literal chain (bm25_scores_indexed
-    boosts), the phrase match runs as stored-position array expressions."""
+    scales idf through a per-term CASE, the phrase match runs as
+    stored-position array expressions."""
     from sparkfulltextquery_spark.functions.index import search_indexed
 
     prefix = _ensure_index(spark, sf_dir)

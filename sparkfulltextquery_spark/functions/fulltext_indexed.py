@@ -330,8 +330,8 @@ def fulltext_tfidf_top_terms_indexed(spark: SparkSession, sf_dir: str) -> DataFr
 )
 def fulltext_collapse_by_source_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Collapse-by-source with scoring served off the persisted index
-    (bm25_scores_indexed: pruned term buckets, literal df/stats, zero
-    scoring joins), then one doc-store join for the collapse dimension —
+    (bm25_scores_indexed: pruned term buckets, in-plan df, literal
+    stats, zero scoring joins), then one doc-store join for the collapse dimension —
     the same split as fulltext_faceted_search_indexed. Same result (and
     oracle) as fulltext_collapse_by_source."""
     from pyspark.sql import Window
@@ -374,7 +374,7 @@ def fulltext_prefix_search_indexed(spark: SparkSession, sf_dir: str) -> DataFram
     # explicit generous cap (ADVICE r08): this registered row's inline
     # twin has no expansion cap, so the default MAX_EXPANSIONS=1024 would
     # make only THIS side of the parity pair fail at large vocabularies —
-    # a divergence, not a safety win (the bounded two-pass protocol still
+    # a divergence, not a safety win (the resolver's aggregation still
     # bounds driver transfer to the actual match count)
     ts = resolve_expansions(
         spark, prefix, prefixes=["quer"], max_expansions=1_000_000

@@ -3,8 +3,8 @@ functions/index.py for file-size hygiene; no behavior change).
 
 Prefix / fuzzy / range / regexp / wildcard atoms rewrite to concrete
 vocabulary-term disjunctions BEFORE the inverted index is consulted —
-the Lucene MultiTermQuery discipline — via a bounded two-pass protocol
-over the doc-frequency table (or any term-column relation).
+the Lucene MultiTermQuery discipline — via one bounded aggregation over
+the doc-frequency table (or any term-column relation).
 """
 
 from __future__ import annotations
@@ -46,14 +46,11 @@ def resolve_expansions(
 
     This resolver evaluates each atom's predicate over the doc-frequency
     table instead — one row per distinct term, O(|vocab|), orders of
-    magnitude smaller than the postings — in two bounded passes:
-
-      1. a count pass (one O(|vocab|) aggregation, n_atoms counters) that
-         fails loudly if ANY atom matches more than ``max_expansions``
-         terms, BEFORE anything is collected — so driver transfer is
-         bounded by construction, never by luck;
-      2. a collect pass gathering the matched terms per atom
-         (≤ n_atoms × max_expansions rows by the gate above).
+    magnitude smaller than the postings — in ONE bounded aggregation that
+    yields, per atom, its match count and at most ``max_expansions + 1``
+    of its matched terms. An atom matching more than ``max_expansions``
+    terms fails the query loudly; the slice bounds driver transfer to
+    n_atoms × (max_expansions + 1) terms by construction, never by luck.
 
     The caller folds the concrete terms into its equality ``isin``,
     restoring bucket pruning and an equality-only posting scan. Field
@@ -168,36 +165,33 @@ def resolve_expansions_over(
     ``postings.select('term').distinct()`` on the inline path (the inline
     caller pays one corpus-derived pass it was already paying as a
     predicate scan; the win is the same bounded concrete-term list).
-    ``atoms`` is [(key, predicate Column)]. Same two-pass bounded
-    protocol and fail-loud cap as resolve_expansions."""
-    counts = vocab.agg(
+    ``atoms`` is [(key, predicate Column)]. Same bounded aggregation and
+    fail-loud cap as resolve_expansions."""
+    # ONE aggregation: per atom, its match count and at most
+    # max_expansions + 1 of its matched terms — enough to fail loudly on an
+    # over-cap atom, and a bound on what reaches the driver either way
+    row = vocab.agg(
         *[
-            F.sum(F.when(pred, 1).otherwise(0)).alias(f"_c{i}")
+            c
             for i, (_k, pred) in enumerate(atoms)
+            for c in (
+                F.sum(F.when(pred, 1)).alias(f"_c{i}"),
+                F.slice(
+                    F.collect_list(F.when(pred, F.col("term"))),
+                    1,
+                    max_expansions + 1,
+                ).alias(f"_m{i}"),
+            )
         ]
     ).head()
+    out: dict = {}
     for i, (key, _pred) in enumerate(atoms):
-        n = counts[f"_c{i}"] or 0
+        n = row[f"_c{i}"] or 0
         if n > max_expansions:
             raise ValueError(
                 f"expansion atom {key!r} matches {n} vocabulary terms, "
                 f"over max_expansions={max_expansions} — narrow the "
                 f"pattern or raise the cap explicitly"
             )
-    any_pred = atoms[0][1]
-    for _k, pred in atoms[1:]:
-        any_pred = any_pred | pred
-    rows = (
-        vocab.filter(any_pred)
-        .select(
-            "term",
-            *[pred.alias(f"_m{i}") for i, (_k, pred) in enumerate(atoms)],
-        )
-        .collect()
-    )
-    out: dict = {key: [] for key, _pred in atoms}
-    for r in rows:
-        for i, (key, _pred) in enumerate(atoms):
-            if r[f"_m{i}"]:
-                out[key].append(r["term"])
-    return {key: sorted(ts) for key, ts in out.items()}
+        out[key] = sorted(row[f"_m{i}"])
+    return out

@@ -544,7 +544,7 @@ def _compile_chunk(
     Expansion atoms (prefix/fuzzy/range/regex/wildcard) are supported
     when a ``vocab`` relation is supplied (r8): each atom resolves to
     concrete vocabulary terms at registration time through the same
-    bounded two-pass protocol as indexed search
+    bounded one-aggregation protocol as indexed search
     (``resolve_expansions_over``, fail-loud ``max_expansions`` cap), so
     the shared scan stays an equality ``isin``. Without ``vocab``,
     expansion atoms are rejected loudly.
@@ -1627,7 +1627,7 @@ _PERCOLATE_EXP_ORACLE = f"""
 def fulltext_percolate_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Percolation with EXPANSION atoms in the stored queries (r8): each
     prefix/fuzzy/range/wildcard/regex atom resolves to concrete
-    vocabulary terms at registration time (the same bounded two-pass
+    vocabulary terms at registration time (the same bounded one-pass
     dictionary protocol as indexed search — here over the corpus-derived
     distinct-term relation), so the shared scan stays an equality isin
     and matching stays one doc_id aggregation. No join, no per-query
@@ -1945,9 +1945,8 @@ def fulltext_percolate_scored_indexed(
 ) -> DataFrame:
     """Ranked percolation off the PERSISTED index: tf and dl come off the
     bucket-pruned posting rows, idf/n_docs/avgdl fold in as driver
-    literals from the stats/df tables (the bm25_scores_indexed
-    discipline) — scan + one aggregation + one window, no join, corpus
-    never touched."""
+    literals from the stats/df tables — scan + one aggregation + one
+    window, no join, corpus never touched."""
     from sparkfulltextquery_spark.functions import querylang as QL
     from sparkfulltextquery_spark.functions.index import (
         _df_stats_literals,

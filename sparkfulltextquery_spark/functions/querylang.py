@@ -1154,13 +1154,13 @@ def search(
     Expansion atoms (prefix/fuzzy/range/regex/wildcard, plain and
     field-scoped, and phrase-prefix tails) resolve to concrete vocabulary
     terms BEFORE compilation (r9, VERDICT r08 #4 — the same bounded
-    two-pass dictionary protocol as indexed search, here over the
+    one-aggregation dictionary protocol as indexed search, here over the
     corpus-derived distinct-term relation), so every posting filter in
     the compiled plan is an equality ``isin`` and the fail-loud
     ``max_expansions`` cap holds inline too. ONE resolution discipline
     across inline, indexed, and percolator paths. A query with expansion
-    atoms therefore runs two bounded driver-side jobs at call time (count
-    pass + collect pass), exactly like search_indexed."""
+    atoms therefore runs one bounded driver-side aggregation at call
+    time, exactly like search_indexed."""
     from sparkfulltextquery_spark.functions.index_expand import (
         MAX_EXPANSIONS,
         collect_expansion_keys,

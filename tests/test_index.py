@@ -42,6 +42,89 @@ def test_postings_lookup_prunes_buckets(spark, index_tables):
     assert "term" in plan.split("SelectedBucketsCount")[0].splitlines()[-1] or True
 
 
+def test_in_plan_df_equals_df_table(spark, index_tables):
+    """df counted inside the BM25 plan equals the persisted df table for
+    every query term: on the explain rows and on the un-truncated term
+    relation."""
+    from sparkfulltextquery_spark.functions.index import (
+        bm25_explain_indexed,
+        bm25_scores_indexed,
+    )
+
+    df_table = {r.term: r.df for r in spark.table("t_idx_df").collect()}
+    for q in (QUERY, "spark join", "batch vector window"):
+        explain = bm25_explain_indexed(spark, q, k=10, table_prefix="t_idx").collect()
+        assert explain, q
+        for r in explain:
+            assert r.df == df_table[r.term], (q, r)
+        terms = bm25_scores_indexed(spark, q, table_prefix="t_idx", explain=True)
+        got = {(r.term, r.df) for r in terms.select("term", "df").distinct().collect()}
+        want = {(t, df_table[t]) for t in q.split() if t in df_table}
+        assert got == want and want, q
+
+
+def test_boosted_search_matches_literal_df_scores(spark, index_tables):
+    """A boosted query through search_indexed scores exactly as the former
+    literal form: df and n_docs/avgdl folded in as driver literals from
+    _df_stats_literals, the boost multiplied into each term's idf."""
+    from sparkfulltextquery_spark.functions.fulltext import BM25_B as b
+    from sparkfulltextquery_spark.functions.fulltext import BM25_K1 as k1
+    from sparkfulltextquery_spark.functions.index import (
+        _df_stats_literals,
+        search_indexed,
+    )
+
+    boosts = {"spark": 2.0, "join": 1.0}
+    n_docs, avgdl, df_of = _df_stats_literals(spark, "t_idx", sorted(boosts))
+    idf = F.lit(None).cast("double")
+    for t, w in boosts.items():
+        idf = F.when(
+            F.col("term") == t,
+            F.lit(w)
+            * F.log(
+                F.lit(1.0)
+                + (F.lit(n_docs) - F.lit(df_of[t]) + F.lit(0.5))
+                / (F.lit(df_of[t]) + F.lit(0.5))
+            ),
+        ).otherwise(idf)
+    tscore = idf * (F.col("tf") * (k1 + 1)) / (
+        F.col("tf") + F.lit(k1) * (F.lit(1 - b) + F.lit(b) * F.col("dl") / F.lit(avgdl))
+    )
+    want = [
+        (r.doc_id, r.score)
+        for r in spark.table("t_idx_postings")
+        .filter(F.col("term").isin(sorted(boosts)))
+        .groupBy("doc_id")
+        .agg(F.round(F.sum(tscore), 4).alias("score"))
+        .orderBy(F.col("score").desc(), F.col("doc_id"))
+        .limit(10)
+        .collect()
+    ]
+    got = [
+        (r.doc_id, r.score)
+        for r in search_indexed(spark, "spark^2 join", k=10, table_prefix="t_idx").collect()
+    ]
+    assert got == want and len(got) == 10
+
+
+def test_compiled_plan_cache_is_bounded_lru(spark, index_tables):
+    """The compiled-plan cache keeps at most COMPILED_QUERY_CACHE_MAX plans
+    (each pins its shuffle files): after more distinct queries than the
+    bound it holds exactly the bound, and an evicted query recompiles to
+    the same rows."""
+    from sparkfulltextquery_spark.functions import index as IX
+
+    first = bm25_search_indexed(spark, QUERY, k=7, table_prefix="t_idx")
+    rows = first.collect()
+    for i in range(IX.COMPILED_QUERY_CACHE_MAX):
+        bm25_search_indexed(spark, f"{QUERY} x{i}", k=7, table_prefix="t_idx")
+        assert len(IX._COMPILED_QUERY_CACHE) <= IX.COMPILED_QUERY_CACHE_MAX
+    assert len(IX._COMPILED_QUERY_CACHE) == IX.COMPILED_QUERY_CACHE_MAX
+    again = bm25_search_indexed(spark, QUERY, k=7, table_prefix="t_idx")
+    assert again is not first
+    assert again.collect() == rows
+
+
 def test_index_tables_exist(spark, index_tables):
     for t in index_tables.values():
         assert spark.table(t).count() > 0
