@@ -1213,9 +1213,9 @@ def search(
             F.col(id_col).alias("doc_id"), tokenize(F.col(text_col)).alias("_toks")
         ).localCheckpoint(eager=False)
         pos_rel = toks_staged.select(
-            "doc_id", F.posexplode("_toks").alias("pos", "term")
+            "doc_id", F.posexplode_outer("_toks").alias("pos", "term")
         )
-        post = pos_rel.groupBy("term", "doc_id").agg(F.count(F.lit(1)).alias("tf"))
+        post = pos_rel.groupBy("term", "doc_id").agg(F.count("pos").alias("tf"))
 
         def phrase_fn(text, slop=0):
             if slop:
@@ -1296,7 +1296,11 @@ def search(
                 prefix_terms=expansion.get(("prefix", prefix), []),
             )
     else:
-        post = postings(docs, id_col, text_col)
+        from sparkfulltextquery_spark.functions.text import tokenize
+        post = docs.select(
+            F.col(id_col).alias("doc_id"),
+            F.posexplode_outer(tokenize(F.col(text_col))).alias("pos", "term"),
+        ).groupBy("term", "doc_id").agg(F.count("pos").alias("tf"))
         phrase_fn = lambda text, slop=0: phrase_match(  # noqa: E731
             docs, text, id_col, text_col
         ).select("doc_id")

@@ -784,14 +784,34 @@ def test_incremental_store_excludes_shingleless_docs(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# r6: randomized query-language equivalence — random boolean ASTs over ALL
-# atom kinds (term/boost, prefix, fuzzy, range, field, field-phrase, phrase,
-# sloppy phrase, NEAR) evaluated three ways: a pure-Python reference
-# evaluator over collected token lists, the inline flag compiler, and the
-# one-pass persisted-index compiler. Catches atom-composition edge cases no
-# hand-written query list covers (NOT over constant-score atoms, nested ORs
-# mixing positional and vocabulary atoms, ...).
+# Randomized query-language equivalence. A test-owned generator emits query
+# TEXT plus a pure-Python predicate over one doc's token list; it names no
+# engine AST class, so the same trials hold whatever the parser builds from
+# the text. Every leaf kind of the grammar is drawn (term and boosted term,
+# exact/sloppy/boosted phrase, prefix, fuzzy, range, regexp, both wildcard
+# forms, expansions that match nothing, every field-scoped atom,
+# phrase-prefix, NEAR) under nested AND/OR/NOT, pure negation included;
+# the corpus gains docs that are empty or punctuation-only. Each query runs
+# through inline `search` and `search_indexed`: match sets must equal the
+# predicate's, and the two (doc_id, score) lists must be identical at the
+# 4dp contract. Registries drawn from the percolator's atom subset run
+# through `_percolate_bool` over the inline and the indexed relation.
 # ---------------------------------------------------------------------------
+
+_TITLE_LEN = 10  # fulltext.BM25F_TITLE_LEN: the title is the first 10 tokens
+
+#: leaf kinds the percolator accepts (with AND/OR/NOT over them)
+_PERC_KINDS = (
+    "term", "phrase", "slop", "prefix", "fuzzy", "range", "regex", "wild",
+)
+_QUERY_KINDS = _PERC_KINDS + (
+    "bterm", "bphrase", "wild2", "nothing", "field", "fphrase", "fprefix",
+    "ffuzzy", "frange", "fwild", "ppfx", "near",
+)
+
+#: expansion atoms no fixture term satisfies (checked by their predicates)
+_NOTHING = ("zzqx*", "qzqzqz~1", "[zzzza TO zzzzb]", "/zq.x/", "zq?xj",
+            "title:zzqx*", "body:zq*xj")
 
 
 def _lev(a: str, b: str) -> int:
@@ -804,226 +824,180 @@ def _lev(a: str, b: str) -> int:
     return prev[-1]
 
 
-def _py_eval(node, ts):
-    """Reference evaluator for one doc's token list ts."""
-    from sparkfulltextquery_spark.functions import querylang as QL
-
-    L = 10  # BM25F_TITLE_LEN
-    if isinstance(node, QL.Term):
-        return node.text in ts
-    if isinstance(node, QL.Prefix):
-        return any(t.startswith(node.text) for t in ts)
-    if isinstance(node, QL.Fuzzy):
-        return any(_lev(t, node.text) <= node.dist for t in set(ts))
-    if isinstance(node, QL.TermRange):
-        return any(node.lo <= t <= node.hi for t in ts)
-    if isinstance(node, QL.Regex):
-        pat = re.compile(node.pattern)
-        return any(pat.fullmatch(t) for t in set(ts))
-    if isinstance(node, QL.Wildcard):
-        # pattern alphabet is [a-z0-9*?] — no other regex metacharacters
-        pat = re.compile(node.pattern.replace("*", ".*").replace("?", "."))
-        return any(pat.fullmatch(t) for t in set(ts))
-    if isinstance(node, QL.Field):
-        seg = ts[:L] if node.field == "title" else ts[L:]
-        return node.text in seg
-    if isinstance(node, QL.FieldPrefix):
-        seg = ts[:L] if node.field == "title" else ts[L:]
-        return any(t.startswith(node.text) for t in seg)
-    if isinstance(node, QL.FieldFuzzy):
-        seg = ts[:L] if node.field == "title" else ts[L:]
-        return any(_lev(t, node.text) <= node.dist for t in set(seg))
-    if isinstance(node, QL.FieldRange):
-        seg = ts[:L] if node.field == "title" else ts[L:]
-        return any(node.lo <= t <= node.hi for t in seg)
-    if isinstance(node, QL.FieldWildcard):
-        seg = ts[:L] if node.field == "title" else ts[L:]
-        pat = re.compile(node.pattern.replace("*", ".*").replace("?", "."))
-        return any(pat.fullmatch(t) for t in set(seg))
-    if isinstance(node, QL.FieldPhrase):
-        words = node.text.split()
-        n = len(words)
-        lo, hi = (0, L - n) if node.field == "title" else (L, len(ts))
-        return any(
-            ts[i : i + n] == words for i in range(lo, min(hi, len(ts) - n) + 1)
-        )
-    if isinstance(node, QL.Phrase):
-        words = [w for w in re.split(r"[^a-z0-9]+", node.text.lower()) if w]
-        n = len(words)
-        if node.slop == 0:
-            return any(ts[i : i + n] == words for i in range(len(ts) - n + 1))
-        span = n - 1 + node.slop
-        starts = [i for i, t in enumerate(ts) if t == words[0]]
-        for p in starts:
-            cur = p
-            ok = True
-            for w in words[1:]:
-                nxt = next(
-                    (j for j in range(cur + 1, len(ts)) if ts[j] == w), None
-                )
-                if nxt is None:
-                    ok = False
-                    break
-                cur = nxt
-            if ok and cur - p <= span:
-                return True
-        return False
-    if isinstance(node, QL.PhrasePrefix):
-        words = node.text.split()
-        n = len(words)
-        return any(
-            ts[i : i + n] == words
-            and i + n < len(ts)
-            and ts[i + n].startswith(node.prefix)
-            for i in range(len(ts) - n)
-        )
-    if isinstance(node, QL.Near):
-        pa = [i for i, t in enumerate(ts) if t == node.a]
-        pb = [i for i, t in enumerate(ts) if t == node.b]
-        return any(abs(x - y) <= node.k for x in pa for y in pb)
-    if isinstance(node, QL.Not):
-        return not _py_eval(node.child, ts)
-    if isinstance(node, QL.And):
-        return all(_py_eval(c, ts) for c in node.children)
-    return any(_py_eval(c, ts) for c in node.children)
+def _seg(ts, field):
+    return ts[:_TITLE_LEN] if field == "title" else ts[_TITLE_LEN:]
 
 
-def _rand_ast(rng, vocab, bigrams, depth=0):
-    from sparkfulltextquery_spark.functions import querylang as QL
+def _wild_match(pat, t):
+    # the pattern alphabet is [a-z0-9*?]: no other regex metacharacters
+    return re.fullmatch(pat.replace("*", ".*").replace("?", "."), t) is not None
 
-    if depth < 2 and rng.random() < 0.55:
-        op = rng.choice(["and", "or", "not"])
-        if op == "not":
-            return QL.Not(_rand_ast(rng, vocab, bigrams, depth + 1))
-        kids = tuple(
-            _rand_ast(rng, vocab, bigrams, depth + 1)
-            for _ in range(rng.randint(2, 3))
-        )
-        return QL.And(kids) if op == "and" else QL.Or(kids)
-    kind = rng.choice(
-        ["term", "prefix", "fuzzy", "range", "field", "fphrase", "phrase",
-         "slop", "near", "regex", "fprefix", "ffuzzy", "wild1", "wild2",
-         "frange", "fwild", "ppfx"]
-    )
+
+def _phrase_at(ts, words, lo, hi):
+    """Some start i in [lo, hi] has ts[i:i+len(words)] == words."""
+    n = len(words)
+    return any(ts[i : i + n] == words for i in range(lo, min(hi, len(ts) - n) + 1))
+
+
+def _sloppy(ts, words, slop):
+    """Ordered sloppy phrase: from a start of words[0], each next word takes
+    its nearest later position; the chain must span <= n-1+slop."""
+    if slop == 0:
+        return _phrase_at(ts, words, 0, len(ts))
+    for p in (i for i, t in enumerate(ts) if t == words[0]):
+        cur = p
+        for w in words[1:]:
+            cur = next((j for j in range(cur + 1, len(ts)) if ts[j] == w), None)
+            if cur is None:
+                break
+        if cur is not None and cur - p <= len(words) - 1 + slop:
+            return True
+    return False
+
+
+def _expansion_pred(text):
+    """Predicate of a (possibly field-scoped) expansion atom's text."""
+    field, _, body = text.rpartition(":")
+    seg = (lambda ts: _seg(ts, field)) if field else (lambda ts: ts)
+    if body.startswith("["):
+        lo, hi = body[1:-1].split(" TO ")
+        return lambda ts: any(lo <= t <= hi for t in seg(ts))
+    if body.startswith("/"):
+        pat = body[1:-1]
+        return lambda ts: any(re.fullmatch(pat, t) for t in seg(ts))
+    if "~" in body:
+        w, d = body.split("~")
+        return lambda ts: any(_lev(t, w) <= int(d) for t in seg(ts))
+    return lambda ts: any(_wild_match(body, t) for t in seg(ts))
+
+
+def _fuzz_atom(rng, vocab, bigrams, kind):
+    """(query text, predicate over a doc's token list) for one leaf."""
     w = rng.choice(vocab)
+    f = rng.choice(("title", "body"))
+    a, b = rng.choice(bigrams).split()
+    i = rng.randrange(len(w))
     if kind == "term":
-        return QL.Term(w)
-    if kind == "prefix":
-        return QL.Prefix(w[: max(1, len(w) - 1)])
-    if kind == "wild1":
-        # atom kind 13 (r7): single-char `?` substituted into a vocab word
-        i = rng.randrange(len(w))
-        return QL.Wildcard(w[:i] + "?" + w[i + 1 :])
-    if kind == "wild2":
-        # atom kind 14 (r7): suffix (`*ark`) or infix (`s*rk`) wildcard
-        if rng.random() < 0.5 and len(w) >= 2:
-            return QL.Wildcard("*" + w[len(w) // 2 :])
-        i = rng.randint(1, len(w) - 1)
-        return QL.Wildcard(w[:i] + "*" + w[i + 1 :])
-    if kind == "fuzzy":
-        return QL.Fuzzy(w, rng.randint(1, 2))
-    if kind == "regex":
-        if rng.random() < 0.5:
-            # one wildcarded character in a real vocab word
-            i = rng.randrange(len(w))
-            return QL.Regex(w[:i] + "." + w[i + 1 :])
-        return QL.Regex(f"{w}|{rng.choice(vocab)}")
-    if kind == "range":
-        a, b = sorted([w, rng.choice(vocab)])
-        return QL.TermRange(a, b)
+        return w, lambda ts: w in ts
+    if kind == "bterm":
+        return f"{w}^2", lambda ts: w in ts
     if kind == "field":
-        return QL.Field(rng.choice(["title", "body"]), w)
-    if kind == "fprefix":
-        return QL.FieldPrefix(
-            rng.choice(["title", "body"]), w[: max(1, len(w) - 1)]
-        )
-    if kind == "ffuzzy":
-        return QL.FieldFuzzy(rng.choice(["title", "body"]), w, rng.randint(1, 2))
-    if kind == "frange":
-        # atom kind 15 (r7): field-scoped lexicographic range
-        a, b = sorted([w, rng.choice(vocab)])
-        return QL.FieldRange(rng.choice(["title", "body"]), a, b)
-    if kind == "fwild":
-        # atom kind 16 (r7): field-scoped wildcard (? or infix *)
-        i = rng.randrange(len(w))
-        ch = "?" if rng.random() < 0.5 else "*"
-        return QL.FieldWildcard(rng.choice(["title", "body"]), w[:i] + ch + w[i + 1 :])
-    bg = rng.choice(bigrams)
-    if kind == "ppfx":
-        # atom kind 17 (r7): phrase-prefix from a real corpus bigram
-        w1, w2 = bg.split()
-        return QL.PhrasePrefix(w1, w2[: max(1, len(w2) - 1)])
-    if kind == "fphrase":
-        return QL.FieldPhrase(rng.choice(["title", "body"]), bg)
+        return f"{f}:{w}", lambda ts: w in _seg(ts, f)
     if kind == "phrase":
-        return QL.Phrase(bg)
-    if kind == "slop":
-        return QL.Phrase(bg, rng.randint(1, 3))
-    return QL.Near(bg.split()[0], bg.split()[1], rng.randint(1, 6))
+        return f'"{a} {b}"', lambda ts: _phrase_at(ts, [a, b], 0, len(ts))
+    if kind in ("slop", "bphrase"):
+        s = rng.randint(1, 3) if kind == "slop" else rng.randint(0, 2)
+        text = f'"{a} {b}"~{s}' + ("^3" if kind == "bphrase" else "")
+        return text, lambda ts: _sloppy(ts, [a, b], s)
+    if kind == "fphrase":
+        lo, hi = (0, _TITLE_LEN - 2) if f == "title" else (_TITLE_LEN, 10**9)
+        return f'{f}:"{a} {b}"', lambda ts: _phrase_at(ts, [a, b], lo, hi)
+    if kind == "ppfx":
+        p = b[: max(1, len(b) - 1)]
+        return f'"{a} {p}*"', lambda ts: any(
+            ts[j] == a and ts[j + 1].startswith(p) for j in range(len(ts) - 1)
+        )
+    if kind == "near":
+        k = rng.randint(1, 6)
+        return f"({a} NEAR/{k} {b})", lambda ts: any(
+            abs(x - y) <= k
+            for x, s in enumerate(ts) if s == a
+            for y, t in enumerate(ts) if t == b
+        )
+    scope = f"{f}:" if kind in ("fprefix", "ffuzzy", "frange", "fwild") else ""
+    if kind in ("prefix", "fprefix"):
+        text = f"{scope}{w[: max(1, len(w) - 1)]}*"
+    elif kind in ("fuzzy", "ffuzzy"):
+        text = f"{scope}{w}~{rng.randint(1, 2)}"
+    elif kind in ("range", "frange"):
+        lo, hi = sorted((w, rng.choice(vocab)))
+        text = f"{scope}[{lo} TO {hi}]"
+    elif kind == "regex":
+        pat = w[:i] + "." + w[i + 1 :] if rng.random() < 0.5 else f"{w}|{rng.choice(vocab)}"
+        text = f"/{pat}/"
+    elif kind in ("wild", "fwild"):
+        text = f"{scope}{w[:i]}{rng.choice('?*')}{w[i + 1 :]}"
+    elif kind == "wild2":
+        # suffix (`*ark`) or infix (`s*rk`); a trailing-only `*` re-parses
+        # as a prefix atom, the same match set
+        j = rng.randint(1, len(w) - 1)
+        text = "*" + w[len(w) // 2 :] if rng.random() < 0.5 else w[:j] + "*" + w[j + 1 :]
+    else:  # "nothing"
+        text = rng.choice(_NOTHING)
+    return text, _expansion_pred(text)
 
 
-def _ast_to_query(node) -> str:
-    """Render an AST back to grammar text, so the test also exercises the
-    parser round-trip."""
-    from sparkfulltextquery_spark.functions import querylang as QL
-
-    if isinstance(node, QL.Term):
-        return node.text
-    if isinstance(node, QL.Prefix):
-        return f"{node.text}*"
-    if isinstance(node, QL.Wildcard):
-        # a trailing-`*`-only pattern re-parses as Prefix — identical LIKE
-        # vs StartsWith match semantics, so equivalence still holds
-        return node.pattern
-    if isinstance(node, QL.Fuzzy):
-        return f"{node.text}~{node.dist}"
-    if isinstance(node, QL.Regex):
-        return f"/{node.pattern}/"
-    if isinstance(node, QL.TermRange):
-        return f"[{node.lo} TO {node.hi}]"
-    if isinstance(node, QL.Field):
-        return f"{node.field}:{node.text}"
-    if isinstance(node, QL.FieldPrefix):
-        return f"{node.field}:{node.text}*"
-    if isinstance(node, QL.FieldFuzzy):
-        return f"{node.field}:{node.text}~{node.dist}"
-    if isinstance(node, QL.FieldRange):
-        return f"{node.field}:[{node.lo} TO {node.hi}]"
-    if isinstance(node, QL.FieldWildcard):
-        # a trailing-`*`-only pattern re-parses as FieldPrefix — identical
-        # match semantics, so equivalence still holds
-        return f"{node.field}:{node.pattern}"
-    if isinstance(node, QL.FieldPhrase):
-        return f'{node.field}:"{node.text}"'
-    if isinstance(node, QL.Phrase):
-        return f'"{node.text}"' + (f"~{node.slop}" if node.slop else "")
-    if isinstance(node, QL.PhrasePrefix):
-        return f'"{node.text} {node.prefix}*"'
-    if isinstance(node, QL.Near):
-        return f"({node.a} NEAR/{node.k} {node.b})"
-    if isinstance(node, QL.Not):
-        return f"(NOT {_ast_to_query(node.child)})"
-    if isinstance(node, QL.And):
-        return "(" + " AND ".join(_ast_to_query(c) for c in node.children) + ")"
-    return "(" + " OR ".join(_ast_to_query(c) for c in node.children) + ")"
+def _fuzz_tree(rng, vocab, bigrams, kinds, cursor, depth=0):
+    """(text, predicate) of a random AND/OR/NOT tree. Leaf kinds cycle
+    through `kinds` (``cursor`` holds the next index), so a run of trees
+    draws every kind."""
+    if depth < 2 and rng.random() < 0.55:
+        op = rng.choice(("and", "or", "not"))
+        if op == "not":
+            t, p = _fuzz_tree(rng, vocab, bigrams, kinds, cursor, depth + 1)
+            return f"(NOT {t})", lambda ts: not p(ts)
+        kids = [
+            _fuzz_tree(rng, vocab, bigrams, kinds, cursor, depth + 1)
+            for _ in range(rng.randint(2, 3))
+        ]
+        preds = [p for _t, p in kids]
+        join = " AND " if op == "and" else " OR "
+        fold = all if op == "and" else any
+        return "(" + join.join(t for t, _p in kids) + ")", lambda ts: fold(
+            p(ts) for p in preds
+        )
+    kind = kinds[cursor[0] % len(kinds)]
+    cursor[0] += 1
+    return _fuzz_atom(rng, vocab, bigrams, kind)
 
 
-@pytest.mark.heavy
-def test_random_query_asts_three_way_equivalence(spark, tmp_path):
+def _fuzz_queries(seed, n, vocab, bigrams):
+    """n seeded (text, predicate) queries over every leaf kind; every tenth
+    one is wrapped in a top-level NOT so pure negation is always drawn."""
     import random
 
-    from sparkfulltextquery_spark.functions import index as IX
-    from sparkfulltextquery_spark.functions import querylang as QL
+    rng = random.Random(seed)
+    cursor = [0]
+    out = []
+    for i in range(n):
+        t, p = _fuzz_tree(rng, vocab, bigrams, _QUERY_KINDS, cursor)
+        if i % 10 == 9:
+            t, p = f"NOT {t}", (lambda q: lambda ts: not q(ts))(p)
+        out.append((t, p))
+    return out
+
+
+def _fuzz_registries(seed, n, vocab, bigrams, size=5):
+    """n seeded registries of `size` stored queries from the percolator's
+    atom subset, none satisfiable by the empty document."""
+    import random
+
+    rng = random.Random(seed)
+    cursor = [0]
+    out = []
+    for _ in range(n):
+        reg = []
+        while len(reg) < size:
+            t, p = _fuzz_tree(rng, vocab, bigrams, _PERC_KINDS, cursor)
+            if not p([]):
+                reg.append((len(reg) + 1, t, p))
+        out.append(reg)
+    return out
+
+
+def _fuzz_corpus(spark):
+    """The fixture documents plus empty and punctuation-only docs, their
+    token lists, and a vocabulary and bigrams drawn from the corpus so
+    atoms actually match."""
     from sparkfulltextquery_spark.sources import load_table
     from tests.conftest import SF_DIR
 
     docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    rows = docs.collect()
-    toks = {
-        r.doc_id: [t for t in re.split(r"[^a-z0-9]+", r.text.lower()) if t]
-        for r in rows
-    }
-    # vocab/bigrams drawn from the corpus so atoms actually match
+    extra = spark.createDataFrame(
+        [(900001, ""), (900002, "!!! ... ---"), (900003, " ?* ")], docs.schema
+    )
+    docs = docs.unionByName(extra)
+    toks = {r.doc_id: _py_tokenize(r.text) for r in docs.collect()}
     freq: dict = {}
     for ts in toks.values():
         for t in ts:
@@ -1034,34 +1008,85 @@ def test_random_query_asts_three_way_equivalence(spark, tmp_path):
             f"{ts[i]} {ts[i+1]}"
             for ts in list(toks.values())[:100]
             for i in range(len(ts) - 1)
-            if ts[i] in freq and len(ts[i]) >= 3 and len(ts[i + 1]) >= 3
+            if len(ts[i]) >= 3 and len(ts[i + 1]) >= 3
         }
     )[:200]
+    return docs, toks, vocab, bigrams
 
-    IX.build_index(docs, table_prefix="prop_idx", num_buckets=8,
-                   path=f"file://{tmp_path}/prop_idx")
-    rng = random.Random(20260814)
-    # 24 trials over 17 atom kinds (r7 added wildcard x2, field-range,
-    # field-wildcard, phrase-prefix — more draws for per-kind coverage)
-    for trial in range(24):
-        ast = _rand_ast(rng, vocab, bigrams)
-        qtext = _ast_to_query(ast)
-        parsed = QL.parse_query(qtext)
-        expected = {d for d, ts in toks.items() if _py_eval(parsed, ts)}
-        got_inline = {
-            r.doc_id for r in QL.search(docs, qtext, k=len(rows)).collect()
-        }
-        assert got_inline == expected, (
-            f"inline mismatch on {qtext!r}: "
-            f"+{sorted(got_inline - expected)[:5]} -{sorted(expected - got_inline)[:5]}"
+
+def _check_search_trials(spark, docs, toks, queries, prefix):
+    from sparkfulltextquery_spark.functions.index import search_indexed
+    from sparkfulltextquery_spark.functions.querylang import search
+
+    n = len(toks)
+    for text, pred in queries:
+        expected = {d for d, ts in toks.items() if pred(ts)}
+        inline = [(r.doc_id, r.score) for r in search(docs, text, k=n).collect()]
+        got = {d for d, _s in inline}
+        assert got == expected, (
+            f"inline mismatch on {text!r}: "
+            f"+{sorted(got - expected)[:5]} -{sorted(expected - got)[:5]}"
         )
-        got_indexed = {
-            r.doc_id
-            for r in IX.search_indexed(
-                spark, qtext, k=len(rows), table_prefix="prop_idx"
-            ).collect()
-        }
-        assert got_indexed == expected, f"indexed mismatch on {qtext!r}"
+        indexed = [
+            (r.doc_id, r.score)
+            for r in search_indexed(spark, text, k=n, table_prefix=prefix).collect()
+        ]
+        assert indexed == inline, f"inline and indexed differ on {text!r}"
+
+
+def _check_percolator_trials(spark, docs, toks, registries, prefix):
+    from sparkfulltextquery_spark.functions import fulltext as FT
+    from sparkfulltextquery_spark.functions.percolate import _percolate_bool
+
+    inline_rel = FT.positional_postings(docs).select("doc_id", "term", "positions")
+    rels = {
+        "inline": (inline_rel, inline_rel.select("term").distinct()),
+        "indexed": (
+            spark.table(f"{prefix}_postings").select("doc_id", "term", "positions"),
+            spark.table(f"{prefix}_df").select("term"),
+        ),
+    }
+    for reg in registries:
+        expected = []
+        for qid, _t, pred in reg:
+            hits = sorted(d for d, ts in toks.items() if pred(ts))
+            if hits:
+                expected.append((qid, len(hits), hits[0]))
+        stored = [(qid, t) for qid, t, _p in reg]
+        for name, (rel, vocab) in rels.items():
+            got = sorted(tuple(r) for r in _percolate_bool(rel, stored, vocab=vocab).collect())
+            assert got == expected, f"{name} mismatch: {stored}\ngot={got}\nexp={expected}"
+
+
+def test_query_language_fuzz_inline_indexed_percolator(spark, tmp_path):
+    """Default-tier slice of the query-language fuzz: 30 seeded queries
+    and 3 percolator registries (see the block comment above)."""
+    from sparkfulltextquery_spark.functions.index import build_index
+
+    docs, toks, vocab, bigrams = _fuzz_corpus(spark)
+    queries = _fuzz_queries(20261017, 30, vocab, bigrams)
+    # the slice itself covers what it claims: pure negation, and an
+    # expansion atom that matches no corpus term
+    assert any(p([]) for _t, p in queries)
+    assert not any(_expansion_pred(t)(ts) for t in _NOTHING for ts in toks.values())
+    build_index(docs, table_prefix="fuzz_idx", num_buckets=8,
+                path=f"file://{tmp_path}/fuzz_idx")
+    _check_search_trials(spark, docs, toks, queries, "fuzz_idx")
+    _check_percolator_trials(
+        spark, docs, toks, _fuzz_registries(20261018, 3, vocab, bigrams), "fuzz_idx"
+    )
+
+
+@pytest.mark.heavy
+def test_random_query_asts_three_way_equivalence(spark, tmp_path):
+    from sparkfulltextquery_spark.functions.index import build_index
+
+    docs, toks, vocab, bigrams = _fuzz_corpus(spark)
+    build_index(docs, table_prefix="prop_idx", num_buckets=8,
+                path=f"file://{tmp_path}/prop_idx")
+    _check_search_trials(
+        spark, docs, toks, _fuzz_queries(20260814, 24, vocab, bigrams), "prop_idx"
+    )
 
 
 def test_dismax_tiebreak_contract(spark):
@@ -1193,101 +1218,21 @@ def test_random_simple_queries_three_way_equivalence(spark, tmp_path):
 
 @pytest.mark.heavy
 def test_random_percolator_registries_three_way_equivalence(spark, tmp_path):
-    """Percolation fuzzer (r8): random registries of stored boolean queries
+    """Percolation fuzzer: random registries of stored boolean queries
     (term/phrase/prefix/fuzzy/range/regex/wildcard atoms under AND/OR/NOT)
-    percolated three ways — the inline positional relation, the persisted
-    index, and a pure-Python reference evaluator — must produce identical
-    (query_id, n_docs, first_doc) tables. Exercises the registration-time
-    dictionary resolution and the shared-scan flag compilation across
-    query shapes no hand-written row covers."""
-    import random
+    percolated over the inline positional relation and the persisted
+    index must both produce the (query_id, n_docs, first_doc) table of the
+    pure-Python predicates. Exercises the registration-time dictionary
+    resolution and the shared-scan flag compilation across query shapes
+    no hand-written row covers."""
+    from sparkfulltextquery_spark.functions.index import build_index
 
-    from sparkfulltextquery_spark.functions import fulltext as FT
-    from sparkfulltextquery_spark.functions import index as IX
-    from sparkfulltextquery_spark.functions import querylang as QL
-    from sparkfulltextquery_spark.functions.fulltext_queries import _percolate_bool
-    from sparkfulltextquery_spark.sources import load_table
-    from tests.conftest import SF_DIR
-
-    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    rows = docs.collect()
-    toks = {
-        r.doc_id: [t for t in re.split(r"[^a-z0-9]+", r.text.lower()) if t]
-        for r in rows
-    }
-    freq: dict = {}
-    for ts in toks.values():
-        for t in ts:
-            freq[t] = freq.get(t, 0) + 1
-    vocab = sorted(t for t, c in freq.items() if c >= 5 and len(t) >= 3)[:200]
-    bigrams = sorted(
-        {
-            f"{ts[i]} {ts[i+1]}"
-            for ts in list(toks.values())[:100]
-            for i in range(len(ts) - 1)
-            if ts[i] in freq and len(ts[i]) >= 3 and len(ts[i + 1]) >= 3
-        }
-    )[:200]
-
-    PERC_ATOMS = (
-        QL.Term, QL.Phrase, QL.Prefix, QL.Fuzzy, QL.TermRange, QL.Regex,
-        QL.Wildcard, QL.And, QL.Or, QL.Not,
+    docs, toks, vocab, bigrams = _fuzz_corpus(spark)
+    build_index(docs, table_prefix="perc_idx", num_buckets=8,
+                path=f"file://{tmp_path}/perc_idx")
+    _check_percolator_trials(
+        spark, docs, toks, _fuzz_registries(20260815, 4, vocab, bigrams), "perc_idx"
     )
-
-    def perc_ok(n) -> bool:
-        if not isinstance(n, PERC_ATOMS):
-            return False
-        if isinstance(n, QL.Not):
-            return perc_ok(n.child)
-        if isinstance(n, (QL.And, QL.Or)):
-            return all(perc_ok(c) for c in n.children)
-        return True
-
-    rng = random.Random(20260815)
-    IX.build_index(docs, table_prefix="perc_idx", num_buckets=8,
-                   path=f"file://{tmp_path}/perc_idx")
-
-    inline_rel = FT.positional_postings(docs).select(
-        "doc_id", "term", "positions"
-    )
-    inline_vocab = inline_rel.select("term").distinct()
-    idx_rel = spark.table("perc_idx_postings").select(
-        "doc_id", "term", "positions"
-    )
-    idx_vocab = spark.table("perc_idx_df").select("term")
-
-    for trial in range(4):
-        registry = []
-        while len(registry) < 5:
-            ast = _rand_ast(rng, vocab, bigrams)
-            # re-parse through the grammar so stored text == parsed AST
-            parsed = QL.parse_query(_ast_to_query(ast))
-            if perc_ok(parsed) and not QL._eval_empty(parsed):
-                registry.append((len(registry) + 1, _ast_to_query(ast)))
-        expected = []
-        for qid, qtext in registry:
-            parsed = QL.parse_query(qtext)
-            hits = sorted(d for d, ts in toks.items() if _py_eval(parsed, ts))
-            if hits:
-                expected.append((qid, len(hits), hits[0]))
-        got_inline = sorted(
-            tuple(r)
-            for r in _percolate_bool(inline_rel, registry, vocab=inline_vocab)
-            .collect()
-        )
-        assert got_inline == expected, (
-            f"trial {trial} inline mismatch: {registry}\n"
-            f"got={got_inline}\nexp={expected}"
-        )
-        got_indexed = sorted(
-            tuple(r)
-            for r in _percolate_bool(idx_rel, registry, vocab=idx_vocab)
-            .collect()
-        )
-        assert got_indexed == expected, (
-            f"trial {trial} indexed mismatch: {registry}\n"
-            f"got={got_indexed}\nexp={expected}"
-        )
 
 
 def test_resolver_core_property_dictionary_equals_bruteforce(spark):
