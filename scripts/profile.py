@@ -1,8 +1,8 @@
 #!/usr/bin/env python
-"""r13 optimization-round profiler.
+"""Optimization-round profiler.
 
 For each named query: capture `.explain("formatted")` into
-plans/r13/<name>_<tag>.txt and time the noop-sink materialization
+plans/<round>/<name>_<tag>.txt and time the noop-sink materialization
 (1 untimed warm + 3 timed, median + best) — the bench.py methodology —
 plus the CONSTRUCTION wall (the query function call itself, which for
 some operators runs driver-side jobs like count()/collect()) and the
@@ -10,9 +10,9 @@ job/stage counts per timed run, so "where does the wall go" is visible
 per row instead of argued.
 
 Usage:
-  python scripts/profile_r13.py --tag before q1_pricing_summary dedup_minhash_pairs
-  python scripts/profile_r13.py --tag before --headline   # the 19 benched rows
-  python scripts/profile_r13.py --tag before --extra      # the extra set
+  python scripts/profile.py --round r13 --tag before q1_pricing_summary dedup_minhash_pairs
+  python scripts/profile.py --round r13 --tag before --headline   # the 19 benched rows
+  python scripts/profile.py --round r13 --tag before --extra      # the extra set
 """
 
 from __future__ import annotations
@@ -33,6 +33,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="*")
+    ap.add_argument("--round", required=True, help="round name, e.g. r13")
     ap.add_argument("--tag", default="before")
     ap.add_argument("--headline", action="store_true")
     ap.add_argument("--extra", action="store_true")
@@ -42,7 +43,7 @@ def main() -> None:
 
     from sparkfulltextquery_spark import get_spark
 
-    spark = get_spark(app_name="sftq-profile-r13")
+    spark = get_spark(app_name=f"sftq-profile-{args.round}")
     sc = spark.sparkContext
 
     import __spark_entry__ as E
@@ -55,7 +56,7 @@ def main() -> None:
     if args.extra:
         names += B.EXTRA
 
-    plans_dir = REPO / "plans" / "r13"
+    plans_dir = REPO / "plans" / args.round
     plans_dir.mkdir(parents=True, exist_ok=True)
 
     # warmup: JVM + codegen + noop committer
@@ -69,7 +70,7 @@ def main() -> None:
         import gc
 
         gc.collect()
-        sc.setJobDescription(f"r13-profile:{name}")
+        sc.setJobDescription(f"{args.round}-profile:{name}")
         t0 = time.time()
         df = qs[name](spark, SF_DIR)
         t_construct = time.time() - t0
@@ -102,7 +103,7 @@ def main() -> None:
         print(f"{name:42s} construct={t_construct:6.3f} median={results[name]['median_s']:7.3f} best={results[name]['best_s']:7.3f} jobs/run={results[name]['jobs_per_run']}", flush=True)
         sc.setJobDescription(None)
 
-    out = REPO / f"plans/r13/profile_{args.tag}.json"
+    out = plans_dir / f"profile_{args.tag}.json"
     existing = json.loads(out.read_text()) if out.exists() else {}
     existing.update(results)
     out.write_text(json.dumps(existing, indent=1) + "\n")

@@ -250,10 +250,9 @@ BM25F_W_BODY = 1.0
 def field_pos_pred(field: str):
     """Element predicate for the positional title/body carving (title =
     first BM25F_TITLE_LEN tokens): the ONE definition of field membership
-    over a position value, shared by the inline, indexed-one-pass, and
-    pure-negation query compilers (use with F.exists over stored position
-    arrays, or apply to a position Column directly). Changing the carving
-    here changes it everywhere at once."""
+    over a position value, used by the query-language compiler
+    (querylang.compile_queries) with F.exists over stored position arrays.
+    Changing the carving here changes it everywhere at once."""
     if field == "title":
         return lambda p: p < F.lit(BM25F_TITLE_LEN)
     return lambda p: p >= F.lit(BM25F_TITLE_LEN)
@@ -561,30 +560,6 @@ def slop_starts_expr(arr_of: dict, terms: list[str], slop: int):
     return F.filter(arr_of[terms[0]], lambda p: window_end(p) - p <= span)
 
 
-def _gather_position_slots(pos: DataFrame, uniq: list[str]):
-    """One aggregation gathering each term's sorted per-doc position array
-    from the positional relation, keeping only docs containing EVERY term
-    (collect_list skips the non-matching rows' NULLs). Returns
-    (slots_df, {term: position-array Column}) — shared by the sloppy- and
-    field-phrase paths, whose only difference is the start predicate."""
-    col_of = {t: f"_pos_{i}" for i, t in enumerate(uniq)}
-    slots = (
-        pos.filter(F.col("term").isin(uniq))
-        .groupBy("doc_id")
-        .agg(
-            *[
-                F.sort_array(
-                    F.collect_list(F.when(F.col("term") == t, F.col("pos")))
-                ).alias(col_of[t])
-                for t in uniq
-            ]
-        )
-    )
-    for t in uniq:
-        slots = slots.filter(F.size(F.col(col_of[t])) > 0)
-    return slots, {t: F.col(col_of[t]) for t in uniq}
-
-
 def sloppy_phrase_match(
     docs: DataFrame,
     phrase: str,
@@ -605,8 +580,22 @@ def sloppy_phrase_match(
     if pos is None:
         pos = positional_relation(docs, id_col, text_col)
     uniq = sorted(set(terms))
-    slots, arr_of = _gather_position_slots(pos, uniq)
-    starts = slop_starts_expr(arr_of, terms, slop)
+    col_of = {t: f"_pos_{i}" for i, t in enumerate(uniq)}
+    slots = (
+        pos.filter(F.col("term").isin(uniq))
+        .groupBy("doc_id")
+        .agg(
+            *[
+                F.sort_array(
+                    F.collect_list(F.when(F.col("term") == t, F.col("pos")))
+                ).alias(col_of[t])
+                for t in uniq
+            ]
+        )
+    )
+    for t in uniq:
+        slots = slots.filter(F.size(F.col(col_of[t])) > 0)
+    starts = slop_starts_expr({t: F.col(col_of[t]) for t in uniq}, terms, slop)
     return (
         slots.select("doc_id", F.size(starts).alias("n_starts"))
         .filter(F.col("n_starts") > 0)
@@ -631,43 +620,6 @@ def exact_starts_expr(arr_of: dict, terms: list[str]):
         return out
 
     return F.filter(arr_of[terms[0]], lambda p: _and(conds(p)))
-
-
-def field_phrase_match(
-    docs: DataFrame,
-    field: str,
-    phrase: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    pos: DataFrame | None = None,
-) -> DataFrame:
-    """Documents where the exact phrase occurs ENTIRELY inside the named
-    field (title = first BM25F_TITLE_LEN tokens, body = rest — the
-    bm25f_search carving): gather each phrase term's position array per
-    doc in one aggregation, run the array_contains chain, keep only the
-    starts whose full window lies inside the field. Returns
-    (doc_id, n_starts)."""
-    terms = _py_tokenize(phrase)
-    if not terms:
-        raise ValueError("empty phrase")
-    if field not in ("title", "body"):
-        raise ValueError(f"unknown field {field!r} (title|body)")
-    if pos is None:
-        pos = positional_relation(docs, id_col, text_col)
-    uniq = sorted(set(terms))
-    slots, arr_of = _gather_position_slots(pos, uniq)
-    starts = exact_starts_expr(arr_of, terms)
-    n = len(terms)
-    in_field = (
-        (lambda p: p <= F.lit(BM25F_TITLE_LEN - n))
-        if field == "title"
-        else (lambda p: p >= F.lit(BM25F_TITLE_LEN))
-    )
-    bounded = F.filter(starts, in_field)
-    return (
-        slots.select("doc_id", F.size(bounded).alias("n_starts"))
-        .filter(F.col("n_starts") > 0)
-    )
 
 
 def proximity_match(
@@ -731,57 +683,3 @@ def _py_tokenize(s: str) -> list[str]:
     import re
 
     return [t for t in re.split("[^a-z0-9]+", s.lower()) if t]
-
-
-def phrase_prefix_match(
-    docs: DataFrame,
-    exact: list[str],
-    prefix: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    pos: DataFrame | None = None,
-    prefix_terms: list[str] | None = None,
-) -> DataFrame:
-    """Documents matching a PHRASE-PREFIX query (`"spark jo*"` — the
-    Elasticsearch match_phrase_prefix / Lucene MatchPhrasePrefixQuery
-    surface): the `exact` words consecutively in order, immediately
-    followed by ANY term with the given prefix. Returns distinct
-    (doc_id).
-
-    Plan: the positional relation filtered to the exact words OR the
-    prefix band, ONE groupBy(doc_id) gathering a position array per exact
-    word plus the union of prefix-matching positions, then the usual
-    array_contains start chain ending in an EXISTS against the prefix
-    positions — the same no-theta-join shape as phrase_match. Pass
-    ``pos`` to reuse an existing tokenization; pass ``prefix_terms``
-    (r9, VERDICT r08 #4) when the prefix was already resolved against the
-    vocabulary — the StartsWith band then becomes an equality ``isin``,
-    the same discipline as indexed search."""
-    if not exact:
-        raise ValueError("phrase-prefix needs at least one exact lead word")
-    if pos is None:
-        pos = positional_relation(docs, id_col, text_col)
-    uniq = sorted(set(exact))
-    if prefix_terms is None:
-        pfx_pred = F.col("term").startswith(prefix)
-    else:
-        pfx_pred = (
-            F.col("term").isin(prefix_terms) if prefix_terms else F.lit(False)
-        )
-    hit = pos.filter(F.col("term").isin(uniq) | pfx_pred)
-    slots = hit.groupBy("doc_id").agg(
-        *[
-            F.collect_list(F.when(F.col("term") == t, F.col("pos"))).alias(f"_e{i}")
-            for i, t in enumerate(uniq)
-        ],
-        F.collect_list(F.when(pfx_pred, F.col("pos"))).alias("_pp"),
-    )
-    arr_of = {t: F.col(f"_e{i}") for i, t in enumerate(uniq)}
-    n_lead = len(exact)
-    for t in uniq:
-        slots = slots.filter(F.size(arr_of[t]) > 0)
-    starts = F.filter(
-        exact_starts_expr(arr_of, list(exact)),
-        lambda p: F.exists(F.col("_pp"), lambda q: q == p + F.lit(n_lead)),
-    )
-    return slots.filter(F.size(starts) > 0).select("doc_id")

@@ -938,7 +938,6 @@ def fulltext_highlight_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # re-exported so existing import sites keep working
 from sparkfulltextquery_spark.functions.percolate import (  # noqa: E402,F401
     _percolate_bool,
-    _percolate_compile,
     add_percolator_queries,
     percolate_from_table,
     remove_percolator_queries,

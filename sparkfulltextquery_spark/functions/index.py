@@ -754,8 +754,10 @@ def search_indexed(
     avgdl are cached literals, so building the plan runs no Spark job
     unless the query has expansion atoms (prefix/fuzzy/range/regex/
     wildcard), which resolve against the term dictionary in one job
-    first. Pure-negation queries (satisfiable by a doc with no query term)
-    still take compile_matches with the doc-length universe.
+    first. The flags come from querylang.compile_queries, the compiler
+    inline search and the percolator share. Pure-negation queries
+    (satisfiable by a doc with no query term) left-join the per-doc rows
+    onto the doc-length table's doc ids.
 
     Compiled plans are cached per (application, index, query text, k,
     max_expansions) — the prepared-statement discipline: a repeated query
@@ -782,489 +784,46 @@ def _search_indexed_build(
     table_prefix: str,
     max_expansions: int = MAX_EXPANSIONS,
 ) -> DataFrame:
-    _force_bucketed_scan(spark)
     from sparkfulltextquery_spark.functions import querylang as QL
+    from sparkfulltextquery_spark.functions.index_expand import (
+        collect_expansion_keys,
+    )
 
+    _force_bucketed_scan(spark)
     ast = QL.parse_query(query)
-    post = spark.table(f"{table_prefix}_postings")
-    pos = sorted(set(QL.positive_terms(ast)))
-
-    terms, phrases, prefixes = QL._collect_atoms(ast)
-    nears = sorted(QL.collect_nears(ast))
-    fields = sorted(QL.collect_fields(ast))
-    fuzzies = sorted(QL.collect_fuzzies(ast))
-    ranges = sorted(QL.collect_ranges(ast))
-    regexes = sorted(QL.collect_regexes(ast))
-    wildcards = sorted(QL.collect_wildcards(ast))
-    fphrases = sorted(QL.collect_fieldphrases(ast))
-    fprefixes = sorted(QL.collect_fieldprefixes(ast))
-    ffuzzies = sorted(QL.collect_fieldfuzzies(ast))
-    franges = sorted(QL.collect_fieldranges(ast))
-    fwilds = sorted(QL.collect_fieldwildcards(ast))
-    ppfxs = sorted(QL.collect_phraseprefixes(ast))
-
     # expansion atoms resolve against the persisted term DICTIONARY first
-    # (VERDICT r07 #1; Lucene MultiTermQuery rewrites to concrete term
-    # disjunctions before the index is consulted) — the matched terms fold
-    # into the equality isin below, so the posting scan stays bucket-pruned
-    # and equality-only; no LIKE/levenshtein/RLIKE/StartsWith ever touches
-    # the postings relation. Field scoping never affects term-level
-    # matching (the field carve applies to stored positions at flag time),
-    # so field-scoped atoms share their plain atom's resolution.
-    expansion = resolve_expansions(
-        spark,
-        table_prefix,
-        prefixes=set(prefixes)
-        | {w for _f, w in fprefixes}
-        | {ppx for _lead, ppx in ppfxs},
-        fuzzies=set(fuzzies) | {(zt, zd) for _f, zt, zd in ffuzzies},
-        ranges=set(ranges) | {(lo, hi) for _f, lo, hi in franges},
-        regexes=set(regexes),
-        wildcards=set(wildcards) | {w for _f, w in fwilds},
-        max_expansions=max_expansions,
+    # (Lucene MultiTermQuery rewrites to concrete term disjunctions before
+    # the index is consulted), so the posting scan stays bucket-pruned and
+    # equality-only
+    chunk = QL.compile_queries(
+        {0: ast},
+        resolve_expansions(
+            spark, table_prefix, collect_expansion_keys(ast), max_expansions
+        ),
     )
-
-    def exp_terms(kind: str, key) -> list:
-        return expansion.get((kind, key), [])
-
-    def exp_isin(kind: str, key):
-        ts = exp_terms(kind, key)
-        return F.col("term").isin(ts) if ts else F.lit(False)
-
-    if QL._eval_empty(ast):
-        # pure negation: needs the universe; rare, cold path
-        phrase_fn = lambda text, slop=0: phrase_match_indexed(  # noqa: E731
-            spark, text, table_prefix, slop=slop
-        ).select("doc_id")
-        near_fn = lambda a, b, k: proximity_match_indexed(  # noqa: E731
-            spark, a, b, k, table_prefix
-        ).select("doc_id")
-
-        def field_fn(field: str, term: str):
-            # field membership from the stored position arrays — same
-            # title carving as bm25f_search (first BM25F_TITLE_LEN tokens)
-            from sparkfulltextquery_spark.functions.fulltext import field_pos_pred
-
-            pos_pred = field_pos_pred(field)
-            return (
-                post.filter(F.col("term") == term)
-                .filter(F.exists(F.col("positions"), pos_pred))
-                .select("doc_id")
-            )
-
-        def fphrase_fn(field: str, text: str):
-            from sparkfulltextquery_spark.functions.fulltext import (
-                BM25F_TITLE_LEN,
-                exact_starts_expr,
-            )
-
-            terms = _py_tokenize(text)
-            uniq = sorted(set(terms))
-            slots = (
-                post.filter(F.col("term").isin(uniq))
-                .groupBy("doc_id")
-                .agg(
-                    *[
-                        F.max(
-                            F.when(F.col("term") == t, F.col("positions"))
-                        ).alias(f"_fp_{i}")
-                        for i, t in enumerate(uniq)
-                    ]
-                )
-            )
-            arr_of = {t: F.col(f"_fp_{i}") for i, t in enumerate(uniq)}
-            for t in uniq:
-                slots = slots.filter(arr_of[t].isNotNull())
-            n = len(terms)
-            in_field = (
-                (lambda p: p <= F.lit(BM25F_TITLE_LEN - n))
-                if field == "title"
-                else (lambda p: p >= F.lit(BM25F_TITLE_LEN))
-            )
-            starts = F.filter(exact_starts_expr(arr_of, terms), in_field)
-            return slots.filter(F.size(starts) > 0).select("doc_id")
-
-        # field-scoped expansion fns share the plain atom's dictionary
-        # resolution — the posting filter is the resolved equality isin,
-        # the field carve applies to stored positions
-        def fprefix_fn(field: str, prefix: str):
-            from sparkfulltextquery_spark.functions.fulltext import field_pos_pred
-
-            pos_pred = field_pos_pred(field)
-            return (
-                post.filter(exp_isin("prefix", prefix))
-                .filter(F.exists(F.col("positions"), pos_pred))
-                .select("doc_id")
-                .distinct()
-            )
-
-        def ffuzzy_fn(field: str, text: str, dist: int):
-            from sparkfulltextquery_spark.functions.fulltext import field_pos_pred
-
-            pos_pred = field_pos_pred(field)
-            return (
-                post.filter(exp_isin("fuzzy", (text, dist)))
-                .filter(F.exists(F.col("positions"), pos_pred))
-                .select("doc_id")
-                .distinct()
-            )
-
-        def frange_fn(field: str, lo: str, hi: str):
-            from sparkfulltextquery_spark.functions.fulltext import field_pos_pred
-
-            pos_pred = field_pos_pred(field)
-            return (
-                post.filter(exp_isin("range", (lo, hi)))
-                .filter(F.exists(F.col("positions"), pos_pred))
-                .select("doc_id")
-                .distinct()
-            )
-
-        def fwild_fn(field: str, pattern: str):
-            from sparkfulltextquery_spark.functions.fulltext import field_pos_pred
-
-            pos_pred = field_pos_pred(field)
-            return (
-                post.filter(exp_isin("wild", pattern))
-                .filter(F.exists(F.col("positions"), pos_pred))
-                .select("doc_id")
-                .distinct()
-            )
-
-        def ppfx_fn(text: str, prefix: str):
-            from sparkfulltextquery_spark.functions.fulltext import (
-                exact_starts_expr,
-            )
-
-            exact = _py_tokenize(text)
-            uniq = sorted(set(exact))
-            slots = (
-                post.filter(
-                    F.col("term").isin(
-                        sorted(set(uniq) | set(exp_terms("prefix", prefix)))
-                    )
-                )
-                .groupBy("doc_id")
-                .agg(
-                    *[
-                        F.max(F.when(F.col("term") == t, F.col("positions"))).alias(
-                            f"_e{i}"
-                        )
-                        for i, t in enumerate(uniq)
-                    ],
-                    F.flatten(
-                        F.collect_list(
-                            F.when(exp_isin("prefix", prefix), F.col("positions"))
-                        )
-                    ).alias("_pp"),
-                )
-            )
-            arr_of = {t: F.col(f"_e{i}") for i, t in enumerate(uniq)}
-            for t in uniq:
-                slots = slots.filter(arr_of[t].isNotNull())
-            n_lead = len(exact)
-            starts = F.filter(
-                exact_starts_expr(arr_of, exact),
-                lambda pp: F.exists(F.col("_pp"), lambda q: q == pp + F.lit(n_lead)),
-            )
-            return slots.filter(F.size(starts) > 0).select("doc_id")
-
-        def term_resolver(node):
-            # plain expansion atoms resolve through the same dictionary
-            # lists as the one-pass path — equality-only posting filters
-            if isinstance(node, QL.Prefix):
-                return exp_terms("prefix", node.text)
-            if isinstance(node, QL.Fuzzy):
-                return exp_terms("fuzzy", (node.text, node.dist))
-            if isinstance(node, QL.TermRange):
-                return exp_terms("range", (node.lo, node.hi))
-            if isinstance(node, QL.Regex):
-                return exp_terms("regex", node.pattern)
-            if isinstance(node, QL.Wildcard):
-                return exp_terms("wild", node.pattern)
-            return None
-
-        universe = spark.table(f"{table_prefix}_dl").select("doc_id")
-        matched = QL.compile_matches(
-            ast, post, phrase_fn=phrase_fn, universe=universe, near_fn=near_fn,
-            field_fn=field_fn, fphrase_fn=fphrase_fn, fprefix_fn=fprefix_fn,
-            ffuzzy_fn=ffuzzy_fn, frange_fn=frange_fn, fwild_fn=fwild_fn,
-            ppfx_fn=ppfx_fn, term_resolver=term_resolver,
-        )
-        if not pos:
-            return (
-                matched.select("doc_id", F.lit(0.0).alias("score"))
-                .orderBy("doc_id")
-                .limit(k)
-            )
-        scored = bm25_scores_indexed(
-            spark, " ".join(pos), table_prefix, boosts=QL.term_boosts(ast)
-        )
-        return (
-            matched.join(scored, "doc_id", "left")
-            .select("doc_id", F.coalesce(F.col("score"), F.lit(0.0)).alias("score"))
-            .orderBy(F.col("score").desc(), F.col("doc_id"))
-            .limit(k)
-        )
-
-    ppfx_toks = {pp: _py_tokenize(pp[0]) for pp in ppfxs}
-    ppfx_terms = {t for ts in ppfx_toks.values() for t in ts}
-    near_terms = {t for (a, b, _k) in nears for t in (a, b)}
-    field_terms = {t for (_f, t) in fields}
-    fphrase_toks = {fp: _py_tokenize(fp[1]) for fp in fphrases}
-    fphrase_terms = {t for ts in fphrase_toks.values() for t in ts}
-    phrase_toks = {p: _py_tokenize(p[0]) for p in sorted(phrases)}
-    all_terms = sorted(
-        terms
-        | {t for ts in phrase_toks.values() for t in ts}
-        | near_terms
-        | field_terms
-        | fphrase_terms
-        | ppfx_terms
-        | set(pos)
-    )
-    flag = {t: f"_t{i}" for i, t in enumerate(sorted(terms))}
-    wflag = {w: f"_w{i}" for i, w in enumerate(sorted(prefixes))}
-    zflag = {z: f"_z{i}" for i, z in enumerate(fuzzies)}
-    rflag = {r: f"_r{i}" for i, r in enumerate(ranges)}
-    xflag = {x: f"_x{i}" for i, x in enumerate(regexes)}
-    vflag = {v: f"_v{i}" for i, v in enumerate(wildcards)}
-    fpxflag = {f: f"_fx{i}" for i, f in enumerate(fprefixes)}
-    ffzflag = {f: f"_fz{i}" for i, f in enumerate(ffuzzies)}
-    frgflag = {f: f"_fr{i}" for i, f in enumerate(franges)}
-    fwdflag = {f: f"_fw{i}" for i, f in enumerate(fwilds)}
-    ppslot = {pp: f"_px{i}" for i, pp in enumerate(ppfxs)}
-    slot = {
-        t: f"_s{i}"
-        for i, t in enumerate(
-            sorted(
-                {t for ts in phrase_toks.values() for t in ts}
-                | near_terms
-                | field_terms
-                | fphrase_terms
-                | ppfx_terms
-            )
-        )
-    }
-
-    # every atom — exact AND expansion — reduces to concrete vocabulary
-    # terms, so the scan filter is ONE equality isin: bucket-prunable
-    # (SelectedBucketsCount), no per-posting LIKE/levenshtein (VERDICT
-    # r07 #1 — expansions were OR'd predicates over the postings here)
-    scan_terms = sorted(
-        set(all_terms) | {t for ts in expansion.values() for t in ts}
-    )
-    pred = F.col("term").isin(scan_terms) if scan_terms else F.lit(False)
-    pruned = post.filter(pred)
-    # df counted in plan over the pruned scan (term-bucketed: no exchange),
-    # n_docs/avgdl as cached literals — building the plan runs no job;
-    # `term^N` boosts scale idf through one CASE on term
+    post = spark.table(f"{table_prefix}_postings")
+    boosts = QL.term_boosts(ast)
     tscore = F.lit(0.0)
-    if pos:
+    if boosts:
+        # df counted in plan over the pruned scan (term-bucketed: no
+        # exchange; the scan filter is on the window's partition key, so it
+        # stays below it), n_docs/avgdl as cached literals — building the
+        # plan runs no job; `term^N` boosts scale idf through one CASE
         n_docs, avgdl, _ = _df_stats_literals(spark, table_prefix, [])
-        pruned = pruned.select("*", _df_over_term().alias("df"))
-        _idf, ts = _bm25_term_score(
-            n_docs, avgdl, BM25_K1, BM25_B, QL.term_boosts(ast)
+        post = post.select("*", _df_over_term().alias("df"))
+        _idf, ts = _bm25_term_score(n_docs, avgdl, BM25_K1, BM25_B, boosts)
+        tscore = F.when(F.col("term").isin(sorted(boosts)), ts).otherwise(F.lit(0.0))
+    per_doc = chunk.per_doc(post, [F.round(F.sum(tscore), 4).alias("score")])
+    if QL._eval_empty(ast):
+        # pure negation also matches docs the scan never reaches
+        per_doc = (
+            spark.table(f"{table_prefix}_dl")
+            .select("doc_id")
+            .join(per_doc, "doc_id", "left")
+            .withColumn("score", F.coalesce(F.col("score"), F.lit(0.0)))
         )
-        tscore = F.when(F.col("term").isin(pos), ts).otherwise(F.lit(0.0))
-
-    aggs = [F.round(F.sum(tscore), 4).alias("score")]
-    aggs += [
-        F.max(F.when(F.col("term") == t, 1).otherwise(0)).alias(c)
-        for t, c in flag.items()
-    ]
-    aggs += [
-        F.max(F.when(exp_isin("prefix", w), 1).otherwise(0)).alias(c)
-        for w, c in wflag.items()
-    ]
-    aggs += [
-        F.max(F.when(exp_isin("fuzzy", (zt, zd)), 1).otherwise(0)).alias(c)
-        for (zt, zd), c in zflag.items()
-    ]
-    aggs += [
-        F.max(F.when(exp_isin("range", (lo, hi)), 1).otherwise(0)).alias(c)
-        for (lo, hi), c in rflag.items()
-    ]
-    aggs += [
-        F.max(F.when(exp_isin("regex", pat), 1).otherwise(0)).alias(c)
-        for pat, c in xflag.items()
-    ]
-    aggs += [
-        F.max(F.when(exp_isin("wild", pat), 1).otherwise(0)).alias(c)
-        for pat, c in vflag.items()
-    ]
-
-    def _fpx_pos_pred(field):
-        from sparkfulltextquery_spark.functions.fulltext import field_pos_pred
-
-        return field_pos_pred(field)
-
-    aggs += [
-        F.max(
-            F.when(
-                exp_isin("prefix", w)
-                & F.exists(F.col("positions"), _fpx_pos_pred(fld)),
-                1,
-            ).otherwise(0)
-        ).alias(c)
-        for (fld, w), c in fpxflag.items()
-    ]
-    aggs += [
-        F.max(
-            F.when(
-                exp_isin("fuzzy", (zt, zd))
-                & F.exists(F.col("positions"), _fpx_pos_pred(fld)),
-                1,
-            ).otherwise(0)
-        ).alias(c)
-        for (fld, zt, zd), c in ffzflag.items()
-    ]
-    aggs += [
-        F.max(
-            F.when(
-                exp_isin("range", (lo, hi))
-                & F.exists(F.col("positions"), _fpx_pos_pred(fld)),
-                1,
-            ).otherwise(0)
-        ).alias(c)
-        for (fld, lo, hi), c in frgflag.items()
-    ]
-    aggs += [
-        F.max(
-            F.when(
-                exp_isin("wild", w)
-                & F.exists(F.col("positions"), _fpx_pos_pred(fld)),
-                1,
-            ).otherwise(0)
-        ).alias(c)
-        for (fld, w), c in fwdflag.items()
-    ]
-    aggs += [
-        F.max(F.when(F.col("term") == t, F.col("positions"))).alias(c)
-        for t, c in slot.items()
-    ]
-    aggs += [
-        F.flatten(
-            F.collect_list(
-                F.when(exp_isin("prefix", ppx), F.col("positions"))
-            )
-        ).alias(c)
-        for (_lead, ppx), c in ppslot.items()
-    ]
-    per_doc = pruned.groupBy("doc_id").agg(*aggs)
-
-    def phrase_col(p):
-        toks = phrase_toks[p]
-        slop = p[1]
-        slots = [slot[t] for t in toks]
-        present = reduce_and([F.col(c).isNotNull() for c in slots])
-        if slop:
-            from sparkfulltextquery_spark.functions.fulltext import slop_starts_expr
-
-            starts = slop_starts_expr(
-                {t: F.col(slot[t]) for t in set(toks)}, toks, slop
-            )
-        else:
-            starts = F.filter(
-                F.col(slots[0]),
-                lambda x: reduce_and(
-                    [
-                        F.array_contains(F.col(c), x + F.lit(i))
-                        for i, c in enumerate(slots[1:], start=1)
-                    ]
-                ),
-            )
-        return present & (F.size(starts) > 0)
-
-    def near_col(a: str, b: str, k: int):
-        # same array expression as proximity_match_indexed: any |pa-pb| <= k
-        pa, pb = F.col(slot[a]), F.col(slot[b])
-        present = pa.isNotNull() & pb.isNotNull()
-        pairs = F.filter(
-            pa,
-            lambda p: F.exists(pb, lambda q: F.abs(q - p) <= F.lit(k)),
-        )
-        return present & (F.size(pairs) > 0)
-
-    def field_col(field: str, term: str):
-        # field membership straight off the gathered position array —
-        # title = first BM25F_TITLE_LEN tokens, bm25f_search's carving
-        from sparkfulltextquery_spark.functions.fulltext import field_pos_pred
-
-        arr = F.col(slot[term])
-        return arr.isNotNull() & F.exists(arr, field_pos_pred(field))
-
-    def as_col(n):
-        if isinstance(n, QL.Term):
-            return F.col(flag[n.text]) == 1
-        if isinstance(n, QL.Prefix):
-            return F.col(wflag[n.text]) == 1
-        if isinstance(n, QL.Fuzzy):
-            return F.col(zflag[(n.text, n.dist)]) == 1
-        if isinstance(n, QL.TermRange):
-            return F.col(rflag[(n.lo, n.hi)]) == 1
-        if isinstance(n, QL.Regex):
-            return F.col(xflag[n.pattern]) == 1
-        if isinstance(n, QL.Wildcard):
-            return F.col(vflag[n.pattern]) == 1
-        if isinstance(n, QL.FieldPrefix):
-            return F.col(fpxflag[(n.field, n.text)]) == 1
-        if isinstance(n, QL.FieldFuzzy):
-            return F.col(ffzflag[(n.field, n.text, n.dist)]) == 1
-        if isinstance(n, QL.FieldRange):
-            return F.col(frgflag[(n.field, n.lo, n.hi)]) == 1
-        if isinstance(n, QL.FieldWildcard):
-            return F.col(fwdflag[(n.field, n.pattern)]) == 1
-        if isinstance(n, QL.Field):
-            return field_col(n.field, n.text)
-        if isinstance(n, QL.FieldPhrase):
-            from sparkfulltextquery_spark.functions.fulltext import (
-                BM25F_TITLE_LEN,
-                exact_starts_expr,
-            )
-
-            toks = fphrase_toks[(n.field, n.text)]
-            arr_of = {t: F.col(slot[t]) for t in set(toks)}
-            present = reduce_and([arr_of[t].isNotNull() for t in set(toks)])
-            k = len(toks)
-            in_field = (
-                (lambda p: p <= F.lit(BM25F_TITLE_LEN - k))
-                if n.field == "title"
-                else (lambda p: p >= F.lit(BM25F_TITLE_LEN))
-            )
-            starts = F.filter(exact_starts_expr(arr_of, toks), in_field)
-            return present & (F.size(starts) > 0)
-        if isinstance(n, QL.PhrasePrefix):
-            from sparkfulltextquery_spark.functions.fulltext import (
-                exact_starts_expr,
-            )
-
-            toks = ppfx_toks[(n.text, n.prefix)]
-            arr_of = {t: F.col(slot[t]) for t in set(toks)}
-            present = reduce_and([arr_of[t].isNotNull() for t in set(toks)])
-            pp_arr = F.col(ppslot[(n.text, n.prefix)])
-            starts = F.filter(
-                exact_starts_expr(arr_of, toks),
-                lambda p: F.exists(
-                    pp_arr, lambda q: q == p + F.lit(len(toks))
-                ),
-            )
-            return present & (F.size(starts) > 0)
-        if isinstance(n, QL.Near):
-            return near_col(n.a, n.b, n.k)
-        if isinstance(n, QL.Phrase):
-            return phrase_col((n.text, n.slop))
-        if isinstance(n, QL.Not):
-            return ~as_col(n.child)
-        if isinstance(n, QL.And):
-            return reduce_and([as_col(c) for c in n.children])
-        out = as_col(n.children[0])
-        for c in n.children[1:]:
-            out = out | as_col(c)
-        return out
-
     return (
-        per_doc.filter(as_col(ast))
+        per_doc.filter(chunk.match_of[0])
         .select("doc_id", "score")
         .orderBy(F.col("score").desc(), F.col("doc_id"))
         .limit(k)

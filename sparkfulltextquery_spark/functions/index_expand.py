@@ -23,15 +23,10 @@ MAX_EXPANSIONS = 1024
 def resolve_expansions(
     spark: SparkSession,
     table_prefix: str,
-    *,
-    prefixes=(),
-    fuzzies=(),
-    ranges=(),
-    regexes=(),
-    wildcards=(),
+    keys,
     max_expansions: int = MAX_EXPANSIONS,
 ) -> dict:
-    """Resolve expansion atoms against the persisted TERM DICTIONARY.
+    """Resolve expansion-atom keys against the persisted TERM DICTIONARY.
 
     Every real engine rewrites multi-term queries (prefix, fuzzy, range,
     regexp, wildcard) to a disjunction of concrete vocabulary terms BEFORE
@@ -44,74 +39,39 @@ def resolve_expansions(
     once per POSTING row, O(total postings). At 100 TB a single ``*ark``
     query forced a full posting scan with a per-row LIKE (VERDICT r07 #1).
 
-    This resolver evaluates each atom's predicate over the doc-frequency
-    table instead — one row per distinct term, O(|vocab|), orders of
-    magnitude smaller than the postings — in ONE bounded aggregation that
-    yields, per atom, its match count and at most ``max_expansions + 1``
-    of its matched terms. An atom matching more than ``max_expansions``
-    terms fails the query loudly; the slice bounds driver transfer to
-    n_atoms × (max_expansions + 1) terms by construction, never by luck.
+    This resolver evaluates each key's predicate (expansion_pred) over the
+    doc-frequency table instead — one row per distinct term, O(|vocab|),
+    orders of magnitude smaller than the postings — in ONE bounded
+    aggregation that yields, per atom, its match count and at most
+    ``max_expansions + 1`` of its matched terms. An atom matching more
+    than ``max_expansions`` terms fails the query loudly; the slice bounds
+    driver transfer to n_atoms × (max_expansions + 1) terms by
+    construction, never by luck.
 
     The caller folds the concrete terms into its equality ``isin``,
     restoring bucket pruning and an equality-only posting scan. Field
     scoping never affects term-level matching (the field carve applies to
     stored POSITIONS at flag time), so field-scoped atoms share their
-    plain atom's resolution.
+    plain atom's key.
 
-    Returns ``{('prefix', w) | ('fuzzy', (t, d)) | ('range', (lo, hi)) |
-    ('regex', pat) | ('wild', pat): sorted list of vocabulary terms}``;
-    empty dict when no expansion atoms were passed (zero extra jobs on
-    the common exact-terms path)."""
-    from sparkfulltextquery_spark.functions import querylang as QL
-
-    atoms: list = []
-    for w in sorted(set(prefixes)):
-        atoms.append((("prefix", w), F.col("term").startswith(w)))
-    for zt, zd in sorted(set(fuzzies)):
-        atoms.append(
-            (("fuzzy", (zt, zd)), F.levenshtein(F.col("term"), F.lit(zt)) <= zd)
-        )
-    for lo, hi in sorted(set(ranges)):
-        atoms.append((("range", (lo, hi)), F.col("term").between(lo, hi)))
-    for pat in sorted(set(regexes)):
-        atoms.append((("regex", pat), F.col("term").rlike(QL.Regex(pat).anchored())))
-    for pat in sorted(set(wildcards)):
-        atoms.append(
-            (("wild", pat), F.col("term").like(QL.Wildcard(pat).like_pattern()))
-        )
-    if not atoms:
+    ``keys`` are ``('prefix', w) | ('fuzzy', (t, d)) | ('range', (lo, hi))
+    | ('regex', pat) | ('wild', pat)`` (querylang.Expand.key). Returns
+    ``{key: sorted list of vocabulary terms}``; an empty dict when no key
+    is passed (zero extra jobs on the common exact-terms path)."""
+    if not keys:
         return {}
     vocab = spark.table(f"{table_prefix}_df").select("term")
-    return resolve_expansions_over(vocab, atoms, max_expansions)
-
-
-def expansion_key(node):
-    """(kind, arg) resolution key for a plain expansion atom AST node, or
-    None for any other node kind — the shared key vocabulary between the
-    resolver, the indexed search compiler, the inline search compiler,
-    and the percolator (r9 unification: ONE discipline). Field-scoped
-    atoms share their plain atom's key: the field carve applies to stored
-    POSITIONS at flag time, never to term-level matching."""
-    from sparkfulltextquery_spark.functions import querylang as QL
-
-    if isinstance(node, QL.Prefix):
-        return ("prefix", node.text)
-    if isinstance(node, QL.Fuzzy):
-        return ("fuzzy", (node.text, node.dist))
-    if isinstance(node, QL.TermRange):
-        return ("range", (node.lo, node.hi))
-    if isinstance(node, QL.Regex):
-        return ("regex", node.pattern)
-    if isinstance(node, QL.Wildcard):
-        return ("wild", node.pattern)
-    return None
+    return resolve_expansions_over(
+        vocab, [(k, expansion_pred(k)) for k in sorted(set(keys))], max_expansions
+    )
 
 
 def expansion_pred(key):
     """Vocabulary predicate for an expansion-atom key — only ever applied
-    to a term-dictionary relation (O(|vocab|) rows), never to postings."""
-    from sparkfulltextquery_spark.functions import querylang as QL
-
+    to a term-dictionary relation (O(|vocab|) rows), never to postings.
+    A regexp is anchored (Lucene regexps match the whole term); a
+    wildcard maps `*` to `%` and `?` to `_` (its alphabet [a-z0-9*?] has
+    no other LIKE metacharacter)."""
     kind, arg = key
     if kind == "prefix":
         return F.col("term").startswith(arg)
@@ -122,38 +82,21 @@ def expansion_pred(key):
         lo, hi = arg
         return F.col("term").between(lo, hi)
     if kind == "regex":
-        return F.col("term").rlike(QL.Regex(arg).anchored())
-    return F.col("term").like(QL.Wildcard(arg).like_pattern())
+        return F.col("term").rlike(f"^(?:{arg})$")
+    return F.col("term").like(arg.replace("*", "%").replace("?", "_"))
 
 
 def collect_expansion_keys(ast) -> set:
-    """Every expansion-resolution key an AST needs: plain atoms via
-    expansion_key, field-scoped atoms folded onto their plain atom's key,
-    and phrase-prefix final-word prefixes as prefix keys."""
+    """Every expansion-resolution key an AST needs: each Expand atom's key
+    (field-scoped or not) and each phrase-prefix's ``('prefix', p)``."""
     from sparkfulltextquery_spark.functions import querylang as QL
 
     keys: set = set()
-
-    def walk(n):
-        k = expansion_key(n)
-        if k is not None:
-            keys.add(k)
-        elif isinstance(n, QL.FieldPrefix):
-            keys.add(("prefix", n.text))
-        elif isinstance(n, QL.FieldFuzzy):
-            keys.add(("fuzzy", (n.text, n.dist)))
-        elif isinstance(n, QL.FieldRange):
-            keys.add(("range", (n.lo, n.hi)))
-        elif isinstance(n, QL.FieldWildcard):
-            keys.add(("wild", n.pattern))
-        elif isinstance(n, QL.PhrasePrefix):
-            keys.add(("prefix", n.prefix))
-        elif isinstance(n, QL.Not):
-            walk(n.child)
-        for c in getattr(n, "children", ()):
-            walk(c)
-
-    walk(ast)
+    for a, _nots in QL.atoms(ast):
+        if isinstance(a, QL.Expand):
+            keys.add(a.key)
+        elif isinstance(a, QL.Phrase) and a.prefix is not None:
+            keys.add(("prefix", a.prefix))
     return keys
 
 

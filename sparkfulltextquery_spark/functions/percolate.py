@@ -90,12 +90,71 @@ def fulltext_percolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# expansion-atom key/predicate helpers are shared with indexed AND inline
-# search (r9 unification — ONE resolution discipline everywhere)
+# the expansion-atom predicate is shared with indexed AND inline search
+# (r9 unification — ONE resolution discipline everywhere)
 from sparkfulltextquery_spark.functions.index_expand import (  # noqa: E402
-    expansion_key as _exp_key_of,
     expansion_pred as _exp_pred,
 )
+from sparkfulltextquery_spark.functions import querylang as QL  # noqa: E402
+
+
+def _parse_stored(qid: int, qs: str):
+    """Parse a stored query, rejecting one satisfiable by the EMPTY
+    document (pure negation): it would match every document outside the
+    pruned scan, which a one-scan percolator cannot see."""
+    ast = QL.parse_query(qs)
+    if QL._eval_empty(ast):
+        raise ValueError(
+            f"stored percolator query {qid} ({qs!r}) is satisfiable by "
+            "the empty document (pure negation) — percolator queries "
+            "need at least one positive atom"
+        )
+    return ast
+
+
+_EXPAND_LABELS = {
+    "prefix": ("Prefix", "FieldPrefix"),
+    "wild": ("Wildcard", "FieldWildcard"),
+    "fuzzy": ("Fuzzy", "FieldFuzzy"),
+    "regex": ("Regex", None),
+    "range": ("TermRange", "FieldRange"),
+}
+
+
+def _atom_label(a) -> str:
+    """The grammar's name for an atom kind, as the percolator's rejection
+    message prints it."""
+    if isinstance(a, QL.Expand):
+        return _EXPAND_LABELS[a.kind][a.field is not None]
+    if isinstance(a, QL.Phrase):
+        return "PhrasePrefix" if a.prefix is not None else "FieldPhrase"
+    return "Field" if isinstance(a, QL.Term) else type(a).__name__
+
+
+def _stored_atoms(ast, expansions_ok: bool = True):
+    """(atom, positive polarity) for every atom of a stored query — the
+    one walk behind registration, the term index, the prefilter and the
+    compiler. The percolator's atom subset is unscoped terms and phrases,
+    plus unscoped expansion atoms when ``expansions_ok`` (a vocab relation
+    to resolve them against); any other atom fails loudly."""
+    for a, nots in QL.atoms(ast):
+        ok = getattr(a, "field", None) is None and (
+            isinstance(a, QL.Term)
+            or (isinstance(a, QL.Phrase) and a.prefix is None)
+            or (isinstance(a, QL.Expand) and expansions_ok)
+        )
+        if not ok:
+            raise ValueError(
+                f"percolator supports term/phrase/AND/OR/NOT atoms "
+                f"(+ expansion atoms when a vocab relation is supplied), "
+                f"got {_atom_label(a)}"
+            )
+        yield a, nots % 2 == 0
+
+
+def _stored_terms(atom) -> list[str]:
+    """The concrete words a term or phrase atom needs present."""
+    return FT._py_tokenize(atom.text) if isinstance(atom, QL.Phrase) else [atom.text]
 
 
 #: Column-width boundary of the one-scan flag compile (r9, VERDICT r08 #1):
@@ -138,7 +197,7 @@ def _registry_atom_terms(
     (positive polarity), with expansion atoms resolved against the
     vocabulary in ONE bounded pass for the whole registry (not one per
     chunk). Returns ``(qid -> term set, expansion cache)``; the cache
-    feeds _percolate_compile so chunks never re-resolve.
+    feeds _compile_chunk so chunks never re-resolve.
 
     Why a zero-overlap query can be skipped: registration rejects queries
     satisfiable by the EMPTY document, and over the AND/OR/NOT grammar
@@ -154,57 +213,25 @@ def _registry_atom_terms(
     the compile-time check guards against — so it raises the same
     ValueError on this path too, keeping behavior identical across
     registry sizes."""
-    from sparkfulltextquery_spark.functions import querylang as QL
-
-    asts = {}
-    for qid, qs in queries:
-        ast = QL.parse_query(qs)
-        if QL._eval_empty(ast):
-            raise ValueError(
-                f"stored percolator query {qid} ({qs!r}) is satisfiable by "
-                "the empty document (pure negation) — percolator queries "
-                "need at least one positive atom"
-            )
-        asts[qid] = ast
+    asts = {qid: _parse_stored(qid, qs) for qid, qs in queries}
     per_q_terms: dict[int, set] = {}
     per_q_keys: dict[int, set] = {}
     all_keys: set = set()
-
-    def walk(n, terms: set, pos_keys: set, neg: bool):
-        if isinstance(n, QL.Term):
-            if not neg:
-                terms.add(n.text)
-        elif isinstance(n, QL.Phrase):
-            if not neg:
-                terms.update(FT._py_tokenize(n.text))
-        elif _exp_key_of(n) is not None and vocab is not None:
-            # the cache must carry BOTH polarities (compile needs every
-            # atom's term list); only positive occurrences feed the
-            # candidate term set
-            all_keys.add(_exp_key_of(n))
-            if not neg:
-                pos_keys.add(_exp_key_of(n))
-        elif isinstance(n, QL.Not):
-            walk(n.child, terms, pos_keys, not neg)
-        elif isinstance(n, (QL.And, QL.Or)):
-            for c in n.children:
-                walk(c, terms, pos_keys, neg)
-        else:
-            # same fail-loud contract as _percolate_compile — the
-            # prefilter must never silently drop a query the compiler
-            # would have rejected loudly
-            raise ValueError(
-                f"percolator supports term/phrase/AND/OR/NOT atoms "
-                f"(+ expansion atoms when a vocab relation is supplied), "
-                f"got {type(n).__name__}"
-            )
-
     for qid, ast in asts.items():
-        t: set = set()
-        ks: set = set()
-        walk(ast, t, ks, False)
-        per_q_terms[qid] = t
-        per_q_keys[qid] = ks
+        terms: set = set()
+        keys: set = set()
+        for a, positive in _stored_atoms(ast, vocab is not None):
+            if isinstance(a, QL.Expand):
+                # the cache must carry BOTH polarities (compile needs every
+                # atom's term list); only positive occurrences feed the
+                # candidate term set
+                all_keys.add(a.key)
+                if positive:
+                    keys.add(a.key)
+            elif positive:
+                terms.update(_stored_terms(a))
+        per_q_terms[qid] = terms
+        per_q_keys[qid] = keys
 
     expansion_cache: dict = {}
     if all_keys:
@@ -335,45 +362,16 @@ def term_index_rows(
     hence always-candidate). Queries with positive expansion atoms are a
     CONSERVATIVE superset versus the in-memory prefilter (which resolves
     atoms against the batch vocab) — never a miss."""
-    from sparkfulltextquery_spark.functions import querylang as QL
-
     _check_distinct_ids(queries)
     rows: list[tuple[int, str | None]] = []
     for qid, qs in queries:
-        ast = QL.parse_query(qs)
-        if QL._eval_empty(ast):
-            raise ValueError(
-                f"stored percolator query {qid} ({qs!r}) is satisfiable by "
-                "the empty document (pure negation) — percolator queries "
-                "need at least one positive atom"
-            )
         terms: set = set()
         has_pos_exp = False
-
-        def walk(n, neg: bool):
-            nonlocal has_pos_exp
-            if isinstance(n, QL.Term):
-                if not neg:
-                    terms.add(n.text)
-            elif isinstance(n, QL.Phrase):
-                if not neg:
-                    terms.update(FT._py_tokenize(n.text))
-            elif _exp_key_of(n) is not None:
-                if not neg:
-                    has_pos_exp = True
-            elif isinstance(n, QL.Not):
-                walk(n.child, not neg)
-            elif isinstance(n, (QL.And, QL.Or)):
-                for c in n.children:
-                    walk(c, neg)
-            else:
-                raise ValueError(
-                    f"percolator supports term/phrase/AND/OR/NOT atoms "
-                    f"(+ expansion atoms when a vocab relation is "
-                    f"supplied), got {type(n).__name__}"
-                )
-
-        walk(ast, False)
+        for a, positive in _stored_atoms(_parse_stored(qid, qs)):
+            if positive and isinstance(a, QL.Expand):
+                has_pos_exp = True
+            elif positive:
+                terms.update(_stored_terms(a))
         rows.extend((qid, t) for t in sorted(terms))
         if has_pos_exp or not terms:
             # not terms: defensive — _eval_empty guarantees a positive
@@ -463,7 +461,7 @@ def _cached_chunk(
     extra_aggs: tuple,
     expansion_cache: dict | None,
     key_extra: tuple = (),
-) -> _CompiledChunk:
+) -> QL.CompiledChunk:
     """Memoized chunk compile (r12, VERDICT r11 #5): the bundle is keyed
     by the chunk's exact (qid, query) tuple, so a hit is definitionally
     the same registry slice — and the bundle's Columns are unbound, so it
@@ -483,71 +481,36 @@ def _cached_chunk(
     return bundle
 
 
-class _CompiledChunk:
-    """A chunk's compiled flag-expression bundle (r12, VERDICT r11 #5):
-    the pruning term union, the per-doc aggregation columns, and the
-    per-query match columns — all UNBOUND Column expressions (built from
-    F.col over the canonical (doc_id, term, positions[, tf, dl]) posting
-    schema), so the same bundle applies to every micro-batch's relation.
-    ``vocab_dependent`` marks bundles containing expansion atoms, whose
-    isin lists resolve against EACH batch's vocabulary — those must never
-    be reused across batches."""
-
-    __slots__ = ("union", "aggs", "match_of", "vocab_dependent")
-
-    def __init__(self, union, aggs, match_of, vocab_dependent):
-        self.union = union
-        self.aggs = aggs
-        self.match_of = match_of
-        self.vocab_dependent = vocab_dependent
-
-    def per_doc(self, rel: DataFrame) -> DataFrame:
-        pruned = rel.filter(F.col("term").isin(self.union))
-        return pruned.groupBy("doc_id").agg(*self.aggs)
-
-
-def _percolate_compile(
-    rel: DataFrame,
-    queries: list[tuple[int, str]],
-    vocab: DataFrame | None = None,
-    extra_aggs: tuple = (),
-    expansion_cache: dict | None = None,
-):
-    b = _compile_chunk(queries, vocab, extra_aggs, expansion_cache)
-    return b.per_doc(rel), b.match_of
-
-
 def _compile_chunk(
     queries: list[tuple[int, str]],
     vocab: DataFrame | None = None,
     extra_aggs: tuple = (),
     expansion_cache: dict | None = None,
-) -> _CompiledChunk:
+) -> QL.CompiledChunk:
     """Boolean-query percolation core (r8, VERDICT r07 #3): compile a
     registry of stored ARBITRARY boolean queries (AND/OR/NOT + term +
-    phrase atoms, the querylang grammar) against ONE shared scan of a
-    positional posting relation — per-query match expressions fold as
-    columns into a single doc_id aggregation. Returns a ``_CompiledChunk``
-    (pruning union + agg columns + per-query match Columns, all unbound);
-    the summary (_percolate_bool) and alerting (percolate_matches) forms
-    build on it. No join, no per-query corpus scan; the same flag
-    machinery as search_indexed but with N stored queries sharing the
-    flag/slot columns.
+    phrase atoms, the querylang grammar) through querylang.compile_queries
+    — the compiler search and search_indexed use — against ONE shared
+    scan of a positional posting relation: per-query match expressions
+    fold as columns into a single doc_id aggregation, with the flag and
+    slot columns shared across the stored queries. The summary
+    (_percolate_bool) and alerting (percolate_matches) forms build on it.
+    No join, no per-query corpus scan.
 
     Contract: every stored query must have at least one positive atom
     (``_eval_empty`` false) — a query satisfiable by the EMPTY document
     (pure negation) would match every document outside the pruned scan,
     which a one-scan percolator cannot see; registration fails loudly.
     This matches the Elasticsearch percolator's requirement that stored
-    queries be matchable.
+    queries be matchable. Field, NEAR and phrase-prefix atoms are
+    rejected loudly too.
 
     Expansion atoms (prefix/fuzzy/range/regex/wildcard) are supported
     when a ``vocab`` relation is supplied (r8): each atom resolves to
-    concrete vocabulary terms at registration time through the same
-    bounded one-aggregation protocol as indexed search
-    (``resolve_expansions_over``, fail-loud ``max_expansions`` cap), so
-    the shared scan stays an equality ``isin``. Without ``vocab``,
-    expansion atoms are rejected loudly.
+    concrete vocabulary terms through the same bounded one-aggregation
+    protocol as indexed search (``resolve_expansions_over``, fail-loud
+    ``max_expansions`` cap), so the shared scan stays an equality
+    ``isin``. Without ``vocab``, expansion atoms are rejected loudly.
 
     Scale shape: the flag compilation is per-STORED-QUERY columns, right
     for registries up to O(10^3) queries; beyond that the conjunctive
@@ -555,143 +518,38 @@ def _compile_chunk(
     ``rel`` must expose (doc_id, term, positions); ``extra_aggs`` lets
     the scored form fold per-term BM25 contributions into the SAME
     doc_id aggregation (their expressions may reference rel's tf/dl)."""
-    from sparkfulltextquery_spark.functions import querylang as QL
-    from sparkfulltextquery_spark.functions.fulltext import slop_starts_expr
-    from sparkfulltextquery_spark.functions.index import reduce_and
-
     asts: dict[int, object] = {}
     for qid, qs in queries:
         if qid in asts:
             # a silently-overwritten duplicate id means silently missed
             # alerts (ADVICE r08) — same fail-loud contract as the
-            # pure-negation check below
+            # pure-negation check
             raise ValueError(
                 f"duplicate stored percolator query_id {qid} — every "
                 "registry entry needs a distinct id"
             )
-        ast = QL.parse_query(qs)
-        if QL._eval_empty(ast):
-            raise ValueError(
-                f"stored percolator query {qid} ({qs!r}) is satisfiable by "
-                "the empty document (pure negation) — percolator queries "
-                "need at least one positive atom"
-            )
-        asts[qid] = ast
-
-    terms: set[str] = set()
-    phrases: set[tuple[str, int]] = set()
-    exp_keys: set[tuple] = set()
-
-    _exp_key = _exp_key_of
-
-    def walk(n):
-        if isinstance(n, QL.Term):
-            terms.add(n.text)
-        elif isinstance(n, QL.Phrase):
-            phrases.add((n.text, n.slop))
-        elif _exp_key(n) is not None and vocab is not None:
-            exp_keys.add(_exp_key(n))
-        elif isinstance(n, QL.Not):
-            walk(n.child)
-        elif isinstance(n, (QL.And, QL.Or)):
-            for c in n.children:
-                walk(c)
-        else:
-            raise ValueError(
-                f"percolator supports term/phrase/AND/OR/NOT atoms "
-                f"(+ expansion atoms when a vocab relation is supplied), "
-                f"got {type(n).__name__}"
-            )
-
-    for ast in asts.values():
-        walk(ast)
-
+        asts[qid] = _parse_stored(qid, qs)
+    exp_keys = {
+        a.key
+        for ast in asts.values()
+        for a, _positive in _stored_atoms(ast, vocab is not None)
+        if isinstance(a, QL.Expand)
+    }
     expansion: dict = {}
-    if exp_keys:
-        if expansion_cache is not None:
-            # resolved once for the whole registry (_registry_atom_terms)
-            # — chunks reuse instead of re-running the vocab pass
-            expansion = {k: expansion_cache.get(k, []) for k in exp_keys}
-        else:
-            from sparkfulltextquery_spark.functions.index import (
-                resolve_expansions_over,
-            )
+    if exp_keys and expansion_cache is not None:
+        # resolved once for the whole registry (_registry_atom_terms)
+        # — chunks reuse instead of re-running the vocab pass
+        expansion = {k: expansion_cache.get(k, []) for k in exp_keys}
+    elif exp_keys:
+        from sparkfulltextquery_spark.functions.index import (
+            resolve_expansions_over,
+        )
 
-            expansion = resolve_expansions_over(
-                vocab.select("term"),
-                [(k, _exp_pred(k)) for k in sorted(exp_keys)],
-            )
-
-    phrase_toks = {p: FT._py_tokenize(p[0]) for p in sorted(phrases)}
-    ptok_union = sorted({t for ts in phrase_toks.values() for t in ts})
-    union = sorted(
-        terms | set(ptok_union) | {t for ts in expansion.values() for t in ts}
-    )
-    flag = {t: f"_t{i}" for i, t in enumerate(sorted(terms))}
-    eflag = {k: f"_e{i}" for i, k in enumerate(sorted(exp_keys))}
-    slot = {t: f"_s{i}" for i, t in enumerate(ptok_union)}
-
-    def _exp_isin(k):
-        ts = expansion.get(k, [])
-        return F.col("term").isin(ts) if ts else F.lit(False)
-
-    aggs = [
-        F.max(F.when(F.col("term") == t, 1).otherwise(0)).alias(c)
-        for t, c in flag.items()
-    ]
-    aggs += [
-        F.max(F.when(_exp_isin(k), 1).otherwise(0)).alias(c)
-        for k, c in eflag.items()
-    ]
-    aggs += [
-        F.max(F.when(F.col("term") == t, F.col("positions"))).alias(c)
-        for t, c in slot.items()
-    ]
-    aggs += list(extra_aggs)
-
-    def phrase_col(p):
-        toks = phrase_toks[p]
-        slop = p[1]
-        slots = [slot[t] for t in toks]
-        present = reduce_and([F.col(c).isNotNull() for c in slots])
-        if slop:
-            starts = slop_starts_expr(
-                {t: F.col(slot[t]) for t in set(toks)}, toks, slop
-            )
-        else:
-            starts = F.filter(
-                F.col(slots[0]),
-                lambda x: reduce_and(
-                    [
-                        F.array_contains(F.col(c), x + F.lit(i))
-                        for i, c in enumerate(slots[1:], start=1)
-                    ]
-                ),
-            )
-        return present & (F.size(starts) > 0)
-
-    def as_col(n):
-        if isinstance(n, QL.Term):
-            return F.col(flag[n.text]) == 1
-        if _exp_key(n) is not None:
-            return F.col(eflag[_exp_key(n)]) == 1
-        if isinstance(n, QL.Phrase):
-            return phrase_col((n.text, n.slop))
-        if isinstance(n, QL.Not):
-            return ~as_col(n.child)
-        if isinstance(n, QL.And):
-            return reduce_and([as_col(c) for c in n.children])
-        out = as_col(n.children[0])
-        for c in n.children[1:]:
-            out = out | as_col(c)
-        return out
-
-    return _CompiledChunk(
-        union,
-        aggs,
-        {qid: as_col(ast) for qid, ast in asts.items()},
-        vocab_dependent=bool(exp_keys),
-    )
+        expansion = resolve_expansions_over(
+            vocab.select("term"),
+            [(k, _exp_pred(k)) for k in sorted(exp_keys)],
+        )
+    return QL.compile_queries(asts, expansion, extra_aggs)
 
 
 def _percolate_bool(
@@ -707,7 +565,7 @@ def _percolate_bool(
 ) -> DataFrame:
     """Summary form of boolean percolation: every stored query's
     (n_docs, first_doc) from ONE global aggregation over the compiled
-    per-doc flags — see _percolate_compile for the machinery and the
+    per-doc flags — see _compile_chunk for the machinery and the
     registration contract. Queries matching nothing are omitted.
 
     Registries wider than ``chunk_size`` (default MAX_COMPILE_QUERIES)
@@ -964,7 +822,7 @@ def _validate_registry(
 ) -> list[tuple[int, str | None]]:
     """Write-time registry validation at LINEAR cost (r11): the former
     discipline compiled the whole registry as one empty-relation
-    _percolate_compile call, whose per-query flag columns make Catalyst
+    _compile_chunk call, whose per-query flag columns make Catalyst
     analysis superlinear in registry width (the measured 10k knee) —
     prohibitive at the 100k-registry scale registration now targets.
     Every contract the compile enforced is checked directly instead:
@@ -975,26 +833,17 @@ def _validate_registry(
     rows the validation pass built, so registration never parses the
     registry twice (r12 — at 1M stored queries the second parse was the
     larger half of the registration wall)."""
-    from sparkfulltextquery_spark.functions import querylang as QL
     from sparkfulltextquery_spark.functions.index_expand import (
         resolve_expansions_over,
     )
 
     rows = term_index_rows(queries)
-    keys: dict = {}
-
-    def walk(n):
-        k = _exp_key_of(n)
-        if k is not None:
-            keys.setdefault(k, type(n).__name__)
-        elif isinstance(n, QL.Not):
-            walk(n.child)
-        elif isinstance(n, (QL.And, QL.Or)):
-            for c in n.children:
-                walk(c)
-
-    for _qid, qs in queries:
-        walk(QL.parse_query(qs))
+    keys = {
+        a.key: _atom_label(a)
+        for _qid, qs in queries
+        for a, _nots in QL.atoms(QL.parse_query(qs))
+        if isinstance(a, QL.Expand)
+    }
     if keys and vocab is None:
         raise ValueError(
             f"percolator supports term/phrase/AND/OR/NOT atoms "
@@ -1716,7 +1565,6 @@ def percolate_scored(
     wider than ``chunk_size`` (default MAX_COMPILE_QUERIES) chunk into
     bounded compiles whose top-k outputs union — per-query top-k is
     independent across queries, so chunking is exact."""
-    from sparkfulltextquery_spark.functions import querylang as QL
     from sparkfulltextquery_spark.functions.fulltext import BM25_B, BM25_K1
     from pyspark.sql import Window
 
@@ -1765,7 +1613,7 @@ def percolate_scored(
         return out.orderBy("query_id", F.col("score").desc(), "doc_id")
 
     pos_of = {
-        qid: sorted(set(QL.positive_terms(QL.parse_query(q))))
+        qid: sorted(QL.term_boosts(QL.parse_query(q)))
         for qid, q in queries
     }
     union_pos = sorted({t for ts in pos_of.values() for t in ts})
@@ -1912,13 +1760,12 @@ def fulltext_percolate_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     rel = FT.positional_postings(d).join(doc_lengths(d), "doc_id").select(
         "doc_id", "term", "positions", "tf", "dl"
     )
-    from sparkfulltextquery_spark.functions import querylang as QL
 
     union_pos = sorted(
         {
             t
             for _qid, q in _PERCOLATE_BOOL_QUERIES
-            for t in QL.positive_terms(QL.parse_query(q))
+            for t in QL.term_boosts(QL.parse_query(q))
         }
     )
     dls = doc_lengths(d)
@@ -1947,7 +1794,6 @@ def fulltext_percolate_scored_indexed(
     bucket-pruned posting rows, idf/n_docs/avgdl fold in as driver
     literals from the stats/df tables — scan + one aggregation + one
     window, no join, corpus never touched."""
-    from sparkfulltextquery_spark.functions import querylang as QL
     from sparkfulltextquery_spark.functions.index import (
         _df_stats_literals,
         _force_bucketed_scan,
@@ -1962,7 +1808,7 @@ def fulltext_percolate_scored_indexed(
         {
             t
             for _qid, q in _PERCOLATE_BOOL_QUERIES
-            for t in QL.positive_terms(QL.parse_query(q))
+            for t in QL.term_boosts(QL.parse_query(q))
         }
     )
     n_docs, avgdl, df_of = _df_stats_literals(spark, prefix, union_pos)
@@ -2085,7 +1931,6 @@ def fulltext_percolate_scored_stream(
     Fresh out/checkpoint dirs per invocation keep the row deterministic."""
     import shutil
 
-    from sparkfulltextquery_spark.functions import querylang as QL
     from sparkfulltextquery_spark.functions.index import _df_stats_literals
     from sparkfulltextquery_spark.storage import index_store_root
 
@@ -2094,7 +1939,7 @@ def fulltext_percolate_scored_stream(
         {
             t
             for _qid, q in _PERCOLATE_BOOL_QUERIES
-            for t in QL.positive_terms(QL.parse_query(q))
+            for t in QL.term_boosts(QL.parse_query(q))
         }
     )
     n_docs, avgdl, df_of = _df_stats_literals(spark, prefix, union_pos)

@@ -609,21 +609,21 @@ def test_expansion_dictionary_matches_postings_predicate(spark, index_tables):
     exp = resolve_expansions(
         spark,
         "t_idx",
-        prefixes=["quer"],
-        fuzzies=[("sparc", 1)],
-        ranges=[("batch", "data")],
-        wildcards=["s?ark"],
-        regexes=["qu.ry"],
+        [
+            ("prefix", "quer"),
+            ("fuzzy", ("sparc", 1)),
+            ("range", ("batch", "data")),
+            ("wild", "s?ark"),
+            ("regex", "qu.ry"),
+        ],
     )
     post = spark.table("t_idx_postings")
-    from sparkfulltextquery_spark.functions.querylang import Regex, Wildcard
-
     want = {
         ("prefix", "quer"): F.col("term").startswith("quer"),
         ("fuzzy", ("sparc", 1)): F.levenshtein(F.col("term"), F.lit("sparc")) <= 1,
         ("range", ("batch", "data")): F.col("term").between("batch", "data"),
-        ("wild", "s?ark"): F.col("term").like(Wildcard("s?ark").like_pattern()),
-        ("regex", "qu.ry"): F.col("term").rlike(Regex("qu.ry").anchored()),
+        ("wild", "s?ark"): F.col("term").like("s_ark"),
+        ("regex", "qu.ry"): F.col("term").rlike("^(?:qu.ry)$"),
     }
     for key, pred in want.items():
         old = sorted(
@@ -634,9 +634,10 @@ def test_expansion_dictionary_matches_postings_predicate(spark, index_tables):
 
 
 def test_pure_negation_expansion_stays_equality_only(spark, index_tables):
-    """Pure-negation queries with expansion atoms (the compile_matches cold
-    path) also resolve through the dictionary: inline == indexed results,
-    and the indexed plan's posting filters are equality-only."""
+    """Pure-negation queries with expansion atoms (the doc-universe
+    left-join path) also resolve through the dictionary: inline ==
+    indexed results, and the indexed plan's posting filters are
+    equality-only."""
     from sparkfulltextquery_spark.functions.index import search_indexed
     from sparkfulltextquery_spark.functions.querylang import search
 

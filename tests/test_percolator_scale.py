@@ -166,7 +166,7 @@ def test_percolator_scored_chunked_equals_single(spark):
         .select("doc_id", "term", "positions", "tf", "dl")
     )
     union_pos = sorted(
-        {t for _qid, q in registry for t in QL.positive_terms(QL.parse_query(q))}
+        {t for _qid, q in registry for t in QL.term_boosts(QL.parse_query(q))}
     )
     dls = doc_lengths(docs)
     st = dls.agg(F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl")).head()

@@ -845,6 +845,39 @@ def test_field_scoped_atoms_indexed_one_pass(spark):
         assert uses_top_k(df), name
 
 
+def _logical_joins(df) -> int:
+    """Join nodes in the optimized logical plan (AQE does not touch it,
+    so a plan that already ran is counted the same)."""
+    import re
+
+    return len(
+        re.findall(r"\bJoin\b", df._jdf.queryExecution().optimizedPlan().toString())
+    )
+
+
+def test_inline_search_matches_without_joins(spark):
+    """Inline query-language search compiles phrase, NEAR and field atoms
+    into one flag aggregation over positional postings: its only joins
+    are the BM25 scoring relation's plus the one that attaches the scores
+    to the matches — no join per positional atom."""
+    from sparkfulltextquery_spark.functions.fulltext import bm25_scores
+    from sparkfulltextquery_spark.functions.querylang import search
+    from sparkfulltextquery_spark.sources import load_table
+
+    docs = load_table(spark, SF_DIR, "documents")
+    q = '"spark join" AND (spark NEAR/3 join) AND title:spark AND "batch query"~2'
+    scoring = _logical_joins(bm25_scores(docs, "spark join batch query"))
+    assert _logical_joins(search(docs, q, k=10)) == scoring + 1
+
+
+def test_inline_query_language_jobs_budget(spark):
+    """Collecting the inline fulltext_query_language row starts at most 16
+    Spark jobs (16 to 17 before inline search shared the flag compiler)."""
+    df = _q(spark, "fulltext_query_language")
+    _rows, n = _jobs_started(spark, df.collect)
+    assert n <= 16, n
+
+
 def test_dismax_indexed_zero_join(spark):
     """Indexed DisMax (VERDICT r06 #2): per-field tf/dl derive per posting
     row from stored positions and the denormalized dl, per-field df/avgdl

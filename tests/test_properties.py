@@ -1243,8 +1243,8 @@ def test_resolver_core_property_dictionary_equals_bruteforce(spark):
     true match count exceeds the cap."""
     import random
 
-    from sparkfulltextquery_spark.functions import querylang as QL
     from sparkfulltextquery_spark.functions.index import resolve_expansions_over
+    from sparkfulltextquery_spark.functions.index_expand import expansion_pred
     from pyspark.sql import functions as F
 
     rng = random.Random(20260816)
@@ -1265,10 +1265,7 @@ def test_resolver_core_property_dictionary_equals_bruteforce(spark):
             (("prefix", pfx), F.col("term").startswith(pfx)),
             (("fuzzy", (zt, 1)), F.levenshtein(F.col("term"), F.lit(zt)) <= 1),
             (("range", (lo, hi)), F.col("term").between(lo, hi)),
-            (
-                ("wild", wild),
-                F.col("term").like(QL.Wildcard(wild).like_pattern()),
-            ),
+            (("wild", wild), expansion_pred(("wild", wild))),
         ]
         got = resolve_expansions_over(vocab, atoms, max_expansions=10**6)
 

@@ -94,25 +94,98 @@ def test_pure_negation_query(spark):
     assert got == expected
 
 
-def test_flag_compilation_equals_join_compilation(spark):
-    """compile_matches_flags (r04 one-pass boolean eval) must produce the
-    same doc set as the join-based compile_matches for every satisfiable
-    AST shape, and decline (None) exactly the pure-negation shapes."""
-    from sparkfulltextquery_spark.functions.fulltext import phrase_match, postings
+def _token_lists(spark):
+    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text").collect()
+    return {
+        r.doc_id: [t for t in re.split("[^a-z0-9]+", r.text.lower()) if t]
+        for r in docs
+    }
+
+
+def _naive_holds(node, ts) -> bool:
+    """Naive evaluation of a parsed query over one doc's token list — the
+    reference the compiler is checked against."""
+    from sparkfulltextquery_spark.functions.fulltext import BM25F_TITLE_LEN as L
+    from sparkfulltextquery_spark.functions.querylang import Expand, Near
+
+    if isinstance(node, Not):
+        return not _naive_holds(node.child, ts)
+    if isinstance(node, (And, Or)):
+        fold = all if isinstance(node, And) else any
+        return fold(_naive_holds(c, ts) for c in node.children)
+    seg = ts if getattr(node, "field", None) is None else (
+        ts[:L] if node.field == "title" else ts[L:]
+    )
+    if isinstance(node, Term):
+        return node.text in seg
+    if isinstance(node, Near):
+        return any(
+            abs(i - j) <= node.k
+            for i, a in enumerate(ts) if a == node.a
+            for j, b in enumerate(ts) if b == node.b
+        )
+    if isinstance(node, Phrase):  # the lists hold exact, unscoped phrases
+        words = node.text.split()
+        return any(ts[i : i + len(words)] == words for i in range(len(ts)))
+    assert isinstance(node, Expand)
+    if node.kind == "prefix":
+        return any(t.startswith(node.arg) for t in seg)
+    if node.kind == "regex":
+        return any(re.fullmatch(node.arg, t) for t in seg)
+    word, dist = node.arg  # fuzzy
+    return any(_lev(t, word) <= dist for t in set(seg))
+
+
+def _lev(a: str, b: str) -> int:
+    prev = list(range(len(b) + 1))
+    for i, ca in enumerate(a, 1):
+        cur = [i]
+        for j, cb in enumerate(b, 1):
+            cur.append(min(prev[j] + 1, cur[-1] + 1, prev[j - 1] + (ca != cb)))
+        prev = cur
+    return prev[-1]
+
+
+def _assert_compiler_matches_naive(spark, queries):
+    """The shared compiler (querylang.compile_queries) over inline
+    positional postings matches exactly the naive evaluation of each
+    query; every query must be satisfiable only through an atom (no
+    pure negation, whose docs the scan never reaches)."""
+    from sparkfulltextquery_spark.functions.fulltext import positional_postings
+    from sparkfulltextquery_spark.functions.index_expand import (
+        collect_expansion_keys,
+        expansion_pred,
+        resolve_expansions_over,
+    )
     from sparkfulltextquery_spark.functions.querylang import (
-        compile_matches,
-        compile_matches_flags,
-        parse_query,
+        _eval_empty,
+        compile_queries,
     )
 
-    from sparkfulltextquery_spark.functions.fulltext import proximity_match
+    toks = _token_lists(spark)
+    post = positional_postings(load_table(spark, SF_DIR, "documents"))
+    vocab = post.select("term").distinct()
+    for q in queries:
+        ast = parse_query(q)
+        assert not _eval_empty(ast), q
+        keys = sorted(collect_expansion_keys(ast))
+        expansion = (
+            resolve_expansions_over(vocab, [(k, expansion_pred(k)) for k in keys])
+            if keys
+            else {}
+        )
+        chunk = compile_queries({0: ast}, expansion)
+        got = {
+            r.doc_id
+            for r in chunk.per_doc(post).filter(chunk.match_of[0]).collect()
+        }
+        assert got == {d for d, ts in toks.items() if _naive_holds(ast, ts)}, q
 
-    docs = load_table(spark, SF_DIR, "documents")
-    post = postings(docs)
-    phrase_fn = lambda text, slop=0: phrase_match(docs, text).select("doc_id")  # noqa: E731
-    near_fn = lambda a, b, k: proximity_match(docs, a, b, k).select("doc_id")  # noqa: E731
-    universe = docs.select("doc_id")
 
+def test_compiler_equals_naive_evaluation(spark):
+    """The shared flag compiler produces the naive match set for every
+    satisfiable AST shape; the pure-negation shapes, which need the doc
+    universe, match their naive set through search."""
     satisfiable = [
         "spark",
         "spark AND join",
@@ -133,36 +206,26 @@ def test_flag_compilation_equals_join_compilation(spark):
         "(spark NEAR/3 join) OR batch",
         'spark NEAR/4 join AND NOT vector',
     ]
-    for q in satisfiable:
-        ast = parse_query(q)
-        flags = compile_matches_flags(ast, post, phrase_fn, near_fn=near_fn)
-        assert flags is not None, q
-        want = {
-            r.doc_id
-            for r in compile_matches(
-                ast, post, phrase_fn, universe, near_fn=near_fn
-            ).collect()
-        }
-        got = {r.doc_id for r in flags.collect()}
-        assert got == want, q
+    _assert_compiler_matches_naive(spark, satisfiable)
 
+    toks = _token_lists(spark)
+    docs = load_table(spark, SF_DIR, "documents")
     for q in ["NOT spark", "NOT (spark AND join)", "NOT spark OR join"]:
-        assert (
-            compile_matches_flags(parse_query(q), post, phrase_fn, near_fn=near_fn)
-            is None
-        ), q
+        ast = parse_query(q)
+        got = {r.doc_id for r in search(docs, q, k=10**6).collect()}
+        assert got == {d for d, ts in toks.items() if _naive_holds(ast, ts)}, q
 
 
 def test_parser_prefix_and_boost_shapes():
-    from sparkfulltextquery_spark.functions.querylang import Prefix, term_boosts
+    from sparkfulltextquery_spark.functions.querylang import Expand, term_boosts
 
-    assert parse_query("spar*") == Prefix("spar")
+    assert parse_query("spar*") == Expand("prefix", "spar")
     assert parse_query("spark^2") == Term("spark", 2.0)
     assert parse_query("spark^2.5 AND join") == And(
         (Term("spark", 2.5), Term("join"))
     )
     # boost parses before normalization; prefixes normalize their stem
-    assert parse_query("SPAR*") == Prefix("spar")
+    assert parse_query("SPAR*") == Expand("prefix", "spar")
     assert term_boosts(parse_query("spark^3 OR join")) == {
         "spark": 3.0,
         "join": 1.0,
@@ -227,13 +290,13 @@ def test_parser_field_and_fuzzy_shapes():
     """r6 atoms: `field:term` scopes a term to the positionally-carved
     title/body field; `term~N` is an edit-distance atom. Malformed forms
     reject instead of silently dropping pieces (ADVICE r05 discipline)."""
-    from sparkfulltextquery_spark.functions.querylang import Field, Fuzzy
+    from sparkfulltextquery_spark.functions.querylang import Expand
 
-    assert parse_query("title:spark") == Field("title", "spark")
-    assert parse_query("BODY:Join") == Field("body", "join")
-    assert parse_query("sparc~1") == Fuzzy("sparc", 1)
+    assert parse_query("title:spark") == Term("spark", field="title")
+    assert parse_query("BODY:Join") == Term("join", field="body")
+    assert parse_query("sparc~1") == Expand("fuzzy", ("sparc", 1))
     assert parse_query("title:spark AND sparc~2") == And(
-        (Field("title", "spark"), Fuzzy("sparc", 2))
+        (Term("spark", field="title"), Expand("fuzzy", ("sparc", 2)))
     )
     for bad in [
         "author:spark",      # unknown field
@@ -251,64 +314,23 @@ def test_parser_field_and_fuzzy_shapes():
             parse_query(bad)
 
 
-def test_field_fuzzy_flag_equals_join_compilation(spark):
-    """The one-pass flag compiler and the join compiler must agree on the
-    match set for every field/fuzzy AST shape (the same invariant the r4/r5
-    atoms pin in test_flag_compilation_equals_join_compilation)."""
-    from sparkfulltextquery_spark.functions.fulltext import (
-        BM25F_TITLE_LEN,
-        phrase_match,
-        positional_relation,
-        proximity_match,
+def test_field_fuzzy_compiler_equals_naive_evaluation(spark):
+    """The shared compiler agrees with naive evaluation on the match set
+    for every field/fuzzy AST shape (the same invariant the r4/r5 atoms
+    pin in test_compiler_equals_naive_evaluation)."""
+    _assert_compiler_matches_naive(
+        spark,
+        [
+            "title:spark",
+            "title:spark AND join",
+            "body:vector AND NOT title:spark",
+            "sparc~1",
+            "sparc~1 OR batch",
+            "batc~1 AND NOT vector",
+            'title:spark AND "batch batch"',
+            "(title:spark OR sparc~1) AND join",
+        ],
     )
-    from sparkfulltextquery_spark.functions.querylang import (
-        compile_matches,
-        compile_matches_flags,
-    )
-    from pyspark.sql import functions as F
-
-    docs = load_table(spark, SF_DIR, "documents")
-    pos_rel = positional_relation(docs)
-    post = pos_rel.groupBy("term", "doc_id").agg(F.count(F.lit(1)).alias("tf"))
-    phrase_fn = lambda text, slop=0: phrase_match(docs, text, pos=pos_rel).select("doc_id")  # noqa: E731
-    near_fn = lambda a, b, k: proximity_match(docs, a, b, k, pos=pos_rel).select("doc_id")  # noqa: E731
-
-    def field_fn(field, term):
-        in_field = (
-            F.col("pos") < BM25F_TITLE_LEN
-            if field == "title"
-            else F.col("pos") >= BM25F_TITLE_LEN
-        )
-        return (
-            pos_rel.filter((F.col("term") == term) & in_field)
-            .select("doc_id")
-            .distinct()
-        )
-
-    universe = docs.select("doc_id")
-    for q in [
-        "title:spark",
-        "title:spark AND join",
-        "body:vector AND NOT title:spark",
-        "sparc~1",
-        "sparc~1 OR batch",
-        "batc~1 AND NOT vector",
-        'title:spark AND "batch batch"',
-        "(title:spark OR sparc~1) AND join",
-    ]:
-        ast = parse_query(q)
-        flags = compile_matches_flags(
-            ast, post, phrase_fn, near_fn=near_fn, field_fn=field_fn
-        )
-        assert flags is not None, q
-        want = {
-            r.doc_id
-            for r in compile_matches(
-                ast, post, phrase_fn, universe, near_fn=near_fn, field_fn=field_fn
-            ).collect()
-        }
-        got = {r.doc_id for r in flags.collect()}
-        assert got == want, q
 
 
 def test_field_matches_title_positions(spark):
@@ -391,15 +413,17 @@ def test_slop_zero_equals_exact_phrase(spark):
 def test_parser_range_and_fieldphrase_shapes():
     """r6: `[a TO b]` lexicographic vocabulary ranges and `title:"a b"`
     field-scoped phrases; malformed forms reject."""
-    from sparkfulltextquery_spark.functions.querylang import FieldPhrase, TermRange
+    from sparkfulltextquery_spark.functions.querylang import Expand
 
-    assert parse_query("[alpha TO beta]") == TermRange("alpha", "beta")
-    assert parse_query("[A TO Z2]") == TermRange("a", "z2")
-    assert parse_query('title:"spark join"') == FieldPhrase("title", "spark join")
+    assert parse_query("[alpha TO beta]") == Expand("range", ("alpha", "beta"))
+    assert parse_query("[A TO Z2]") == Expand("range", ("a", "z2"))
+    assert parse_query('title:"spark join"') == Phrase("spark join", field="title")
     assert parse_query('body:"a b" AND c') == And(
-        (FieldPhrase("body", "a b"), Term("c"))
+        (Phrase("a b", field="body"), Term("c"))
     )
-    assert parse_query("[a TO b] OR x") == Or((TermRange("a", "b"), Term("x")))
+    assert parse_query("[a TO b] OR x") == Or(
+        (Expand("range", ("a", "b")), Term("x"))
+    )
     for bad in [
         "[a TO",            # unterminated
         "[a b]",            # missing TO
@@ -453,17 +477,20 @@ def test_parser_regex_shapes():
     """r6: `/pattern/` regexp atoms (Lucene RegexpQuery) — implicitly
     anchored, restricted to the Java-regex/RE2-portable subset; malformed
     or non-portable patterns reject."""
-    from sparkfulltextquery_spark.functions.querylang import Regex
+    from sparkfulltextquery_spark.functions.index_expand import expansion_pred
+    from sparkfulltextquery_spark.functions.querylang import Expand
 
-    assert parse_query("/sp.rk/") == Regex("sp.rk")
-    assert parse_query("/SP(AR|UR)K/") == Regex("sp(ar|ur)k")
-    assert parse_query("/qu.+y/ OR batch") == Or((Regex("qu.+y"), Term("batch")))
-    assert parse_query("NOT /a[bc]d/") == Not(Regex("a[bc]d"))
-    assert Regex("sp.rk").anchored() == "^(?:sp.rk)$"
+    assert parse_query("/sp.rk/") == Expand("regex", "sp.rk")
+    assert parse_query("/SP(AR|UR)K/") == Expand("regex", "sp(ar|ur)k")
+    assert parse_query("/qu.+y/ OR batch") == Or(
+        (Expand("regex", "qu.+y"), Term("batch"))
+    )
+    assert parse_query("NOT /a[bc]d/") == Not(Expand("regex", "a[bc]d"))
+    assert "^(?:sp.rk)$" in str(expansion_pred(("regex", "sp.rk")))
     # ADVICE r06: quantifier chars INSIDE a character class are literals —
     # the stacked-quantifier gate must not reject them
-    assert parse_query("/a[+?]/") == Regex("a[+?]")
-    assert parse_query("/a[*+]b*/") == Regex("a[*+]b*")
+    assert parse_query("/a[+?]/") == Expand("regex", "a[+?]")
+    assert parse_query("/a[*+]b*/") == Expand("regex", "a[*+]b*")
     for bad in [
         "//",          # empty pattern
         "/a\\d/",      # escapes are not portable
@@ -500,35 +527,17 @@ def test_regex_matches_naive_fullmatch(spark):
     assert got == exp
 
 
-def test_regex_flag_equals_join_compilation(spark):
-    """One-pass flag compiler vs join compiler on regex-bearing ASTs."""
-    from pyspark.sql import functions as F
-
-    from sparkfulltextquery_spark.functions.fulltext import phrase_match, postings
-    from sparkfulltextquery_spark.functions.querylang import (
-        compile_matches,
-        compile_matches_flags,
+def test_regex_compiler_equals_naive_evaluation(spark):
+    """The shared compiler vs naive evaluation on regex-bearing ASTs."""
+    _assert_compiler_matches_naive(
+        spark,
+        [
+            "/sp.rk/",
+            "/sp.rk/ OR batch",
+            "/qu.r(y|ies)/ AND NOT spark",
+            "(/jo.+/ OR vector) AND batch",
+        ],
     )
-
-    docs = load_table(spark, SF_DIR, "documents")
-    post = postings(docs)
-    phrase_fn = lambda text, slop=0: phrase_match(docs, text).select("doc_id")  # noqa: E731
-    universe = docs.select("doc_id")
-    for q in [
-        "/sp.rk/",
-        "/sp.rk/ OR batch",
-        "/qu.r(y|ies)/ AND NOT spark",
-        "(/jo.+/ OR vector) AND batch",
-    ]:
-        ast = parse_query(q)
-        flags = compile_matches_flags(ast, post, phrase_fn)
-        assert flags is not None, q
-        want = {
-            r.doc_id
-            for r in compile_matches(ast, post, phrase_fn, universe).collect()
-        }
-        got = {r.doc_id for r in flags.collect()}
-        assert got == want, q
 
 
 def test_parser_phrase_boost_shapes():
@@ -564,12 +573,12 @@ def test_phrase_boost_scales_ranking(spark):
 def test_parser_fieldprefix_shapes():
     """r6: `title:spar*` field-scoped wildcard prefixes (Prefix ∘ Field);
     malformed forms reject."""
-    from sparkfulltextquery_spark.functions.querylang import FieldPrefix
+    from sparkfulltextquery_spark.functions.querylang import Expand
 
-    assert parse_query("title:spar*") == FieldPrefix("title", "spar")
-    assert parse_query("BODY:Quer*") == FieldPrefix("body", "quer")
+    assert parse_query("title:spar*") == Expand("prefix", "spar", "title")
+    assert parse_query("BODY:Quer*") == Expand("prefix", "quer", "body")
     assert parse_query("title:spar* AND batch") == And(
-        (FieldPrefix("title", "spar"), Term("batch"))
+        (Expand("prefix", "spar", "title"), Term("batch"))
     )
     for bad in [
         # (interior wildcards became FieldWildcard in r7)
@@ -614,12 +623,12 @@ def test_fieldprefix_matches_naive(spark):
 def test_parser_fieldfuzzy_shapes():
     """r6: `title:sparc~1` field-scoped fuzzy atoms (Fuzzy ∘ Field);
     malformed forms reject."""
-    from sparkfulltextquery_spark.functions.querylang import FieldFuzzy
+    from sparkfulltextquery_spark.functions.querylang import Expand
 
-    assert parse_query("title:sparc~1") == FieldFuzzy("title", "sparc", 1)
-    assert parse_query("BODY:Sparc~2") == FieldFuzzy("body", "sparc", 2)
+    assert parse_query("title:sparc~1") == Expand("fuzzy", ("sparc", 1), "title")
+    assert parse_query("BODY:Sparc~2") == Expand("fuzzy", ("sparc", 2), "body")
     assert parse_query("title:sparc~1 OR batch") == Or(
-        (FieldFuzzy("title", "sparc", 1), Term("batch"))
+        (Expand("fuzzy", ("sparc", 1), "title"), Term("batch"))
     )
     for bad in [
         "title:sparc~0",   # distance out of range
@@ -635,27 +644,33 @@ def test_parser_fieldfuzzy_shapes():
 def test_parser_wildcard_shapes():
     """r7: general wildcard atoms (Lucene WildcardQuery) — `?` single-char,
     leading/infix `*`; a single trailing `*` stays the Prefix atom."""
-    from sparkfulltextquery_spark.functions.querylang import Prefix, Wildcard
+    from sparkfulltextquery_spark.functions.index_expand import expansion_pred
+    from sparkfulltextquery_spark.functions.querylang import Expand
 
-    assert parse_query("sp?rk") == Wildcard("sp?rk")
-    assert parse_query("*ark") == Wildcard("*ark")
-    assert parse_query("s*rk") == Wildcard("s*rk")
-    assert parse_query("SP?RK") == Wildcard("sp?rk")  # normalized
-    assert parse_query("s**rk") == Wildcard("s*rk")  # ** collapses to *
-    assert parse_query("sp?r*") == Wildcard("sp?r*")
-    assert parse_query("spar*") == Prefix("spar")  # trailing-only stays Prefix
-    assert parse_query("s?rk OR batch") == Or((Wildcard("s?rk"), Term("batch")))
-    assert Wildcard("s*r?k").like_pattern() == "s%r_k"
+    assert parse_query("sp?rk") == Expand("wild", "sp?rk")
+    assert parse_query("*ark") == Expand("wild", "*ark")
+    assert parse_query("s*rk") == Expand("wild", "s*rk")
+    assert parse_query("SP?RK") == Expand("wild", "sp?rk")  # normalized
+    assert parse_query("s**rk") == Expand("wild", "s*rk")  # ** collapses to *
+    assert parse_query("sp?r*") == Expand("wild", "sp?r*")
+    # trailing-only stays a prefix
+    assert parse_query("spar*") == Expand("prefix", "spar")
+    assert parse_query("s?rk OR batch") == Or(
+        (Expand("wild", "s?rk"), Term("batch"))
+    )
+    assert "s%r_k" in str(expansion_pred(("wild", "s*r?k")))
     # whitespace splits atoms — "s*r k*" is TWO atoms under implicit AND
-    assert parse_query("s*r k*") == And((Wildcard("s*r"), Prefix("k")))
+    assert parse_query("s*r k*") == And(
+        (Expand("wild", "s*r"), Expand("prefix", "k"))
+    )
     with pytest.raises(ValueError):
         parse_query("sp?rk^2")  # boost on an unscored wildcard
 
 
 def test_wildcard_matches_naive_like(spark):
-    """Wildcard retrieval equals naive per-doc fnmatch over token lists,
-    through BOTH compilers (flag path via search; join path via
-    compile_matches is covered by the AST fuzzer)."""
+    """Wildcard retrieval equals naive per-doc fnmatch over token lists
+    through search (the query-language fuzz covers the other callers of
+    the shared compiler)."""
     toks = _token_sets(spark)
     pat = re.compile("sp.rk")  # sp?rk
     suf = re.compile(".*indow")  # *indow
@@ -680,18 +695,17 @@ def test_wildcard_matches_naive_like(spark):
 def test_parser_fieldrange_and_fieldwildcard_shapes():
     """r7: field-scoped range `title:[a TO b]` (the ADVICE r06 misparse,
     now a real atom) and field-scoped general wildcard `title:sp?rk`."""
-    from sparkfulltextquery_spark.functions.querylang import (
-        FieldPrefix,
-        FieldRange,
-        FieldWildcard,
-    )
+    from sparkfulltextquery_spark.functions.querylang import Expand
 
-    assert parse_query("title:[alpha TO beta]") == FieldRange("title", "alpha", "beta")
-    assert parse_query("BODY:[Q TO Quick]") == FieldRange("body", "q", "quick")
-    assert parse_query("title:sp?rk") == FieldWildcard("title", "sp?rk")
-    assert parse_query("body:*ark") == FieldWildcard("body", "*ark")
-    assert parse_query("title:s*rk") == FieldWildcard("title", "s*rk")
-    assert parse_query("title:spar*") == FieldPrefix("title", "spar")  # stays prefix
+    assert parse_query("title:[alpha TO beta]") == Expand(
+        "range", ("alpha", "beta"), "title"
+    )
+    assert parse_query("BODY:[Q TO Quick]") == Expand("range", ("q", "quick"), "body")
+    assert parse_query("title:sp?rk") == Expand("wild", "sp?rk", "title")
+    assert parse_query("body:*ark") == Expand("wild", "*ark", "body")
+    assert parse_query("title:s*rk") == Expand("wild", "s*rk", "title")
+    # stays a prefix
+    assert parse_query("title:spar*") == Expand("prefix", "spar", "title")
     for bad in [
         "title:[beta TO alpha]",   # empty range
         "title:[a TO",             # unterminated
@@ -707,12 +721,10 @@ def test_parser_fieldrange_and_fieldwildcard_shapes():
 def test_parser_phrase_prefix_shapes():
     """r7: '"spark jo*"' phrase-prefix atoms (Elasticsearch
     match_phrase_prefix); non-final wildcards inside phrases fail loud."""
-    from sparkfulltextquery_spark.functions.querylang import PhrasePrefix
-
-    assert parse_query('"spark jo*"') == PhrasePrefix("spark", "jo")
-    assert parse_query('"batch batch bat*"') == PhrasePrefix("batch batch", "bat")
+    assert parse_query('"spark jo*"') == Phrase("spark", prefix="jo")
+    assert parse_query('"batch batch bat*"') == Phrase("batch batch", prefix="bat")
     assert parse_query('"SPARK Jo*" AND vector') == And(
-        (PhrasePrefix("spark", "jo"), Term("vector"))
+        (Phrase("spark", prefix="jo"), Term("vector"))
     )
     for bad in [
         '"jo*"',          # no lead word — use a plain prefix atom

@@ -883,7 +883,7 @@ def test_streaming_scored_percolation_equals_batch(spark, tmp_path):
 
     # registration-time corpus statistics (the pinned literals)
     union_pos = sorted(
-        {t for _qid, q in registry for t in QL.positive_terms(QL.parse_query(q))}
+        {t for _qid, q in registry for t in QL.term_boosts(QL.parse_query(q))}
     )
     dls = doc_lengths(docs)
     st = dls.agg(F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl")).head()
