@@ -61,9 +61,7 @@ def resolve_expansions(
     if not keys:
         return {}
     vocab = spark.table(f"{table_prefix}_df").select("term")
-    return resolve_expansions_over(
-        vocab, [(k, expansion_pred(k)) for k in sorted(set(keys))], max_expansions
-    )
+    return resolve_expansions_over(vocab, keys, max_expansions)
 
 
 def expansion_pred(key):
@@ -101,15 +99,16 @@ def collect_expansion_keys(ast) -> set:
 
 
 def resolve_expansions_over(
-    vocab: DataFrame, atoms: list, max_expansions: int = MAX_EXPANSIONS
+    vocab: DataFrame, keys, max_expansions: int = MAX_EXPANSIONS
 ) -> dict:
     """The resolver core over ANY (term)-column vocabulary relation —
     the persisted df table on the indexed path, or a corpus-derived
     ``postings.select('term').distinct()`` on the inline path (the inline
     caller pays one corpus-derived pass it was already paying as a
     predicate scan; the win is the same bounded concrete-term list).
-    ``atoms`` is [(key, predicate Column)]. Same bounded aggregation and
-    fail-loud cap as resolve_expansions."""
+    Same keys, bounded aggregation and fail-loud cap as
+    resolve_expansions."""
+    atoms = [(k, expansion_pred(k)) for k in sorted(set(keys))]
     # ONE aggregation: per atom, its match count and at most
     # max_expansions + 1 of its matched terms — enough to fail loudly on an
     # over-cap atom, and a bound on what reaches the driver either way

@@ -90,11 +90,6 @@ def fulltext_percolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# the expansion-atom predicate is shared with indexed AND inline search
-# (r9 unification — ONE resolution discipline everywhere)
-from sparkfulltextquery_spark.functions.index_expand import (  # noqa: E402
-    expansion_pred as _exp_pred,
-)
 from sparkfulltextquery_spark.functions import querylang as QL  # noqa: E402
 
 
@@ -150,11 +145,6 @@ def _stored_atoms(ast, expansions_ok: bool = True):
                 f"got {_atom_label(a)}"
             )
         yield a, nots % 2 == 0
-
-
-def _stored_terms(atom) -> list[str]:
-    """The concrete words a term or phrase atom needs present."""
-    return FT._py_tokenize(atom.text) if isinstance(atom, QL.Phrase) else [atom.text]
 
 
 #: Column-width boundary of the one-scan flag compile (r9, VERDICT r08 #1):
@@ -229,7 +219,7 @@ def _registry_atom_terms(
                 if positive:
                     keys.add(a.key)
             elif positive:
-                terms.update(_stored_terms(a))
+                terms.update(QL.atom_terms(a))
         per_q_terms[qid] = terms
         per_q_keys[qid] = keys
 
@@ -239,10 +229,7 @@ def _registry_atom_terms(
             resolve_expansions_over,
         )
 
-        expansion_cache = resolve_expansions_over(
-            vocab.select("term"),
-            [(k, _exp_pred(k)) for k in sorted(all_keys)],
-        )
+        expansion_cache = resolve_expansions_over(vocab.select("term"), all_keys)
     for qid, ks in per_q_keys.items():
         for k in ks:
             per_q_terms[qid].update(expansion_cache.get(k, []))
@@ -371,7 +358,7 @@ def term_index_rows(
             if positive and isinstance(a, QL.Expand):
                 has_pos_exp = True
             elif positive:
-                terms.update(_stored_terms(a))
+                terms.update(QL.atom_terms(a))
         rows.extend((qid, t) for t in sorted(terms))
         if has_pos_exp or not terms:
             # not terms: defensive — _eval_empty guarantees a positive
@@ -458,24 +445,21 @@ def _cached_chunk(
     compile_cache: dict | None,
     queries: list[tuple[int, str]],
     vocab: DataFrame | None,
-    extra_aggs: tuple,
     expansion_cache: dict | None,
-    key_extra: tuple = (),
 ) -> QL.CompiledChunk:
     """Memoized chunk compile (r12, VERDICT r11 #5): the bundle is keyed
     by the chunk's exact (qid, query) tuple, so a hit is definitionally
     the same registry slice — and the bundle's Columns are unbound, so it
     re-applies to every batch's posting relation. Bundles with expansion
     atoms resolve against each batch's vocabulary and are never cached
-    (``vocab_dependent``); ``extra_aggs`` callers (the scored form) pin
-    their literals at registration and fold a literal signature into the
-    key via ``key_extra``, so their bundles cache safely too."""
-    key = (tuple(queries), key_extra)
+    (``vocab_dependent``). Score aggregates are not part of the bundle:
+    the scored form passes them to ``per_doc`` on every call."""
+    key = tuple(queries)
     if compile_cache is not None:
         hit = compile_cache.get(key)
         if hit is not None:
             return hit
-    bundle = _compile_chunk(queries, vocab, extra_aggs, expansion_cache)
+    bundle = _compile_chunk(queries, vocab, expansion_cache)
     if compile_cache is not None and not bundle.vocab_dependent:
         compile_cache[key] = bundle
     return bundle
@@ -484,7 +468,6 @@ def _cached_chunk(
 def _compile_chunk(
     queries: list[tuple[int, str]],
     vocab: DataFrame | None = None,
-    extra_aggs: tuple = (),
     expansion_cache: dict | None = None,
 ) -> QL.CompiledChunk:
     """Boolean-query percolation core (r8, VERDICT r07 #3): compile a
@@ -515,9 +498,9 @@ def _compile_chunk(
     Scale shape: the flag compilation is per-STORED-QUERY columns, right
     for registries up to O(10^3) queries; beyond that the conjunctive
     broadcast-join form (fulltext_percolate) partitions the registry.
-    ``rel`` must expose (doc_id, term, positions); ``extra_aggs`` lets
-    the scored form fold per-term BM25 contributions into the SAME
-    doc_id aggregation (their expressions may reference rel's tf/dl)."""
+    ``rel`` must expose (doc_id, term, positions); the scored form folds
+    per-term BM25 contributions into the SAME doc_id aggregation through
+    ``per_doc``'s extra aggregates (they may reference rel's tf/dl)."""
     asts: dict[int, object] = {}
     for qid, qs in queries:
         if qid in asts:
@@ -545,11 +528,8 @@ def _compile_chunk(
             resolve_expansions_over,
         )
 
-        expansion = resolve_expansions_over(
-            vocab.select("term"),
-            [(k, _exp_pred(k)) for k in sorted(exp_keys)],
-        )
-    return QL.compile_queries(asts, expansion, extra_aggs)
+        expansion = resolve_expansions_over(vocab.select("term"), exp_keys)
+    return QL.compile_queries(asts, expansion)
 
 
 def _percolate_bool(
@@ -609,9 +589,7 @@ def _percolate_bool(
             )
             out = p if out is None else out.unionByName(p)
         return out.orderBy("query_id")
-    bundle = _cached_chunk(
-        compile_cache, queries, vocab, (), _expansion_cache
-    )
+    bundle = _cached_chunk(compile_cache, queries, vocab, _expansion_cache)
     per_doc, match_of = bundle.per_doc(rel), bundle.match_of
     outs = []
     for qid, m in match_of.items():
@@ -722,9 +700,7 @@ def percolate_matches(
             )
             out = p if out is None else out.unionByName(p)
         return out
-    bundle = _cached_chunk(
-        compile_cache, queries, vocab, (), _expansion_cache
-    )
+    bundle = _cached_chunk(compile_cache, queries, vocab, _expansion_cache)
     per_doc, match_of = bundle.per_doc(rel), bundle.match_of
     cols = [
         F.when(m, F.lit(qid)).alias(f"_q{qid}") for qid, m in match_of.items()
@@ -851,10 +827,7 @@ def _validate_registry(
             f"got {sorted(keys.values())[0]}"
         )
     if keys:
-        resolve_expansions_over(
-            vocab.select("term"),
-            [(k, _exp_pred(k)) for k in sorted(keys)],
-        )
+        resolve_expansions_over(vocab.select("term"), keys)
     return rows
 
 
@@ -1556,9 +1529,9 @@ def percolate_scored(
     corpus from driver literals, tf and the denormalized dl off the
     posting row — and each query keeps its top-k docs. The per-term BM25
     contributions fold into the SAME one-scan doc_id aggregation as the
-    match flags (``extra_aggs``); per-query scores are sums of their
-    positive terms' columns, so the whole thing stays scan + agg +
-    window, no join. Expansion atoms match constant-score (no idf
+    match flags (``per_doc``'s extra aggregates); per-query scores are
+    sums of their positive terms' columns, so the whole thing stays
+    scan + agg + window, no join. Expansion atoms match constant-score (no idf
     contribution), exactly like search_indexed.
 
     ``rel`` must expose (doc_id, term, positions, tf, dl). Registries
@@ -1638,14 +1611,8 @@ def percolate_scored(
         F.sum(F.when(F.col("term") == t, tscore(t))).alias(c)
         for t, c in bcol.items()
     )
-    # the literal signature keys the cache alongside the chunk: the same
-    # stored queries scored under refreshed corpus stats must recompile
-    lit_key = (n_docs, avgdl, tuple(sorted(df_of.items())))
-    bundle = _cached_chunk(
-        compile_cache, queries, vocab, extra, _expansion_cache,
-        key_extra=lit_key,
-    )
-    per_doc, match_of = bundle.per_doc(rel), bundle.match_of
+    bundle = _cached_chunk(compile_cache, queries, vocab, _expansion_cache)
+    per_doc, match_of = bundle.per_doc(rel, extra), bundle.match_of
 
     def qscore(qid):
         terms = pos_of[qid]

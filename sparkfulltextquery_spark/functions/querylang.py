@@ -473,7 +473,7 @@ def atoms(node, nots: int = 0):
         yield node, nots
 
 
-def _atom_terms(atom) -> list[str]:
+def atom_terms(atom) -> list[str]:
     """The exact words an atom scores on (none for expansions)."""
     if isinstance(atom, Term):
         return [atom.text]
@@ -500,11 +500,11 @@ def term_boosts(node) -> dict[str, float]:
     mirror it)."""
     if not isinstance(node, (And, Or, Not)):
         # a lone atom keeps its boost as written, even below 1.0
-        return {t: getattr(node, "boost", 1.0) for t in _atom_terms(node)}
+        return {t: getattr(node, "boost", 1.0) for t in atom_terms(node)}
     out: dict[str, float] = {}
     for a, nots in atoms(node):
         if not nots:
-            for t in _atom_terms(a):
+            for t in atom_terms(a):
                 out[t] = max(out.get(t, 1.0), getattr(a, "boost", 1.0))
     return out
 
@@ -555,9 +555,7 @@ class CompiledChunk:
         return rel.filter(pred).groupBy("doc_id").agg(*self.aggs, *extra_aggs)
 
 
-def compile_queries(
-    asts: dict, expansion: dict, extra_aggs: tuple = ()
-) -> CompiledChunk:
+def compile_queries(asts: dict, expansion: dict) -> CompiledChunk:
     """Compile ``{key: ast}`` to one CompiledChunk: ONE scan of the posting
     relation pruned to every atom's concrete terms, ONE per-doc
     aggregation of flag and position-slot columns shared by every query,
@@ -565,7 +563,7 @@ def compile_queries(
     per-atom scan. ``expansion`` maps each Expand key (and each
     phrase-prefix's ``("prefix", p)``) to its resolved vocabulary terms
     (index_expand.resolve_expansions_over), so every posting predicate is
-    an equality ``isin``. ``extra_aggs`` ride in the same aggregation.
+    an equality ``isin``.
 
     Atoms map to aggregates as follows:
     - a term or expansion is a 0/1 flag, max over the doc's rows of
@@ -656,7 +654,7 @@ def compile_queries(
     match_of = {key: as_col(ast) for key, ast in asts.items()}
     return CompiledChunk(
         sorted(terms),
-        aggs + list(extra_aggs),
+        aggs,
         match_of,
         vocab_dependent=bool(expansion),
     )
@@ -694,7 +692,6 @@ def search(
     from sparkfulltextquery_spark.functions.index_expand import (
         MAX_EXPANSIONS,
         collect_expansion_keys,
-        expansion_pred,
         resolve_expansions_over,
     )
     from sparkfulltextquery_spark.functions.text import tokenize
@@ -715,7 +712,7 @@ def search(
     expansion = (
         resolve_expansions_over(
             post.select("term").distinct(),
-            [(key, expansion_pred(key)) for key in sorted(keys)],
+            keys,
             max_expansions if max_expansions is not None else MAX_EXPANSIONS,
         )
         if keys

@@ -154,7 +154,6 @@ def _assert_compiler_matches_naive(spark, queries):
     from sparkfulltextquery_spark.functions.fulltext import positional_postings
     from sparkfulltextquery_spark.functions.index_expand import (
         collect_expansion_keys,
-        expansion_pred,
         resolve_expansions_over,
     )
     from sparkfulltextquery_spark.functions.querylang import (
@@ -168,12 +167,8 @@ def _assert_compiler_matches_naive(spark, queries):
     for q in queries:
         ast = parse_query(q)
         assert not _eval_empty(ast), q
-        keys = sorted(collect_expansion_keys(ast))
-        expansion = (
-            resolve_expansions_over(vocab, [(k, expansion_pred(k)) for k in keys])
-            if keys
-            else {}
-        )
+        keys = collect_expansion_keys(ast)
+        expansion = resolve_expansions_over(vocab, keys) if keys else {}
         chunk = compile_queries({0: ast}, expansion)
         got = {
             r.doc_id
