@@ -728,6 +728,7 @@ def suggest_terms(
 # index_expand; imported here (and re-exported) so callers keep working
 from sparkfulltextquery_spark.functions.index_expand import (  # noqa: E402
     MAX_EXPANSIONS,
+    collect_expansion_keys,
     resolve_expansions,
     resolve_expansions_over,
 )
@@ -785,9 +786,6 @@ def _search_indexed_build(
     max_expansions: int = MAX_EXPANSIONS,
 ) -> DataFrame:
     from sparkfulltextquery_spark.functions import querylang as QL
-    from sparkfulltextquery_spark.functions.index_expand import (
-        collect_expansion_keys,
-    )
 
     _force_bucketed_scan(spark)
     ast = QL.parse_query(query)

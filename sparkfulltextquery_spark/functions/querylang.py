@@ -56,9 +56,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sparkfulltextquery_spark.functions.fulltext import (
+    BM25F_TITLE_LEN,
     _py_tokenize,
     bm25_scores,
+    exact_starts_expr,
+    field_pos_pred,
     postings,
+    slop_starts_expr,
 )
 
 
@@ -574,13 +578,6 @@ def compile_queries(asts: dict, expansion: dict) -> CompiledChunk:
       expressions, the same shapes as phrase_match_indexed;
     - a phrase-prefix also gathers the positions of every resolved prefix
       term, and a start qualifies when one of them follows the words."""
-    from sparkfulltextquery_spark.functions.fulltext import (
-        BM25F_TITLE_LEN,
-        exact_starts_expr,
-        field_pos_pred,
-        slop_starts_expr,
-    )
-
     names: dict = {}
     aggs: list = []
     terms: set = set()
@@ -616,7 +613,8 @@ def compile_queries(asts: dict, expansion: dict) -> CompiledChunk:
         else:
             starts = exact_starts_expr(arr, words)
         if n.field == "title":
-            starts = F.filter(starts, lambda p: p <= F.lit(BM25F_TITLE_LEN - len(words)))
+            last_start = BM25F_TITLE_LEN - len(words)
+            starts = F.filter(starts, lambda p: p <= F.lit(last_start))
         elif n.field == "body":
             starts = F.filter(starts, lambda p: p >= F.lit(BM25F_TITLE_LEN))
         if n.prefix is not None:
