@@ -6,14 +6,19 @@ within the Spark framework") rebuilt Spark-first (SURVEY.md §7 steps 3-4):
 - the inverted index IS a DataFrame: ``postings(term, doc_id, tf)`` built by
   explode + groupBy — shuffle-parallel, no driver state;
 - scores (TF-IDF, BM25) are pure aggregations over that table;
-- search = tokenize query → semi-join postings on the (tiny, broadcast)
-  query-term list → score → global top-k, planned by Spark as
-  TakeOrderedAndProject (per-partition heaps — reference limit.scala:114).
+- search = tokenize query → prune postings to the query terms → score →
+  global top-k, planned by Spark as TakeOrderedAndProject (per-partition
+  heaps — reference limit.scala:114).
 
-At 100 TB the posting table is persisted bucketed by term
+The BM25 term weight is ONE expression, ``bm25_term_score``, shared by
+inline and indexed BM25, query-language and simple-syntax search, the
+indexed multi-field scorers and the percolator. Per-term df is counted in
+plan (``df_over_term``); the corpus stats (n_docs, avgdl) come from a
+one-row relation joined in (inline) or from cached literals (the persisted
+index). At 100 TB the posting table is persisted bucketed by term
 (sources.tables.write_bucketed) so per-query term lookups are pruned scans
-with zero shuffle; df/doc-length stats are precomputed once per corpus and
-broadcast. Nothing here ever collects unbounded data to the driver.
+with zero shuffle. Nothing here ever collects unbounded data to the
+driver.
 
 Reference anchors: tokenization seed `Sentences` stringExpressions.scala:1393;
 TF via explode+groupBy mirrors ml.feature.HashingTF/CountVectorizer
@@ -24,7 +29,7 @@ Robertson/Lucene formulation.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sparkfulltextquery_spark.functions.text import tokenize
@@ -110,7 +115,8 @@ def doc_freq(post: DataFrame) -> DataFrame:
 
 
 def corpus_stats(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Single-row (n_docs, avgdl) — broadcast into scoring joins."""
+    """Single-row (n_docs, avgdl) over every doc, token-empty ones included —
+    persisted as the index's stats table."""
     return doc_lengths(docs, id_col, text_col).agg(
         F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
     )
@@ -131,6 +137,57 @@ def tf_idf(post: DataFrame, n_docs: int) -> DataFrame:
     )
 
 
+def df_over_term() -> Column:
+    """Per-term document frequency of a postings relation, in plan: each
+    (term, doc_id) pair is one posting row, so df is the row count of the
+    term's partition. Over a term-bucketed scan the window needs only a
+    within-task sort — no exchange."""
+    return F.expr("count(1) OVER (PARTITION BY term)")
+
+
+def bm25_term_score(
+    n_docs,
+    avgdl,
+    df="df",
+    tf: str = "tf",
+    dl: str = "dl",
+    k1: float = BM25_K1,
+    b: float = BM25_B,
+    boosts: dict[str, float] | None = None,
+) -> tuple[Column, Column]:
+    """(idf, tscore): the engine's one BM25 term weight and its saturated,
+    length-normalized contribution over a posting row,
+
+        idf(t)    = ln(1 + (N - df + 0.5)/(df + 0.5))          [Lucene form]
+        tscore    = boost(t) · idf(t) · tf·(k1+1) / (tf + k1·(1-b+b·dl/avgdl))
+
+    ``n_docs``, ``avgdl`` and ``df`` are each a column name (the stats
+    columns of a joined one-row relation, an in-plan df) or a number
+    folded in as a literal (the index's cached stats, the percolator's
+    pinned df); ``tf`` and ``dl`` name columns. `term^N` boosts scale idf
+    through one CASE on term (query terms are tokenizer output,
+    [a-z0-9]+). Each Column is parsed from one SQL string: a Column built
+    op by op costs a driver round trip per op."""
+
+    def sql(v) -> str:
+        if isinstance(v, str):
+            return v
+        return f"{v!r}D" if isinstance(v, float) else str(int(v))
+
+    n, d = sql(n_docs), sql(df)
+    idf = f"ln(1.0D + ({n} - {d} + 0.5D) / ({d} + 0.5D))"
+    boosted = sorted((t, float(w)) for t, w in (boosts or {}).items() if w != 1.0)
+    if boosted:
+        whens = " ".join(f"WHEN '{t}' THEN {w!r}D" for t, w in boosted)
+        idf = f"CASE term {whens} ELSE 1.0D END * {idf}"
+    k1, b = float(k1), float(b)
+    tscore = (
+        f"{idf} * ({tf} * {k1 + 1!r}D)"
+        f" / ({tf} + {k1!r}D * ({1 - b!r}D + {b!r}D * {dl} / {sql(avgdl)}))"
+    )
+    return F.expr(idf), F.expr(tscore)
+
+
 def bm25_scores(
     docs: DataFrame,
     query: str,
@@ -138,19 +195,12 @@ def bm25_scores(
     text_col: str = "text",
     k1: float = BM25_K1,
     b: float = BM25_B,
-    post: DataFrame | None = None,
-    boosts: dict[str, float] | None = None,
 ) -> DataFrame:
     """(doc_id, score) BM25 scores for every doc matching ≥1 query term —
-    the un-truncated scoring relation (used by the boolean query language).
-
-    idf(t)   = ln(1 + (N - df + 0.5)/(df + 0.5))          [Lucene form]
-    score(d) = Σ_t boost(t) · idf(t) · tf·(k1+1) / (tf + k1·(1-b+b·dl/avgdl))
-
-    `boosts` ({term: multiplier}, default 1.0) carries Lucene-style
-    `term^N` weights from the query language."""
+    the un-truncated scoring relation: bm25_term_scores summed per doc and
+    rounded at 4dp."""
     return (
-        bm25_term_scores(docs, query, id_col, text_col, k1, b, post, boosts)
+        bm25_term_scores(docs, query, id_col, text_col, k1, b)
         .groupBy("doc_id")
         .agg(F.round(F.sum("tscore"), 4).alias("score"))
     )
@@ -163,68 +213,39 @@ def bm25_term_scores(
     text_col: str = "text",
     k1: float = BM25_K1,
     b: float = BM25_B,
-    post: DataFrame | None = None,
-    boosts: dict[str, float] | None = None,
 ) -> DataFrame:
     """Per-(doc_id, term) BM25 contribution relation — the un-aggregated
     form behind bm25_scores, and the substance of a Lucene-style
     Explanation (o.a.lucene.search.similarities BM25Similarity.explain):
-    (doc_id, term, tf, df, dl, idf, tscore)."""
+    (doc_id, term, tf, df, dl, idf, tscore).
+
+    The postings are pruned to the query terms right after the explode
+    and carry each doc's length; df is counted in plan over them, and
+    n_docs/avgdl come from a one-row relation over EVERY doc — a
+    token-empty doc counts, as in the index's corpus_stats — joined in as
+    the plan's only join."""
     q_terms = sorted({t for t in _py_tokenize(query)})
     if not q_terms:
         raise ValueError("empty query after tokenization")
 
-    if post is None:
-        post = postings(docs, id_col, text_col)
-    # Filter to query terms FIRST — the IN-list prunes the posting scan before
-    # any join; df counts must still come from the full corpus, so doc_freq
-    # is computed on the filtered postings only for the surviving terms, which
-    # is identical to the full computation for those terms.
-    qpost = post.filter(F.col("term").isin(q_terms))
-    dfreq = qpost.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    # doc length = Σ tf over the doc's terms — derived from the posting
-    # relation so the corpus is tokenized ONCE for the whole search
-    # (token-empty docs would be absent here; they can't match any query
-    # term and contribute nothing to avgdl that a search could observe for
-    # corpora without empty docs — ours has none, min 10 tokens/doc)
-    dl = post.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-    stats = dl.agg(F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl"))
-
-    return (
-        qpost.join(F.broadcast(dfreq), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .withColumn(
-            "idf",
-            F.log(
-                F.lit(1.0)
-                + (F.col("n_docs") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-            ),
-        )
-        .withColumn("_boost", _boost_expr(boosts))
-        .withColumn(
-            "tscore",
-            F.col("_boost")
-            * F.col("idf")
-            * (F.col("tf") * (k1 + 1))
-            / (
-                F.col("tf")
-                + F.lit(k1)
-                * (F.lit(1 - b) + F.lit(b) * F.col("dl") / F.col("avgdl"))
-            ),
-        )
-        .select("doc_id", "term", "tf", "df", "dl", "idf", "tscore")
+    toks = docs.select(
+        F.col(id_col).alias("doc_id"), tokenize(F.col(text_col)).alias("toks")
     )
-
-
-def _boost_expr(boosts: dict[str, float] | None):
-    """Per-row boost multiplier column: CASE over the term column, 1.0 for
-    unlisted terms (driver-side literal chain — |query| whens)."""
-    out = F.lit(1.0)
-    for t, w in sorted((boosts or {}).items()):
-        if w != 1.0:
-            out = F.when(F.col("term") == t, F.lit(float(w))).otherwise(out)
-    return out
+    stats = toks.agg(
+        F.count(F.lit(1)).alias("n_docs"), F.avg(F.size("toks")).alias("avgdl")
+    )
+    qpost = (
+        toks.select("doc_id", F.size("toks").alias("dl"), F.explode("toks").alias("term"))
+        .filter(F.col("term").isin(q_terms))
+        .groupBy("term", "doc_id", "dl")
+        .agg(F.count(F.lit(1)).alias("tf"))
+    )
+    idf, tscore = bm25_term_score("n_docs", "avgdl", k1=k1, b=b)
+    return (
+        qpost.select("*", df_over_term().alias("df"))
+        .crossJoin(F.broadcast(stats))
+        .select("doc_id", "term", "tf", "df", "dl", idf.alias("idf"), tscore.alias("tscore"))
+    )
 
 
 def bm25_search(

@@ -26,8 +26,11 @@ from pyspark.sql import functions as F
 from sparkfulltextquery_spark.functions.fulltext import (
     BM25_B,
     BM25_K1,
+    BM25F_TITLE_LEN,
     _py_tokenize,
+    bm25_term_score,
     corpus_stats,
+    df_over_term,
     doc_lengths,
     positional_postings,
 )
@@ -290,7 +293,7 @@ def _df_stats_literals(
     bm25_scores_indexed and search_indexed take only n_docs/avgdl from
     here (no terms, no df job): they count df inside the query plan. The
     percolator takes df too, pinned per stored query at registration, as
-    do more-like-this and BM25F search. idf is still computed BY
+    does more-like-this. idf is still computed BY
     the JVM (the literals feed an F.log expression Catalyst
     constant-folds), so float behavior is bit-identical to a join against
     the df table."""
@@ -316,40 +319,6 @@ def _df_stats_literals(
     return n_docs, avgdl, {t: dfc[t] for t in terms}
 
 
-def _df_over_term() -> Column:
-    """Per-term document frequency of a postings relation, in plan: each
-    (term, doc_id) pair is one posting row, so df is the row count of the
-    term's partition. Over a term-bucketed scan the window needs only a
-    within-task sort — no exchange."""
-    return F.expr("count(1) OVER (PARTITION BY term)")
-
-
-def _bm25_term_score(
-    n_docs: int,
-    avgdl: float,
-    k1: float,
-    b: float,
-    boosts: dict[str, float] | None = None,
-) -> tuple[Column, Column]:
-    """(idf, tscore) over a posting relation carrying term, tf, dl and df
-    columns: the BM25 term weight and its saturated, length-normalized
-    contribution, the formula fulltext.bm25_term_scores evaluates.
-    `term^N` boosts scale idf through one CASE on term (query terms are
-    tokenizer output, [a-z0-9]+). Each is parsed from one SQL string: a
-    Column built op by op costs a driver round trip per op."""
-    idf = f"ln(1.0D + ({int(n_docs)} - df + 0.5D) / (df + 0.5D))"
-    boosted = sorted((t, float(w)) for t, w in (boosts or {}).items() if w != 1.0)
-    if boosted:
-        whens = " ".join(f"WHEN '{t}' THEN {w!r}D" for t, w in boosted)
-        idf = f"CASE term {whens} ELSE 1.0D END * {idf}"
-    k1, b, avgdl = float(k1), float(b), float(avgdl)
-    tscore = (
-        f"{idf} * (tf * {k1 + 1!r}D)"
-        f" / (tf + {k1!r}D * ({1 - b!r}D + {b!r}D * dl / {avgdl!r}D))"
-    )
-    return F.expr(idf), F.expr(tscore)
-
-
 def bm25_scores_indexed(
     spark: SparkSession,
     query: str,
@@ -363,10 +332,11 @@ def bm25_scores_indexed(
     postings scan is pruned to the query terms' buckets (plan shows
     SelectedBucketsCount); the doc length rides in the posting rows
     (denormalized at build), df is counted in plan over the pruned scan
-    (_df_over_term) and n_docs/avgdl fold in as cached driver literals —
+    (df_over_term) and n_docs/avgdl fold in as cached driver literals —
     the whole query is ONE pruned scan + one doc_id agg, zero joins,
-    corpus-size-independent, and building it runs no Spark job. Scoring
-    formula identical to fulltext.bm25_scores."""
+    corpus-size-independent, and building it runs no Spark job. The score
+    is fulltext.bm25_term_score, the expression fulltext.bm25_scores
+    evaluates."""
     _force_bucketed_scan(spark)
     q_terms = sorted(set(_py_tokenize(query)))
     if not q_terms:
@@ -375,9 +345,9 @@ def bm25_scores_indexed(
     post = (
         spark.table(f"{table_prefix}_postings")
         .filter(F.col("term").isin(q_terms))
-        .select("doc_id", "term", "tf", "dl", _df_over_term().alias("df"))
+        .select("doc_id", "term", "tf", "dl", df_over_term().alias("df"))
     )
-    idf, tscore = _bm25_term_score(n_docs, avgdl, k1, b, boosts)
+    idf, tscore = bm25_term_score(n_docs, avgdl, k1=k1, b=b, boosts=boosts)
     if explain:
         return post.select(
             "doc_id", "term", "tf", "df", idf.alias("idf"), tscore.alias("tscore")
@@ -427,20 +397,17 @@ def bm25_search_indexed(
 _FIELD_STATS_CACHE: dict = {}
 
 
-def _dismax_field_stats(
-    spark: SparkSession, table_prefix: str, terms: list[str], title_len: int
-) -> tuple[int, dict[str, float], dict[tuple[str, str], int]]:
-    """(n_docs, {field: avgdl}, {(field, term): df}) as driver literals for
-    the per-field sub-index scoring of dismax_search_indexed. Both jobs are
-    bounded: avgdl is ONE row aggregated from the persisted dl table (the
-    positional title/body carving derives per-field lengths arithmetically
-    — dl_title = least(dl, L), dl_body = dl − dl_title — so no corpus
-    re-tokenization), df collects ≤|query terms| rows off the pruned
-    postings with per-field tf recovered from the stored position arrays.
-    Cached per (session, index, carving), same discipline as
-    _df_stats_literals; avgdl is computed BY Spark so the literal is
-    bit-identical to the inline scorer's F.avg."""
-    n_docs, _avgdl, _ = _df_stats_literals(spark, table_prefix, [])
+def _field_avgdl(
+    spark: SparkSession, table_prefix: str, title_len: int = BM25F_TITLE_LEN
+) -> dict[str, float]:
+    """{field: avgdl} as driver literals for the per-field scoring of
+    dismax_scores_indexed and bm25f_scores_indexed: ONE row aggregated from
+    the persisted dl table (the positional title/body carving derives
+    per-field lengths arithmetically — dl_title = least(dl, L), dl_body =
+    dl − dl_title — so no corpus re-tokenization). Cached per (session,
+    index, carving) and dropped on rebuild, like _df_stats_literals; avgdl
+    is computed BY Spark so the literal is bit-identical to the inline
+    scorer's F.avg."""
     skey = (spark.sparkContext.applicationId, table_prefix, title_len)
     if skey not in _FIELD_STATS_CACHE:
         dl_t = F.least(F.col("dl"), F.lit(title_len))
@@ -452,34 +419,33 @@ def _dismax_field_stats(
             )
             .head()
         )
-        _FIELD_STATS_CACHE[skey] = (
-            {"title": float(row.avg_t), "body": float(row.avg_b)},
-            {},
+        _FIELD_STATS_CACHE[skey] = {"title": float(row.avg_t), "body": float(row.avg_b)}
+    return _FIELD_STATS_CACHE[skey]
+
+
+def _field_postings(spark: SparkSession, table_prefix: str, q_terms: list[str]) -> DataFrame:
+    """The query terms' bucket-pruned posting rows with the per-field
+    tf and dl of the title/body carving: tf_t = |positions < L| off the
+    stored position array, tf_b = tf − tf_t, and dl_t/dl_b from the
+    denormalized dl."""
+    title_len = BM25F_TITLE_LEN
+    return (
+        spark.table(f"{table_prefix}_postings")
+        .filter(F.col("term").isin(q_terms))
+        .select(
+            "doc_id",
+            "term",
+            "tf",
+            "dl",
+            F.size(F.filter("positions", lambda p: p < F.lit(title_len))).alias("tf_t"),
+            F.least(F.col("dl"), F.lit(title_len)).alias("dl_t"),
         )
-    avgdl_of, dfc = _FIELD_STATS_CACHE[skey]
-    missing = [t for t in terms if ("title", t) not in dfc]
-    if missing:
-        tf_t = F.size(
-            F.filter("positions", lambda p: p < F.lit(title_len))
+        .select(
+            "*",
+            (F.col("tf") - F.col("tf_t")).alias("tf_b"),
+            (F.col("dl") - F.col("dl_t")).alias("dl_b"),
         )
-        rows = (
-            spark.table(f"{table_prefix}_postings")
-            .filter(F.col("term").isin(missing))
-            .select("term", tf_t.alias("tf_t"), "tf")
-            .groupBy("term")
-            .agg(
-                F.count(F.when(F.col("tf_t") > 0, 1)).alias("df_t"),
-                F.count(F.when(F.col("tf") - F.col("tf_t") > 0, 1)).alias("df_b"),
-            )
-            .collect()
-        )
-        for r in rows:
-            dfc[("title", r.term)] = int(r.df_t)
-            dfc[("body", r.term)] = int(r.df_b)
-        for t in missing:  # term absent from the corpus in this field
-            dfc.setdefault(("title", t), 0)
-            dfc.setdefault(("body", t), 0)
-    return n_docs, avgdl_of, {(f, t): dfc[(f, t)] for f in ("title", "body") for t in terms}
+    )
 
 
 def dismax_scores_indexed(
@@ -493,74 +459,45 @@ def dismax_scores_indexed(
     """Disjunction-max (doc_id, score) over the persisted index — the
     indexed twin of fulltext.dismax_search (same formula, same
     deterministic title/body carving, same shared-n_docs idf convention).
-    ONE bucket-pruned postings scan, ZERO joins:
+    ONE bucket-pruned postings scan, ZERO joins, and building it runs no
+    Spark job once the stats literals are cached:
 
-    - per-field tf is recovered per posting row from the stored position
-      array (tf_title = |positions < title_len|, tf_body = tf − tf_title);
-    - per-field dl derives from the denormalized dl column arithmetically;
-    - per-field df and avgdl fold in as driver literals
-      (_dismax_field_stats — both bounded jobs, cached per session+index);
-    - each field's independent BM25 score is a column expression; the
-      DisMax fusion max_f + tie·(Σ_f − max_f) is greatest/coalesce over
-      the ≤2 field scores (a missing field, tf_f = 0, contributes NULL —
-      excluded exactly as the inline scorer's absent (doc, field) row).
+    - per-field tf and dl derive per posting row (_field_postings);
+    - per-field df is counted in plan over the term-bucketed scan — the
+      term's rows with tf_f > 0 — and each field's independent BM25 score
+      is fulltext.bm25_term_score over its own df/tf/dl and avgdl
+      (_field_avgdl), n_docs a cached literal;
+    - the DisMax fusion max_f + tie·(Σ_f − max_f) is greatest/coalesce
+      over the ≤2 field scores (a missing field, tf_f = 0, contributes
+      NULL — excluded exactly as the inline scorer's absent (doc, field)
+      row).
 
     The whole query is the pruned scan + one doc_id aggregation —
     corpus-size-independent, the same plan class as bm25_scores_indexed."""
-    from sparkfulltextquery_spark.functions.fulltext import BM25F_TITLE_LEN
-
-    title_len = BM25F_TITLE_LEN
     _force_bucketed_scan(spark)
     q_terms = sorted(set(_py_tokenize(query)))
     if not q_terms:
         raise ValueError("empty query after tokenization")
-    n_docs, avgdl_of, df_of = _dismax_field_stats(
-        spark, table_prefix, q_terms, title_len
-    )
+    n_docs, _avgdl, _ = _df_stats_literals(spark, table_prefix, [])
+    avgdl_of = _field_avgdl(spark, table_prefix)
 
-    def idf_expr(field: str):
-        e = F.lit(None).cast("double")
-        for t in q_terms:
-            dfv = df_of[(field, t)]
-            e = F.when(
-                F.col("term") == t,
-                F.log(
-                    F.lit(1.0)
-                    + (F.lit(n_docs) - F.lit(dfv) + F.lit(0.5))
-                    / (F.lit(dfv) + F.lit(0.5))
-                ),
-            ).otherwise(e)
-        return e
-
-    def field_score(field: str, tf_col, dl_col):
-        return F.when(
-            tf_col > 0,
-            idf_expr(field)
-            * (tf_col * (k1 + 1))
-            / (
-                tf_col
-                + F.lit(k1)
-                * (F.lit(1 - b) + F.lit(b) * dl_col / F.lit(avgdl_of[field]))
-            ),
+    def field_score(f: str) -> Column:
+        _idf, ts = bm25_term_score(
+            n_docs, avgdl_of[f], f"df_{f[0]}", f"tf_{f[0]}", f"dl_{f[0]}", k1, b
         )
+        return F.when(F.col(f"tf_{f[0]}") > 0, ts)
 
-    post = spark.table(f"{table_prefix}_postings").filter(
-        F.col("term").isin(q_terms)
-    )
-    staged = post.select(
-        "doc_id",
-        "term",
-        "tf",
-        "dl",
-        F.size(F.filter("positions", lambda p: p < F.lit(title_len))).alias("tf_t"),
-        F.least(F.col("dl"), F.lit(title_len)).alias("dl_t"),
+    staged = _field_postings(spark, table_prefix, q_terms).select(
+        "*",
+        *[
+            F.expr(f"count(CASE WHEN tf_{f} > 0 THEN 1 END) OVER (PARTITION BY term)")
+            .alias(f"df_{f}")
+            for f in ("t", "b")
+        ],
     ).select(
         "doc_id",
-        "term",
-        field_score("title", F.col("tf_t"), F.col("dl_t")).alias("s_t"),
-        field_score(
-            "body", F.col("tf") - F.col("tf_t"), F.col("dl") - F.col("dl_t")
-        ).alias("s_b"),
+        field_score("title").alias("s_t"),
+        field_score("body").alias("s_b"),
     )
     best = F.greatest(F.col("s_t"), F.col("s_b"))
     dm = best + F.lit(tie) * (
@@ -755,8 +692,8 @@ def search_indexed(
     avgdl are cached literals, so building the plan runs no Spark job
     unless the query has expansion atoms (prefix/fuzzy/range/regex/
     wildcard), which resolve against the term dictionary in one job
-    first. The flags come from querylang.compile_queries, the compiler
-    inline search and the percolator share. Pure-negation queries
+    first. The plan is querylang.ranked_search's, the builder inline
+    search and both simple-syntax searches share. Pure-negation queries
     (satisfiable by a doc with no query term) left-join the per-doc rows
     onto the doc-length table's doc ids.
 
@@ -793,38 +730,38 @@ def _search_indexed_build(
     # (Lucene MultiTermQuery rewrites to concrete term disjunctions before
     # the index is consulted), so the posting scan stays bucket-pruned and
     # equality-only
-    chunk = QL.compile_queries(
-        {0: ast},
-        resolve_expansions(
-            spark, table_prefix, collect_expansion_keys(ast), max_expansions
-        ),
+    expansion = resolve_expansions(
+        spark, table_prefix, collect_expansion_keys(ast), max_expansions
     )
-    post = spark.table(f"{table_prefix}_postings")
-    boosts = QL.term_boosts(ast)
-    tscore = F.lit(0.0)
-    if boosts:
-        # df counted in plan over the pruned scan (term-bucketed: no
-        # exchange; the scan filter is on the window's partition key, so it
-        # stays below it), n_docs/avgdl as cached literals — building the
-        # plan runs no job; `term^N` boosts scale idf through one CASE
-        n_docs, avgdl, _ = _df_stats_literals(spark, table_prefix, [])
-        post = post.select("*", _df_over_term().alias("df"))
-        _idf, ts = _bm25_term_score(n_docs, avgdl, BM25_K1, BM25_B, boosts)
-        tscore = F.when(F.col("term").isin(sorted(boosts)), ts).otherwise(F.lit(0.0))
-    per_doc = chunk.per_doc(post, [F.round(F.sum(tscore), 4).alias("score")])
-    if QL._eval_empty(ast):
-        # pure negation also matches docs the scan never reaches
-        per_doc = (
-            spark.table(f"{table_prefix}_dl")
-            .select("doc_id")
-            .join(per_doc, "doc_id", "left")
-            .withColumn("score", F.coalesce(F.col("score"), F.lit(0.0)))
-        )
-    return (
-        per_doc.filter(chunk.match_of[0])
-        .select("doc_id", "score")
-        .orderBy(F.col("score").desc(), F.col("doc_id"))
-        .limit(k)
+    return _ranked_search_indexed(spark, table_prefix, ast, QL.term_boosts(ast), k, expansion)
+
+
+def _ranked_search_indexed(
+    spark: SparkSession,
+    table_prefix: str,
+    ast,
+    boosts: dict[str, float],
+    k: int,
+    expansion: dict | None = None,
+    k1: float = BM25_K1,
+    b: float = BM25_B,
+) -> DataFrame:
+    """querylang.ranked_search over the persisted index: the term-bucketed
+    postings, n_docs/avgdl as cached literals, and the doc-length table's
+    doc ids as the pure-negation universe."""
+    from sparkfulltextquery_spark.functions import querylang as QL
+
+    n_docs, avgdl, _ = _df_stats_literals(spark, table_prefix, [])
+    return QL.ranked_search(
+        spark.table(f"{table_prefix}_postings"),
+        ast,
+        boosts,
+        (n_docs, avgdl),
+        lambda: spark.table(f"{table_prefix}_dl").select("doc_id"),
+        k,
+        expansion,
+        k1,
+        b,
     )
 
 
@@ -906,55 +843,18 @@ def simple_search_indexed(
     b: float = BM25_B,
 ) -> DataFrame:
     """The simple query syntax (`+must -must_not should`,
-    querylang.parse_simple_query) served off the persisted index as ONE
-    pass: the scan prunes to every mentioned term's buckets, a single
-    doc_id aggregation computes the required/prohibited flags AND the
-    BM25 sum over the required+optional terms (df counted in plan), a
-    flag filter gates the match, and the top-k heap bounds the result —
-    zero joins, the same plan class as search_indexed's one-pass form."""
-    from sparkfulltextquery_spark.functions.querylang import parse_simple_query
+    querylang.simple_query_ast) served off the persisted index through
+    querylang.ranked_search, as search_indexed is: ONE pass — the scan
+    prunes to every mentioned term's buckets, a single doc_id aggregation
+    computes the gate's flags AND the BM25 sum over the `+` and bare terms
+    (df counted in plan), the gate filters, and the top-k heap bounds the
+    result. Zero joins, and building it runs no Spark job once the stats
+    literals are cached."""
+    from sparkfulltextquery_spark.functions.querylang import simple_query_ast
 
     _force_bucketed_scan(spark)
-    req, opt, proh = parse_simple_query(query)
-    score_terms = sorted(set(req) | set(opt))
-    n_docs, avgdl, _ = _df_stats_literals(spark, table_prefix, [])
-    all_terms = sorted(set(req) | set(opt) | set(proh))
-    post = (
-        spark.table(f"{table_prefix}_postings")
-        .filter(F.col("term").isin(all_terms))
-        .select("*", _df_over_term().alias("df"))
-    )
-    _idf, ts = _bm25_term_score(n_docs, avgdl, k1, b)
-    tscore = F.when(F.col("term").isin(score_terms), ts).otherwise(F.lit(0.0))
-    aggs = [F.round(F.sum(tscore), 4).alias("score")]
-    aggs += [
-        F.max(F.when(F.col("term") == t, 1).otherwise(0)).alias(f"_r{i}")
-        for i, t in enumerate(req)
-    ]
-    aggs += [
-        F.max(F.when(F.col("term") == t, 1).otherwise(0)).alias(f"_o{i}")
-        for i, t in enumerate(opt)
-    ]
-    aggs += [
-        F.max(F.when(F.col("term") == t, 1).otherwise(0)).alias(f"_x{i}")
-        for i, t in enumerate(proh)
-    ]
-    per_doc = post.groupBy("doc_id").agg(*aggs)
-    if req:
-        gate = reduce_and([F.col(f"_r{i}") == 1 for i in range(len(req))])
-    else:
-        ors = [F.col(f"_o{i}") == 1 for i in range(len(opt))]
-        gate = ors[0]
-        for c in ors[1:]:
-            gate = gate | c
-    for i in range(len(proh)):
-        gate = gate & (F.col(f"_x{i}") == 0)
-    return (
-        per_doc.filter(gate)
-        .select("doc_id", "score")
-        .orderBy(F.col("score").desc(), F.col("doc_id"))
-        .limit(k)
-    )
+    ast, boosts = simple_query_ast(query)
+    return _ranked_search_indexed(spark, table_prefix, ast, boosts, k, k1=k1, b=b)
 
 
 def bm25f_scores_indexed(
@@ -967,67 +867,39 @@ def bm25f_scores_indexed(
     """BM25F (doc_id, score) over the persisted index — the indexed twin
     of fulltext.bm25f_search (Zaragoza/Robertson simple-BM25F: per-field
     length-normalized tf fused BEFORE the saturating idf product). Same
-    one-pass shape as dismax_scores_indexed: per-field tf recovers from
-    the stored position arrays, per-field dl derives from the
-    denormalized dl column, per-field avgdl folds in via
-    _dismax_field_stats and DOC-LEVEL df/n_docs via _df_stats_literals
-    (BM25F's idf is document-level — a term's df counts docs where it
-    appears in ANY field, exactly the posting-row count). ONE pruned
-    scan + one doc_id aggregation, zero joins."""
-    from sparkfulltextquery_spark.functions.fulltext import (
-        BM25F_TITLE_LEN,
-        BM25F_W_BODY,
-        BM25F_W_TITLE,
-    )
+    one-pass shape as dismax_scores_indexed: per-field tf and dl per
+    posting row (_field_postings), per-field avgdl from _field_avgdl, and
+    a DOC-LEVEL idf (a term's df counts docs where it appears in ANY
+    field, exactly the posting-row count — df_over_term, in plan) from
+    fulltext.bm25_term_score. ONE pruned scan + one doc_id aggregation,
+    zero joins, no Spark job to build once the stats literals are
+    cached."""
+    from sparkfulltextquery_spark.functions.fulltext import BM25F_W_BODY, BM25F_W_TITLE
 
-    title_len = BM25F_TITLE_LEN
     _force_bucketed_scan(spark)
     q_terms = sorted(set(_py_tokenize(query)))
     if not q_terms:
         raise ValueError("empty query after tokenization")
-    n_docs, _avgdl, df_of = _df_stats_literals(spark, table_prefix, q_terms)
-    _n2, avgdl_of, _dff = _dismax_field_stats(spark, table_prefix, [], title_len)
+    n_docs, avgdl, _ = _df_stats_literals(spark, table_prefix, [])
+    avgdl_of = _field_avgdl(spark, table_prefix)
+    idf, _ts = bm25_term_score(n_docs, avgdl, k1=k1, b=b)
 
-    idf_expr = F.lit(None).cast("double")
-    for t in q_terms:
-        idf_expr = F.when(
-            F.col("term") == t,
-            F.log(
-                F.lit(1.0)
-                + (F.lit(n_docs) - F.lit(df_of[t]) + F.lit(0.5))
-                / (F.lit(df_of[t]) + F.lit(0.5))
-            ),
-        ).otherwise(idf_expr)
-
-    def part(weight: float, tf_col, dl_col, field: str):
+    def part(weight: float, f: str):
         # matches the inline `w * tf / (1 - b + b * dl/avgdl)` exactly;
         # a field with tf_f = 0 has no inline row — contribute 0
+        tf_col, dl_col = F.col(f"tf_{f[0]}"), F.col(f"dl_{f[0]}")
         return F.when(
             tf_col > 0,
             F.lit(weight)
             * tf_col
-            / (F.lit(1 - b) + F.lit(b) * dl_col / F.lit(avgdl_of[field])),
+            / (F.lit(1 - b) + F.lit(b) * dl_col / F.lit(avgdl_of[f])),
         ).otherwise(F.lit(0.0))
 
-    post = spark.table(f"{table_prefix}_postings").filter(
-        F.col("term").isin(q_terms)
-    )
-    staged = post.select(
-        "doc_id",
-        "term",
-        "tf",
-        "dl",
-        F.size(F.filter("positions", lambda p: p < F.lit(title_len))).alias("tf_t"),
-        F.least(F.col("dl"), F.lit(title_len)).alias("dl_t"),
-    )
-    tfw = part(
-        BM25F_W_TITLE, F.col("tf_t"), F.col("dl_t"), "title"
-    ) + part(
-        BM25F_W_BODY, F.col("tf") - F.col("tf_t"), F.col("dl") - F.col("dl_t"), "body"
-    )
-    scored = staged.select(
-        "doc_id",
-        (idf_expr * tfw / (F.lit(k1) + tfw)).alias("ts"),
+    tfw = part(BM25F_W_TITLE, "title") + part(BM25F_W_BODY, "body")
+    scored = (
+        _field_postings(spark, table_prefix, q_terms)
+        .select("*", df_over_term().alias("df"))
+        .select("doc_id", (idf * tfw / (F.lit(k1) + tfw)).alias("ts"))
     )
     return scored.groupBy("doc_id").agg(F.round(F.sum("ts"), 4).alias("score"))
 

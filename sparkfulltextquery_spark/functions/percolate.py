@@ -1525,9 +1525,11 @@ def percolate_scored(
 ) -> DataFrame:
     """Ranked percolation (the Elasticsearch percolate-with-scoring
     surface): every (stored query, matching document) pair carries the
-    SAME Lucene BM25 score the search paths compute — idf over the full
-    corpus from driver literals, tf and the denormalized dl off the
-    posting row — and each query keeps its top-k docs. The per-term BM25
+    Lucene BM25 score of its scoring terms — the engine's one term weight,
+    fulltext.bm25_term_score, with n_docs, avgdl and each term's df pinned
+    as driver literals and tf and the denormalized dl off the posting row
+    (a stored query's `term^N` boosts are not applied) — and each query
+    keeps its top-k docs. The per-term BM25
     contributions fold into the SAME one-scan doc_id aggregation as the
     match flags (``per_doc``'s extra aggregates); per-query scores are
     sums of their positive terms' columns, so the whole thing stays
@@ -1538,8 +1540,9 @@ def percolate_scored(
     wider than ``chunk_size`` (default MAX_COMPILE_QUERIES) chunk into
     bounded compiles whose top-k outputs union — per-query top-k is
     independent across queries, so chunking is exact."""
-    from sparkfulltextquery_spark.functions.fulltext import BM25_B, BM25_K1
     from pyspark.sql import Window
+
+    from sparkfulltextquery_spark.functions.fulltext import bm25_term_score
 
     cs = chunk_size or MAX_COMPILE_QUERIES
     if len(queries) > cs:
@@ -1592,23 +1595,9 @@ def percolate_scored(
     union_pos = sorted({t for ts in pos_of.values() for t in ts})
     bcol = {t: f"_b{i}" for i, t in enumerate(union_pos)}
 
-    def tscore(t):
-        idf = F.log(
-            F.lit(1.0)
-            + (F.lit(float(n_docs)) - F.lit(float(df_of[t])) + F.lit(0.5))
-            / (F.lit(float(df_of[t])) + F.lit(0.5))
-        )
-        return idf * (
-            (F.col("tf") * (BM25_K1 + 1))
-            / (
-                F.col("tf")
-                + F.lit(BM25_K1)
-                * (F.lit(1 - BM25_B) + F.lit(BM25_B) * F.col("dl") / F.lit(avgdl))
-            )
-        )
-
     extra = tuple(
-        F.sum(F.when(F.col("term") == t, tscore(t))).alias(c)
+        F.sum(F.when(F.col("term") == t, bm25_term_score(n_docs, avgdl, df_of[t])[1]))
+        .alias(c)
         for t, c in bcol.items()
     )
     bundle = _cached_chunk(compile_cache, queries, vocab, _expansion_cache)

@@ -32,13 +32,15 @@ scale a term's share); prefix/fuzzy/range expansions are constant-score
 The AST is an orthogonal algebra of seven nodes: Term (scored exact word),
 Expand (constant-score prefix/wildcard/fuzzy/regex/range), Phrase (with
 slop, boost, field and a trailing prefix), Near, and And/Or/Not; any atom
-may carry a field. Every query — inline ``search``, ``search_indexed`` and
-the percolator — compiles through ONE function, ``compile_queries``: one
-scan of a posting relation pruned to the atoms' concrete terms, one per-doc
-aggregation of term flags and position arrays, and the boolean tree as a
-Column over them (AND/OR/NOT are &, |, ~; no join per atom). The callers
-differ only in the posting relation they pass and the score aggregates
-they add. Results are ranked by BM25 over the query's scoring terms.
+may carry a field. Every query — inline ``search``, ``search_indexed``,
+the simple syntax and the percolator — compiles through ONE function,
+``compile_queries``: one scan of a posting relation pruned to the atoms'
+concrete terms, one per-doc aggregation of term flags and position arrays,
+and the boolean tree as a Column over them (AND/OR/NOT are &, |, ~; no join
+per atom). Every ranked search — inline and indexed, full grammar and
+simple syntax — then builds through ONE function, ``ranked_search``, which
+adds the BM25 sum over the query's scoring terms to that same aggregation;
+the callers differ only in the posting relation and corpus stats they pass.
 
 This is the composition layer the reference fork existed to enable
 ("full-text query within the Spark framework") — tokenize → index → boolean
@@ -56,14 +58,17 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sparkfulltextquery_spark.functions.fulltext import (
+    BM25_B,
+    BM25_K1,
     BM25F_TITLE_LEN,
     _py_tokenize,
-    bm25_scores,
+    bm25_term_score,
+    df_over_term,
     exact_starts_expr,
     field_pos_pred,
-    postings,
     slop_starts_expr,
 )
+from sparkfulltextquery_spark.functions.text import tokenize
 
 
 # ---------------- AST ----------------
@@ -530,32 +535,37 @@ def _eval_empty(node) -> bool:
 
 class CompiledChunk:
     """Queries compiled to flag expressions over one shared posting scan:
-    the scan-term ``union``, the per-doc aggregation columns ``aggs``, and
-    one boolean match Column per query key in ``match_of``. All are
-    UNBOUND Column expressions over a canonical (doc_id, term, positions[,
-    tf]) posting relation — inline postings, the persisted bucketed index,
-    or a micro-batch — so one bundle applies to any such relation.
+    the scan-term ``union``, the per-doc aggregation columns ``aggs`` (of
+    which ``flags`` names the 0/1 term and expansion flags), and one
+    boolean match Column per query key in ``match_of``. All are UNBOUND
+    Column expressions over a canonical (doc_id, term, positions[, tf])
+    posting relation — inline postings, the persisted bucketed index, or
+    a micro-batch — so one bundle applies to any such relation.
     ``positions`` is read only by field, phrase and NEAR atoms. Match
-    columns are null-safe: on a doc with no scanned row (a doc-universe
-    left join, for pure negation) every atom is false.
-    ``vocab_dependent`` marks bundles whose expansion atoms were resolved
-    against one vocabulary; reusing them on another would be wrong."""
+    columns read ``flag = 1``: every doc of ``per_doc`` has a scanned row,
+    so its flags are never NULL; a doc-universe left join (pure negation,
+    ranked_search) fills them with 0 first. ``vocab_dependent`` marks
+    bundles whose expansion atoms were resolved against one vocabulary;
+    reusing them on another would be wrong."""
 
-    __slots__ = ("union", "aggs", "match_of", "vocab_dependent")
+    __slots__ = ("union", "aggs", "flags", "match_of", "vocab_dependent")
 
-    def __init__(self, union, aggs, match_of, vocab_dependent):
+    def __init__(self, union, aggs, flags, match_of, vocab_dependent):
         self.union = union
         self.aggs = aggs
+        self.flags = flags
         self.match_of = match_of
         self.vocab_dependent = vocab_dependent
 
-    def per_doc(self, rel: DataFrame, extra_aggs=()) -> DataFrame:
+    def per_doc(self, rel: DataFrame, extra_aggs=(), extra_terms=()) -> DataFrame:
         """One row per doc of ``rel`` with a scanned term: the flag and
         slot aggregates, plus ``extra_aggs`` (e.g. a score) in the same
-        aggregation. The scan filter is an equality ``isin`` on term, so
+        aggregation; ``extra_terms`` widen the scan (terms that score but
+        gate nothing). The scan filter is an equality ``isin`` on term, so
         it prunes term buckets and passes below a window partitioned by
         term."""
-        pred = F.col("term").isin(self.union) if self.union else F.lit(False)
+        scan = sorted(set(self.union).union(extra_terms))
+        pred = F.col("term").isin(scan) if scan else F.lit(False)
         return rel.filter(pred).groupBy("doc_id").agg(*self.aggs, *extra_aggs)
 
 
@@ -580,6 +590,7 @@ def compile_queries(asts: dict, expansion: dict) -> CompiledChunk:
       term, and a start qualifies when one of them follows the words."""
     names: dict = {}
     aggs: list = []
+    flags: set = set()
     terms: set = set()
 
     def agg(key, make) -> Column:
@@ -597,7 +608,8 @@ def compile_queries(asts: dict, expansion: dict) -> CompiledChunk:
         if field:
             cond = cond & F.exists(F.col("positions"), field_pos_pred(field))
         col = agg((key, field), lambda: F.max(F.when(cond, 1).otherwise(0)))
-        return F.coalesce(col, F.lit(0)) == 1
+        flags.add(names[key, field])
+        return col == 1
 
     def slot(t) -> Column:
         terms.add(t)
@@ -651,11 +663,95 @@ def compile_queries(asts: dict, expansion: dict) -> CompiledChunk:
 
     match_of = {key: as_col(ast) for key, ast in asts.items()}
     return CompiledChunk(
-        sorted(terms),
-        aggs,
-        match_of,
-        vocab_dependent=bool(expansion),
+        sorted(terms), aggs, sorted(flags), match_of, vocab_dependent=bool(expansion)
     )
+
+
+def ranked_search(
+    post: DataFrame,
+    ast,
+    boosts: dict[str, float],
+    stats,
+    universe,
+    k: int,
+    expansion: dict | None = None,
+    k1: float = BM25_K1,
+    b: float = BM25_B,
+) -> DataFrame:
+    """Top-k (doc_id, score) of the docs matching ``ast``, ranked by BM25
+    over the scoring terms ``boosts`` ({term: boost}) — the one ranked
+    search every caller builds through: inline and indexed query-language
+    search and both forms of the simple syntax. Pure-negation queries rank
+    by doc_id (score 0.0).
+
+    ``post`` is a posting relation carrying (doc_id, term, tf, dl,
+    positions); ``stats`` is ``(n_docs, avgdl)`` as literals (the index's
+    cached stats) or a one-row relation with those columns (inline),
+    joined in as the plan's one join; ``universe()`` returns every doc id,
+    read only for pure negation; ``expansion`` maps the query's expansion
+    keys to resolved vocabulary terms (compile_queries).
+
+    The plan: df counted in plan over the posting scan (df_over_term) →
+    ONE per-doc aggregation computing the query's flags and position
+    slots (compile_queries) AND the BM25 sum (fulltext.bm25_term_score)
+    over a scan pruned to the atoms' and the scoring terms' buckets — a
+    scoring term need not gate the match (the simple syntax's bare terms
+    beside a `+` term) → the boolean filter → top-k heap. A pure-negation
+    query also matches docs the scan never reaches: it left-joins the
+    per-doc rows onto the universe, the one place NULL flags arise, and
+    fills them (and the score) with 0."""
+    chunk = compile_queries({0: ast}, expansion or {})
+    score = F.lit(0.0)
+    if boosts:
+        post = post.select("*", df_over_term().alias("df"))
+        if isinstance(stats, DataFrame):
+            post, stats = post.crossJoin(F.broadcast(stats)), ("n_docs", "avgdl")
+        _idf, ts = bm25_term_score(*stats, k1=k1, b=b, boosts=boosts)
+        score = F.when(F.col("term").isin(sorted(boosts)), ts).otherwise(F.lit(0.0))
+    per_doc = chunk.per_doc(post, [F.round(F.sum(score), 4).alias("score")], boosts)
+    if _eval_empty(ast):
+        per_doc = (
+            universe()
+            .join(per_doc, "doc_id", "left")
+            .fillna(0, subset=[*chunk.flags, "score"])
+        )
+    return (
+        per_doc.filter(chunk.match_of[0])
+        .select("doc_id", "score")
+        .orderBy(F.col("score").desc(), F.col("doc_id"))
+        .limit(k)
+    )
+
+
+def _inline_index(docs: DataFrame, id_col: str, text_col: str):
+    """(staged, postings, stats) for inline ranked search: the corpus is
+    tokenized once and STAGED behind a lazy localCheckpoint barrier (one
+    row per doc with its token array), and both the positional postings
+    (term, doc_id, tf, dl, positions) and the one-row (n_docs, avgdl)
+    stats derive from it. The stats count every doc, token-empty ones too,
+    as the index's corpus_stats does. The barrier keeps Catalyst from
+    re-running the tokenize regex once per consumer; it is lazy (no job at
+    construction) and rebuilt inside every run."""
+    staged = docs.select(
+        F.col(id_col).alias("doc_id"), tokenize(F.col(text_col)).alias("_toks")
+    ).localCheckpoint(eager=False)
+    post = (
+        staged.select(
+            "doc_id",
+            F.size("_toks").alias("dl"),
+            F.posexplode("_toks").alias("pos", "term"),
+        )
+        .groupBy("term", "doc_id")
+        .agg(
+            F.count(F.lit(1)).alias("tf"),
+            F.max("dl").alias("dl"),
+            F.sort_array(F.collect_list("pos")).alias("positions"),
+        )
+    )
+    stats = staged.agg(
+        F.count(F.lit(1)).alias("n_docs"), F.avg(F.size("_toks")).alias("avgdl")
+    )
+    return staged, post, stats
 
 
 def search(
@@ -670,42 +766,24 @@ def search(
     satisfying the boolean query, ranked by BM25 over its scoring terms
     (term_boosts). Pure-negation queries rank by doc_id (score 0.0).
 
-    The corpus is tokenized once and STAGED behind a lazy localCheckpoint
-    barrier (one row per doc with its token array); positional postings
-    (term, doc_id, tf, positions) derive from it and feed both the shared
-    compiler (compile_queries — the same flag aggregation as
-    search_indexed and the percolator) and bm25_scores. Every doc, even a
-    token-empty one, carries a posting row (NULL term, tf 0), so n_docs
-    and avgdl count the whole corpus as the index stats do. The barrier
-    keeps Catalyst from re-running the tokenize regex once per consumer;
-    it is lazy (no job at construction) and rebuilt inside every run.
+    Builds through ranked_search — the same plan as search_indexed — over
+    inline positional postings and a one-row stats relation (_inline_index),
+    so the plan's only join is the stats join (plus the doc-universe left
+    join of a pure-negation query).
 
     Expansion atoms (prefix/fuzzy/range/regex/wildcard, plain and
     field-scoped, and phrase-prefix tails) resolve to concrete vocabulary
     terms over the corpus-derived distinct-term relation BEFORE
     compilation — one bounded driver-side aggregation at call time, with
-    the same fail-loud ``max_expansions`` cap as search_indexed. A
-    pure-negation query left-joins the per-doc rows onto every staged doc
-    id."""
+    the same fail-loud ``max_expansions`` cap as search_indexed."""
     from sparkfulltextquery_spark.functions.index_expand import (
         MAX_EXPANSIONS,
         collect_expansion_keys,
         resolve_expansions_over,
     )
-    from sparkfulltextquery_spark.functions.text import tokenize
 
     ast = parse_query(query)
-    staged = docs.select(
-        F.col(id_col).alias("doc_id"), tokenize(F.col(text_col)).alias("_toks")
-    ).localCheckpoint(eager=False)
-    post = (
-        staged.select("doc_id", F.posexplode_outer("_toks").alias("pos", "term"))
-        .groupBy("term", "doc_id")
-        .agg(
-            F.count("pos").alias("tf"),
-            F.sort_array(F.collect_list("pos")).alias("positions"),
-        )
-    )
+    staged, post, stats = _inline_index(docs, id_col, text_col)
     keys = collect_expansion_keys(ast)
     expansion = (
         resolve_expansions_over(
@@ -716,28 +794,8 @@ def search(
         if keys
         else {}
     )
-    chunk = compile_queries({0: ast}, expansion)
-    per_doc = chunk.per_doc(post)
-    if _eval_empty(ast):
-        per_doc = staged.select("doc_id").join(per_doc, "doc_id", "left")
-    matched = per_doc.filter(chunk.match_of[0]).select("doc_id")
-    boosts = term_boosts(ast)
-    if not boosts:
-        return (
-            matched.select("doc_id", F.lit(0.0).alias("score"))
-            .orderBy("doc_id")
-            .limit(k)
-        )
-    # rank every matching doc: docs matching only via OR-branches without
-    # a scoring term score 0; `term^N` boosts scale each term's share
-    scored = bm25_scores(
-        docs, " ".join(sorted(boosts)), id_col, text_col, post=post, boosts=boosts
-    )
-    return (
-        matched.join(scored, "doc_id", "left")
-        .select("doc_id", F.coalesce(F.col("score"), F.lit(0.0)).alias("score"))
-        .orderBy(F.col("score").desc(), F.col("doc_id"))
-        .limit(k)
+    return ranked_search(
+        post, ast, term_boosts(ast), stats, lambda: staged.select("doc_id"), k, expansion
     )
 
 
@@ -774,6 +832,19 @@ def parse_simple_query(q: str) -> tuple[list[str], list[str], list[str]]:
     return sorted(set(req)), sorted(set(opt)), sorted(set(proh))
 
 
+def simple_query_ast(query: str):
+    """(ast, {term: 1.0}) of a simple-syntax query: the gate is every `+`
+    term ANDed (or, with no `+` term, every bare term ORed), ANDed with
+    NOT of each `-` term; the scoring terms are the `+` and bare terms
+    together — a bare term scores even when a `+` term already gates the
+    match (the Lucene MUST/SHOULD split the full boolean grammar can't
+    express, since its scoring set is exactly its positive atoms)."""
+    req, opt, proh = parse_simple_query(query)
+    gate = And(tuple(map(Term, req))) if req else Or(tuple(map(Term, opt)))
+    ast = And((gate, *(Not(Term(p)) for p in proh))) if proh else gate
+    return ast, dict.fromkeys(sorted({*req, *opt}), 1.0)
+
+
 def simple_search(
     docs: DataFrame,
     query: str,
@@ -783,26 +854,9 @@ def simple_search(
 ) -> DataFrame:
     """Top-k for the simple query syntax: docs matching ALL `+` terms
     (or, with no `+` term, ANY bare term) and NO `-` term, ranked by BM25
-    over the `+` and bare terms together — bare terms contribute to the
-    score even when a `+` term already gates the match (the Lucene
-    MUST/SHOULD split the full boolean grammar can't express, since its
-    scoring set is exactly its positive atoms)."""
-    req, opt, proh = parse_simple_query(query)
-    post = postings(docs, id_col, text_col)
-    if req:
-        gate = And(tuple(Term(t) for t in req))
-    else:
-        gate = Or(tuple(Term(t) for t in opt))
-    ast = (
-        And((gate,) + tuple(Not(Term(p)) for p in proh)) if proh else gate
-    )
-    chunk = compile_queries({0: ast}, {})
-    matched = chunk.per_doc(post).filter(chunk.match_of[0]).select("doc_id")
-    score_terms = sorted(set(req) | set(opt))
-    scored = bm25_scores(docs, " ".join(score_terms), id_col, text_col, post=post)
-    return (
-        matched.join(scored, "doc_id", "left")
-        .select("doc_id", F.coalesce(F.col("score"), F.lit(0.0)).alias("score"))
-        .orderBy(F.col("score").desc(), F.col("doc_id"))
-        .limit(k)
-    )
+    over the `+` and bare terms together (simple_query_ast). Builds
+    through ranked_search over the same inline postings and stats as
+    search."""
+    ast, boosts = simple_query_ast(query)
+    staged, post, stats = _inline_index(docs, id_col, text_col)
+    return ranked_search(post, ast, boosts, stats, lambda: staged.select("doc_id"), k)

@@ -528,21 +528,19 @@ def test_indexed_dismax_equals_inline_full_list(spark, index_tables):
 @pytest.mark.heavy
 def test_rebuild_invalidates_dismax_field_stats_cache(spark, tmp_path):
     """r7 self-review fix: rebuilding an index under the same prefix must
-    also drop the cached per-field avgdl/df literals that
-    dismax_scores_indexed folds into its plan (the same ADVICE r04 bug
-    class the scalar stats cache already guards against)."""
+    also drop the cached per-field avgdl literals that
+    dismax_scores_indexed and bm25f_scores_indexed fold into their plans
+    (the same ADVICE r04 bug class the scalar stats cache already guards
+    against)."""
     from sparkfulltextquery_spark.functions import index as IX
-    from sparkfulltextquery_spark.functions.fulltext import BM25F_TITLE_LEN
 
     docs1 = spark.createDataFrame(
         [(1, "alpha beta"), (2, "alpha gamma")], "doc_id int, text string"
     )
     IX.build_index(docs1, table_prefix="t_fsrebuild", num_buckets=2,
                    path=f"file://{tmp_path}/g1")
-    n1, avg1, df1 = IX._dismax_field_stats(
-        spark, "t_fsrebuild", ["alpha"], BM25F_TITLE_LEN
-    )
-    assert (n1, df1[("title", "alpha")]) == (2, 2)
+    avg1 = IX._field_avgdl(spark, "t_fsrebuild")
+    assert avg1 == {"title": 2.0, "body": 0.0}
 
     docs2 = spark.createDataFrame(
         [(1, "alpha beta"), (2, "alpha gamma"), (3, "delta"),
@@ -551,11 +549,10 @@ def test_rebuild_invalidates_dismax_field_stats_cache(spark, tmp_path):
     )
     IX.build_index(docs2, table_prefix="t_fsrebuild", num_buckets=2,
                    path=f"file://{tmp_path}/g2")
-    n2, avg2, df2 = IX._dismax_field_stats(
-        spark, "t_fsrebuild", ["alpha"], BM25F_TITLE_LEN
-    )
-    assert (n2, df2[("title", "alpha")]) == (4, 2)
-    assert avg2["title"] != avg1["title"]  # stale avgdl would reuse avg1
+    # a stale cache would return avg1
+    assert IX._field_avgdl(spark, "t_fsrebuild") == {"title": 2.25, "body": 0.0}
+    scores = IX.dismax_scores_indexed(spark, "alpha", "t_fsrebuild").collect()
+    assert sorted(r.doc_id for r in scores) == [1, 2]
 
 
 def test_indexed_bm25f_equals_inline_full_list(spark, index_tables):

@@ -101,26 +101,35 @@ def _jobs_started(spark, fn):
 
 
 def test_indexed_search_construction_runs_no_job(spark):
-    """With the index's n_docs/avgdl literals cached, building a never-seen
-    BM25 or query-language search (no expansion atoms) starts no Spark
-    job: df is counted inside the plan, not collected to the driver. A
-    repeated BM25 query is served from the compiled-plan cache and its
-    second collect reuses the shuffle (one job)."""
+    """With the index's n_docs/avgdl (and per-field avgdl) literals cached,
+    building a never-seen BM25, query-language, simple-syntax, DisMax or
+    BM25F search (no expansion atoms) starts no Spark job: df is counted
+    inside the plan, not collected to the driver. A repeated BM25 query is
+    served from the compiled-plan cache and its second collect reuses the
+    shuffle (one job)."""
     import uuid
 
     from sparkfulltextquery_spark.functions.fulltext_queries import _ensure_index
     from sparkfulltextquery_spark.functions.index import (
         _df_stats_literals,
+        _field_avgdl,
         bm25_search_indexed,
+        bm25f_search_indexed,
+        dismax_search_indexed,
         search_indexed,
+        simple_search_indexed,
     )
 
     prefix = _ensure_index(spark, SF_DIR)
     _df_stats_literals(spark, prefix, [])
+    _field_avgdl(spark, prefix)
     fresh = "".join(c for c in uuid.uuid4().hex if c.isalpha()) or "fresh"
     for fn, q in (
         (bm25_search_indexed, f"spark join window {fresh}"),
         (search_indexed, f'(spark AND join) OR ("batch batch" AND NOT {fresh})'),
+        (simple_search_indexed, f"+spark join -{fresh}"),
+        (dismax_search_indexed, f"spark window {fresh}"),
+        (bm25f_search_indexed, f"data query {fresh}"),
     ):
         _df, n = _jobs_started(spark, lambda: fn(spark, q, 10, prefix))
         assert n == 0, f"{fn.__name__}({q!r}) started {n} jobs while building"
@@ -856,26 +865,27 @@ def _logical_joins(df) -> int:
 
 
 def test_inline_search_matches_without_joins(spark):
-    """Inline query-language search compiles phrase, NEAR and field atoms
-    into one flag aggregation over positional postings: its only joins
-    are the BM25 scoring relation's plus the one that attaches the scores
-    to the matches — no join per positional atom."""
-    from sparkfulltextquery_spark.functions.fulltext import bm25_scores
-    from sparkfulltextquery_spark.functions.querylang import search
+    """Inline query-language and simple-syntax search compute the flags
+    of phrase, NEAR and field atoms AND the BM25 score in one aggregation
+    over positional postings (querylang.ranked_search): the only join is
+    the one-row corpus stats relation's — no join per positional atom,
+    none to attach scores."""
+    from sparkfulltextquery_spark.functions.querylang import search, simple_search
     from sparkfulltextquery_spark.sources import load_table
 
     docs = load_table(spark, SF_DIR, "documents")
     q = '"spark join" AND (spark NEAR/3 join) AND title:spark AND "batch query"~2'
-    scoring = _logical_joins(bm25_scores(docs, "spark join batch query"))
-    assert _logical_joins(search(docs, q, k=10)) == scoring + 1
+    assert _logical_joins(search(docs, q, k=10)) == 1
+    assert _logical_joins(simple_search(docs, "+spark join -vector", k=10)) == 1
 
 
 def test_inline_query_language_jobs_budget(spark):
-    """Collecting the inline fulltext_query_language row starts at most 16
-    Spark jobs (16 to 17 before inline search shared the flag compiler)."""
+    """Collecting the inline fulltext_query_language row starts at most 6
+    Spark jobs (14 to 16 while inline search scored through a separate
+    bm25_scores relation and a left join)."""
     df = _q(spark, "fulltext_query_language")
     _rows, n = _jobs_started(spark, df.collect)
-    assert n <= 16, n
+    assert n <= 6, n
 
 
 def test_dismax_indexed_zero_join(spark):

@@ -791,11 +791,14 @@ def test_incremental_store_excludes_shingleless_docs(spark, tmp_path):
 # exact/sloppy/boosted phrase, prefix, fuzzy, range, regexp, both wildcard
 # forms, expansions that match nothing, every field-scoped atom,
 # phrase-prefix, NEAR) under nested AND/OR/NOT, pure negation included;
-# the corpus gains docs that are empty or punctuation-only. Each query runs
-# through inline `search` and `search_indexed`: match sets must equal the
-# predicate's, and the two (doc_id, score) lists must be identical at the
-# 4dp contract. Registries drawn from the percolator's atom subset run
-# through `_percolate_bool` over the inline and the indexed relation.
+# the corpus gains docs that are empty or punctuation-only. Each query also
+# carries its scoring terms ({term: boost}: the exact words of every atom
+# under no NOT, max-merged), and a test-owned BM25 (`_bm25_oracle`) scores
+# them. Each query runs through inline `search` and `search_indexed`: match
+# sets must equal the predicate's, the two (doc_id, score) lists must be
+# identical, and every score must equal the Python BM25 at the 4dp
+# contract. Registries drawn from the percolator's atom subset run through
+# `_percolate_bool` over the inline and the indexed relation.
 # ---------------------------------------------------------------------------
 
 _TITLE_LEN = 10  # fulltext.BM25F_TITLE_LEN: the title is the first 10 tokens
@@ -872,38 +875,41 @@ def _expansion_pred(text):
 
 
 def _fuzz_atom(rng, vocab, bigrams, kind):
-    """(query text, predicate over a doc's token list) for one leaf."""
+    """(query text, predicate over a doc's token list, {scoring term:
+    boost}) for one leaf; expansions score nothing."""
     w = rng.choice(vocab)
     f = rng.choice(("title", "body"))
     a, b = rng.choice(bigrams).split()
     i = rng.randrange(len(w))
     if kind == "term":
-        return w, lambda ts: w in ts
+        return w, lambda ts: w in ts, {w: 1.0}
     if kind == "bterm":
-        return f"{w}^2", lambda ts: w in ts
+        return f"{w}^2", lambda ts: w in ts, {w: 2.0}
     if kind == "field":
-        return f"{f}:{w}", lambda ts: w in _seg(ts, f)
+        return f"{f}:{w}", lambda ts: w in _seg(ts, f), {w: 1.0}
+    pair = {a: 1.0, b: 1.0}
     if kind == "phrase":
-        return f'"{a} {b}"', lambda ts: _phrase_at(ts, [a, b], 0, len(ts))
+        return f'"{a} {b}"', lambda ts: _phrase_at(ts, [a, b], 0, len(ts)), pair
     if kind in ("slop", "bphrase"):
         s = rng.randint(1, 3) if kind == "slop" else rng.randint(0, 2)
         text = f'"{a} {b}"~{s}' + ("^3" if kind == "bphrase" else "")
-        return text, lambda ts: _sloppy(ts, [a, b], s)
+        boosted = {a: 3.0, b: 3.0} if kind == "bphrase" else pair
+        return text, lambda ts: _sloppy(ts, [a, b], s), boosted
     if kind == "fphrase":
         lo, hi = (0, _TITLE_LEN - 2) if f == "title" else (_TITLE_LEN, 10**9)
-        return f'{f}:"{a} {b}"', lambda ts: _phrase_at(ts, [a, b], lo, hi)
+        return f'{f}:"{a} {b}"', lambda ts: _phrase_at(ts, [a, b], lo, hi), pair
     if kind == "ppfx":
         p = b[: max(1, len(b) - 1)]
         return f'"{a} {p}*"', lambda ts: any(
             ts[j] == a and ts[j + 1].startswith(p) for j in range(len(ts) - 1)
-        )
+        ), {a: 1.0}
     if kind == "near":
         k = rng.randint(1, 6)
         return f"({a} NEAR/{k} {b})", lambda ts: any(
             abs(x - y) <= k
             for x, s in enumerate(ts) if s == a
             for y, t in enumerate(ts) if t == b
-        )
+        ), pair
     scope = f"{f}:" if kind in ("fprefix", "ffuzzy", "frange", "fwild") else ""
     if kind in ("prefix", "fprefix"):
         text = f"{scope}{w[: max(1, len(w) - 1)]}*"
@@ -924,46 +930,52 @@ def _fuzz_atom(rng, vocab, bigrams, kind):
         text = "*" + w[len(w) // 2 :] if rng.random() < 0.5 else w[:j] + "*" + w[j + 1 :]
     else:  # "nothing"
         text = rng.choice(_NOTHING)
-    return text, _expansion_pred(text)
+    return text, _expansion_pred(text), {}
 
 
 def _fuzz_tree(rng, vocab, bigrams, kinds, cursor, depth=0):
-    """(text, predicate) of a random AND/OR/NOT tree. Leaf kinds cycle
-    through `kinds` (``cursor`` holds the next index), so a run of trees
-    draws every kind."""
+    """(text, predicate, scoring terms) of a random AND/OR/NOT tree. Leaf
+    kinds cycle through `kinds` (``cursor`` holds the next index), so a
+    run of trees draws every kind. Scoring terms under a NOT drop out;
+    AND/OR merge their children's, a term keeping its largest boost."""
     if depth < 2 and rng.random() < 0.55:
         op = rng.choice(("and", "or", "not"))
         if op == "not":
-            t, p = _fuzz_tree(rng, vocab, bigrams, kinds, cursor, depth + 1)
-            return f"(NOT {t})", lambda ts: not p(ts)
+            t, p, _s = _fuzz_tree(rng, vocab, bigrams, kinds, cursor, depth + 1)
+            return f"(NOT {t})", lambda ts: not p(ts), {}
         kids = [
             _fuzz_tree(rng, vocab, bigrams, kinds, cursor, depth + 1)
             for _ in range(rng.randint(2, 3))
         ]
-        preds = [p for _t, p in kids]
+        preds = [p for _t, p, _s in kids]
+        scoring: dict = {}
+        for _t, _p, ks in kids:
+            for term, w in ks.items():
+                scoring[term] = max(scoring.get(term, 1.0), w)
         join = " AND " if op == "and" else " OR "
         fold = all if op == "and" else any
-        return "(" + join.join(t for t, _p in kids) + ")", lambda ts: fold(
+        return "(" + join.join(t for t, _p, _s in kids) + ")", lambda ts: fold(
             p(ts) for p in preds
-        )
+        ), scoring
     kind = kinds[cursor[0] % len(kinds)]
     cursor[0] += 1
     return _fuzz_atom(rng, vocab, bigrams, kind)
 
 
 def _fuzz_queries(seed, n, vocab, bigrams):
-    """n seeded (text, predicate) queries over every leaf kind; every tenth
-    one is wrapped in a top-level NOT so pure negation is always drawn."""
+    """n seeded (text, predicate, scoring terms) queries over every leaf
+    kind; every tenth one is wrapped in a top-level NOT so pure negation
+    is always drawn."""
     import random
 
     rng = random.Random(seed)
     cursor = [0]
     out = []
     for i in range(n):
-        t, p = _fuzz_tree(rng, vocab, bigrams, _QUERY_KINDS, cursor)
+        t, p, sc = _fuzz_tree(rng, vocab, bigrams, _QUERY_KINDS, cursor)
         if i % 10 == 9:
-            t, p = f"NOT {t}", (lambda q: lambda ts: not q(ts))(p)
-        out.append((t, p))
+            t, p, sc = f"NOT {t}", (lambda q: lambda ts: not q(ts))(p), {}
+        out.append((t, p, sc))
     return out
 
 
@@ -978,7 +990,7 @@ def _fuzz_registries(seed, n, vocab, bigrams, size=5):
     for _ in range(n):
         reg = []
         while len(reg) < size:
-            t, p = _fuzz_tree(rng, vocab, bigrams, _PERC_KINDS, cursor)
+            t, p, _sc = _fuzz_tree(rng, vocab, bigrams, _PERC_KINDS, cursor)
             if not p([]):
                 reg.append((len(reg) + 1, t, p))
         out.append(reg)
@@ -1014,12 +1026,47 @@ def _fuzz_corpus(spark):
     return docs, toks, vocab, bigrams
 
 
+def _bm25_oracle(toks):
+    """Test-owned BM25 over the token lists (Lucene idf, k1 = 1.2,
+    b = 0.75; n_docs and avgdl count every doc, token-empty ones too):
+    returns score(doc_id, {term: boost}), the unrounded sum over the
+    doc's scoring terms."""
+    import math
+    from collections import Counter
+
+    tf = {d: Counter(ts) for d, ts in toks.items()}
+    n = len(toks)
+    avgdl = sum(len(ts) for ts in toks.values()) / n
+    df = Counter(t for c in tf.values() for t in c)
+
+    def score(d, boosts):
+        norm = 1.2 * (0.25 + 0.75 * len(toks[d]) / avgdl)
+        return sum(
+            w
+            * math.log(1 + (n - df[t] + 0.5) / (df[t] + 0.5))
+            * tf[d][t] * 2.2 / (tf[d][t] + norm)
+            for t, w in boosts.items()
+            if tf[d][t]
+        )
+
+    return score
+
+
+def _assert_bm25(rows, toks, scoring, what):
+    """Every (doc_id, score) is the Python BM25 rounded at 4dp: within half
+    a unit of the 4th decimal (a float tie may round either way)."""
+    score = _bm25_oracle(toks)
+    for d, s in rows:
+        want = score(d, scoring)
+        assert abs(s - want) <= 5e-5 + 1e-9, f"{what}: doc {d} scored {s}, BM25 {want}"
+
+
 def _check_search_trials(spark, docs, toks, queries, prefix):
     from sparkfulltextquery_spark.functions.index import search_indexed
     from sparkfulltextquery_spark.functions.querylang import search
 
     n = len(toks)
-    for text, pred in queries:
+    for text, pred, scoring in queries:
         expected = {d for d, ts in toks.items() if pred(ts)}
         inline = [(r.doc_id, r.score) for r in search(docs, text, k=n).collect()]
         got = {d for d, _s in inline}
@@ -1027,6 +1074,7 @@ def _check_search_trials(spark, docs, toks, queries, prefix):
             f"inline mismatch on {text!r}: "
             f"+{sorted(got - expected)[:5]} -{sorted(expected - got)[:5]}"
         )
+        _assert_bm25(inline, toks, scoring, text)
         indexed = [
             (r.doc_id, r.score)
             for r in search_indexed(spark, text, k=n, table_prefix=prefix).collect()
@@ -1058,23 +1106,65 @@ def _check_percolator_trials(spark, docs, toks, registries, prefix):
             assert got == expected, f"{name} mismatch: {stored}\ngot={got}\nexp={expected}"
 
 
-def test_query_language_fuzz_inline_indexed_percolator(spark, tmp_path):
-    """Default-tier slice of the query-language fuzz: 30 seeded queries
-    and 3 percolator registries (see the block comment above)."""
+@pytest.fixture(scope="module")
+def fuzz_index(spark, tmp_path_factory):
+    """The fuzz corpus and its persisted index (8 buckets)."""
     from sparkfulltextquery_spark.functions.index import build_index
 
     docs, toks, vocab, bigrams = _fuzz_corpus(spark)
+    path = tmp_path_factory.mktemp("fuzz_idx")
+    build_index(docs, table_prefix="fuzz_idx", num_buckets=8, path=f"file://{path}")
+    return docs, toks, vocab, bigrams, "fuzz_idx"
+
+
+def test_query_language_fuzz_inline_indexed_percolator(spark, fuzz_index):
+    """Default-tier slice of the query-language fuzz: 30 seeded queries
+    and 3 percolator registries (see the block comment above)."""
+    docs, toks, vocab, bigrams, prefix = fuzz_index
     queries = _fuzz_queries(20261017, 30, vocab, bigrams)
-    # the slice itself covers what it claims: pure negation, and an
-    # expansion atom that matches no corpus term
-    assert any(p([]) for _t, p in queries)
+    # the slice itself covers what it claims: pure negation, boosted
+    # scoring terms, and an expansion atom that matches no corpus term
+    assert any(p([]) for _t, p, _s in queries)
+    assert any(w != 1.0 for _t, _p, sc in queries for w in sc.values())
     assert not any(_expansion_pred(t)(ts) for t in _NOTHING for ts in toks.values())
-    build_index(docs, table_prefix="fuzz_idx", num_buckets=8,
-                path=f"file://{tmp_path}/fuzz_idx")
-    _check_search_trials(spark, docs, toks, queries, "fuzz_idx")
+    _check_search_trials(spark, docs, toks, queries, prefix)
     _check_percolator_trials(
-        spark, docs, toks, _fuzz_registries(20261018, 3, vocab, bigrams), "fuzz_idx"
+        spark, docs, toks, _fuzz_registries(20261018, 3, vocab, bigrams), prefix
     )
+
+
+def test_inline_bm25_and_simple_search_equal_indexed_on_empty_docs(spark, fuzz_index):
+    """Inline bm25_search, bm25_explain and simple_search count token-empty
+    docs in n_docs/avgdl, as the index stats do: over the fuzz corpus
+    (three docs without a token) each equals its indexed twin at 4dp, and
+    the BM25 scores equal the Python BM25."""
+    import random
+
+    from sparkfulltextquery_spark.functions.fulltext import bm25_explain, bm25_search
+    from sparkfulltextquery_spark.functions.index import (
+        bm25_explain_indexed,
+        bm25_search_indexed,
+        simple_search_indexed,
+    )
+    from sparkfulltextquery_spark.functions.querylang import simple_search
+
+    docs, toks, vocab, _bigrams, prefix = fuzz_index
+    assert any(not ts for ts in toks.values())
+    n = len(toks)
+    rng = random.Random(20261019)
+    for _ in range(3):
+        a, b, c = rng.sample(vocab, 3)
+        q = f"{a} {b} {c}"
+        inline = bm25_search(docs, q, k=n).collect()
+        assert inline == bm25_search_indexed(spark, q, n, prefix).collect(), q
+        _assert_bm25(inline, toks, {a: 1.0, b: 1.0, c: 1.0}, q)
+        assert sorted(bm25_explain(docs, q, k=n).collect()) == sorted(
+            bm25_explain_indexed(spark, q, n, prefix).collect()
+        ), q
+        sq = f"+{a} {b} -{c}"
+        inline = simple_search(docs, sq, k=n).collect()
+        assert inline == simple_search_indexed(spark, sq, n, prefix).collect(), sq
+        _assert_bm25(inline, toks, {a: 1.0, b: 1.0}, sq)
 
 
 @pytest.mark.heavy
