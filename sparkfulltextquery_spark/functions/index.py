@@ -32,6 +32,7 @@ from sparkfulltextquery_spark.functions.fulltext import (
     corpus_stats,
     df_over_term,
     doc_lengths,
+    field_pos_pred,
     positional_postings,
 )
 
@@ -107,8 +108,7 @@ def build_index(
     skey = (spark.sparkContext.applicationId, table_prefix)
     _INDEX_STATS_CACHE.pop(skey, None)
     _INDEX_DF_CACHE.pop(skey, None)
-    for ck in [k for k in _FIELD_STATS_CACHE if k[:2] == skey]:
-        _FIELD_STATS_CACHE.pop(ck, None)
+    _FIELD_STATS_CACHE.pop(skey, None)
     for ck in [k for k in _COMPILED_QUERY_CACHE if k[:2] == skey]:
         _COMPILED_QUERY_CACHE.pop(ck, None)
     names = {
@@ -273,8 +273,7 @@ def refresh_index_caches(spark: SparkSession, table_prefix: str = "sftq_index") 
             pass
     _INDEX_STATS_CACHE.pop(skey, None)
     _INDEX_DF_CACHE.pop(skey, None)
-    for ck in [k for k in _FIELD_STATS_CACHE if k[:2] == skey]:
-        _FIELD_STATS_CACHE.pop(ck, None)
+    _FIELD_STATS_CACHE.pop(skey, None)
     _INDEX_GEN_CACHE[skey] = current
     for ck in [k for k in _COMPILED_QUERY_CACHE if k[:2] == skey]:
         _COMPILED_QUERY_CACHE.pop(ck, None)
@@ -397,20 +396,18 @@ def bm25_search_indexed(
 _FIELD_STATS_CACHE: dict = {}
 
 
-def _field_avgdl(
-    spark: SparkSession, table_prefix: str, title_len: int = BM25F_TITLE_LEN
-) -> dict[str, float]:
+def _field_avgdl(spark: SparkSession, table_prefix: str) -> dict[str, float]:
     """{field: avgdl} as driver literals for the per-field scoring of
     dismax_scores_indexed and bm25f_scores_indexed: ONE row aggregated from
     the persisted dl table (the positional title/body carving derives
     per-field lengths arithmetically — dl_title = least(dl, L), dl_body =
     dl − dl_title — so no corpus re-tokenization). Cached per (session,
-    index, carving) and dropped on rebuild, like _df_stats_literals; avgdl
-    is computed BY Spark so the literal is bit-identical to the inline
+    index) and dropped on rebuild, like _df_stats_literals; avgdl is
+    computed BY Spark so the literal is bit-identical to the inline
     scorer's F.avg."""
-    skey = (spark.sparkContext.applicationId, table_prefix, title_len)
+    skey = (spark.sparkContext.applicationId, table_prefix)
     if skey not in _FIELD_STATS_CACHE:
-        dl_t = F.least(F.col("dl"), F.lit(title_len))
+        dl_t = F.least(F.col("dl"), F.lit(BM25F_TITLE_LEN))
         row = (
             spark.table(f"{table_prefix}_dl")
             .agg(
@@ -428,7 +425,6 @@ def _field_postings(spark: SparkSession, table_prefix: str, q_terms: list[str]) 
     tf and dl of the title/body carving: tf_t = |positions < L| off the
     stored position array, tf_b = tf − tf_t, and dl_t/dl_b from the
     denormalized dl."""
-    title_len = BM25F_TITLE_LEN
     return (
         spark.table(f"{table_prefix}_postings")
         .filter(F.col("term").isin(q_terms))
@@ -437,8 +433,8 @@ def _field_postings(spark: SparkSession, table_prefix: str, q_terms: list[str]) 
             "term",
             "tf",
             "dl",
-            F.size(F.filter("positions", lambda p: p < F.lit(title_len))).alias("tf_t"),
-            F.least(F.col("dl"), F.lit(title_len)).alias("dl_t"),
+            F.size(F.filter("positions", field_pos_pred("title"))).alias("tf_t"),
+            F.least(F.col("dl"), F.lit(BM25F_TITLE_LEN)).alias("dl_t"),
         )
         .select(
             "*",
@@ -481,11 +477,12 @@ def dismax_scores_indexed(
     n_docs, _avgdl, _ = _df_stats_literals(spark, table_prefix, [])
     avgdl_of = _field_avgdl(spark, table_prefix)
 
-    def field_score(f: str) -> Column:
+    def field_score(field: str) -> Column:
+        f = field[0]  # the column suffix: t(itle), b(ody)
         _idf, ts = bm25_term_score(
-            n_docs, avgdl_of[f], f"df_{f[0]}", f"tf_{f[0]}", f"dl_{f[0]}", k1, b
+            n_docs, avgdl_of[field], f"df_{f}", f"tf_{f}", f"dl_{f}", k1, b
         )
-        return F.when(F.col(f"tf_{f[0]}") > 0, ts)
+        return F.when(F.col(f"tf_{f}") > 0, ts)
 
     staged = _field_postings(spark, table_prefix, q_terms).select(
         "*",

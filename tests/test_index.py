@@ -539,8 +539,8 @@ def test_rebuild_invalidates_dismax_field_stats_cache(spark, tmp_path):
     )
     IX.build_index(docs1, table_prefix="t_fsrebuild", num_buckets=2,
                    path=f"file://{tmp_path}/g1")
-    avg1 = IX._field_avgdl(spark, "t_fsrebuild")
-    assert avg1 == {"title": 2.0, "body": 0.0}
+    assert IX._df_stats_literals(spark, "t_fsrebuild", [])[:2] == (2, 2.0)
+    assert IX._field_avgdl(spark, "t_fsrebuild") == {"title": 2.0, "body": 0.0}
 
     docs2 = spark.createDataFrame(
         [(1, "alpha beta"), (2, "alpha gamma"), (3, "delta"),
@@ -549,7 +549,8 @@ def test_rebuild_invalidates_dismax_field_stats_cache(spark, tmp_path):
     )
     IX.build_index(docs2, table_prefix="t_fsrebuild", num_buckets=2,
                    path=f"file://{tmp_path}/g2")
-    # a stale cache would return avg1
+    # stale caches would return the first build's literals
+    assert IX._df_stats_literals(spark, "t_fsrebuild", [])[:2] == (4, 2.25)
     assert IX._field_avgdl(spark, "t_fsrebuild") == {"title": 2.25, "body": 0.0}
     scores = IX.dismax_scores_indexed(spark, "alpha", "t_fsrebuild").collect()
     assert sorted(r.doc_id for r in scores) == [1, 2]
