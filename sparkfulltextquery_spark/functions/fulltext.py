@@ -4,7 +4,8 @@ This is the capability the reference fork exists for ("full-text query
 within the Spark framework") rebuilt Spark-first (SURVEY.md §7 steps 3-4):
 
 - the inverted index IS a DataFrame: ``postings(term, doc_id, tf)`` built by
-  explode + groupBy — shuffle-parallel, no driver state;
+  explode + groupBy — shuffle-parallel, no driver state; the positional
+  form carries each doc's length ``dl``, so nothing joins dl back in;
 - scores (TF-IDF, BM25) are pure aggregations over that table;
 - search = tokenize query → prune postings to the query terms → score →
   global top-k, planned by Spark as TakeOrderedAndProject (per-partition
@@ -31,6 +32,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType
 
 from sparkfulltextquery_spark.functions.text import tokenize
 
@@ -53,26 +55,36 @@ def postings(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") ->
 
 
 def positional_postings(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    num_partitions: int | None = None,
 ) -> DataFrame:
-    """Positional inverted index: (term, doc_id, tf, positions sorted array).
+    """Positional inverted index, each doc's length denormalized onto its
+    rows: (doc_id, term, tf, positions sorted array, dl) — the persisted
+    index's posting-table layout.
 
-    Same single shuffle as ``postings`` (groupBy doc_id+term) but keeps the
-    token offsets, so a persisted index can answer phrase queries from
-    pruned buckets instead of re-tokenizing the corpus (the scale fix for
-    phrase_match's full-corpus posexplode). Shuffle volume grows from
-    O(distinct terms/doc) to O(tokens/doc) — the standard positional-index
-    trade-off.
+    ``text_col`` is raw text, tokenized here once, or an already-tokenized
+    array column. dl rides along as a group key, so there is one shuffle
+    and no join; with ``num_partitions`` the tokens are hash-partitioned by
+    term that many ways first, which the grouping reuses — the only
+    exchange a term-bucketed write then needs. Shuffle volume is
+    O(tokens/doc), the trade that lets pruned buckets answer phrases.
     """
-    return (
-        docs.select(F.col(id_col).alias("doc_id"), tokenize(F.col(text_col)).alias("toks"))
-        .select("doc_id", F.posexplode("toks").alias("pos", "term"))
-        .groupBy("term", "doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("tf"),
-            F.sort_array(F.collect_list("pos")).alias("positions"),
-        )
+    toks = F.col(text_col)
+    if not isinstance(docs.schema[text_col].dataType, ArrayType):
+        toks = tokenize(toks)
+    rows = (
+        docs.select(F.col(id_col).alias("doc_id"), toks.alias("_toks"))
+        .withColumn("dl", F.size("_toks"))
+        .select("doc_id", "dl", F.posexplode("_toks").alias("pos", "term"))
     )
+    if num_partitions:
+        rows = rows.repartition(num_partitions, "term")
+    return rows.groupBy("term", "doc_id", "dl").agg(
+        F.count(F.lit(1)).alias("tf"),
+        F.sort_array(F.collect_list("pos")).alias("positions"),
+    ).select("doc_id", "term", "tf", "positions", "dl")
 
 
 HASHING_TF_FEATURES = 1 << 18  # reference HashingTF.scala:40 default 2^18
@@ -103,7 +115,9 @@ def hashing_tf(
 
 
 def doc_lengths(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(doc_id, dl) token counts — no shuffle beyond the projection."""
+    """(doc_id, dl) token counts of every doc (NULL for a NULL text) — a
+    projection, no shuffle; its row count and mean dl are the corpus stats.
+    Postings carry dl themselves, so nothing joins this back."""
     return docs.select(
         F.col(id_col).alias("doc_id"), F.size(tokenize(F.col(text_col))).alias("dl")
     )
@@ -112,14 +126,6 @@ def doc_lengths(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
 def doc_freq(post: DataFrame) -> DataFrame:
     """(term, df) document frequency from the posting table."""
     return post.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-
-
-def corpus_stats(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Single-row (n_docs, avgdl) over every doc, token-empty ones included —
-    persisted as the index's stats table."""
-    return doc_lengths(docs, id_col, text_col).agg(
-        F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
-    )
 
 
 def tf_idf(post: DataFrame, n_docs: int) -> DataFrame:
@@ -222,7 +228,7 @@ def bm25_term_scores(
     The postings are pruned to the query terms right after the explode
     and carry each doc's length; df is counted in plan over them, and
     n_docs/avgdl come from a one-row relation over EVERY doc — a
-    token-empty doc counts, as in the index's corpus_stats — joined in as
+    token-empty doc counts, as in the index's stats table — joined in as
     the plan's only join."""
     q_terms = sorted({t for t in _py_tokenize(query)})
     if not q_terms:

@@ -17,10 +17,11 @@ table — independent of corpus size.
 
 from __future__ import annotations
 
+import uuid
 from collections import OrderedDict
 from collections.abc import Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from sparkfulltextquery_spark.functions.fulltext import (
@@ -29,7 +30,6 @@ from sparkfulltextquery_spark.functions.fulltext import (
     BM25F_TITLE_LEN,
     _py_tokenize,
     bm25_term_score,
-    corpus_stats,
     df_over_term,
     doc_lengths,
     field_pos_pred,
@@ -144,18 +144,15 @@ def build_index(
             w = w.option("path", f"{path}/{name}")
         return w
 
-    # positional postings (term, doc_id, tf, positions, dl) — the positions
+    # positional postings (doc_id, term, tf, positions, dl) — the positions
     # column is what lets phrase queries run off pruned buckets instead of
     # re-tokenizing the corpus (VERDICT r1 weak item); the doc length is
-    # DENORMALIZED into each posting row at build time (classic posting-list
-    # layout) so BM25 scoring needs no corpus-sized dl join at query time —
-    # the one non-broadcast join the r03 query plan carried. Build-time
-    # cost: one extra join here + 8 bytes/posting.
-    post = positional_postings(docs, id_col, text_col).join(
-        doc_lengths(docs, id_col, text_col), "doc_id"
-    )
+    # DENORMALIZED into each posting row (classic posting-list layout) so
+    # BM25 scoring needs no corpus-sized dl join at query time. Build-time
+    # cost: 8 bytes/posting — dl is a group key under the term partitioning
+    # the bucketed write needs, so the write is one tokenize and one shuffle.
     (
-        writer(post.repartition(num_buckets, "term"), names["postings"])
+        writer(positional_postings(docs, id_col, text_col, num_buckets), names["postings"])
         .bucketBy(num_buckets, "term")
         .sortBy("term")
         .saveAsTable(names["postings"])
@@ -165,17 +162,25 @@ def build_index(
         spark.table(names["postings"]).groupBy("term").agg(F.count(F.lit(1)).alias("df")),
         names["doc_freq"],
     ).saveAsTable(names["doc_freq"])
-    writer(doc_lengths(docs, id_col, text_col), names["doc_len"]).saveAsTable(
-        names["doc_len"]
-    )
+    # the corpus stats (n_docs, avgdl over every doc, token-empty ones
+    # too) are observed on the dl write itself: no second tokenize, no
+    # aggregation job, and n_docs reaches the driver for the norms below
+    seen = Observation()
+    writer(
+        doc_lengths(docs, id_col, text_col).observe(
+            seen, F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
+        ),
+        names["doc_len"],
+    ).saveAsTable(names["doc_len"])
+    st = seen.get
     # generation stamp: unique per build, read back by refresh_index_caches
     # so an externally-rebuilt index can be detected and this process's
     # literal/plan caches dropped (ADVICE r05)
-    import uuid
-
     writer(
-        corpus_stats(docs, id_col, text_col).withColumn(
-            "generation", F.lit(uuid.uuid4().hex)
+        spark.range(1, numPartitions=1).select(
+            F.lit(st["n_docs"]).cast("bigint").alias("n_docs"),
+            F.lit(st["avgdl"]).cast("double").alias("avgdl"),
+            F.lit(uuid.uuid4().hex).alias("generation"),
         ),
         names["stats"],
     ).saveAsTable(names["stats"])
@@ -195,10 +200,9 @@ def build_index(
             .sortBy("doc_id")
             .saveAsTable(names["tvec"])
         )
-        n_docs = int(spark.table(names["stats"]).head().n_docs)
         dfreq = spark.table(names["doc_freq"])
         wt = F.col("tf") * F.log(
-            F.lit(float(n_docs + 1)) / (F.col("df") + F.lit(1.0))
+            F.lit(float(st["n_docs"] + 1)) / (F.col("df") + F.lit(1.0))
         )
         writer(
             tv.join(F.broadcast(dfreq), "term")

@@ -1248,6 +1248,15 @@ _PERCOLATE_BOOL_QUERIES = [
     (4, 'batch AND NOT "spark join"'),
     (5, "(merge OR stream) AND spark"),
 ]
+# the ranked registry boosts 'stream' in query 5 only (query 2 keeps it
+# unboosted); a power-of-two boost keeps the oracle's float exact
+_PERCOLATE_SCORED_QUERIES = [
+    *_PERCOLATE_BOOL_QUERIES[:4],
+    (5, "(merge OR stream^2) AND spark"),
+]
+_SCORED_TERMS = sorted(
+    {t for _qid, q in _PERCOLATE_SCORED_QUERIES for t in QL.term_boosts(QL.parse_query(q))}
+)
 
 # shared oracle prefix (ADVICE r08: the summary/alerting/scored oracles
 # are COMPOSED from this constant instead of string-surgering a formatted
@@ -1527,9 +1536,9 @@ def percolate_scored(
     surface): every (stored query, matching document) pair carries the
     Lucene BM25 score of its scoring terms — the engine's one term weight,
     fulltext.bm25_term_score, with n_docs, avgdl and each term's df pinned
-    as driver literals and tf and the denormalized dl off the posting row
-    (a stored query's `term^N` boosts are not applied) — and each query
-    keeps its top-k docs. The per-term BM25
+    as driver literals, tf and the denormalized dl off the posting row, and
+    a stored query's `term^N` boosts applied exactly as search applies
+    them — and each query keeps its top-k docs. The per-term BM25
     contributions fold into the SAME one-scan doc_id aggregation as the
     match flags (``per_doc``'s extra aggregates); per-query scores are
     sums of their positive terms' columns, so the whole thing stays
@@ -1588,17 +1597,18 @@ def percolate_scored(
             out = p if out is None else out.unionByName(p)
         return out.orderBy("query_id", F.col("score").desc(), "doc_id")
 
+    # one score column per (term, boost): stored queries may weight a term differently
     pos_of = {
-        qid: sorted(QL.term_boosts(QL.parse_query(q)))
+        qid: sorted(QL.term_boosts(QL.parse_query(q)).items())
         for qid, q in queries
     }
-    union_pos = sorted({t for ts in pos_of.values() for t in ts})
-    bcol = {t: f"_b{i}" for i, t in enumerate(union_pos)}
+    union_pos = sorted({tw for tws in pos_of.values() for tw in tws})
+    bcol = {tw: f"_b{i}" for i, tw in enumerate(union_pos)}
 
     extra = tuple(
-        F.sum(F.when(F.col("term") == t, bm25_term_score(n_docs, avgdl, df_of[t])[1]))
+        F.sum(F.when(F.col("term") == t, bm25_term_score(n_docs, avgdl, df_of[t], boosts={t: w})[1]))
         .alias(c)
-        for t, c in bcol.items()
+        for (t, w), c in bcol.items()
     )
     bundle = _cached_chunk(compile_cache, queries, vocab, _expansion_cache)
     per_doc, match_of = bundle.per_doc(rel, extra), bundle.match_of
@@ -1608,8 +1618,8 @@ def percolate_scored(
         if not terms:
             return F.lit(0.0)
         s = F.lit(0.0)
-        for t in terms:
-            s = s + F.coalesce(F.col(bcol[t]), F.lit(0.0))
+        for tw in terms:
+            s = s + F.coalesce(F.col(bcol[tw]), F.lit(0.0))
         return F.round(s, 4)
 
     # alias prefix must not collide with the compile's internal columns
@@ -1689,7 +1699,7 @@ _PERCOLATE_SCORED_ORACLE = (
       UNION ALL SELECT 3, doc_id, round(b_data + b_query + b_window, 4)
       FROM j WHERE m3 = 1
       UNION ALL SELECT 4, doc_id, round(b_batch, 4) FROM j WHERE m4 = 1
-      UNION ALL SELECT 5, doc_id, round(b_merge + b_spark + b_stream, 4)
+      UNION ALL SELECT 5, doc_id, round(b_merge + b_spark + 2 * b_stream, 4)
       FROM j WHERE m5 = 1
     ),
     ranked AS (
@@ -1710,35 +1720,23 @@ def fulltext_percolate_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     BM25-SCORED against the corpus-derived positional postings (dl
     denormalized onto each posting row, the same layout the persisted
     index stores); per-query top-3 docs."""
-    from sparkfulltextquery_spark.functions.fulltext import doc_lengths
-
     d = load_table(spark, sf_dir, "documents")
-    rel = FT.positional_postings(d).join(doc_lengths(d), "doc_id").select(
-        "doc_id", "term", "positions", "tf", "dl"
-    )
+    rel = FT.positional_postings(d).select("doc_id", "term", "positions", "tf", "dl")
 
-    union_pos = sorted(
-        {
-            t
-            for _qid, q in _PERCOLATE_BOOL_QUERIES
-            for t in QL.term_boosts(QL.parse_query(q))
-        }
-    )
-    dls = doc_lengths(d)
-    st = dls.agg(
+    st = FT.doc_lengths(d).agg(
         F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl")
     ).head()
     dfr = {
         r.term: int(r.df)
         for r in FT.postings(d)
-        .filter(F.col("term").isin(union_pos))
+        .filter(F.col("term").isin(_SCORED_TERMS))
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("df"))
         .collect()
     }
-    df_of = {t: dfr.get(t, 0) for t in union_pos}
+    df_of = {t: dfr.get(t, 0) for t in _SCORED_TERMS}
     return percolate_scored(
-        rel, _PERCOLATE_BOOL_QUERIES, int(st.n), float(st.avgdl), df_of, k=3
+        rel, _PERCOLATE_SCORED_QUERIES, int(st.n), float(st.avgdl), df_of, k=3
     )
 
 
@@ -1760,16 +1758,9 @@ def fulltext_percolate_scored_indexed(
     rel = spark.table(f"{prefix}_postings").select(
         "doc_id", "term", "positions", "tf", "dl"
     )
-    union_pos = sorted(
-        {
-            t
-            for _qid, q in _PERCOLATE_BOOL_QUERIES
-            for t in QL.term_boosts(QL.parse_query(q))
-        }
-    )
-    n_docs, avgdl, df_of = _df_stats_literals(spark, prefix, union_pos)
+    n_docs, avgdl, df_of = _df_stats_literals(spark, prefix, _SCORED_TERMS)
     return percolate_scored(
-        rel, _PERCOLATE_BOOL_QUERIES, n_docs, avgdl, df_of, k=3
+        rel, _PERCOLATE_SCORED_QUERIES, n_docs, avgdl, df_of, k=3
     )
 
 
@@ -1817,10 +1808,7 @@ def stream_percolate_scored(
     across batches (compile_cache — sound here because the BM25 literals
     are pinned at registration and fold into the cache key), and the
     cached index unpersists at stream termination."""
-    from sparkfulltextquery_spark.functions.fulltext import (
-        doc_lengths,
-        positional_postings,
-    )
+    from sparkfulltextquery_spark.functions.fulltext import positional_postings
 
     spark = doc_stream.sparkSession
     term_index = spark.createDataFrame(
@@ -1830,10 +1818,8 @@ def stream_percolate_scored(
     compile_cache: dict = {}
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        rel = (
-            positional_postings(batch_df, id_col, text_col)
-            .join(doc_lengths(batch_df, id_col, text_col), "doc_id")
-            .select("doc_id", "term", "positions", "tf", "dl")
+        rel = positional_postings(batch_df, id_col, text_col).select(
+            "doc_id", "term", "positions", "tf", "dl"
         )
         vocab = rel.select("term").distinct()
         (
@@ -1891,14 +1877,7 @@ def fulltext_percolate_scored_stream(
     from sparkfulltextquery_spark.storage import index_store_root
 
     prefix = _ensure_index(spark, sf_dir)
-    union_pos = sorted(
-        {
-            t
-            for _qid, q in _PERCOLATE_BOOL_QUERIES
-            for t in QL.term_boosts(QL.parse_query(q))
-        }
-    )
-    n_docs, avgdl, df_of = _df_stats_literals(spark, prefix, union_pos)
+    n_docs, avgdl, df_of = _df_stats_literals(spark, prefix, _SCORED_TERMS)
 
     root = index_store_root("perc_stream", sf_dir)
     shutil.rmtree(root, ignore_errors=True)
@@ -1916,7 +1895,7 @@ def fulltext_percolate_scored_stream(
         .parquet(f"file://{src}")
     )
     q = stream_percolate_scored(
-        stream, _PERCOLATE_BOOL_QUERIES, n_docs, avgdl, df_of,
+        stream, _PERCOLATE_SCORED_QUERIES, n_docs, avgdl, df_of,
         f"file://{out}", f"file://{ck}",
     )
     q.awaitTermination()

@@ -66,6 +66,7 @@ from sparkfulltextquery_spark.functions.fulltext import (
     df_over_term,
     exact_starts_expr,
     field_pos_pred,
+    positional_postings,
     slop_starts_expr,
 )
 from sparkfulltextquery_spark.functions.text import tokenize
@@ -727,27 +728,16 @@ def _inline_index(docs: DataFrame, id_col: str, text_col: str):
     """(staged, postings, stats) for inline ranked search: the corpus is
     tokenized once and STAGED behind a lazy localCheckpoint barrier (one
     row per doc with its token array), and both the positional postings
-    (term, doc_id, tf, dl, positions) and the one-row (n_docs, avgdl)
-    stats derive from it. The stats count every doc, token-empty ones too,
-    as the index's corpus_stats does. The barrier keeps Catalyst from
-    re-running the tokenize regex once per consumer; it is lazy (no job at
-    construction) and rebuilt inside every run."""
+    (fulltext.positional_postings over the staged tokens, dl included) and
+    the one-row (n_docs, avgdl) stats derive from it. The stats count
+    every doc, token-empty ones too, as the index's stats table does. The
+    barrier keeps Catalyst from re-running the tokenize regex once per
+    consumer; it is lazy (no job at construction) and rebuilt inside every
+    run."""
     staged = docs.select(
         F.col(id_col).alias("doc_id"), tokenize(F.col(text_col)).alias("_toks")
     ).localCheckpoint(eager=False)
-    post = (
-        staged.select(
-            "doc_id",
-            F.size("_toks").alias("dl"),
-            F.posexplode("_toks").alias("pos", "term"),
-        )
-        .groupBy("term", "doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("tf"),
-            F.max("dl").alias("dl"),
-            F.sort_array(F.collect_list("pos")).alias("positions"),
-        )
-    )
+    post = positional_postings(staged, "doc_id", "_toks")
     stats = staged.agg(
         F.count(F.lit(1)).alias("n_docs"), F.avg(F.size("_toks")).alias("avgdl")
     )

@@ -160,11 +160,7 @@ def test_percolator_scored_chunked_equals_single(spark):
     registry = gen_registry(_vocab_by_freq(toks), 40)
 
     docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    rel = (
-        FT.positional_postings(docs)
-        .join(doc_lengths(docs), "doc_id")
-        .select("doc_id", "term", "positions", "tf", "dl")
-    )
+    rel = FT.positional_postings(docs).select("doc_id", "term", "positions", "tf", "dl")
     union_pos = sorted(
         {t for _qid, q in registry for t in QL.term_boosts(QL.parse_query(q))}
     )

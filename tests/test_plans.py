@@ -143,6 +143,26 @@ def test_indexed_search_construction_runs_no_job(spark):
     assert rows2 == rows and n == 1, n
 
 
+def test_index_build_job_count(spark, tmp_path):
+    """A warm build_index shuffles once for the postings and joins no doc
+    lengths: 5 jobs without the forward index (postings exchange + write,
+    df, dl with the stats observed on it, stats), 10 with it (plus tvec
+    exchange + write, df broadcast, norms exchange + write; n_docs comes
+    from the observed stats, not a read-back)."""
+    from sparkfulltextquery_spark.functions.index import build_index
+    from sparkfulltextquery_spark.sources import load_table
+
+    docs = load_table(spark, SF_DIR, "documents")
+    for tv, most in ((False, 5), (True, 10)):
+        def build():
+            return build_index(docs, "jobs_idx", num_buckets=4,
+                               path=f"file://{tmp_path}/tv{int(tv)}", term_vectors=tv)
+
+        build()  # warm: first-use class loading and codegen
+        _names, n = _jobs_started(spark, build)
+        assert n <= most, f"term_vectors={tv}: {n} jobs"
+
+
 def test_no_cartesian_in_equijoins(spark):
     for name in ("join_inner_broadcast", "join_using_natural", "dedup_minhash_pairs"):
         df = _q(spark, name)

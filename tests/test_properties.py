@@ -1167,6 +1167,57 @@ def test_inline_bm25_and_simple_search_equal_indexed_on_empty_docs(spark, fuzz_i
         _assert_bm25(inline, toks, {a: 1.0, b: 1.0}, sq)
 
 
+def test_built_index_tables_equal_python_reference(spark, tmp_path):
+    """Every table build_index writes equals a test-owned Python model of
+    the index over the fuzz corpus plus an empty, a punctuation-only, a
+    NULL-text and a non-ASCII doc: each posting row (term, doc_id, tf,
+    sorted positions, dl), each term's df, each doc's dl (NULL for a NULL
+    text), and n_docs/avgdl. n_docs counts every doc and avgdl averages
+    the non-NULL dl values."""
+    from collections import Counter
+
+    from sparkfulltextquery_spark.functions.index import build_index
+
+    docs, _toks, _vocab, _bigrams = _fuzz_corpus(spark)
+    docs = docs.unionByName(
+        spark.createDataFrame(
+            [
+                (900011, ""),
+                (900012, "?!... -- //"),
+                (900013, None),
+                (900014, "Ünïcode café naïve ÄBC x2 日本語 Straße"),
+            ],
+            docs.schema,
+        )
+    )
+    texts = {r.doc_id: r.text for r in docs.collect()}
+    toks = {d: None if t is None else _py_tokenize(t) for d, t in texts.items()}
+    assert toks[900013] is None
+    assert toks[900014] == ["n", "code", "caf", "na", "ve", "bc", "x2", "stra", "e"]
+
+    post: dict = {}
+    for d, ts in toks.items():
+        for i, t in enumerate(ts or []):
+            post.setdefault((t, d), []).append(i)
+    want_post = sorted((d, t, len(p), p, len(toks[d])) for (t, d), p in post.items())
+    want_df = sorted(Counter(t for t, _d in post).items())
+    dls = {d: None if ts is None else len(ts) for d, ts in toks.items()}
+    known = [v for v in dls.values() if v is not None]
+
+    build_index(docs, table_prefix="ref_idx", num_buckets=4, path=f"file://{tmp_path}",
+                term_vectors=False)
+    got_post = sorted(
+        (r.doc_id, r.term, r.tf, list(r.positions), r.dl)
+        for r in spark.table("ref_idx_postings").collect()
+    )
+    assert got_post == want_post
+    assert sorted(tuple(r) for r in spark.table("ref_idx_df").collect()) == want_df
+    assert {r.doc_id: r.dl for r in spark.table("ref_idx_dl").collect()} == dls
+    st = spark.table("ref_idx_stats").head()
+    assert st.n_docs == len(texts)
+    assert abs(st.avgdl - sum(known) / len(known)) < 1e-12
+
+
 @pytest.mark.heavy
 def test_random_query_asts_three_way_equivalence(spark, tmp_path):
     from sparkfulltextquery_spark.functions.index import build_index

@@ -932,3 +932,36 @@ def test_percolator_registry_table_name_validated(spark):
     for bad in ("db.tbl", "t;drop", "t`x", "t-x", "1tab", "t x", ""):
         with pytest.raises(ValueError, match="unqualified identifier"):
             register_percolator_queries(spark, [(1, "spark")], table=bad)
+
+
+def test_percolate_scored_applies_stored_boosts_like_search(spark):
+    """A stored query's `term^N` boosts score exactly as in search: with
+    n_docs, avgdl and df taken from the same three docs, percolate_scored
+    ranks and scores `spark^5 OR join` as search does (4dp), including
+    when another stored query uses the same term unboosted."""
+    from pyspark.sql import functions as F
+
+    from sparkfulltextquery_spark.functions.fulltext import (
+        doc_lengths,
+        positional_postings,
+    )
+    from sparkfulltextquery_spark.functions.percolate import percolate_scored
+    from sparkfulltextquery_spark.functions.querylang import search
+
+    docs = spark.createDataFrame(
+        [(1, "spark join spark"), (2, "join data"), (3, "stream vector join")],
+        "doc_id long, text string",
+    )
+    rel = positional_postings(docs).select("doc_id", "term", "positions", "tf", "dl")
+    st = doc_lengths(docs).agg(F.count(F.lit(1)).alias("n"), F.avg("dl").alias("a")).head()
+    df_of = {"spark": 1, "join": 3}
+    got = {
+        (r.query_id, r.doc_id): r.score
+        for r in percolate_scored(
+            rel, [(1, "spark^5 OR join"), (2, "spark OR join")], int(st.n), float(st.a), df_of
+        ).collect()
+    }
+    for qid, text in ((1, "spark^5 OR join"), (2, "spark OR join")):
+        want = {r.doc_id: r.score for r in search(docs, text, k=3).collect()}
+        assert {d: s for (q, d), s in got.items() if q == qid} == want, text
+    assert got[(1, 1)] > got[(2, 1)]

@@ -918,11 +918,7 @@ def test_streaming_scored_percolation_equals_batch(spark, tmp_path):
     run()
     got = [tuple(r) for r in read_scored_alerts(spark, out, k=3).collect()]
 
-    rel = (
-        FT.positional_postings(docs)
-        .join(doc_lengths(docs), "doc_id")
-        .select("doc_id", "term", "positions", "tf", "dl")
-    )
+    rel = FT.positional_postings(docs).select("doc_id", "term", "positions", "tf", "dl")
     want = [
         tuple(r)
         for r in percolate_scored(rel, registry, n_docs, avgdl, df_of, k=3)
