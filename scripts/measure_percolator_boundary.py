@@ -10,7 +10,8 @@ form, against the persisted sf index. A final row measures the chunked
 path (MAX_COMPILE_QUERIES groups) at the full registry size.
 
 r10 (VERDICT r09 #5): a final section measures the query-term-index
-PREFILTER at 10,000 stored queries. The fixture corpus has a ~60-word
+PREFILTER at 10,000 stored queries (for an ad-hoc registry, the index
+is built on the fly from term_index_rows). The fixture corpus has a ~60-word
 vocabulary (every document overlaps every realistic query), so registry
 breadth is simulated the way a real saved-search registry is broad: most
 stored queries are about TOPICS (terms) the current batch never
@@ -23,9 +24,9 @@ r11 (VERDICT r10 #1): a 100,000-stored-query section exercises the
 PERSISTED term-index path — register_percolator_queries writes the
 (query_id, term) relation once (linear-cost validation), then
 percolation prefilters via ONE broadcast join and parses only the
-candidate slice. Measured against the r10 in-memory prefilter (which
-parses the whole registry and plans a giant isin per call) to show
-where the driver-side knee sits and that the relation path stays
+candidate slice. Measured against the ad-hoc registry (which parses
+the whole registry and builds its term index per call) to show where
+the driver-side knee sits and that the persisted path stays
 proportional to candidates.
 
 r12 (VERDICT r11 #1): a 1,000,000-stored-query section (PERC_SECTIONS=1m)
@@ -34,8 +35,10 @@ PREFILTER_INDEX_BROADCAST_MAX_ROWS index rows the batch's distinct
 terms broadcast into a join streamed over the term-bucketed persisted
 index, so per-percolate cost stays proportional to batch + candidates
 while the shipped data is bounded by batch vocabulary. The stream
-section (PERC_SECTIONS=stream) also reports the r12 compile-cache
-with/without split (VERDICT r11 #5).
+section (PERC_SECTIONS=stream) runs the alerting stream over the 100k
+registry and reports the compile memo's with/without split: the three
+batch relations percolated with ``compile_cache=None``, then with one
+shared dict, as the stream does.
 
 Usage:
     python scripts/measure_percolator_boundary.py [sf_dir] [sizes...]
@@ -163,10 +166,16 @@ def main() -> None:
     # and 100k sections: a thin live slice over the corpus vocabulary,
     # the rest over disjoint topic vocabularies the batch never mentions
     from sparkfulltextquery_spark.functions.percolate import (
-        _prefilter_candidates,
+        _adhoc_term_index,
+        _prefilter_candidates_indexed,
         percolate_from_table,
         register_percolator_queries,
     )
+
+    def n_candidates(reg: list[tuple[int, str]]) -> int:
+        # the one prefilter, over the registry's ad-hoc term index
+        ti, ti_rows = _adhoc_term_index(spark, reg)
+        return len(_prefilter_candidates_indexed(batch_rel, reg, None, ti, ti_rows)[0])
 
     def broad_registry(n_total: int) -> list[tuple[int, str]]:
         live = gen_registry(terms, 250)
@@ -183,10 +192,10 @@ def main() -> None:
     ]
     batch_rel = rel.filter(F.col("doc_id").isin(batch_ids))
 
-    # ---- r10: in-memory query-term-index prefilter at 10k queries -----
+    # ---- r10: ad-hoc query-term-index prefilter at 10k queries --------
     if "10k" in sections:
         big = broad_registry(10_000)
-        n_cand = len(_prefilter_candidates(batch_rel, big, None)[0])
+        n_cand = n_candidates(big)
         for pf in (False, True):
             t0 = time.perf_counter()
             df = percolate_matches(batch_rel, big, prefilter=pf)
@@ -212,9 +221,9 @@ def main() -> None:
     # ---- r11: PERSISTED term-index prefilter at 100k queries ----------
     # (VERDICT r10 #1) registration writes the (query_id, term) relation
     # once; percolation broadcast-joins it against the batch's terms and
-    # parses only the candidate slice. The in-memory prefilter leg shows
-    # the driver-side knee it replaces (whole-registry parse + giant isin
-    # per call); the unfiltered leg is omitted (400 chunk compiles).
+    # parses only the candidate slice. The ad-hoc leg shows the
+    # driver-side knee it replaces (whole-registry parse + term-index
+    # build per call); the unfiltered leg is omitted (400 chunk compiles).
     if "100k" in sections:
         big = broad_registry(100_000)
         t0 = time.perf_counter()
@@ -230,8 +239,8 @@ def main() -> None:
             ),
             flush=True,
         )
-        n_cand = len(_prefilter_candidates(batch_rel, big, None)[0])
-        for mode in ("in-memory", "indexed"):
+        n_cand = n_candidates(big)
+        for mode in ("ad-hoc", "indexed"):
             t0 = time.perf_counter()
             if mode == "indexed":
                 df = percolate_from_table(spark, batch_rel, table=tbl, matches=True)
@@ -262,7 +271,7 @@ def main() -> None:
     # (VERDICT r11 #1) the persisted index is ~2M rows here — past
     # PREFILTER_INDEX_BROADCAST_MAX_ROWS, so the prefilter broadcasts the
     # BATCH's distinct terms into the bucketed index instead of shipping
-    # the index. The in-memory leg is omitted (it would parse 1M queries
+    # the index. The ad-hoc leg is omitted (it would parse 1M queries
     # per call — the 100k section already shows that knee); what matters
     # is that compile+exec stay proportional to batch + candidates as
     # the registry grows another decade.
@@ -323,7 +332,9 @@ def main() -> None:
         import shutil
         import tempfile
 
+        from sparkfulltextquery_spark.functions.fulltext import positional_postings
         from sparkfulltextquery_spark.functions.percolate import (
+            _usable_term_index,
             stream_percolate_alerts,
         )
 
@@ -332,62 +343,86 @@ def main() -> None:
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
             "doc_id", "text"
         )
-        # r12 (VERDICT r11 #5): measure the stream with and without the
-        # per-stream chunk-compile memo — the candidate set is stable
-        # batch-to-batch here (same corpus vocabulary every batch), the
-        # steady-state case the cache targets
-        alerts_by_mode = {}
-        for cached in (False, True):
-            tmp = tempfile.mkdtemp()
-            src, out, ck = (
-                f"file://{tmp}/src",
-                f"file://{tmp}/alerts",
-                f"file://{tmp}/ck",
+        tmp = tempfile.mkdtemp()
+        src, out, ck = (
+            f"file://{tmp}/src",
+            f"file://{tmp}/alerts",
+            f"file://{tmp}/ck",
+        )
+        for i in range(3):
+            docs.filter(F.col("doc_id") % 3 == i).coalesce(1).write.mode(
+                "append"
+            ).parquet(src)
+        t0 = time.perf_counter()
+        q = stream_percolate_alerts(
+            spark.readStream.schema(docs.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src),
+            tbl, out, ck,
+        )
+        q.awaitTermination()
+        wall = time.perf_counter() - t0
+        n_batches = spark.read.parquet(out).select("batch_id").distinct().count()
+        streamed = {
+            (r.query_id, r.doc_id)
+            for r in spark.read.parquet(out).select("query_id", "doc_id").collect()
+        }
+        print(
+            json.dumps(
+                {
+                    "mode": "100k-registry STREAMING alerting",
+                    "n_queries": len(big),
+                    "n_batches": n_batches,
+                    "total_s": round(wall, 2),
+                    "per_batch_s": round(wall / max(n_batches, 1), 2),
+                    "alerts": len(streamed),
+                }
+            ),
+            flush=True,
+        )
+        shutil.rmtree(tmp, ignore_errors=True)
+
+        # (VERDICT r11 #5) the per-stream chunk-compile memo: the same
+        # three batch relations percolated without it, then with one
+        # shared dict — the candidate set is stable batch-to-batch here
+        # (same corpus vocabulary every batch), the steady-state case the
+        # memo targets
+        ti, ti_rows = _usable_term_index(spark, tbl)
+        batches = [
+            positional_postings(docs.filter(F.col("doc_id") % 3 == i)).select(
+                "doc_id", "term", "positions"
             )
-            for i in range(3):
-                docs.filter(F.col("doc_id") % 3 == i).coalesce(1).write.mode(
-                    "append"
-                ).parquet(src)
+            for i in range(3)
+        ]
+        for cache in (None, {}):
             t0 = time.perf_counter()
-            q = stream_percolate_alerts(
-                spark.readStream.schema(docs.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src),
-                tbl, out, ck,
-                use_compile_cache=cached,
-            )
-            q.awaitTermination()
+            alerts = set()
+            for b in batches:
+                alerts |= {
+                    (r.query_id, r.doc_id)
+                    for r in percolate_matches(
+                        b, big, vocab=b.select("term").distinct(),
+                        term_index=ti, term_index_rows=ti_rows,
+                        compile_cache=cache,
+                    ).collect()
+                }
             wall = time.perf_counter() - t0
-            n_batches = (
-                spark.read.parquet(out).select("batch_id").distinct().count()
-            )
-            alerts = spark.read.parquet(out).count()
-            alerts_by_mode[cached] = {
-                (r.query_id, r.doc_id)
-                for r in spark.read.parquet(out)
-                .select("query_id", "doc_id")
-                .collect()
-            }
             print(
                 json.dumps(
                     {
                         "mode": (
-                            "100k-registry STREAMING alerting "
-                            f"compile_cache={'on' if cached else 'off'}"
+                            "100k-registry 3 batches "
+                            f"compile_cache={'off' if cache is None else 'on'}"
                         ),
                         "n_queries": len(big),
-                        "n_batches": n_batches,
                         "total_s": round(wall, 2),
-                        "per_batch_s": round(wall / max(n_batches, 1), 2),
-                        "alerts": alerts,
+                        "per_batch_s": round(wall / len(batches), 2),
+                        "alerts": len(alerts),
                     }
                 ),
                 flush=True,
             )
-            shutil.rmtree(tmp, ignore_errors=True)
-        assert alerts_by_mode[True] == alerts_by_mode[False], (
-            "compile cache changed the alert set"
-        )
+            assert alerts == streamed, "compile cache changed the alert set"
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
         spark.sql(f"DROP TABLE IF EXISTS {tbl}_terms")
 

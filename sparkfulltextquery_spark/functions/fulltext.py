@@ -114,12 +114,18 @@ def hashing_tf(
     )
 
 
+def doc_len(toks) -> Column:
+    """A doc's length over its token array: a NULL text is a token-empty
+    doc (dl 0), so n_docs and avgdl count the same docs."""
+    return F.coalesce(F.size(toks), F.lit(0))
+
+
 def doc_lengths(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(doc_id, dl) token counts of every doc (NULL for a NULL text) — a
+    """(doc_id, dl) token counts of every doc (0 for a NULL text) — a
     projection, no shuffle; its row count and mean dl are the corpus stats.
     Postings carry dl themselves, so nothing joins this back."""
     return docs.select(
-        F.col(id_col).alias("doc_id"), F.size(tokenize(F.col(text_col))).alias("dl")
+        F.col(id_col).alias("doc_id"), doc_len(tokenize(F.col(text_col))).alias("dl")
     )
 
 
@@ -228,7 +234,8 @@ def bm25_term_scores(
     The postings are pruned to the query terms right after the explode
     and carry each doc's length; df is counted in plan over them, and
     n_docs/avgdl come from a one-row relation over EVERY doc — a
-    token-empty doc counts, as in the index's stats table — joined in as
+    token-empty or NULL-text doc counts (dl 0), as in the index's stats
+    table — joined in as
     the plan's only join."""
     q_terms = sorted({t for t in _py_tokenize(query)})
     if not q_terms:
@@ -238,7 +245,7 @@ def bm25_term_scores(
         F.col(id_col).alias("doc_id"), tokenize(F.col(text_col)).alias("toks")
     )
     stats = toks.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.avg(F.size("toks")).alias("avgdl")
+        F.count(F.lit(1)).alias("n_docs"), F.avg(doc_len("toks")).alias("avgdl")
     )
     qpost = (
         toks.select("doc_id", F.size("toks").alias("dl"), F.explode("toks").alias("term"))

@@ -1,11 +1,18 @@
-"""Percolation / reverse search (r8 split of fulltext_queries.py for
-file-size hygiene; no behavior change): the Elasticsearch percolator /
-Lucene Monitor surface — conjunctive, boolean (AND/OR/NOT + phrase),
-expansion-atom (dictionary-resolved), persisted-registry, summary and
-alerting forms, all compiled to ONE shared posting scan.
+"""Percolation / reverse search: the Elasticsearch percolator / Lucene
+Monitor surface. Search runs tokenize → index → score; percolation runs
+it in reverse, matching stored queries against incoming documents.
+
+Every boolean form (summary, alerting and BM25-ranked, over inline,
+indexed or streamed postings) runs through one driver, ``_percolate``:
+registry-wide id check, one query-term-index prefilter, chunked
+compiles through querylang's shared-scan compiler, union. The forms
+differ only in the per-chunk output they build. The conjunctive form
+(``fulltext_percolate``) is the broadcast-join aggregation instead.
 """
 
 from __future__ import annotations
+
+from functools import partial, reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -70,12 +77,19 @@ def fulltext_percolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the conjunction tested as matched-count == required-count — never a
     per-query corpus scan."""
     d = load_table(spark, sf_dir, "documents")
-    q = spark.createDataFrame(
+    return _percolate_conjunctive(FT.postings(d))
+
+
+def _percolate_conjunctive(post: DataFrame) -> DataFrame:
+    """_PERCOLATE_QUERIES over a (doc_id, term) posting relation: the
+    stored-query term table broadcasts into ``post``, one (doc, query)
+    aggregation counts the matched terms, and a query matches a doc where
+    that count equals the query's term count."""
+    q = post.sparkSession.createDataFrame(
         [(qid, t) for qid, terms in _PERCOLATE_QUERIES for t in terms],
         "query_id int, term string",
     )
     qsize = q.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_req"))
-    post = FT.postings(d)
     hit = (
         post.join(F.broadcast(q), "term")
         .groupBy("doc_id", "query_id")
@@ -176,119 +190,25 @@ def _check_distinct_ids(queries) -> None:
         seen.add(qid)
 
 
-def _registry_atom_terms(
-    queries: list[tuple[int, str]], vocab: DataFrame | None
-) -> tuple[dict, dict]:
-    """The percolator's query-term index (r10, VERDICT r09 #5 — the
-    Elasticsearch percolator keeps exactly this: an inverted index over
-    the stored queries' extracted terms). For each stored query, the set
-    of concrete posting terms whose PRESENCE could make the query true:
-    plain terms, phrase tokens, and expansion atoms at even NOT-depth
-    (positive polarity), with expansion atoms resolved against the
-    vocabulary in ONE bounded pass for the whole registry (not one per
-    chunk). Returns ``(qid -> term set, expansion cache)``; the cache
-    feeds _compile_chunk so chunks never re-resolve.
-
-    Why a zero-overlap query can be skipped: registration rejects queries
-    satisfiable by the EMPTY document, and over the AND/OR/NOT grammar
-    evaluation is monotone per literal polarity — turning on a term that
-    occurs only under an odd number of NOTs can never flip the query
-    from false to true. So a document sharing no POSITIVE-polarity term
-    with the query evaluates ≤ the empty document = false. (A term
-    occurring at both parities counts as positive.)
-
-    Fail-loud contract (r11, ADVICE r10): a PURE-NEGATION stored query
-    (satisfiable by the empty document) has an empty positive-term set
-    and would otherwise be silently dropped here — the exact silent-miss
-    the compile-time check guards against — so it raises the same
-    ValueError on this path too, keeping behavior identical across
-    registry sizes."""
-    asts = {qid: _parse_stored(qid, qs) for qid, qs in queries}
-    per_q_terms: dict[int, set] = {}
-    per_q_keys: dict[int, set] = {}
-    all_keys: set = set()
-    for qid, ast in asts.items():
-        terms: set = set()
-        keys: set = set()
-        for a, positive in _stored_atoms(ast, vocab is not None):
-            if isinstance(a, QL.Expand):
-                # the cache must carry BOTH polarities (compile needs every
-                # atom's term list); only positive occurrences feed the
-                # candidate term set
-                all_keys.add(a.key)
-                if positive:
-                    keys.add(a.key)
-            elif positive:
-                terms.update(QL.atom_terms(a))
-        per_q_terms[qid] = terms
-        per_q_keys[qid] = keys
-
-    expansion_cache: dict = {}
-    if all_keys:
-        from sparkfulltextquery_spark.functions.index import (
-            resolve_expansions_over,
-        )
-
-        expansion_cache = resolve_expansions_over(vocab.select("term"), all_keys)
-    for qid, ks in per_q_keys.items():
-        for k in ks:
-            per_q_terms[qid].update(expansion_cache.get(k, []))
-    return per_q_terms, expansion_cache
-
-
-#: Registry-term-union width past which the AD-HOC (unregistered)
-#: prefilter switches from one isin literal to the same broadcast-join
-#: shape as the persisted index: planning an In-list of 10^5+ string
-#: literals is minutes of Catalyst work per call (the measured 100k-leg
-#: knee), while a local-relation broadcast join is one bounded job whose
-#: collect is candidate-ids, not registry vocabulary.
-PREFILTER_ISIN_MAX_TERMS = 10_000
-
-
-def _prefilter_candidates(
-    rel: DataFrame,
-    queries: list[tuple[int, str]],
-    vocab: DataFrame | None,
-) -> tuple[list[tuple[int, str]], dict]:
-    """Drop stored queries whose atom-term set has ZERO overlap with the
-    batch's term set (they cannot match — see _registry_atom_terms), so
-    chunk compilation and execution scale with the CANDIDATE registry
-    slice, not the registry size. One bounded job: the batch's distinct
-    terms intersected with the registry vocabulary (isin + collect for
-    small registries; the broadcast-join shape past
-    PREFILTER_ISIN_MAX_TERMS union terms — r11, so ad-hoc large
-    registries don't pay the In-list planning knee either; registered
-    registries get the better deal still, parsing only candidates via
-    the persisted index). Returns (surviving queries in original order,
-    expansion cache for the compiler)."""
-    qterms, expansion_cache = _registry_atom_terms(queries, vocab)
-    union_all = sorted(set().union(*qterms.values()) if qterms else set())
-    if not union_all:
-        return [], expansion_cache
-    if len(union_all) > PREFILTER_ISIN_MAX_TERMS:
-        # expansion atoms are already resolved into qterms, so no
-        # NULL-term always-candidate rows are needed on this path
-        term_df = rel.sparkSession.createDataFrame(
-            [(qid, t) for qid, ts in qterms.items() for t in sorted(ts)],
-            TERM_INDEX_SCHEMA,
-        )
-        cand = {
-            int(r.query_id)
-            for r in rel.select("term")
-            .join(F.broadcast(term_df), "term")
-            .select("query_id")
-            .distinct()
-            .collect()
-        }
-        return [q for q in queries if q[0] in cand], expansion_cache
-    present = {
-        r[0]
-        for r in rel.filter(F.col("term").isin(union_all))
-        .select("term")
-        .distinct()
-        .collect()
+def _expansion_keys(asts, vocab: DataFrame | None) -> set:
+    """The keys of every expansion atom (both polarities: the compile
+    needs every atom's term list) of the parsed stored queries ``asts``."""
+    return {
+        a.key
+        for ast in asts
+        for a, _positive in _stored_atoms(ast, vocab is not None)
+        if isinstance(a, QL.Expand)
     }
-    return [q for q in queries if qterms[q[0]] & present], expansion_cache
+
+
+def _resolve_expansions(keys: set, vocab: DataFrame | None) -> dict:
+    """{key: vocabulary terms} for expansion ``keys`` — one bounded pass
+    over ``vocab`` under the fail-loud ``max_expansions`` cap."""
+    if not keys:
+        return {}
+    from sparkfulltextquery_spark.functions.index import resolve_expansions_over
+
+    return resolve_expansions_over(vocab.select("term"), keys)
 
 
 #: Schema of the persisted percolator query-term index: one row per
@@ -319,8 +239,8 @@ PREFILTER_INDEX_BROADCAST_MAX_ROWS = 500_000
 #: Registration stamp column (r12, ADVICE r11): registry + term index are
 #: two tables written non-atomically; a shared fresh-per-write stamp lets
 #: readers detect a crash between the writes (stamp mismatch → fall back
-#: to the in-memory prefilter) instead of prefiltering off a stale index
-#: and silently missing alerts.
+#: to an index built from the registry itself) instead of prefiltering
+#: off a stale index and silently missing alerts.
 REG_STAMP_COL = "reg_stamp"
 
 TERM_INDEX_STAMPED_SCHEMA = (
@@ -331,24 +251,28 @@ TERM_INDEX_STAMPED_SCHEMA = (
 def term_index_rows(
     queries: list[tuple[int, str]]
 ) -> list[tuple[int, str | None]]:
-    """Build the rows of the percolator's PERSISTED query-term index
-    (r11, VERDICT r10 #1 — the posting-list inversion of the reference's
-    HashingTF.scala:40 discipline applied to QUERIES instead of
-    documents): for each stored query, one (query_id, term) row per
-    positive-polarity concrete term (plain terms + phrase tokens), plus
-    one (query_id, NULL) row when the query carries a positive expansion
-    atom (see TERM_INDEX_SCHEMA). Enforces the full registration
-    contract while it parses — distinct ids, no pure negation, supported
-    atom kinds only — so a registry whose term index builds is a registry
-    that compiles.
+    """Build the rows of the percolator's query-term index (the
+    Elasticsearch percolator keeps exactly this: an inverted index over
+    the stored queries' extracted terms): for each stored query, one
+    (query_id, term) row per positive-polarity concrete term (plain terms
+    + phrase tokens), plus one (query_id, NULL) row when the query carries
+    a positive expansion atom (see TERM_INDEX_SCHEMA). Registration
+    persists these rows; an ad-hoc registry's prefilter and both alerting
+    streams build them on the fly. Enforces the registration contract
+    while it parses — distinct ids, no pure negation, supported atom
+    kinds only.
 
-    Soundness of prefiltering on these rows (same monotone-polarity
-    argument as _registry_atom_terms): a document can only match a stored
-    query if it shares one of the query's positive concrete terms OR the
-    query has a positive expansion atom (whose reach is vocab-dependent,
-    hence always-candidate). Queries with positive expansion atoms are a
-    CONSERVATIVE superset versus the in-memory prefilter (which resolves
-    atoms against the batch vocab) — never a miss."""
+    Soundness of prefiltering on these rows: registration rejects queries
+    satisfiable by the EMPTY document, and over the AND/OR/NOT grammar
+    evaluation is monotone per literal polarity — turning on a term that
+    occurs only under an odd number of NOTs can never flip a query from
+    false to true. So a document sharing none of a query's positive
+    concrete terms evaluates ≤ the empty document = false, unless the
+    query has a positive expansion atom, whose reach is vocab-dependent
+    (hence always-candidate: a conservative superset, never a miss). A
+    term occurring at both parities counts as positive. A pure-negation
+    query has no positive atom and would otherwise be silently never a
+    candidate, so it raises here — the same error the compile raises."""
     _check_distinct_ids(queries)
     rows: list[tuple[int, str | None]] = []
     for qid, qs in queries:
@@ -366,6 +290,15 @@ def term_index_rows(
             # but an always-candidate row can never cause a missed alert
             rows.append((qid, None))
     return rows
+
+
+def _adhoc_term_index(
+    spark: SparkSession, queries: list[tuple[int, str]]
+) -> tuple[DataFrame, int]:
+    """The query-term index of an unregistered registry, as a relation
+    with its row count."""
+    rows = term_index_rows(queries)
+    return spark.createDataFrame(rows, TERM_INDEX_SCHEMA), len(rows)
 
 
 def _candidate_id_df(
@@ -404,17 +337,15 @@ def _prefilter_candidates_indexed(
     term_index: DataFrame,
     term_index_rows: int | None = None,
 ) -> tuple[list[tuple[int, str]], dict]:
-    """Shuffle-parallel prefilter against a query-term-index RELATION
-    (r11, VERDICT r10 #1): candidate query ids come from ONE broadcast
-    hash join of the term index against the batch's posting terms — no
-    driver-side per-query term sets, no giant isin literal, and crucially
-    the driver parses ONLY the candidate slice (the in-memory prefilter
-    parses the whole registry per call, the knee at 100k+ stored
-    queries). NULL-term rows (positive expansion atoms) are unconditional
-    candidates. The collect is bounded by the number of DISTINCT
-    candidate ids ≤ registry size, typically the small matching slice.
-    Returns (surviving queries in original order, expansion cache for the
-    chunk compiles — resolved once over the survivors).
+    """The one percolator prefilter: candidate query ids come from ONE
+    broadcast hash join of the query-term index against the batch's
+    posting terms — no driver-side per-query term sets, no isin literal,
+    and the driver parses ONLY the candidate slice. NULL-term rows
+    (positive expansion atoms) are unconditional candidates. The collect
+    is bounded by the number of DISTINCT candidate ids ≤ registry size,
+    typically the small matching slice. Returns (surviving queries in
+    original order, expansion cache for the chunk compiles — resolved
+    once over the survivors).
 
     Build-side auto-select (r12, VERDICT r11 #1): up to
     PREFILTER_INDEX_BROADCAST_MAX_ROWS index rows the index is the
@@ -422,17 +353,13 @@ def _prefilter_candidates_indexed(
     the 1M-stored-query regime — the BATCH's distinct terms broadcast
     into a join streamed over the (term-bucketed) persisted index, so
     the shipped side is bounded by batch vocabulary, not registry size.
-    ``term_index_rows`` lets long-lived callers (streams, table readers)
-    pin the count once instead of paying a count job per percolate."""
+    ``term_index_rows`` lets callers that know the count (streams, table
+    readers, ad-hoc builds) skip a count job per percolate."""
     cand_df = _candidate_id_df(rel, term_index, term_index_rows)
     cand = {int(r.query_id) for r in cand_df.collect()}
     survivors = [q for q in queries if q[0] in cand]
-    if not survivors:
-        return [], {}
-    # resolve the survivors' expansion atoms ONCE for every chunk —
-    # parses only the candidate slice (the whole point of the relation)
-    _qterms, expansion_cache = _registry_atom_terms(survivors, vocab)
-    return survivors, expansion_cache
+    asts = [_parse_stored(qid, qs) for qid, qs in survivors]
+    return survivors, _resolve_expansions(_expansion_keys(asts, vocab), vocab)
 
 
 def _chunks(queries, chunk_size: int):
@@ -471,14 +398,13 @@ def _compile_chunk(
     expansion_cache: dict | None = None,
 ) -> QL.CompiledChunk:
     """Boolean-query percolation core (r8, VERDICT r07 #3): compile a
-    registry of stored ARBITRARY boolean queries (AND/OR/NOT + term +
-    phrase atoms, the querylang grammar) through querylang.compile_queries
-    — the compiler search and search_indexed use — against ONE shared
-    scan of a positional posting relation: per-query match expressions
-    fold as columns into a single doc_id aggregation, with the flag and
-    slot columns shared across the stored queries. The summary
-    (_percolate_bool) and alerting (percolate_matches) forms build on it.
-    No join, no per-query corpus scan.
+    chunk of stored ARBITRARY boolean queries (AND/OR/NOT + term + phrase
+    atoms, the querylang grammar) through querylang.compile_queries — the
+    compiler search and search_indexed use — against ONE shared scan of a
+    positional posting relation: per-query match expressions fold as
+    columns into a single doc_id aggregation, with the flag and slot
+    columns shared across the stored queries. No join, no per-query
+    corpus scan.
 
     Contract: every stored query must have at least one positive atom
     (``_eval_empty`` false) — a query satisfiable by the EMPTY document
@@ -493,43 +419,82 @@ def _compile_chunk(
     concrete vocabulary terms through the same bounded one-aggregation
     protocol as indexed search (``resolve_expansions_over``, fail-loud
     ``max_expansions`` cap), so the shared scan stays an equality
-    ``isin``. Without ``vocab``, expansion atoms are rejected loudly.
+    ``isin`` — from ``expansion_cache`` when the prefilter already
+    resolved the registry, else here. Without ``vocab``, expansion atoms
+    are rejected loudly.
 
-    Scale shape: the flag compilation is per-STORED-QUERY columns, right
-    for registries up to O(10^3) queries; beyond that the conjunctive
-    broadcast-join form (fulltext_percolate) partitions the registry.
     ``rel`` must expose (doc_id, term, positions); the scored form folds
     per-term BM25 contributions into the SAME doc_id aggregation through
     ``per_doc``'s extra aggregates (they may reference rel's tf/dl)."""
-    asts: dict[int, object] = {}
-    for qid, qs in queries:
-        if qid in asts:
-            # a silently-overwritten duplicate id means silently missed
-            # alerts (ADVICE r08) — same fail-loud contract as the
-            # pure-negation check
-            raise ValueError(
-                f"duplicate stored percolator query_id {qid} — every "
-                "registry entry needs a distinct id"
-            )
-        asts[qid] = _parse_stored(qid, qs)
-    exp_keys = {
-        a.key
-        for ast in asts.values()
-        for a, _positive in _stored_atoms(ast, vocab is not None)
-        if isinstance(a, QL.Expand)
-    }
-    expansion: dict = {}
-    if exp_keys and expansion_cache is not None:
-        # resolved once for the whole registry (_registry_atom_terms)
-        # — chunks reuse instead of re-running the vocab pass
-        expansion = {k: expansion_cache.get(k, []) for k in exp_keys}
-    elif exp_keys:
-        from sparkfulltextquery_spark.functions.index import (
-            resolve_expansions_over,
-        )
-
-        expansion = resolve_expansions_over(vocab.select("term"), exp_keys)
+    asts = {qid: _parse_stored(qid, qs) for qid, qs in queries}
+    keys = _expansion_keys(asts.values(), vocab)
+    if expansion_cache is None:
+        expansion = _resolve_expansions(keys, vocab)
+    else:
+        expansion = {k: expansion_cache.get(k, []) for k in keys}
     return QL.compile_queries(asts, expansion)
+
+
+def _percolate(
+    rel: DataFrame,
+    queries: list[tuple[int, str]],
+    emit,
+    schema: str,
+    *,
+    vocab: DataFrame | None,
+    chunk_size: int | None,
+    prefilter: bool,
+    term_index: DataFrame | None,
+    term_index_rows: int | None,
+    compile_cache: dict | None,
+) -> DataFrame:
+    """The one percolation driver: search's scan → match → aggregate run
+    with the stored queries as the fixed side and ``rel`` (a positional
+    posting relation: inline, the persisted index, or a micro-batch) as
+    the moving one. Matching is per-(query, document) with no
+    cross-query state, so every step below is a plan-width or pruning
+    decision, never a semantics change.
+
+    1. Stored ids must be distinct registry-wide.
+    2. Prefilter, when the registry is wider than one chunk and
+       ``prefilter`` is on: drop every stored query that shares no
+       positive term with the batch (soundness in term_index_rows) via
+       ONE join of the query-term index against the batch's terms
+       (_prefilter_candidates_indexed). ``term_index`` is the persisted
+       or stream-cached (query_id, term) relation, ``term_index_rows``
+       its pinned row count; an ad-hoc registry builds its index here
+       from term_index_rows. Compile and execution then scale with the
+       CANDIDATE slice, not the registry, and the survivors' expansion
+       atoms resolve once for every chunk.
+    3. Chunk by ``chunk_size`` (default MAX_COMPILE_QUERIES, the
+       measured compile/execution knee): each chunk is its own pruned
+       one-scan aggregation.
+    4. Compile each chunk (_cached_chunk → _compile_chunk).
+       ``compile_cache`` memoizes the bundles by their (qid, query)
+       tuple — streams pass one dict for their lifetime, so a stable
+       candidate set compiles once, not per micro-batch; vocab-dependent
+       bundles (expansion atoms) are never cached.
+    5. ``emit(bundle)`` builds the chunk's output over ``rel``; the
+       outputs union. With no chunk left the result is an empty frame of
+       the DDL ``schema`` (``{doc}`` is rel's doc_id type), so quiet
+       batches never change a sink's schema."""
+    _check_distinct_ids(queries)
+    cs = chunk_size or MAX_COMPILE_QUERIES
+    expansion_cache = None
+    if prefilter and len(queries) > cs:
+        if term_index is None:
+            term_index, term_index_rows = _adhoc_term_index(rel.sparkSession, queries)
+        queries, expansion_cache = _prefilter_candidates_indexed(
+            rel, queries, vocab, term_index, term_index_rows
+        )
+    outs = [
+        emit(_cached_chunk(compile_cache, part, vocab, expansion_cache))
+        for part in _chunks(queries, cs)
+    ]
+    if not outs:
+        doc = rel.schema["doc_id"].dataType.simpleString()
+        return rel.sparkSession.createDataFrame([], schema.format(doc=doc))
+    return reduce(DataFrame.unionByName, outs)
 
 
 def _percolate_bool(
@@ -541,96 +506,34 @@ def _percolate_bool(
     term_index: DataFrame | None = None,
     term_index_rows: int | None = None,
     compile_cache: dict | None = None,
-    _expansion_cache: dict | None = None,
 ) -> DataFrame:
     """Summary form of boolean percolation: every stored query's
-    (n_docs, first_doc) from ONE global aggregation over the compiled
-    per-doc flags — see _compile_chunk for the machinery and the
-    registration contract. Queries matching nothing are omitted.
+    (n_docs, first_doc) from ONE global aggregation over its chunk's
+    per-doc flags. Queries matching nothing are omitted. Chunking,
+    prefilter and compile cache: see _percolate; the registration
+    contract: see _compile_chunk."""
 
-    Registries wider than ``chunk_size`` (default MAX_COMPILE_QUERIES)
-    compile in column-width-bounded groups whose results union — each
-    group is its own pruned one-scan aggregation (finer pruning than one
-    giant scan, and Catalyst analysis stays linear in registry size).
-    ``prefilter`` (r10) first drops stored queries whose atom-term set
-    has zero overlap with the batch's terms (the ES query-term-index
-    trick; exactness argument in _registry_atom_terms), so compile +
-    execution scale with the CANDIDATE slice of the registry.
-    ``term_index`` (r11) routes the prefilter through a persisted
-    query-term-index relation instead (broadcast join, candidates-only
-    parse — see _prefilter_candidates_indexed, including the r12
-    build-side auto-select ``term_index_rows`` pins). ``compile_cache``
-    (r12, VERDICT r11 #5) memoizes each chunk's compiled flag bundle by
-    its (qid, query) tuple — streaming callers pass one dict for the
-    stream's lifetime so a stable candidate set compiles once, not per
-    micro-batch; vocab-dependent bundles (expansion atoms) are never
-    cached."""
-    cs = chunk_size or MAX_COMPILE_QUERIES
-    if len(queries) > cs:
-        _check_distinct_ids(queries)
-        cache = _expansion_cache
-        if prefilter:
-            if term_index is not None:
-                queries, cache = _prefilter_candidates_indexed(
-                    rel, queries, vocab, term_index, term_index_rows
-                )
-            else:
-                queries, cache = _prefilter_candidates(rel, queries, vocab)
-            if not queries:
-                return rel.sparkSession.createDataFrame(
-                    [],
-                    schema=_bool_schema(rel),
-                )
-        out = None
-        for part in _chunks(queries, cs):
-            p = _percolate_bool(
-                rel, part, vocab, prefilter=False,
-                compile_cache=compile_cache, _expansion_cache=cache,
-            )
-            out = p if out is None else out.unionByName(p)
-        return out.orderBy("query_id")
-    bundle = _cached_chunk(compile_cache, queries, vocab, _expansion_cache)
-    per_doc, match_of = bundle.per_doc(rel), bundle.match_of
-    outs = []
-    for qid, m in match_of.items():
-        outs.append(F.sum(F.when(m, 1).otherwise(0)).alias(f"_n{qid}"))
-        outs.append(F.min(F.when(m, F.col("doc_id"))).alias(f"_f{qid}"))
-    row = per_doc.agg(*outs)
-    stack_args = ", ".join(f"{qid}, _n{qid}, _f{qid}" for qid in match_of)
-    return (
-        row.select(
+    def emit(bundle):
+        per_doc, match_of = bundle.per_doc(rel), bundle.match_of
+        outs = []
+        for qid, m in match_of.items():
+            outs.append(F.sum(F.when(m, 1).otherwise(0)).alias(f"_n{qid}"))
+            outs.append(F.min(F.when(m, F.col("doc_id"))).alias(f"_f{qid}"))
+        row = per_doc.agg(*outs)
+        stack_args = ", ".join(f"{qid}, _n{qid}, _f{qid}" for qid in match_of)
+        return row.select(
             F.expr(
                 f"stack({len(match_of)}, {stack_args}) "
                 "as (query_id, n_docs, first_doc)"
             )
-        )
-        .filter(F.col("n_docs") > 0)
-        .orderBy("query_id")
-    )
+        ).filter(F.col("n_docs") > 0)
 
-
-def _bool_schema(rel: DataFrame):
-    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
-
-    doc_t = rel.schema["doc_id"].dataType
-    return StructType(
-        [
-            StructField("query_id", IntegerType()),
-            StructField("n_docs", LongType()),
-            StructField("first_doc", doc_t),
-        ]
-    )
-
-
-def _matches_schema(rel: DataFrame):
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    return StructType(
-        [
-            StructField("query_id", IntegerType()),
-            StructField("doc_id", rel.schema["doc_id"].dataType),
-        ]
-    )
+    return _percolate(
+        rel, queries, emit, "query_id int, n_docs bigint, first_doc {doc}",
+        vocab=vocab, chunk_size=chunk_size, prefilter=prefilter,
+        term_index=term_index, term_index_rows=term_index_rows,
+        compile_cache=compile_cache,
+    ).orderBy("query_id")
 
 
 def percolate_matches(
@@ -642,72 +545,25 @@ def percolate_matches(
     term_index: DataFrame | None = None,
     term_index_rows: int | None = None,
     compile_cache: dict | None = None,
-    _expansion_cache: dict | None = None,
 ) -> DataFrame:
     """Alerting form of boolean percolation (r8): the full (query_id,
     doc_id) match table instead of per-query summaries — the shape a
     saved-search/alerting sink consumes (Elasticsearch percolator hits,
-    Lucene Monitor). Same compiled shared scan and per-doc flag
-    aggregation; each stored query contributes one indicator column and
-    the stack unpivots matches to rows. Matching is per-DOCUMENT (no
-    cross-document state), which is what makes streaming percolation
-    correct batch-by-batch: percolating each micro-batch's documents
-    independently yields exactly the batch result over the union.
+    Lucene Monitor). Each stored query contributes one indicator column
+    to its chunk's per-doc flag aggregation and an explode unpivots the
+    matches to rows. Matching is per-DOCUMENT (no cross-document state),
+    which is what makes streaming percolation correct batch-by-batch:
+    percolating each micro-batch's documents independently yields
+    exactly the batch result over the union. Chunking, prefilter and
+    compile cache: see _percolate."""
 
-    Registries wider than ``chunk_size`` (default MAX_COMPILE_QUERIES)
-    chunk into column-width-bounded compiles whose (query_id, doc_id)
-    outputs union — correct because matching carries no cross-query
-    state; see MAX_COMPILE_QUERIES for the measured knee. ``prefilter``
-    (r10, VERDICT r09 #5) first drops stored queries whose atom-term set
-    has zero overlap with the batch's terms — the Elasticsearch
-    query-term-index trick (exactness argument in _registry_atom_terms) —
-    so chunk compile + execution scale with the CANDIDATE slice, not the
-    registry size; at 10k stored queries and a narrow batch this is the
-    difference between scanning every chunk and scanning the one or two
-    that could match (measured in scripts/measure_percolator_boundary.py).
-    ``term_index`` (r11, VERDICT r10 #1) routes the prefilter through a
-    persisted (query_id, term) relation via ONE broadcast join — no
-    driver-side term sets, no isin literal, candidates-only parse — the
-    shape that survives 100k+ stored-query registries (past
-    PREFILTER_INDEX_BROADCAST_MAX_ROWS index rows the BATCH's distinct
-    terms become the broadcast side — r12, VERDICT r11 #1 — so 1M+
-    registries ship batch-vocab-bounded data, with ``term_index_rows``
-    letting long-lived callers pin the count once). ``compile_cache``
-    (r12, VERDICT r11 #5): one dict per stream memoizes each chunk's
-    compiled flag bundle, so a batch-to-batch-stable candidate set
-    compiles once; expansion-atom bundles are vocab-dependent and never
-    cached."""
-    cs = chunk_size or MAX_COMPILE_QUERIES
-    if len(queries) > cs:
-        _check_distinct_ids(queries)
-        cache = _expansion_cache
-        if prefilter:
-            if term_index is not None:
-                queries, cache = _prefilter_candidates_indexed(
-                    rel, queries, vocab, term_index, term_index_rows
-                )
-            else:
-                queries, cache = _prefilter_candidates(rel, queries, vocab)
-            if not queries:
-                return rel.sparkSession.createDataFrame(
-                    [], schema=_matches_schema(rel)
-                )
-        out = None
-        for part in _chunks(queries, cs):
-            p = percolate_matches(
-                rel, part, vocab, prefilter=False,
-                compile_cache=compile_cache, _expansion_cache=cache,
-            )
-            out = p if out is None else out.unionByName(p)
-        return out
-    bundle = _cached_chunk(compile_cache, queries, vocab, _expansion_cache)
-    per_doc, match_of = bundle.per_doc(rel), bundle.match_of
-    cols = [
-        F.when(m, F.lit(qid)).alias(f"_q{qid}") for qid, m in match_of.items()
-    ]
-    ids = per_doc.select("doc_id", *cols)
-    return (
-        ids.select(
+    def emit(bundle):
+        per_doc, match_of = bundle.per_doc(rel), bundle.match_of
+        cols = [
+            F.when(m, F.lit(qid)).alias(f"_q{qid}") for qid, m in match_of.items()
+        ]
+        ids = per_doc.select("doc_id", *cols)
+        return ids.select(
             "doc_id",
             F.explode(
                 F.filter(
@@ -715,8 +571,13 @@ def percolate_matches(
                     lambda q: q.isNotNull(),
                 )
             ).alias("query_id"),
-        )
-        .select("query_id", "doc_id")
+        ).select("query_id", "doc_id")
+
+    return _percolate(
+        rel, queries, emit, "query_id int, doc_id {doc}",
+        vocab=vocab, chunk_size=chunk_size, prefilter=prefilter,
+        term_index=term_index, term_index_rows=term_index_rows,
+        compile_cache=compile_cache,
     )
 
 
@@ -753,8 +614,8 @@ def register_percolator_queries(
     fresh per registration; the TERM INDEX is written FIRST, then the
     registry — a crash between the writes leaves the old registry paired
     with a new-stamped index, which readers detect (stamp mismatch) and
-    fall back to the in-memory prefilter instead of silently missing
-    alerts off a stale index. See _usable_term_index."""
+    fall back to an index built from the registry itself instead of
+    silently missing alerts off a stale index. See _usable_term_index."""
     import re
     import uuid
 
@@ -809,10 +670,6 @@ def _validate_registry(
     rows the validation pass built, so registration never parses the
     registry twice (r12 — at 1M stored queries the second parse was the
     larger half of the registration wall)."""
-    from sparkfulltextquery_spark.functions.index_expand import (
-        resolve_expansions_over,
-    )
-
     rows = term_index_rows(queries)
     keys = {
         a.key: _atom_label(a)
@@ -826,8 +683,7 @@ def _validate_registry(
             f"(+ expansion atoms when a vocab relation is supplied), "
             f"got {sorted(keys.values())[0]}"
         )
-    if keys:
-        resolve_expansions_over(vocab.select("term"), keys)
+    _resolve_expansions(set(keys), vocab)
     return rows
 
 
@@ -968,7 +824,7 @@ def remove_percolator_queries(
     keep = [(qid, q) for qid, q in rows if qid not in set(ids)]
     # rewrite order (r12, ADVICE r11): REGISTRY first under a FRESH stamp
     # — a crash before the term-index rewrite leaves mismatched stamps,
-    # so readers fall back to the in-memory prefilter instead of serving
+    # so readers rebuild the index from the registry instead of serving
     # removed-id candidates off the stale index (harmless either way,
     # but the stamp keeps the pair's consistency observable); both
     # tables upgrade to the stamped schema on rewrite
@@ -1007,7 +863,7 @@ def _usable_term_index(
     bounded anti-join count — extra index rows are harmless, a registry
     id missing from the index would be a silently-never-candidate query,
     the exact miss class this guards against). On any mismatch returns
-    (None, None) and callers fall back to the in-memory prefilter.
+    (None, None) and callers build the index from the registry itself.
     Otherwise returns the (query_id, term) relation and its row count —
     the count feeds the prefilter's broadcast-side auto-select without a
     per-percolate count job."""
@@ -1046,7 +902,7 @@ def percolate_from_table(
     the (query_id, doc_id) alerting table with ``matches=True``. When the
     registry was written with its ``{table}_terms`` query-term index
     (r11), the prefilter runs through it — one broadcast join,
-    candidates-only parse — instead of building driver-side term sets;
+    candidates-only parse — instead of one built from the whole registry;
     the index is trusted only after the _usable_term_index consistency
     guard (r12, ADVICE r11), and its pinned row count drives the
     prefilter's broadcast-side auto-select.
@@ -1075,12 +931,9 @@ def percolate_from_table(
         .orderBy("query_id")
         .collect()
     ]
-    if not survivors:
-        schema = _matches_schema(rel) if matches else _bool_schema(rel)
-        return spark.createDataFrame([], schema=schema)
     # already prefiltered: the (bounded) survivor slice compiles directly
-    # — at or under MAX_COMPILE_QUERIES that is the plain leaf path, and
-    # wider slices chunk without re-prefiltering
+    # — wider slices chunk without re-prefiltering, and an empty slice is
+    # the form's typed empty frame
     return fn(rel, survivors, vocab=vocab, prefilter=False)
 
 
@@ -1150,78 +1003,41 @@ def _attach_unpersist(spark: SparkSession, df: DataFrame, query):
         pass
 
 
-def stream_percolate_alerts(
+def _percolate_stream(
     doc_stream: DataFrame,
-    table: str,
+    queries: list[tuple[int, str]],
+    term_index: DataFrame | None,
+    ti_rows: int | None,
+    percolate,
+    cols: tuple[str, ...],
     out_dir: str,
     checkpoint_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    use_compile_cache: bool = True,
+    id_col: str,
+    text_col: str,
 ):
-    """The production alerting loop in one call (r9): documents stream
-    in; every micro-batch is percolated against the PERSISTED registry
-    table and (batch_id, query_id, doc_id) alerts append as
-    batch-id-stamped idempotent overwrites (exactly-once under replay).
-
-    Registry refresh contract: stored queries are read and compiled ONCE
-    at stream start (the bounded collect — Elasticsearch likewise loads
-    percolator queries into a memory index), so
-    add/remove_percolator_queries take effect on stream RESTART; already-
-    processed documents are not re-percolated against later additions —
-    re-stream with a fresh checkpoint to backfill. Expansion atoms
-    resolve per batch against the batch's own vocabulary (exact for
-    per-document matching).
-
-    r11 (ADVICE r10): the query-term index is materialized ONCE at
-    stream start (from the persisted ``{table}_terms`` relation when the
-    registry was written with one AND the _usable_term_index consistency
-    guard passes — r12, ADVICE r11 — else built here) and CACHED, so
-    every micro-batch prefilters via one broadcast join against it — the
-    registry is no longer re-parsed, and no isin literal is re-planned,
-    per batch. The index row count is pinned once for the prefilter's
-    broadcast-side auto-select, and the cache is unpersisted when the
-    stream terminates (_UnpersistOnStop).
-
-    r12 (VERDICT r11 #5): each chunk's compiled flag bundle is memoized
-    for the stream's lifetime (``compile_cache``) — the candidate set is
-    usually stable batch-to-batch, so steady-state batches skip the
-    per-chunk Python/Catalyst compile entirely; a batch whose candidates
-    differ misses the cache and compiles exactly its new chunks.
-    ``use_compile_cache=False`` disables the memo — the measurement/
-    debug knob behind SCALE.md r12's with/without table."""
-    from sparkfulltextquery_spark.functions.fulltext import positional_postings
-
+    """The alerting streams' shared loop. At stream start the query-term
+    index (``term_index`` when persisted and usable, else built from
+    ``queries``) is CACHED with its row count pinned, so every
+    micro-batch prefilters via one broadcast join against it — the
+    registry is not re-parsed per batch — and one ``compile_cache`` dict
+    memoizes chunk compiles for the stream's lifetime (the candidate set
+    is usually stable batch-to-batch, so steady-state batches skip the
+    per-chunk compile). Each batch's positional postings (``cols`` of
+    them) go through ``percolate`` and the alerts, stamped with the
+    batch id, land as an idempotent overwrite (exactly-once under
+    replay). The cached index is unpersisted when the stream terminates
+    (_UnpersistOnStop)."""
     spark = doc_stream.sparkSession
-    stored = [
-        (int(r.query_id), r.query)
-        for r in spark.table(table).orderBy("query_id").collect()
-    ]
-    if not stored:
-        raise ValueError(
-            f"percolator registry {table} is empty — register stored "
-            "queries before starting the alerting stream"
-        )
-    _check_distinct_ids(stored)
-    ti, ti_rows = _usable_term_index(spark, table)
-    if ti is None:
-        ti = spark.createDataFrame(
-            term_index_rows(stored), TERM_INDEX_SCHEMA
-        )
-        ti_rows = None
-    term_index = ti.cache()
-    if ti_rows is None:
-        ti_rows = term_index.count()
-    compile_cache: dict | None = {} if use_compile_cache else None
+    if term_index is None:
+        term_index, ti_rows = _adhoc_term_index(spark, queries)
+    term_index = term_index.cache()
+    compile_cache: dict = {}
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        rel = positional_postings(batch_df, id_col, text_col).select(
-            "doc_id", "term", "positions"
-        )
-        vocab = rel.select("term").distinct()
+        rel = FT.positional_postings(batch_df, id_col, text_col).select(*cols)
         (
-            percolate_matches(
-                rel, stored, vocab=vocab,
+            percolate(
+                rel, queries, vocab=rel.select("term").distinct(),
                 term_index=term_index, term_index_rows=ti_rows,
                 compile_cache=compile_cache,
             )
@@ -1238,6 +1054,47 @@ def stream_percolate_alerts(
     )
     _attach_unpersist(spark, term_index, q)
     return q
+
+
+def stream_percolate_alerts(
+    doc_stream: DataFrame,
+    table: str,
+    out_dir: str,
+    checkpoint_dir: str,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+):
+    """The production alerting loop in one call (r9): documents stream
+    in; every micro-batch is percolated (percolate_matches) against the
+    PERSISTED registry table and (batch_id, query_id, doc_id) alerts
+    append as batch-id-stamped idempotent overwrites (exactly-once under
+    replay).
+
+    Registry refresh contract: stored queries are read and compiled ONCE
+    at stream start (the bounded collect — Elasticsearch likewise loads
+    percolator queries into a memory index), so
+    add/remove_percolator_queries take effect on stream RESTART; already-
+    processed documents are not re-percolated against later additions —
+    re-stream with a fresh checkpoint to backfill. Expansion atoms
+    resolve per batch against the batch's own vocabulary (exact for
+    per-document matching). The persisted ``{table}_terms`` index serves
+    the prefilter when the _usable_term_index consistency guard passes;
+    the cache, pinned count and compile memo are _percolate_stream's."""
+    spark = doc_stream.sparkSession
+    stored = [
+        (int(r.query_id), r.query)
+        for r in spark.table(table).orderBy("query_id").collect()
+    ]
+    if not stored:
+        raise ValueError(
+            f"percolator registry {table} is empty — register stored "
+            "queries before starting the alerting stream"
+        )
+    ti, ti_rows = _usable_term_index(spark, table)
+    return _percolate_stream(
+        doc_stream, stored, ti, ti_rows, percolate_matches,
+        ("doc_id", "term", "positions"), out_dir, checkpoint_dir, id_col, text_col,
+    )
 
 
 # stored percolator queries: arbitrary boolean (AND/OR/NOT + phrase)
@@ -1496,24 +1353,9 @@ def fulltext_percolate_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     prefix = _ensure_index(spark, sf_dir)
     _force_bucketed_scan(spark)
-    q = spark.createDataFrame(
-        [(qid, t) for qid, terms in _PERCOLATE_QUERIES for t in terms],
-        "query_id int, term string",
-    )
-    qsize = q.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_req"))
     all_terms = sorted({t for _qid, terms in _PERCOLATE_QUERIES for t in terms})
-    post = spark.table(f"{prefix}_postings").filter(F.col("term").isin(all_terms))
-    hit = (
-        post.join(F.broadcast(q), "term")
-        .groupBy("doc_id", "query_id")
-        .agg(F.count(F.lit(1)).alias("n_matched"))
-    )
-    return (
-        hit.join(F.broadcast(qsize), "query_id")
-        .filter(F.col("n_matched") == F.col("n_req"))
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.min("doc_id").alias("first_doc"))
-        .orderBy("query_id")
+    return _percolate_conjunctive(
+        spark.table(f"{prefix}_postings").filter(F.col("term").isin(all_terms))
     )
 
 
@@ -1530,7 +1372,6 @@ def percolate_scored(
     term_index: DataFrame | None = None,
     term_index_rows: int | None = None,
     compile_cache: dict | None = None,
-    _expansion_cache: dict | None = None,
 ) -> DataFrame:
     """Ranked percolation (the Elasticsearch percolate-with-scoring
     surface): every (stored query, matching document) pair carries the
@@ -1538,111 +1379,82 @@ def percolate_scored(
     fulltext.bm25_term_score, with n_docs, avgdl and each term's df pinned
     as driver literals, tf and the denormalized dl off the posting row, and
     a stored query's `term^N` boosts applied exactly as search applies
-    them — and each query keeps its top-k docs. The per-term BM25
-    contributions fold into the SAME one-scan doc_id aggregation as the
-    match flags (``per_doc``'s extra aggregates); per-query scores are
-    sums of their positive terms' columns, so the whole thing stays
-    scan + agg + window, no join. Expansion atoms match constant-score (no idf
-    contribution), exactly like search_indexed.
+    them — and each query keeps its top-k docs (every scored match with
+    ``k=None``). The per-term BM25 contributions fold into the SAME
+    one-scan doc_id aggregation as the match flags (``per_doc``'s extra
+    aggregates); per-query scores are sums of their positive terms'
+    columns, so the whole thing stays scan + agg + window, no join.
+    Expansion atoms match constant-score (no idf contribution), exactly
+    like search_indexed.
 
-    ``rel`` must expose (doc_id, term, positions, tf, dl). Registries
-    wider than ``chunk_size`` (default MAX_COMPILE_QUERIES) chunk into
-    bounded compiles whose top-k outputs union — per-query top-k is
-    independent across queries, so chunking is exact."""
-    from pyspark.sql import Window
-
+    ``rel`` must expose (doc_id, term, positions, tf, dl). Chunking,
+    prefilter and compile cache: see _percolate; the top-k window runs
+    once over the union (per-query ranking is independent of the other
+    queries)."""
     from sparkfulltextquery_spark.functions.fulltext import bm25_term_score
 
-    cs = chunk_size or MAX_COMPILE_QUERIES
-    if len(queries) > cs:
-        _check_distinct_ids(queries)
-        cache = _expansion_cache
-        if prefilter:
-            # same query-term-index prefilter as percolate_matches (r10):
-            # zero-overlap queries cannot match, so they cannot place docs
-            # in their (per-query, independent) top-k either
-            if term_index is not None:
-                queries, cache = _prefilter_candidates_indexed(
-                    rel, queries, vocab, term_index, term_index_rows
-                )
-            else:
-                queries, cache = _prefilter_candidates(rel, queries, vocab)
-            if not queries:
-                from pyspark.sql.types import (
-                    DoubleType,
-                    IntegerType,
-                    StructField,
-                    StructType,
-                )
+    text = dict(queries)
 
-                return rel.sparkSession.createDataFrame(
-                    [],
-                    StructType(
-                        [
-                            StructField("query_id", IntegerType()),
-                            StructField(
-                                "doc_id", rel.schema["doc_id"].dataType
-                            ),
-                            StructField("score", DoubleType()),
-                        ]
-                    ),
-                )
-        out = None
-        for part in _chunks(queries, cs):
-            p = percolate_scored(
-                rel, part, n_docs, avgdl, df_of, vocab, k,
-                prefilter=False, compile_cache=compile_cache,
-                _expansion_cache=cache,
-            )
-            out = p if out is None else out.unionByName(p)
-        return out.orderBy("query_id", F.col("score").desc(), "doc_id")
+    def emit(bundle):
+        # one score column per (term, boost): stored queries may weight a term differently
+        pos_of = {
+            qid: sorted(QL.term_boosts(QL.parse_query(text[qid])).items())
+            for qid in bundle.match_of
+        }
+        union_pos = sorted({tw for tws in pos_of.values() for tw in tws})
+        bcol = {tw: f"_b{i}" for i, tw in enumerate(union_pos)}
+        extra = tuple(
+            F.sum(F.when(F.col("term") == t, bm25_term_score(n_docs, avgdl, df_of[t], boosts={t: w})[1]))
+            .alias(c)
+            for (t, w), c in bcol.items()
+        )
+        per_doc, match_of = bundle.per_doc(rel, extra), bundle.match_of
 
-    # one score column per (term, boost): stored queries may weight a term differently
-    pos_of = {
-        qid: sorted(QL.term_boosts(QL.parse_query(q)).items())
-        for qid, q in queries
-    }
-    union_pos = sorted({tw for tws in pos_of.values() for tw in tws})
-    bcol = {tw: f"_b{i}" for i, tw in enumerate(union_pos)}
+        def qscore(qid):
+            terms = pos_of[qid]
+            if not terms:
+                return F.lit(0.0)
+            s = F.lit(0.0)
+            for tw in terms:
+                s = s + F.coalesce(F.col(bcol[tw]), F.lit(0.0))
+            return F.round(s, 4)
 
-    extra = tuple(
-        F.sum(F.when(F.col("term") == t, bm25_term_score(n_docs, avgdl, df_of[t], boosts={t: w})[1]))
-        .alias(c)
-        for (t, w), c in bcol.items()
+        # alias prefix must not collide with the compile's internal columns
+        # (_t/_e/_s/_b): Spark 4 lateral alias resolution would otherwise bind
+        # a phrase slot reference (_s0...) to a same-named output alias here
+        scored = per_doc.select(
+            "doc_id",
+            *[
+                F.when(m, qscore(qid)).alias(f"_qs{qid}")
+                for qid, m in match_of.items()
+            ],
+        )
+        stack_args = ", ".join(f"{qid}, _qs{qid}" for qid in match_of)
+        return scored.select(
+            "doc_id",
+            F.expr(f"stack({len(match_of)}, {stack_args}) as (query_id, score)"),
+        ).filter(F.col("score").isNotNull())
+
+    rows = _percolate(
+        rel, queries, emit, "doc_id {doc}, query_id int, score double",
+        vocab=vocab, chunk_size=chunk_size, prefilter=prefilter,
+        term_index=term_index, term_index_rows=term_index_rows,
+        compile_cache=compile_cache,
     )
-    bundle = _cached_chunk(compile_cache, queries, vocab, _expansion_cache)
-    per_doc, match_of = bundle.per_doc(rel, extra), bundle.match_of
-
-    def qscore(qid):
-        terms = pos_of[qid]
-        if not terms:
-            return F.lit(0.0)
-        s = F.lit(0.0)
-        for tw in terms:
-            s = s + F.coalesce(F.col(bcol[tw]), F.lit(0.0))
-        return F.round(s, 4)
-
-    # alias prefix must not collide with the compile's internal columns
-    # (_t/_e/_s/_b): Spark 4 lateral alias resolution would otherwise bind
-    # a phrase slot reference (_s0...) to a same-named output alias here
-    scored = per_doc.select(
-        "doc_id",
-        *[
-            F.when(m, qscore(qid)).alias(f"_qs{qid}")
-            for qid, m in match_of.items()
-        ],
-    )
-    stack_args = ", ".join(f"{qid}, _qs{qid}" for qid in match_of)
-    rows = scored.select(
-        "doc_id",
-        F.expr(f"stack({len(match_of)}, {stack_args}) as (query_id, score)"),
-    ).filter(F.col("score").isNotNull())
     if k is None:
         # every scored match, no top-k cut — the streaming form needs this:
         # per-query top-k is the ONLY cross-document step, so the stream
         # emits all matches and the cut happens over the alert log at read
         # time (read_scored_alerts)
         return rows.select("query_id", "doc_id", "score")
+    return _top_k(rows, k)
+
+
+def _top_k(rows: DataFrame, k: int) -> DataFrame:
+    """Each query's top-k (query_id, doc_id, score) rows of ``rows``, by
+    score descending then doc_id."""
+    from pyspark.sql import Window
+
     w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), "doc_id")
     return (
         rows.withColumn("rn", F.row_number().over(w))
@@ -1801,62 +1613,21 @@ def stream_percolate_scored(
     d iff d itself contains a matching term, and the batch vocabulary
     contains every term of every doc in the batch).
 
-    r11: the query-term index is built and cached ONCE here, so chunked
-    registries prefilter each micro-batch via one broadcast join instead
-    of a per-batch registry parse. r12: the index row count is pinned for
-    the broadcast-side auto-select, compiled chunk bundles are memoized
-    across batches (compile_cache — sound here because the BM25 literals
-    are pinned at registration and fold into the cache key), and the
-    cached index unpersists at stream termination."""
-    from sparkfulltextquery_spark.functions.fulltext import positional_postings
-
-    spark = doc_stream.sparkSession
-    term_index = spark.createDataFrame(
-        term_index_rows(queries), TERM_INDEX_SCHEMA
-    ).cache()
-    ti_rows = term_index.count()
-    compile_cache: dict = {}
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        rel = positional_postings(batch_df, id_col, text_col).select(
-            "doc_id", "term", "positions", "tf", "dl"
-        )
-        vocab = rel.select("term").distinct()
-        (
-            percolate_scored(
-                rel, queries, n_docs, avgdl, df_of, vocab=vocab, k=None,
-                term_index=term_index, term_index_rows=ti_rows,
-                compile_cache=compile_cache,
-            )
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .parquet(f"{out_dir}/batch={batch_id}")
-        )
-
-    q = (
-        doc_stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    The cached query-term index, its pinned row count and the compile
+    memo are _percolate_stream's."""
+    percolate = partial(percolate_scored, n_docs=n_docs, avgdl=avgdl, df_of=df_of, k=None)
+    return _percolate_stream(
+        doc_stream, queries, None, None, percolate,
+        ("doc_id", "term", "positions", "tf", "dl"),
+        out_dir, checkpoint_dir, id_col, text_col,
     )
-    _attach_unpersist(spark, term_index, q)
-    return q
 
 
 def read_scored_alerts(spark: SparkSession, out_dir: str, k: int = 3) -> DataFrame:
     """Per-query top-k over the streamed scored-alert log — the read-time
     half of stream_percolate_scored (top-k is the only cross-document
     step, so it runs here, over all batches' matches)."""
-    from pyspark.sql import Window
-
-    rows = spark.read.parquet(out_dir).select("query_id", "doc_id", "score")
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), "doc_id")
-    return (
-        rows.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "doc_id", "score")
-        .orderBy("query_id", "rn")
-    )
+    return _top_k(spark.read.parquet(out_dir).select("query_id", "doc_id", "score"), k)
 
 
 @query("fulltext_percolate_scored_stream", oracle=_PERCOLATE_SCORED_ORACLE)

@@ -64,6 +64,7 @@ from sparkfulltextquery_spark.functions.fulltext import (
     _py_tokenize,
     bm25_term_score,
     df_over_term,
+    doc_len,
     exact_starts_expr,
     field_pos_pred,
     positional_postings,
@@ -730,7 +731,8 @@ def _inline_index(docs: DataFrame, id_col: str, text_col: str):
     row per doc with its token array), and both the positional postings
     (fulltext.positional_postings over the staged tokens, dl included) and
     the one-row (n_docs, avgdl) stats derive from it. The stats count
-    every doc, token-empty ones too, as the index's stats table does. The
+    every doc, token-empty and NULL-text ones too (dl 0), as the index's
+    stats table does. The
     barrier keeps Catalyst from re-running the tokenize regex once per
     consumer; it is lazy (no job at construction) and rebuilt inside every
     run."""
@@ -739,7 +741,7 @@ def _inline_index(docs: DataFrame, id_col: str, text_col: str):
     ).localCheckpoint(eager=False)
     post = positional_postings(staged, "doc_id", "_toks")
     stats = staged.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.avg(F.size("_toks")).alias("avgdl")
+        F.count(F.lit(1)).alias("n_docs"), F.avg(doc_len("_toks")).alias("avgdl")
     )
     return staged, post, stats
 

@@ -195,7 +195,7 @@ def test_percolator_prefilter_equals_unfiltered_and_skips_chunks(spark, monkeypa
     execute only the candidate slice's chunks — observed by counting
     _percolate_compile invocations. Negative-polarity coverage: a doc
     containing only a query's NOT'd term must not resurrect the query
-    (positive-polarity extraction, see _registry_atom_terms)."""
+    (positive-polarity extraction, see term_index_rows)."""
     from sparkfulltextquery_spark.functions import fulltext as FT
     from sparkfulltextquery_spark.functions import percolate as P
     from sparkfulltextquery_spark.sources import load_table
@@ -289,7 +289,7 @@ def test_percolator_prefilter_all_skipped_returns_typed_empty(spark):
 
 def test_percolator_prefilter_expansion_atoms_chunked(spark):
     """Expansion atoms through the chunked+prefiltered path: the registry-
-    wide expansion cache (resolved ONCE in _registry_atom_terms, reused by
+    wide expansion cache (resolved ONCE by the prefilter, reused by
     every chunk's compile) must yield exactly the single-compile result —
     including NEGATED expansion atoms, whose term lists live only in the
     cache's both-polarity half, and absent-prefix queries, which the
@@ -488,12 +488,12 @@ def test_percolator_persisted_term_index_consistency(spark, tmp_path):
     spark.sql(f"DROP TABLE IF EXISTS {tbl}_terms")
 
 
-def test_percolator_adhoc_join_prefilter_equals_isin(spark, monkeypatch):
-    """r11: past PREFILTER_ISIN_MAX_TERMS union terms, the AD-HOC
-    (unregistered) prefilter switches from the isin literal to the same
-    broadcast-join shape as the persisted index — forced here by
-    lowering the threshold to 0; results must be identical to the isin
-    path and the unfiltered baseline, expansion atoms included."""
+def test_percolator_adhoc_prefilter_equals_unfiltered(spark, monkeypatch):
+    """An AD-HOC (unregistered) registry prefilters through the same
+    query-term-index join as a persisted one, its index built on the fly
+    from term_index_rows: the result equals the unfiltered baseline,
+    expansion atoms included (a positive one makes its query an
+    always-candidate), and no dead zzqx query reaches a compile."""
     from sparkfulltextquery_spark.functions import fulltext as FT
     from sparkfulltextquery_spark.functions import percolate as P
     from sparkfulltextquery_spark.sources import load_table
@@ -508,25 +508,29 @@ def test_percolator_adhoc_join_prefilter_equals_isin(spark, monkeypatch):
     rel = FT.positional_postings(docs).select("doc_id", "term", "positions")
     vocab = rel.select("term").distinct()
 
-    def run():
+    compiled = []
+    orig = P._compile_chunk
+
+    def counting(*a, **kw):
+        compiled.extend(qid for qid, _q in a[0])
+        return orig(*a, **kw)
+
+    monkeypatch.setattr(P, "_compile_chunk", counting)
+
+    def run(prefilter):
         return {
             (int(r.query_id), int(r.doc_id))
             for r in P.percolate_matches(
-                rel, registry, vocab=vocab, chunk_size=100
+                rel, registry, vocab=vocab, chunk_size=100, prefilter=prefilter
             ).collect()
         }
 
-    via_isin = run()
-    monkeypatch.setattr(P, "PREFILTER_ISIN_MAX_TERMS", 0)
-    via_join = run()
-    unfiltered = {
-        (int(r.query_id), int(r.doc_id))
-        for r in P.percolate_matches(
-            rel, registry, vocab=vocab, chunk_size=100, prefilter=False
-        ).collect()
-    }
-    assert via_join == via_isin == unfiltered
-    assert via_join, "registry matched nothing — vocabulary drifted"
+    prefiltered = run(True)
+    assert compiled and not any(10_000 <= qid < 20_000 for qid in compiled)
+    assert 20_000 in compiled
+    unfiltered = run(False)
+    assert prefiltered == unfiltered
+    assert prefiltered, "registry matched nothing — vocabulary drifted"
 
 
 def test_percolator_indexed_prefilter_broadcast_flip_equals(spark, monkeypatch):

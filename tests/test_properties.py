@@ -798,7 +798,10 @@ def test_incremental_store_excludes_shingleless_docs(spark, tmp_path):
 # sets must equal the predicate's, the two (doc_id, score) lists must be
 # identical, and every score must equal the Python BM25 at the 4dp
 # contract. Registries drawn from the percolator's atom subset run through
-# `_percolate_bool` over the inline and the indexed relation.
+# `_percolate_bool` and `percolate_matches` (one chunk, and three chunks
+# through the ad-hoc prefilter and through a prebuilt query-term index)
+# over the inline and the indexed relation, and through `percolate_scored`
+# over the indexed postings, whose scores must equal `search_indexed`'s.
 # ---------------------------------------------------------------------------
 
 _TITLE_LEN = 10  # fulltext.BM25F_TITLE_LEN: the title is the first 10 tokens
@@ -1084,26 +1087,58 @@ def _check_search_trials(spark, docs, toks, queries, prefix):
 
 def _check_percolator_trials(spark, docs, toks, registries, prefix):
     from sparkfulltextquery_spark.functions import fulltext as FT
-    from sparkfulltextquery_spark.functions.percolate import _percolate_bool
+    from sparkfulltextquery_spark.functions import percolate as P
+    from sparkfulltextquery_spark.functions.index import _df_stats_literals, search_indexed
+    from sparkfulltextquery_spark.functions.querylang import parse_query, term_boosts
 
     inline_rel = FT.positional_postings(docs).select("doc_id", "term", "positions")
+    idx_vocab = spark.table(f"{prefix}_df").select("term")
+    idx_post = spark.table(f"{prefix}_postings")
     rels = {
         "inline": (inline_rel, inline_rel.select("term").distinct()),
-        "indexed": (
-            spark.table(f"{prefix}_postings").select("doc_id", "term", "positions"),
-            spark.table(f"{prefix}_df").select("term"),
-        ),
+        "indexed": (idx_post.select("doc_id", "term", "positions"), idx_vocab),
     }
+    scored_rel = idx_post.select("doc_id", "term", "positions", "tf", "dl")
+    n = len(toks)
     for reg in registries:
-        expected = []
-        for qid, _t, pred in reg:
-            hits = sorted(d for d, ts in toks.items() if pred(ts))
-            if hits:
-                expected.append((qid, len(hits), hits[0]))
+        hits = {qid: sorted(d for d, ts in toks.items() if pred(ts)) for qid, _t, pred in reg}
+        expected = [(qid, len(h), h[0]) for qid, h in sorted(hits.items()) if h]
+        pairs = sorted((qid, d) for qid, h in hits.items() for d in h)
         stored = [(qid, t) for qid, t, _p in reg]
+        term_index = spark.createDataFrame(P.term_index_rows(stored), P.TERM_INDEX_SCHEMA)
         for name, (rel, vocab) in rels.items():
-            got = sorted(tuple(r) for r in _percolate_bool(rel, stored, vocab=vocab).collect())
+            got = sorted(tuple(r) for r in P._percolate_bool(rel, stored, vocab=vocab).collect())
             assert got == expected, f"{name} mismatch: {stored}\ngot={got}\nexp={expected}"
+            # one chunk; then three chunks through the ad-hoc prefilter and
+            # through a prebuilt term index, so the driver's prefilter and
+            # union run too
+            for how, kw in (
+                ("one chunk", {}),
+                ("ad-hoc prefilter", {"chunk_size": 2}),
+                ("term index", {"chunk_size": 2, "term_index": term_index}),
+            ):
+                got = sorted(
+                    tuple(r) for r in P.percolate_matches(rel, stored, vocab=vocab, **kw).collect()
+                )
+                assert got == pairs, f"{name} matches ({how}) mismatch: {stored}"
+        # a stored query scores a doc exactly as search does over the same
+        # postings and stats
+        terms = sorted({t for _q, text in stored for t in term_boosts(parse_query(text))})
+        n_docs, avgdl, df_of = _df_stats_literals(spark, prefix, terms)
+        scored = {
+            (r.query_id, r.doc_id): r.score
+            for r in P.percolate_scored(
+                scored_rel, stored, n_docs, avgdl, df_of, vocab=idx_vocab, k=None
+            ).collect()
+        }
+        searched = {
+            (qid, r.doc_id): r.score
+            for qid, text in stored
+            for r in search_indexed(spark, text, k=n, table_prefix=prefix).collect()
+        }
+        assert scored.keys() == searched.keys(), f"scored match set differs: {stored}"
+        for key, s in searched.items():
+            assert abs(scored[key] - s) <= 5e-5 + 1e-9, f"{key}: percolated {scored[key]}, search {s}"
 
 
 @pytest.fixture(scope="module")
@@ -1171,9 +1206,8 @@ def test_built_index_tables_equal_python_reference(spark, tmp_path):
     """Every table build_index writes equals a test-owned Python model of
     the index over the fuzz corpus plus an empty, a punctuation-only, a
     NULL-text and a non-ASCII doc: each posting row (term, doc_id, tf,
-    sorted positions, dl), each term's df, each doc's dl (NULL for a NULL
-    text), and n_docs/avgdl. n_docs counts every doc and avgdl averages
-    the non-NULL dl values."""
+    sorted positions, dl), each term's df, each doc's dl (0 for a NULL
+    text, a token-empty doc), and n_docs/avgdl over every doc."""
     from collections import Counter
 
     from sparkfulltextquery_spark.functions.index import build_index
@@ -1201,8 +1235,7 @@ def test_built_index_tables_equal_python_reference(spark, tmp_path):
             post.setdefault((t, d), []).append(i)
     want_post = sorted((d, t, len(p), p, len(toks[d])) for (t, d), p in post.items())
     want_df = sorted(Counter(t for t, _d in post).items())
-    dls = {d: None if ts is None else len(ts) for d, ts in toks.items()}
-    known = [v for v in dls.values() if v is not None]
+    dls = {d: len(ts or []) for d, ts in toks.items()}
 
     build_index(docs, table_prefix="ref_idx", num_buckets=4, path=f"file://{tmp_path}",
                 term_vectors=False)
@@ -1215,7 +1248,34 @@ def test_built_index_tables_equal_python_reference(spark, tmp_path):
     assert {r.doc_id: r.dl for r in spark.table("ref_idx_dl").collect()} == dls
     st = spark.table("ref_idx_stats").head()
     assert st.n_docs == len(texts)
-    assert abs(st.avgdl - sum(known) / len(known)) < 1e-12
+    assert abs(st.avgdl - sum(dls.values()) / len(dls)) < 1e-12
+
+
+def test_null_text_is_a_token_empty_doc(spark, tmp_path):
+    """A NULL text is a token-empty doc (dl 0) wherever the corpus stats
+    are projected: over (1, "a b"), (2, NULL), (3, "") the index reads
+    n_docs 3 and avgdl 2/3, and the inline BM25 paths (bm25_search's term
+    scores, search's inline index) score exactly as their indexed twins."""
+    from sparkfulltextquery_spark.functions.fulltext import bm25_search, doc_lengths
+    from sparkfulltextquery_spark.functions.index import (
+        bm25_search_indexed,
+        build_index,
+        search_indexed,
+    )
+    from sparkfulltextquery_spark.functions.querylang import search
+
+    docs = spark.createDataFrame([(1, "a b"), (2, None), (3, "")], "doc_id long, text string")
+    assert sorted(tuple(r) for r in doc_lengths(docs).collect()) == [(1, 2), (2, 0), (3, 0)]
+    build_index(docs, table_prefix="null_idx", num_buckets=2, path=f"file://{tmp_path}",
+                term_vectors=False)
+    st = spark.table("null_idx_stats").head()
+    assert st.n_docs == 3 and abs(st.avgdl - 2 / 3) < 1e-12
+    assert bm25_search(docs, "a", k=3).collect() == bm25_search_indexed(
+        spark, "a", 3, "null_idx"
+    ).collect()
+    assert search(docs, "a OR zz", k=3).collect() == search_indexed(
+        spark, "a OR zz", k=3, table_prefix="null_idx"
+    ).collect()
 
 
 @pytest.mark.heavy
