@@ -4,7 +4,8 @@ import sys
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
-sys.path.insert(0, str(REPO))
+# replace this script's directory: scripts/profile.py would shadow the stdlib
+sys.path[0] = str(REPO)
 
 from sparkfulltextquery_spark import get_spark  # noqa: E402
 from sparkfulltextquery_spark.plans import physical_plan  # noqa: E402
@@ -17,7 +18,7 @@ FLAGSHIPS = {
     "q21_suppliers_kept_waiting": "EXISTS/NOT EXISTS as LeftSemi + LeftAnti self-joins",
     "fulltext_bm25_search_indexed": "benched BM25: one bucket-pruned scan, literal df/stats, zero joins, top-k heap",
     "fulltext_query_language_indexed": "boolean search: one pruned scan, flag+phrase+BM25 in one agg, no joins",
-    "fulltext_bm25_search": "inline twin: posting semi-join + broadcast stats + top-k heap",
+    "fulltext_bm25_search": "inline BM25: the indexed body over positional postings, df in plan, one broadcast stats join, top-k heap",
     "dedup_minhash_pairs": "LSH banding: map-side signatures, exchange-reuse, array-intersect verify, no cartesian",
     "pipeline_training_data": "capstone: 3 shuffles total; everything else broadcast/row-local",
     "sim_ivf_topk_indexed": "persisted ANN index: PartitionFilters prune to probed clusters",
@@ -27,7 +28,7 @@ FLAGSHIPS = {
     "sim_pq_adc_topk": "PQ-ADC from the persisted code table: literal LUT in codegen, C-bounded heap + broadcast re-rank",
     "cdc_latest_wins": "latest-wins compaction: partial+final sort-agg (struct max_by buffer), no window sort",
     "merge_upsert_customer_stats": "MERGE rewrite: pre-aggregated sides, single key join",
-    "fulltext_bm25f_weighted": "BM25F: field explode stays map-side until the single tf shuffle",
+    "fulltext_bm25f_weighted": "inline BM25F: the indexed body over positional postings, per-field tf from positions, one broadcast stats join",
     "sim_ivfpq_topk": "IVF-PQ: driver-side probe -> partition-pruned code scan -> ADC -> broadcast re-rank",
     "graph_pagerank_nations": "PageRank: per-iteration edge join + dst agg, no cartesian",
     # r5 TPC-DS slice flagships
@@ -47,7 +48,7 @@ FLAGSHIPS = {
     "fulltext_hybrid_rrf": "hybrid RRF: both retrieval legs end in TakeOrderedAndProject heaps BEFORE the 20-row fusion join",
     "fulltext_min_should_match_indexed": "minimum_should_match: clause count + BM25 sum in ONE doc_id agg over the pruned scan, zero joins",
     "fulltext_query_fieldprefix_indexed": "fielded prefix (r8): dictionary-resolved terms prune the scan, field test is exists() over stored position arrays",
-    "fulltext_dismax": "DisMax: per-field BM25 sub-indexes, two bounded aggs (term fuse, doc sum), broadcast stats",
+    "fulltext_dismax": "inline DisMax: the indexed body over positional postings, per-field df windows, one doc agg, one broadcast stats join",
     # r7 flagships
     "fulltext_dismax_indexed": "indexed DisMax: per-field tf from stored positions, field stats as literals — one pruned scan, zero joins",
     "fulltext_bm25f_weighted_indexed": "indexed BM25F: fuse-before-saturation tfw as column expressions over one pruned scan, zero joins",

@@ -1,25 +1,31 @@
-"""Full-text search core: posting lists, TF-IDF, BM25, phrase search.
+"""Full-text search core: posting relations, TF-IDF, BM25, phrase search.
 
 This is the capability the reference fork exists for ("full-text query
 within the Spark framework") rebuilt Spark-first (SURVEY.md §7 steps 3-4):
 
 - the inverted index IS a DataFrame: ``postings(term, doc_id, tf)`` built by
   explode + groupBy — shuffle-parallel, no driver state; the positional
-  form carries each doc's length ``dl``, so nothing joins dl back in;
-- scores (TF-IDF, BM25) are pure aggregations over that table;
-- search = tokenize query → prune postings to the query terms → score →
-  global top-k, planned by Spark as TakeOrderedAndProject (per-partition
-  heaps — reference limit.scala:114).
+  form ``(doc_id, term, tf, positions, dl)`` carries each doc's length, so
+  nothing joins dl back in;
+- every scorer and matcher is written ONCE, over any positional posting
+  relation and a ``stats`` argument: BM25 term scores (bm25_term_rows),
+  BM25F (bm25f_scores), DisMax (dismax_scores), phrase (phrase_counts)
+  and NEAR (proximity_pairs). The inline functions (``bm25_search``,
+  ``bm25f_search``, ``phrase_match``, ...) pass a raw corpus' positional
+  postings and its one-row corpus_stats relation (inline_source); the
+  persisted index (functions.index) passes its term-bucketed postings
+  table and its cached stats literals. with_stats attaches either form —
+  a relation is the plan's one broadcast cross join, literals fold in;
+- search = prune postings to the query terms → score (df counted in plan,
+  df_over_term) → global top-k, planned by Spark as TakeOrderedAndProject
+  (per-partition heaps — reference limit.scala:114).
 
 The BM25 term weight is ONE expression, ``bm25_term_score``, shared by
-inline and indexed BM25, query-language and simple-syntax search, the
-indexed multi-field scorers and the percolator. Per-term df is counted in
-plan (``df_over_term``); the corpus stats (n_docs, avgdl) come from a
-one-row relation joined in (inline) or from cached literals (the persisted
-index). At 100 TB the posting table is persisted bucketed by term
-(sources.tables.write_bucketed) so per-query term lookups are pruned scans
-with zero shuffle. Nothing here ever collects unbounded data to the
-driver.
+every BM25, BM25F and DisMax score, query-language and simple-syntax
+search and the percolator. At 100 TB the posting table is persisted
+bucketed by term (sources.tables.write_bucketed) so per-query term lookups
+are pruned scans with zero shuffle. Nothing here ever collects unbounded
+data to the driver.
 
 Reference anchors: tokenization seed `Sentences` stringExpressions.scala:1393;
 TF via explode+groupBy mirrors ml.feature.HashingTF/CountVectorizer
@@ -30,6 +36,9 @@ Robertson/Lucene formulation.
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType
@@ -38,6 +47,9 @@ from sparkfulltextquery_spark.functions.text import tokenize
 
 BM25_K1 = 1.2
 BM25_B = 0.75
+BM25F_TITLE_LEN = 10
+BM25F_W_TITLE = 2.0
+BM25F_W_BODY = 1.0
 
 
 def postings(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -200,6 +212,99 @@ def bm25_term_score(
     return F.expr(idf), F.expr(tscore)
 
 
+def corpus_stats(dls: DataFrame, title_len: int = BM25F_TITLE_LEN) -> DataFrame:
+    """The one-row BM25 stats (n_docs, avgdl, avgdl_title, avgdl_body) of a
+    relation with one ``dl`` row per doc (doc_lengths, the index's dl
+    table): every doc counts, a NULL-text one too (dl 0). Fields are the
+    positional carving (title = the first ``title_len`` tokens). Means of
+    integer lengths are exact: the same lengths give the same doubles."""
+    dl_t = F.least(F.col("dl"), F.lit(title_len))
+    return dls.agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.avg("dl").alias("avgdl"),
+        F.avg(dl_t).alias("avgdl_title"),
+        F.avg(F.col("dl") - dl_t).alias("avgdl_body"),
+    )
+
+
+def inline_source(
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    title_len: int = BM25F_TITLE_LEN,
+) -> tuple[DataFrame, DataFrame]:
+    """(postings, stats) of a raw corpus for the scorers and matchers
+    below: its positional postings and its one-row corpus_stats."""
+    return (
+        positional_postings(docs, id_col, text_col),
+        corpus_stats(doc_lengths(docs, id_col, text_col), title_len),
+    )
+
+
+def with_stats(rel: DataFrame, stats) -> tuple[DataFrame, tuple]:
+    """(rel, stats values) for scoring expressions. ``stats`` is a tuple of
+    literals in corpus_stats' column order (the persisted index's cached
+    stats), passed through, or a one-row relation (corpus_stats), which is
+    broadcast cross-joined onto ``rel`` — the plan's one join — and named
+    by its columns."""
+    if isinstance(stats, DataFrame):
+        return rel.crossJoin(F.broadcast(stats)), tuple(stats.columns)
+    return rel, tuple(stats)
+
+
+def top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The k best (doc_id, score) rows, (score desc, doc_id) deterministic
+    order — planned as a TakeOrderedAndProject heap."""
+    return scored.orderBy(F.col("score").desc(), F.col("doc_id")).limit(k)
+
+
+def _query_terms(query: str) -> list[str]:
+    terms = sorted(set(_py_tokenize(query)))
+    if not terms:
+        raise ValueError("empty query after tokenization")
+    return terms
+
+
+def bm25_term_rows(
+    post: DataFrame,
+    stats,
+    query: str,
+    k1: float = BM25_K1,
+    b: float = BM25_B,
+    boosts: dict[str, float] | None = None,
+) -> tuple[DataFrame, Column, Column]:
+    """(rows, idf, tscore): the one BM25 term-score body. ``rows`` are the
+    rows of ``post`` (any posting relation carrying dl) pruned to the query
+    terms, with df counted in plan (df_over_term) and ``stats`` attached
+    (with_stats); ``idf`` and ``tscore`` are bm25_term_score over them,
+    left unprojected so a score sum aggregates the expression itself."""
+    rows = post.filter(F.col("term").isin(_query_terms(query))).select(
+        "doc_id", "term", "tf", "dl", df_over_term().alias("df")
+    )
+    rows, (n_docs, avgdl, *_) = with_stats(rows, stats)
+    idf, tscore = bm25_term_score(n_docs, avgdl, k1=k1, b=b, boosts=boosts)
+    return rows, idf, tscore
+
+
+def bm25_scores_of(
+    post: DataFrame, stats, query: str, k1: float = BM25_K1, b: float = BM25_B,
+    boosts: dict[str, float] | None = None,
+) -> DataFrame:
+    """(doc_id, score): bm25_term_rows summed per doc, rounded at 4dp."""
+    rows, _idf, tscore = bm25_term_rows(post, stats, query, k1, b, boosts)
+    return rows.groupBy("doc_id").agg(F.round(F.sum(tscore), 4).alias("score"))
+
+
+def bm25_term_scores_of(
+    post: DataFrame, stats, query: str, k1: float = BM25_K1, b: float = BM25_B
+) -> DataFrame:
+    """(doc_id, term, tf, df, dl, idf, tscore): bm25_term_rows projected —
+    the substance of a Lucene-style Explanation
+    (o.a.lucene.search.similarities BM25Similarity.explain)."""
+    rows, idf, tscore = bm25_term_rows(post, stats, query, k1, b)
+    return rows.select("doc_id", "term", "tf", "df", "dl", idf.alias("idf"), tscore.alias("tscore"))
+
+
 def bm25_scores(
     docs: DataFrame,
     query: str,
@@ -209,13 +314,8 @@ def bm25_scores(
     b: float = BM25_B,
 ) -> DataFrame:
     """(doc_id, score) BM25 scores for every doc matching ≥1 query term —
-    the un-truncated scoring relation: bm25_term_scores summed per doc and
-    rounded at 4dp."""
-    return (
-        bm25_term_scores(docs, query, id_col, text_col, k1, b)
-        .groupBy("doc_id")
-        .agg(F.round(F.sum("tscore"), 4).alias("score"))
-    )
+    the un-truncated scoring relation over the corpus' inline_source."""
+    return bm25_scores_of(*inline_source(docs, id_col, text_col), query, k1, b)
 
 
 def bm25_term_scores(
@@ -226,39 +326,10 @@ def bm25_term_scores(
     k1: float = BM25_K1,
     b: float = BM25_B,
 ) -> DataFrame:
-    """Per-(doc_id, term) BM25 contribution relation — the un-aggregated
-    form behind bm25_scores, and the substance of a Lucene-style
-    Explanation (o.a.lucene.search.similarities BM25Similarity.explain):
-    (doc_id, term, tf, df, dl, idf, tscore).
-
-    The postings are pruned to the query terms right after the explode
-    and carry each doc's length; df is counted in plan over them, and
-    n_docs/avgdl come from a one-row relation over EVERY doc — a
-    token-empty or NULL-text doc counts (dl 0), as in the index's stats
-    table — joined in as
-    the plan's only join."""
-    q_terms = sorted({t for t in _py_tokenize(query)})
-    if not q_terms:
-        raise ValueError("empty query after tokenization")
-
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"), tokenize(F.col(text_col)).alias("toks")
-    )
-    stats = toks.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.avg(doc_len("toks")).alias("avgdl")
-    )
-    qpost = (
-        toks.select("doc_id", F.size("toks").alias("dl"), F.explode("toks").alias("term"))
-        .filter(F.col("term").isin(q_terms))
-        .groupBy("term", "doc_id", "dl")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    idf, tscore = bm25_term_score("n_docs", "avgdl", k1=k1, b=b)
-    return (
-        qpost.select("*", df_over_term().alias("df"))
-        .crossJoin(F.broadcast(stats))
-        .select("doc_id", "term", "tf", "df", "dl", idf.alias("idf"), tscore.alias("tscore"))
-    )
+    """Per-(doc_id, term) BM25 contribution relation (doc_id, term, tf, df,
+    dl, idf, tscore) over the corpus' inline_source; its only join is the
+    one-row stats relation's."""
+    return bm25_term_scores_of(*inline_source(docs, id_col, text_col), query, k1, b)
 
 
 def bm25_search(
@@ -272,13 +343,7 @@ def bm25_search(
 ) -> DataFrame:
     """Top-k BM25 search: bm25_scores + TakeOrderedAndProject top-k, with
     the 4dp-rounded score and (score desc, doc_id) deterministic order."""
-    scored = bm25_scores(docs, query, id_col, text_col, k1, b)
-    return scored.orderBy(F.col("score").desc(), F.col("doc_id")).limit(k)
-
-
-BM25F_TITLE_LEN = 10
-BM25F_W_TITLE = 2.0
-BM25F_W_BODY = 1.0
+    return top_k(bm25_scores(docs, query, id_col, text_col, k1, b), k)
 
 
 def field_pos_pred(field: str):
@@ -306,28 +371,85 @@ def bm25_explain(
     contribution, plus the doc's total. The top-k relation (k rows)
     broadcasts back into the term-score relation, so the breakdown costs
     one extra broadcast join over plain bm25_search."""
-    ts = bm25_term_scores(docs, query, id_col, text_col, k1, b)
-    return explain_from_term_scores(ts, k)
+    return explain_from_term_scores(bm25_term_scores(docs, query, id_col, text_col, k1, b), k)
 
 
 def explain_from_term_scores(ts: DataFrame, k: int) -> DataFrame:
     """Shared tail of both explain paths (inline and indexed): total the
     per-(doc, term) contributions, take the deterministic top-k, broadcast
     the k-row relation back in, and emit the 4dp-rounded breakdown."""
-    top = (
-        ts.groupBy("doc_id")
-        .agg(F.round(F.sum("tscore"), 4).alias("score"))
-        .orderBy(F.col("score").desc(), F.col("doc_id"))
-        .limit(k)
-    )
+    top = top_k(ts.groupBy("doc_id").agg(F.round(F.sum("tscore"), 4).alias("score")), k)
     return ts.join(F.broadcast(top), "doc_id").select(
-        "doc_id",
-        "score",
-        "term",
-        "tf",
-        "df",
-        F.round("idf", 4).alias("idf"),
-        F.round("tscore", 4).alias("tscore"),
+        "doc_id", "score", "term", "tf", "df",
+        F.round("idf", 4).alias("idf"), F.round("tscore", 4).alias("tscore"),
+    )
+
+
+def field_postings(
+    post: DataFrame, terms: list[str], title_len: int = BM25F_TITLE_LEN
+) -> DataFrame:
+    """The posting rows of ``terms`` with the per-field tf and dl of the
+    positional title/body carving: tf_t = |positions < title_len| off the
+    position array, tf_b = tf − tf_t, dl_t = least(dl, title_len) and
+    dl_b = dl − dl_t — per-field statistics of any positional posting
+    relation, with no re-tokenization."""
+    return (
+        post.filter(F.col("term").isin(terms))
+        .select(
+            "doc_id", "term", "tf", "dl",
+            F.size(F.filter("positions", lambda p: p < F.lit(title_len))).alias("tf_t"),
+            F.least(F.col("dl"), F.lit(title_len)).alias("dl_t"),
+        )
+        .select(
+            "*",
+            (F.col("tf") - F.col("tf_t")).alias("tf_b"),
+            (F.col("dl") - F.col("dl_t")).alias("dl_b"),
+        )
+    )
+
+
+def bm25f_scores(
+    post: DataFrame,
+    stats,
+    query: str,
+    title_len: int = BM25F_TITLE_LEN,
+    w_title: float = BM25F_W_TITLE,
+    w_body: float = BM25F_W_BODY,
+    k1: float = BM25_K1,
+    b: float = BM25_B,
+) -> DataFrame:
+    """BM25F (doc_id, score) — the one body of the field-weighted scorer
+    (Zaragoza/Robertson simple-BM25F): per-field tf is length-normalized
+    with that field's own avgdl, weighted, and folded into one saturating
+    term frequency before the idf product — NOT a per-field score sum
+    (which over-counts saturation):
+
+        tfw(d,t)  = Σ_f  w_f · tf_f / (1 − b + b · dl_f/avgdl_f)
+        score(d)  = Σ_t  idf(t) · tfw / (k1 + tfw)
+
+    Per-field tf and dl come from field_postings; the idf is
+    bm25_term_score's at document level (df counts the docs holding the
+    term in ANY field: its posting rows). One pruned scan and one doc_id
+    aggregation; the only join is a stats relation's (with_stats)."""
+    rows = field_postings(post, _query_terms(query), title_len).select(
+        "*", df_over_term().alias("df")
+    )
+    rows, (n_docs, avgdl, avgdl_t, avgdl_b) = with_stats(rows, stats)
+    idf, _ts = bm25_term_score(n_docs, avgdl, k1=k1, b=b)
+
+    def part(weight: float, f: str, avgdl_f) -> Column:
+        # a field without the term (tf_f = 0) contributes nothing
+        tf_f, dl_f = F.col(f"tf_{f}"), F.col(f"dl_{f}")
+        avgdl_f = F.col(avgdl_f) if isinstance(avgdl_f, str) else F.lit(avgdl_f)
+        return F.when(
+            tf_f > 0, F.lit(weight) * tf_f / (F.lit(1 - b) + F.lit(b) * dl_f / avgdl_f)
+        ).otherwise(F.lit(0.0))
+
+    tfw = part(w_title, "t", avgdl_t) + part(w_body, "b", avgdl_b)
+    return (
+        rows.select("doc_id", (idf * tfw / (F.lit(k1) + tfw)).alias("ts"))
+        .groupBy("doc_id")
+        .agg(F.round(F.sum("ts"), 4).alias("score"))
     )
 
 
@@ -343,84 +465,75 @@ def bm25f_search(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """Field-weighted BM25F top-k (Zaragoza/Robertson simple-BM25F):
-    per-field tf is length-normalized with that field's own avgdl, weighted,
-    and folded into one saturating term frequency before the idf product —
-    NOT a per-field score sum (which over-counts saturation):
+    """Field-weighted BM25F top-k (bm25f_scores) over the corpus'
+    inline_source. Fields are carved deterministically from the single
+    text column (title = first `title_len` tokens, body = rest) so the
+    DuckDB oracle can agree."""
+    src = inline_source(docs, id_col, text_col, title_len)
+    return top_k(bm25f_scores(*src, query, title_len, w_title, w_body, k1, b), k)
 
-        tfw(d,t)  = Σ_f  w_f · tf_f / (1 − b + b · dl_f/avgdl_f)
-        score(d)  = Σ_t  idf(t) · tfw / (k1 + tfw)
 
-    Fields are carved deterministically from the single text column (title =
-    first `title_len` tokens, body = rest) so the DuckDB oracle can agree.
-    Same plan discipline as bm25_search: IN-list prune before any join,
-    per-field stats broadcast, one groupBy(doc_id), top-k heap."""
-    q_terms = sorted({t for t in _py_tokenize(query)})
-    if not q_terms:
-        raise ValueError("empty query after tokenization")
+def dismax_scores(
+    post: DataFrame,
+    stats,
+    query: str,
+    tie: float = 0.3,
+    title_len: int = BM25F_TITLE_LEN,
+    k1: float = BM25_K1,
+    b: float = BM25_B,
+) -> DataFrame:
+    """Disjunction-max (doc_id, score) — the one body of the OTHER classic
+    multi-field scorer besides BM25F (Lucene DisjunctionMaxQuery): each
+    field is scored as an independent BM25 sub-index (its OWN df, dl,
+    avgdl), and per (doc, term) the fused score is
 
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"), tokenize(F.col(text_col)).alias("toks")
-    )
-    fields = toks.select(
-        "doc_id",
-        F.slice("toks", 1, title_len).alias("title"),
-        F.slice(
-            "toks",
-            F.lit(title_len + 1),
-            F.greatest(F.size("toks") - title_len, F.lit(0)),
-        ).alias("body"),
-    )
-    ftoks = fields.select(
-        "doc_id",
-        F.explode(
-            F.create_map(
-                F.lit("title"), F.col("title"), F.lit("body"), F.col("body")
-            )
-        ).alias("field", "ftoks"),
-    )
-    # per-field doc lengths + avgdl BEFORE the query filter (stats are
-    # corpus properties); the term scan itself is pruned by the IN-list
-    dl = ftoks.select("doc_id", "field", F.size("ftoks").alias("dl"))
-    avgdl = dl.groupBy("field").agg(F.avg("dl").alias("avgdl"))
-    fpost = ftoks.select("doc_id", "field", F.explode("ftoks").alias("term"))
-    qpost = (
-        fpost.filter(F.col("term").isin(q_terms))
-        .groupBy("doc_id", "field", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    dfreq = qpost.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
-    n = docs.agg(F.count(F.lit(1)).alias("n_docs"))
+        dismax(d,t) = max_f s_f(d,t) + tie · (Σ_f s_f(d,t) − max_f s_f(d,t))
 
-    w = F.when(F.col("field") == "title", F.lit(w_title)).otherwise(F.lit(w_body))
-    tfw = (
-        qpost.join(dl, ["doc_id", "field"])
-        .join(F.broadcast(avgdl), "field")
-        .withColumn(
-            "part",
-            w * F.col("tf") / (F.lit(1 - b) + F.lit(b) * F.col("dl") / F.col("avgdl")),
-        )
-        .groupBy("doc_id", "term")
-        .agg(F.sum("part").alias("tfw"))
+    summed over query terms. Where BM25F fuses tf BEFORE saturation,
+    DisMax fuses complete per-field scores AFTER — it rewards the best
+    single field rather than accumulation across fields, which is why
+    Lucene defaults multi-field queries to it.
+
+    Per-field tf and dl come from field_postings, per-field df is counted
+    in plan (rows with tf_f > 0), and each field score is bm25_term_score
+    over its own df/tf/dl/avgdl; a field without the term scores NULL and
+    is left out of the greatest/coalesce fusion. One pruned scan and one
+    doc_id aggregation; the only join is a stats relation's (with_stats).
+
+    Deviation from Lucene (documented per ADVICE r06): idf uses the GLOBAL
+    document count for every field while honoring per-field df/dl/avgdl;
+    Lucene's DisjunctionMaxQuery uses each field's own docCount, so idf
+    here is slightly inflated for sparse fields relative to Lucene. With
+    the deterministic title/body carving every doc has both fields, making
+    per-field docCount equal to n_docs anyway — the shared-n_docs choice
+    is exact for this carving and only approximate for naturally-sparse
+    fields."""
+    rows = field_postings(post, _query_terms(query), title_len).select(
+        "*",
+        *[
+            F.expr(f"count(CASE WHEN tf_{f} > 0 THEN 1 END) OVER (PARTITION BY term)")
+            .alias(f"df_{f}")
+            for f in ("t", "b")
+        ],
     )
-    scored = (
-        tfw.join(F.broadcast(dfreq), "term")
-        .crossJoin(F.broadcast(n))
-        .withColumn(
-            "idf",
-            F.log(
-                F.lit(1.0)
-                + (F.col("n_docs") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-            ),
-        )
+    rows, (n_docs, _avgdl, avgdl_t, avgdl_b) = with_stats(rows, stats)
+
+    def field_score(f: str, avgdl_f) -> Column:
+        _idf, ts = bm25_term_score(n_docs, avgdl_f, f"df_{f}", f"tf_{f}", f"dl_{f}", k1, b)
+        return F.when(F.col(f"tf_{f}") > 0, ts)
+
+    scored = rows.select(
+        "doc_id", field_score("t", avgdl_t).alias("s_t"), field_score("b", avgdl_b).alias("s_b")
+    )
+    best = F.greatest(F.col("s_t"), F.col("s_b"))
+    dm = best + F.lit(tie) * (
+        F.coalesce(F.col("s_t"), F.lit(0.0)) + F.coalesce(F.col("s_b"), F.lit(0.0)) - best
+    )
+    return (
+        scored.select("doc_id", dm.alias("dm"))
         .groupBy("doc_id")
-        .agg(
-            F.round(
-                F.sum(F.col("idf") * F.col("tfw") / (F.lit(k1) + F.col("tfw"))), 4
-            ).alias("score")
-        )
+        .agg(F.round(F.sum("dm"), 4).alias("score"))
     )
-    return scored.orderBy(F.col("score").desc(), F.col("doc_id")).limit(k)
 
 
 def dismax_search(
@@ -434,134 +547,10 @@ def dismax_search(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """Disjunction-max top-k (Lucene DisjunctionMaxQuery — the OTHER classic
-    multi-field scorer besides BM25F): each field is scored as an
-    independent BM25 sub-index (its OWN df, dl, avgdl), and per (doc, term)
-    the fused score is
-
-        dismax(d,t) = max_f s_f(d,t) + tie · (Σ_f s_f(d,t) − max_f s_f(d,t))
-
-    summed over query terms. Where BM25F fuses tf BEFORE saturation,
-    DisMax fuses complete per-field scores AFTER — it rewards the best
-    single field rather than accumulation across fields, which is why
-    Lucene defaults multi-field queries to it.
-
-    Fields carve deterministically like bm25f_search (title = first
-    `title_len` tokens). Same plan shape: IN-list prune before joins,
-    per-field stats broadcast, two bounded aggregations, top-k heap.
-
-    Deviation from Lucene (documented per ADVICE r06): idf uses the GLOBAL
-    document count for every field while honoring per-field df/dl/avgdl;
-    Lucene's DisjunctionMaxQuery uses each field's own docCount, so idf
-    here is slightly inflated for sparse fields relative to Lucene. With
-    the deterministic title/body carving every doc has both fields, making
-    per-field docCount equal to n_docs anyway — the shared-n_docs choice
-    is exact for this carving and only approximate for naturally-sparse
-    fields."""
-    q_terms = sorted(set(_py_tokenize(query)))
-    if not q_terms:
-        raise ValueError("empty query after tokenization")
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"), tokenize(F.col(text_col)).alias("toks")
-    )
-    fields = toks.select(
-        "doc_id",
-        F.slice("toks", 1, title_len).alias("title"),
-        F.slice(
-            "toks",
-            F.lit(title_len + 1),
-            F.greatest(F.size("toks") - title_len, F.lit(0)),
-        ).alias("body"),
-    )
-    ftoks = fields.select(
-        "doc_id",
-        F.explode(
-            F.create_map(
-                F.lit("title"), F.col("title"), F.lit("body"), F.col("body")
-            )
-        ).alias("field", "ftoks"),
-    )
-    dl = ftoks.select("doc_id", "field", F.size("ftoks").alias("dl"))
-    avgdl = dl.groupBy("field").agg(F.avg("dl").alias("avgdl"))
-    fpost = ftoks.select("doc_id", "field", F.explode("ftoks").alias("term"))
-    qpost = (
-        fpost.filter(F.col("term").isin(q_terms))
-        .groupBy("doc_id", "field", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    # per-FIELD document frequency — each field is its own sub-index
-    dfreq = qpost.groupBy("field", "term").agg(
-        F.countDistinct("doc_id").alias("df")
-    )
-    n = docs.agg(F.count(F.lit(1)).alias("n_docs"))
-    s = (
-        qpost.join(dl, ["doc_id", "field"])
-        .join(F.broadcast(avgdl), "field")
-        .join(F.broadcast(dfreq), ["field", "term"])
-        .crossJoin(F.broadcast(n))
-        .withColumn(
-            "s",
-            F.log(
-                F.lit(1.0)
-                + (F.col("n_docs") - F.col("df") + F.lit(0.5))
-                / (F.col("df") + F.lit(0.5))
-            )
-            * (F.col("tf") * (k1 + 1))
-            / (
-                F.col("tf")
-                + F.lit(k1)
-                * (F.lit(1 - b) + F.lit(b) * F.col("dl") / F.col("avgdl"))
-            ),
-        )
-    )
-    fused = s.groupBy("doc_id", "term").agg(
-        (F.max("s") + F.lit(tie) * (F.sum("s") - F.max("s"))).alias("dm")
-    )
-    return (
-        fused.groupBy("doc_id")
-        .agg(F.round(F.sum("dm"), 4).alias("score"))
-        .orderBy(F.col("score").desc(), F.col("doc_id"))
-        .limit(k)
-    )
-
-
-def positional_relation(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(doc_id, pos, term) — ONE tokenization of the corpus from which both
-    the posting table (groupBy) and phrase matching (positional joins)
-    derive, so a query mixing terms and phrases scans the corpus once."""
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(tokenize(F.col(text_col))).alias("pos", "term"),
-    )
-
-
-def phrase_match(
-    docs: DataFrame,
-    phrase: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    pos: DataFrame | None = None,
-) -> DataFrame:
-    """Documents containing the exact token phrase, via positional join:
-    posexplode positions, self-equi-join on (doc_id, pos+i) per phrase term.
-    Scales as an equi-join on (doc_id, pos) — shuffle-partitioned, no theta.
-    Returns (doc_id, n_occurrences). Pass ``pos`` (a positional_relation)
-    to reuse an existing tokenization."""
-    terms = _py_tokenize(phrase)
-    if not terms:
-        raise ValueError("empty phrase")
-    if pos is None:
-        pos = positional_relation(docs, id_col, text_col)
-    first = pos.filter(F.col("term") == terms[0]).select("doc_id", F.col("pos").alias("p0"))
-    cur = first
-    for i, t in enumerate(terms[1:], start=1):
-        nxt = pos.filter(F.col("term") == t).select(
-            "doc_id", (F.col("pos") - i).alias("p0")
-        )
-        cur = cur.join(nxt, ["doc_id", "p0"])
-    return cur.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_occurrences"))
+    """Disjunction-max top-k (dismax_scores) over the corpus'
+    inline_source, fields carved like bm25f_search."""
+    src = inline_source(docs, id_col, text_col, title_len)
+    return top_k(dismax_scores(*src, query, tie, title_len, k1, b), k)
 
 
 def slop_starts_expr(arr_of: dict, terms: list[str], slop: int):
@@ -594,66 +583,104 @@ def slop_starts_expr(arr_of: dict, terms: list[str], slop: int):
     return F.filter(arr_of[terms[0]], lambda p: window_end(p) - p <= span)
 
 
+def exact_starts_expr(arr_of: dict, terms: list[str]):
+    """Column: start positions of the exact consecutive phrase, given each
+    term's per-doc position array — the array_contains chain shared by
+    phrase_counts and the query-language compiler."""
+    if len(terms) == 1:
+        return arr_of[terms[0]]
+    return F.filter(
+        arr_of[terms[0]],
+        lambda p: reduce(
+            operator.and_,
+            [
+                F.array_contains(arr_of[t], p + F.lit(i))
+                for i, t in enumerate(terms[1:], start=1)
+            ],
+        ),
+    )
+
+
+def phrase_counts(post: DataFrame, terms: list[str], slop: int | None = None) -> DataFrame:
+    """(doc_id, n_occurrences) — the one phrase body over any positional
+    posting relation: read only the phrase terms' rows, gather each
+    distinct term's position array per doc in ONE aggregation, and count
+    the start positions of the exact phrase (exact_starts_expr, ``slop``
+    None) or of the ordered sloppy phrase (slop_starts_expr) — array
+    expressions inside codegen, no positional join."""
+    if not terms:
+        raise ValueError("empty phrase")
+    uniq = sorted(set(terms))
+    col_of = {t: f"_pos_{i}" for i, t in enumerate(uniq)}
+    slots = post.filter(F.col("term").isin(uniq)).groupBy("doc_id").agg(
+        *[F.max(F.when(F.col("term") == t, F.col("positions"))).alias(col_of[t]) for t in uniq]
+    )
+    # a doc lacking any phrase term can't match (its array is NULL)
+    for t in uniq:
+        slots = slots.filter(F.col(col_of[t]).isNotNull())
+    arr_of = {t: F.col(col_of[t]) for t in uniq}
+    if slop is None:
+        starts = exact_starts_expr(arr_of, terms)
+    else:
+        starts = slop_starts_expr(arr_of, terms, slop)
+    return (
+        slots.select("doc_id", F.size(starts).alias("n_occurrences"))
+        .filter(F.col("n_occurrences") > 0)
+    )
+
+
+def phrase_match(
+    docs: DataFrame, phrase: str, id_col: str = "doc_id", text_col: str = "text"
+) -> DataFrame:
+    """Documents containing the exact token phrase: phrase_counts over the
+    corpus' positional postings. Returns (doc_id, n_occurrences)."""
+    return phrase_counts(positional_postings(docs, id_col, text_col), _py_tokenize(phrase))
+
+
 def sloppy_phrase_match(
     docs: DataFrame,
     phrase: str,
     slop: int,
     id_col: str = "doc_id",
     text_col: str = "text",
-    pos: DataFrame | None = None,
 ) -> DataFrame:
-    """Documents containing the ordered sloppy phrase (see
-    slop_starts_expr). One aggregation gathers each phrase term's sorted
-    position array per doc (collect_list skips the non-matching rows'
-    NULLs), then the greedy chain runs as array expressions — no
-    positional self-joins (contrast phrase_match's slop=0 equi-join
-    form). Returns (doc_id, n_starts)."""
+    """Documents containing the ordered sloppy phrase (slop_starts_expr,
+    slop 0 included): phrase_counts over the corpus' positional postings.
+    Returns (doc_id, n_starts)."""
     terms = _py_tokenize(phrase)
     if len(terms) < 2:
         raise ValueError("sloppy phrase needs at least two terms")
-    if pos is None:
-        pos = positional_relation(docs, id_col, text_col)
-    uniq = sorted(set(terms))
-    col_of = {t: f"_pos_{i}" for i, t in enumerate(uniq)}
-    slots = (
-        pos.filter(F.col("term").isin(uniq))
+    post = positional_postings(docs, id_col, text_col)
+    return phrase_counts(post, terms, slop).withColumnRenamed("n_occurrences", "n_starts")
+
+
+def proximity_pairs(post: DataFrame, term_a: str, term_b: str, window: int = 5) -> DataFrame:
+    """(doc_id, n_pairs, min_distance) — the one NEAR/k body over any
+    positional posting relation: read only the two terms' rows, gather
+    both position arrays per doc in one aggregation, and count/min the
+    |pa-pb| <= window pairs with array expressions — no explode, no
+    join."""
+    both = (
+        post.filter(F.col("term").isin(sorted({term_a, term_b})))
         .groupBy("doc_id")
         .agg(
-            *[
-                F.sort_array(
-                    F.collect_list(F.when(F.col("term") == t, F.col("pos")))
-                ).alias(col_of[t])
-                for t in uniq
-            ]
+            F.max(F.when(F.col("term") == term_a, F.col("positions"))).alias("pa"),
+            F.max(F.when(F.col("term") == term_b, F.col("positions"))).alias("pb"),
+        )
+        .filter(F.col("pa").isNotNull() & F.col("pb").isNotNull())
+    )
+    dists = F.flatten(
+        F.transform(
+            F.col("pa"),
+            lambda p: F.transform(
+                F.filter(F.col("pb"), lambda q: F.abs(q - p) <= F.lit(window)),
+                lambda q: F.abs(q - p),
+            ),
         )
     )
-    for t in uniq:
-        slots = slots.filter(F.size(F.col(col_of[t])) > 0)
-    starts = slop_starts_expr({t: F.col(col_of[t]) for t in uniq}, terms, slop)
-    return (
-        slots.select("doc_id", F.size(starts).alias("n_starts"))
-        .filter(F.col("n_starts") > 0)
-    )
-
-
-def exact_starts_expr(arr_of: dict, terms: list[str]):
-    """Column: start positions of the exact consecutive phrase, given each
-    term's per-doc position array — the array_contains chain shared by the
-    inline and indexed phrase paths."""
-    if len(terms) == 1:
-        return arr_of[terms[0]]
-    conds = lambda p: [  # noqa: E731
-        F.array_contains(arr_of[t], p + F.lit(i))
-        for i, t in enumerate(terms[1:], start=1)
-    ]
-
-    def _and(cs):
-        out = cs[0]
-        for c in cs[1:]:
-            out = out & c
-        return out
-
-    return F.filter(arr_of[terms[0]], lambda p: _and(conds(p)))
+    return both.select(
+        "doc_id", F.size(dists).alias("n_pairs"), F.array_min(dists).alias("min_distance")
+    ).filter(F.col("n_pairs") > 0)
 
 
 def proximity_match(
@@ -663,31 +690,11 @@ def proximity_match(
     window: int = 5,
     id_col: str = "doc_id",
     text_col: str = "text",
-    pos: DataFrame | None = None,
 ) -> DataFrame:
     """Documents where ``term_a`` and ``term_b`` co-occur within ``window``
-    tokens (the NEAR/k operator): per-doc position-list join with a range
-    predicate. Returns (doc_id, n_pairs, min_distance).
-
-    Scales like phrase_match: the join is equi on doc_id and each side is
-    one term's positions (posting-sized, not corpus-sized); per-doc
-    position lists bound the range comparison. For adversarially long
-    documents the same block-bucketing rewrite as operators/rangejoin.py
-    applies (bucket pos by window width, join adjacent buckets)."""
-    if pos is None:
-        pos = positional_relation(docs, id_col, text_col)
-    pa = pos.filter(F.col("term") == term_a).select("doc_id", F.col("pos").alias("pa"))
-    pb = pos.filter(F.col("term") == term_b).select("doc_id", F.col("pos").alias("pb"))
-    d = F.abs(F.col("pa") - F.col("pb"))
-    return (
-        pa.join(pb, "doc_id")
-        .filter(d <= window)
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_pairs"),
-            F.min(d).alias("min_distance"),
-        )
-    )
+    tokens (the NEAR/k operator): proximity_pairs over the corpus'
+    positional postings. Returns (doc_id, n_pairs, min_distance)."""
+    return proximity_pairs(positional_postings(docs, id_col, text_col), term_a, term_b, window)
 
 
 def boolean_search(

@@ -759,52 +759,12 @@ _MATCHPOS_ORACLE = f"""
 """
 
 
-@query("fulltext_match_positions", oracle=_MATCHPOS_ORACLE)
-def fulltext_match_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Matched-term position retrieval (the Lucene TermPositions /
-    PostingsEnum surface highlighters are built on): for docs containing
-    ALL query terms, the sorted token offsets of each term — exactly what
-    a highlighter needs to place <em> marks without re-analyzing the
-    document text. Inline form: one tokenization, one (doc, term)
-    aggregation, a count-filter for the all-terms constraint."""
-    d = load_table(spark, sf_dir, "documents")
-    from sparkfulltextquery_spark.functions.fulltext import positional_relation
-
-    terms = ["join", "spark"]
-    pos = positional_relation(d)
-    hits = (
-        pos.filter(F.col("term").isin(terms))
-        .groupBy("doc_id", "term")
-        .agg(F.sort_array(F.collect_list("pos")).alias("positions"))
-    )
-    both = hits.groupBy("doc_id").agg(F.count(F.lit(1)).alias("nt")).filter(
-        F.col("nt") == len(terms)
-    )
-    return (
-        hits.join(both.select("doc_id"), "doc_id")
-        .select("doc_id", "term", "positions")
-        .orderBy("doc_id", "term")
-    )
-
-
-@query("fulltext_match_positions_indexed", oracle=_MATCHPOS_ORACLE)
-def fulltext_match_positions_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The same position retrieval off the PERSISTED index: the stored
-    sorted position arrays come straight out of the bucket-pruned postings
-    scan — zero tokenization, zero explode; the all-terms constraint is
-    one count aggregation over the pruned rows. This is why the index
-    stores positions: phrase matching, proximity, AND highlighting all
-    read them without touching the corpus."""
-    from sparkfulltextquery_spark.functions.index import _force_bucketed_scan
-
-    prefix = _ensure_index(spark, sf_dir)
-    _force_bucketed_scan(spark)
-    terms = ["join", "spark"]
-    post = (
-        spark.table(f"{prefix}_postings")
-        .filter(F.col("term").isin(terms))
-        .select("doc_id", "term", "positions")
-    )
+def _match_positions(post: DataFrame, terms: list[str]) -> DataFrame:
+    """(doc_id, term, positions) of the docs holding ALL ``terms``, off any
+    positional posting relation: the term-pruned rows carry each term's
+    sorted position array, and the all-terms constraint is one count
+    aggregation over them."""
+    post = post.filter(F.col("term").isin(terms)).select("doc_id", "term", "positions")
     both = post.groupBy("doc_id").agg(F.count(F.lit(1)).alias("nt")).filter(
         F.col("nt") == len(terms)
     )
@@ -814,6 +774,32 @@ def fulltext_match_positions_indexed(spark: SparkSession, sf_dir: str) -> DataFr
         .orderBy("doc_id", "term")
     )
 
+
+@query("fulltext_match_positions", oracle=_MATCHPOS_ORACLE)
+def fulltext_match_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Matched-term position retrieval (the Lucene TermPositions /
+    PostingsEnum surface highlighters are built on): for docs containing
+    ALL query terms, the sorted token offsets of each term — exactly what
+    a highlighter needs to place <em> marks without re-analyzing the
+    document text. Inline form: _match_positions over the corpus'
+    positional postings."""
+    from sparkfulltextquery_spark.functions.fulltext import positional_postings
+
+    d = load_table(spark, sf_dir, "documents")
+    return _match_positions(positional_postings(d), ["join", "spark"])
+
+
+@query("fulltext_match_positions_indexed", oracle=_MATCHPOS_ORACLE)
+def fulltext_match_positions_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The same position retrieval off the PERSISTED index: the stored
+    sorted position arrays come straight out of the bucket-pruned postings
+    scan — zero tokenization, zero explode. This is why the index stores
+    positions: phrase matching, proximity, AND highlighting all read them
+    without touching the corpus."""
+    from sparkfulltextquery_spark.functions.index import _postings
+
+    prefix = _ensure_index(spark, sf_dir)
+    return _match_positions(_postings(spark, prefix), ["join", "spark"])
 
 
 # ---------------- general wildcard atoms (r7) ----------------

@@ -185,6 +185,18 @@ _MSM_ORACLE = f"""
 """
 
 
+def _min_should_match(ts: DataFrame) -> DataFrame:
+    """Top-10 of a per-(doc, term) BM25 relation among the docs matching at
+    least 2 of its terms: clause count and score sum in one aggregation."""
+    from sparkfulltextquery_spark.functions.fulltext import top_k
+
+    per_doc = ts.groupBy("doc_id").agg(
+        F.countDistinct("term").alias("n_matched"),
+        F.round(F.sum("tscore"), 4).alias("score"),
+    )
+    return top_k(per_doc.filter(F.col("n_matched") >= 2), 10)
+
+
 @query("fulltext_min_should_match", oracle=_MSM_ORACLE)
 def fulltext_min_should_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lucene/Elasticsearch `minimum_should_match`: an OR of should-clauses
@@ -197,16 +209,7 @@ def fulltext_min_should_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     ts = bm25_term_scores(d, " ".join(_MSM_TERMS))
-    return (
-        ts.groupBy("doc_id")
-        .agg(
-            F.countDistinct("term").alias("n_matched"),
-            F.round(F.sum("tscore"), 4).alias("score"),
-        )
-        .filter(F.col("n_matched") >= 2)
-        .orderBy(F.col("score").desc(), F.col("doc_id"))
-        .limit(10)
-    )
+    return _min_should_match(ts)
 
 
 @query("fulltext_min_should_match_indexed", oracle=_MSM_ORACLE)
@@ -215,20 +218,12 @@ def fulltext_min_should_match_indexed(spark: SparkSession, sf_dir: str) -> DataF
     per-(doc, term) score relation (bucket-pruned scan, df/idf as
     constant-folded literals) aggregates clause count and BM25 sum in ONE
     doc_id groupBy — zero joins, corpus-size-independent driver state."""
-    from sparkfulltextquery_spark.functions.index import bm25_scores_indexed
+    from sparkfulltextquery_spark.functions.fulltext import bm25_term_scores_of
+    from sparkfulltextquery_spark.functions.index import _index_source
 
     prefix = _ensure_index(spark, sf_dir)
-    ts = bm25_scores_indexed(spark, " ".join(_MSM_TERMS), table_prefix=prefix, explain=True)
-    return (
-        ts.groupBy("doc_id")
-        .agg(
-            F.countDistinct("term").alias("n_matched"),
-            F.round(F.sum("tscore"), 4).alias("score"),
-        )
-        .filter(F.col("n_matched") >= 2)
-        .orderBy(F.col("score").desc(), F.col("doc_id"))
-        .limit(10)
-    )
+    ts = bm25_term_scores_of(*_index_source(spark, prefix), " ".join(_MSM_TERMS))
+    return _min_should_match(ts)
 
 
 

@@ -16,8 +16,10 @@ from sparkfulltextquery_spark.functions import fulltext as FT
 from sparkfulltextquery_spark.functions.fulltext_queries import (
     _BM25_QUERY_TERMS,
     _POSTINGS_CTE,
+    _SEARCH_AFTER_ORACLE,
     _TOK,
     _ensure_index,
+    _page_after,
 )
 from sparkfulltextquery_spark.registry import query
 from sparkfulltextquery_spark.sources import load_table
@@ -440,32 +442,7 @@ def fulltext_score_explain_indexed(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-@query(
-    "fulltext_search_after_indexed",
-    oracle=f"""
-    WITH {_POSTINGS_CTE},
-    qt    AS (SELECT unnest(['data', 'query', 'spark', 'window']) AS term),
-    qpost AS (SELECT t.* FROM tfs t JOIN qt USING (term)),
-    dfreq AS (SELECT term, count(*) AS df FROM qpost GROUP BY term),
-    dl    AS (SELECT doc_id, len({_TOK}) AS dl FROM documents),
-    stats AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM dl),
-    scored AS (
-      SELECT doc_id,
-             round(sum(ln(1 + (n_docs - df + 0.5) / (df + 0.5))
-                       * (tf * 2.2) / (tf + 1.2 * (0.25 + 0.75 * dl / avgdl))), 4) AS score
-      FROM qpost JOIN dfreq USING (term) JOIN dl USING (doc_id) CROSS JOIN stats
-      GROUP BY doc_id
-    ),
-    cursor AS (
-      SELECT score AS c_score, doc_id AS c_doc
-      FROM scored ORDER BY score DESC, doc_id LIMIT 1 OFFSET 9
-    )
-    SELECT doc_id, score
-    FROM scored CROSS JOIN cursor
-    WHERE score < c_score OR (score = c_score AND doc_id > c_doc)
-    ORDER BY score DESC, doc_id LIMIT 10
-    """,
-)
+@query("fulltext_search_after_indexed", oracle=_SEARCH_AFTER_ORACLE)
 def fulltext_search_after_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keyset pagination ("search after", the Lucene/Elasticsearch
     searchAfter cursor): page 2 of the standard BM25 query, fetched as
@@ -480,23 +457,7 @@ def fulltext_search_after_indexed(spark: SparkSession, sf_dir: str) -> DataFrame
 
     prefix = _ensure_index(spark, sf_dir)
     scored = bm25_scores_indexed(spark, " ".join(_BM25_QUERY_TERMS), table_prefix=prefix)
-    cursor = (
-        scored.orderBy(F.col("score").desc(), F.col("doc_id"))
-        .limit(10)
-        .orderBy(F.col("score").asc(), F.col("doc_id").desc())
-        .limit(1)
-        .select(F.col("score").alias("c_score"), F.col("doc_id").alias("c_doc"))
-    )
-    return (
-        scored.join(F.broadcast(cursor))
-        .filter(
-            (F.col("score") < F.col("c_score"))
-            | ((F.col("score") == F.col("c_score")) & (F.col("doc_id") > F.col("c_doc")))
-        )
-        .select("doc_id", "score")
-        .orderBy(F.col("score").desc(), F.col("doc_id"))
-        .limit(10)
-    )
+    return _page_after(scored)
 
 
 

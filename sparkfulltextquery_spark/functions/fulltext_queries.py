@@ -134,8 +134,9 @@ def fulltext_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def fulltext_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact phrase "batch batch" via positional equi-join (posexplode →
-    join on doc_id, pos+1) — the scalable phrase plan: no theta join."""
+    """Exact phrase "batch batch" (FT.phrase_match): each phrase term's
+    position array per doc in one aggregation over the positional
+    postings, starts p with p+1 in the next term's array — no join."""
     d = load_table(spark, sf_dir, "documents")
     return FT.phrase_match(d, "batch batch")
 
@@ -181,9 +182,10 @@ def fulltext_boolean_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def fulltext_proximity_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NEAR/5 proximity: docs where 'spark' and 'join' co-occur within 5
-    tokens — position-list equi-join on doc_id + range predicate
-    (FT.proximity_match), the operator between boolean AND (any distance)
-    and phrase (distance exactly 1, ordered)."""
+    tokens — both position arrays per doc in one aggregation, pairs within
+    range counted by array expressions (FT.proximity_match), the operator
+    between boolean AND (any distance) and phrase (distance exactly 1,
+    ordered)."""
     d = load_table(spark, sf_dir, "documents")
     return FT.proximity_match(d, "spark", "join", window=5)
 
@@ -803,9 +805,7 @@ def fulltext_context_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-@query(
-    "fulltext_search_after",
-    oracle=f"""
+_SEARCH_AFTER_ORACLE = f"""
     WITH {_POSTINGS_CTE},
     qt    AS (SELECT unnest(['data', 'query', 'spark', 'window']) AS term),
     qpost AS (SELECT t.* FROM tfs t JOIN qt USING (term)),
@@ -827,33 +827,36 @@ def fulltext_context_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM scored CROSS JOIN cursor
     WHERE score < c_score OR (score = c_score AND doc_id > c_doc)
     ORDER BY score DESC, doc_id LIMIT 10
-    """,
-)
-def fulltext_search_after(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Keyset pagination INLINE twin (r7 symmetry: every other search
-    surface carries both forms): page 2 of the standard BM25 query as
-    WHERE (score, doc_id) < page-1-boundary — per-partition heaps stay at
-    k at any depth, unlike OFFSET. Same oracle and 1-row broadcast-cursor
-    shape as fulltext_search_after_indexed, scored from scratch."""
-    d = load_table(spark, sf_dir, "documents")
-    scored = FT.bm25_scores(d, " ".join(_BM25_QUERY_TERMS))
+    """
+
+
+def _page_after(scored: DataFrame) -> DataFrame:
+    """Page 2 of a (doc_id, score) relation as WHERE (score, doc_id) <
+    page-1-boundary: the 1-row cursor (computed here from page 1's
+    boundary to stay self-contained; a real client passes it back)
+    broadcasts into the scoring relation."""
     cursor = (
-        scored.orderBy(F.col("score").desc(), F.col("doc_id"))
-        .limit(10)
+        FT.top_k(scored, 10)
         .orderBy(F.col("score").asc(), F.col("doc_id").desc())
         .limit(1)
         .select(F.col("score").alias("c_score"), F.col("doc_id").alias("c_doc"))
     )
-    return (
-        scored.join(F.broadcast(cursor))
-        .filter(
-            (F.col("score") < F.col("c_score"))
-            | ((F.col("score") == F.col("c_score")) & (F.col("doc_id") > F.col("c_doc")))
-        )
-        .select("doc_id", "score")
-        .orderBy(F.col("score").desc(), F.col("doc_id"))
-        .limit(10)
+    page = scored.join(F.broadcast(cursor)).filter(
+        (F.col("score") < F.col("c_score"))
+        | ((F.col("score") == F.col("c_score")) & (F.col("doc_id") > F.col("c_doc")))
     )
+    return FT.top_k(page.select("doc_id", "score"), 10)
+
+
+@query("fulltext_search_after", oracle=_SEARCH_AFTER_ORACLE)
+def fulltext_search_after(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Keyset pagination INLINE twin (r7 symmetry: every other search
+    surface carries both forms): page 2 of the standard BM25 query
+    (_page_after) — per-partition heaps stay at k at any depth, unlike
+    OFFSET. Same oracle and 1-row broadcast-cursor shape as
+    fulltext_search_after_indexed, scored from scratch."""
+    d = load_table(spark, sf_dir, "documents")
+    return _page_after(FT.bm25_scores(d, " ".join(_BM25_QUERY_TERMS)))
 
 
 _HIGHLIGHT_ORACLE = f"""

@@ -21,7 +21,7 @@ import uuid
 from collections import OrderedDict
 from collections.abc import Callable
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from sparkfulltextquery_spark.functions.fulltext import (
@@ -29,11 +29,17 @@ from sparkfulltextquery_spark.functions.fulltext import (
     BM25_K1,
     BM25F_TITLE_LEN,
     _py_tokenize,
-    bm25_term_score,
-    df_over_term,
+    bm25_scores_of,
+    bm25_term_scores_of,
+    bm25f_scores,
+    corpus_stats,
+    dismax_scores,
     doc_lengths,
-    field_pos_pred,
+    explain_from_term_scores,
+    phrase_counts,
     positional_postings,
+    proximity_pairs,
+    top_k,
 )
 
 
@@ -293,13 +299,10 @@ def _df_stats_literals(
     filter (cached per term — the cache grows only with distinct queried
     terms, a workload-bounded set).
 
-    bm25_scores_indexed and search_indexed take only n_docs/avgdl from
-    here (no terms, no df job): they count df inside the query plan. The
-    percolator takes df too, pinned per stored query at registration, as
-    does more-like-this. idf is still computed BY
-    the JVM (the literals feed an F.log expression Catalyst
-    constant-folds), so float behavior is bit-identical to a join against
-    the df table."""
+    The scorers take only n_docs/avgdl from here (_index_source; no terms,
+    no df job): they count df inside the query plan. The percolator takes
+    df too, pinned per stored query at registration, as does
+    more-like-this."""
     skey = (spark.sparkContext.applicationId, table_prefix)
     if skey not in _INDEX_STATS_CACHE:
         r = spark.table(f"{table_prefix}_stats").head()
@@ -322,6 +325,27 @@ def _df_stats_literals(
     return n_docs, avgdl, {t: dfc[t] for t in terms}
 
 
+def _postings(spark: SparkSession, table_prefix: str) -> DataFrame:
+    """The term-bucketed postings table, read with bucket pruning: each
+    scorer and matcher filters it to its terms (SelectedBucketsCount)."""
+    _force_bucketed_scan(spark)
+    return spark.table(f"{table_prefix}_postings")
+
+
+def _index_source(spark: SparkSession, table_prefix: str) -> tuple[DataFrame, tuple]:
+    """(postings, (n_docs, avgdl)) of the persisted index for fulltext's
+    scorers: _postings and the corpus stats as cached driver literals."""
+    return _postings(spark, table_prefix), _df_stats_literals(spark, table_prefix, [])[:2]
+
+
+def _field_source(spark: SparkSession, table_prefix: str) -> tuple[DataFrame, tuple]:
+    """_index_source with the per-field avgdl literals (_field_avgdl)
+    appended, in fulltext.corpus_stats' column order."""
+    post, stats = _index_source(spark, table_prefix)
+    avgdl_of = _field_avgdl(spark, table_prefix)
+    return post, (*stats, avgdl_of["title"], avgdl_of["body"])
+
+
 def bm25_scores_indexed(
     spark: SparkSession,
     query: str,
@@ -329,33 +353,12 @@ def bm25_scores_indexed(
     k1: float = BM25_K1,
     b: float = BM25_B,
     boosts: dict[str, float] | None = None,
-    explain: bool = False,
 ) -> DataFrame:
-    """Un-truncated BM25 (doc_id, score) over the persisted index. The
-    postings scan is pruned to the query terms' buckets (plan shows
-    SelectedBucketsCount); the doc length rides in the posting rows
-    (denormalized at build), df is counted in plan over the pruned scan
-    (df_over_term) and n_docs/avgdl fold in as cached driver literals —
-    the whole query is ONE pruned scan + one doc_id agg, zero joins,
-    corpus-size-independent, and building it runs no Spark job. The score
-    is fulltext.bm25_term_score, the expression fulltext.bm25_scores
-    evaluates."""
-    _force_bucketed_scan(spark)
-    q_terms = sorted(set(_py_tokenize(query)))
-    if not q_terms:
-        raise ValueError("empty query after tokenization")
-    n_docs, avgdl, _ = _df_stats_literals(spark, table_prefix, [])
-    post = (
-        spark.table(f"{table_prefix}_postings")
-        .filter(F.col("term").isin(q_terms))
-        .select("doc_id", "term", "tf", "dl", df_over_term().alias("df"))
-    )
-    idf, tscore = bm25_term_score(n_docs, avgdl, k1=k1, b=b, boosts=boosts)
-    if explain:
-        return post.select(
-            "doc_id", "term", "tf", "df", idf.alias("idf"), tscore.alias("tscore")
-        )
-    return post.groupBy("doc_id").agg(F.round(F.sum(tscore), 4).alias("score"))
+    """Un-truncated BM25 (doc_id, score) over the persisted index:
+    fulltext.bm25_scores_of, the body inline bm25_scores runs, over
+    _index_source — ONE pruned scan + one doc_id agg, zero joins,
+    corpus-size-independent, and building it runs no Spark job."""
+    return bm25_scores_of(*_index_source(spark, table_prefix), query, k1, b, boosts)
 
 
 def bm25_explain_indexed(
@@ -367,12 +370,10 @@ def bm25_explain_indexed(
     b: float = BM25_B,
 ) -> DataFrame:
     """Lucene-style explain off the persisted index: per-term tf/df/idf/
-    contribution rows for the top-k docs. Same pruned-bucket scan as
-    bm25_scores_indexed (df counted in plan per term); the k-row top-k
+    contribution rows for the top-k docs — fulltext.bm25_term_scores_of
+    over the same pruned scan as bm25_scores_indexed; the k-row top-k
     broadcasts back into the term relation."""
-    from sparkfulltextquery_spark.functions.fulltext import explain_from_term_scores
-
-    ts = bm25_scores_indexed(spark, query, table_prefix, k1, b, explain=True)
+    ts = bm25_term_scores_of(*_index_source(spark, table_prefix), query, k1, b)
     return explain_from_term_scores(ts, k)
 
 
@@ -389,11 +390,7 @@ def bm25_search_indexed(
     is, so a repeated query skips construction and reuses its shuffle."""
     ckey = (spark.sparkContext.applicationId, table_prefix, "bm25", query, k, k1, b)
     return _compiled_plan(
-        spark,
-        ckey,
-        lambda: bm25_scores_indexed(spark, query, table_prefix, k1, b)
-        .orderBy(F.col("score").desc(), F.col("doc_id"))
-        .limit(k),
+        spark, ckey, lambda: top_k(bm25_scores_indexed(spark, query, table_prefix, k1, b), k)
     )
 
 
@@ -401,51 +398,15 @@ _FIELD_STATS_CACHE: dict = {}
 
 
 def _field_avgdl(spark: SparkSession, table_prefix: str) -> dict[str, float]:
-    """{field: avgdl} as driver literals for the per-field scoring of
-    dismax_scores_indexed and bm25f_scores_indexed: ONE row aggregated from
-    the persisted dl table (the positional title/body carving derives
-    per-field lengths arithmetically — dl_title = least(dl, L), dl_body =
-    dl − dl_title — so no corpus re-tokenization). Cached per (session,
-    index) and dropped on rebuild, like _df_stats_literals; avgdl is
-    computed BY Spark so the literal is bit-identical to the inline
-    scorer's F.avg."""
+    """{field: avgdl} as driver literals for the field scorers over the
+    persisted index: fulltext.corpus_stats — the relation the inline
+    scorers join — over the persisted dl table, read once. Cached per
+    (session, index) and dropped on rebuild, like _df_stats_literals."""
     skey = (spark.sparkContext.applicationId, table_prefix)
     if skey not in _FIELD_STATS_CACHE:
-        dl_t = F.least(F.col("dl"), F.lit(BM25F_TITLE_LEN))
-        row = (
-            spark.table(f"{table_prefix}_dl")
-            .agg(
-                F.avg(dl_t).alias("avg_t"),
-                F.avg(F.col("dl") - dl_t).alias("avg_b"),
-            )
-            .head()
-        )
-        _FIELD_STATS_CACHE[skey] = {"title": float(row.avg_t), "body": float(row.avg_b)}
+        row = corpus_stats(spark.table(f"{table_prefix}_dl")).head()
+        _FIELD_STATS_CACHE[skey] = {"title": float(row.avgdl_title), "body": float(row.avgdl_body)}
     return _FIELD_STATS_CACHE[skey]
-
-
-def _field_postings(spark: SparkSession, table_prefix: str, q_terms: list[str]) -> DataFrame:
-    """The query terms' bucket-pruned posting rows with the per-field
-    tf and dl of the title/body carving: tf_t = |positions < L| off the
-    stored position array, tf_b = tf − tf_t, and dl_t/dl_b from the
-    denormalized dl."""
-    return (
-        spark.table(f"{table_prefix}_postings")
-        .filter(F.col("term").isin(q_terms))
-        .select(
-            "doc_id",
-            "term",
-            "tf",
-            "dl",
-            F.size(F.filter("positions", field_pos_pred("title"))).alias("tf_t"),
-            F.least(F.col("dl"), F.lit(BM25F_TITLE_LEN)).alias("dl_t"),
-        )
-        .select(
-            "*",
-            (F.col("tf") - F.col("tf_t")).alias("tf_b"),
-            (F.col("dl") - F.col("dl_t")).alias("dl_b"),
-        )
-    )
 
 
 def dismax_scores_indexed(
@@ -456,61 +417,12 @@ def dismax_scores_indexed(
     b: float = BM25_B,
     tie: float = 0.3,
 ) -> DataFrame:
-    """Disjunction-max (doc_id, score) over the persisted index — the
-    indexed twin of fulltext.dismax_search (same formula, same
-    deterministic title/body carving, same shared-n_docs idf convention).
-    ONE bucket-pruned postings scan, ZERO joins, and building it runs no
-    Spark job once the stats literals are cached:
-
-    - per-field tf and dl derive per posting row (_field_postings);
-    - per-field df is counted in plan over the term-bucketed scan — the
-      term's rows with tf_f > 0 — and each field's independent BM25 score
-      is fulltext.bm25_term_score over its own df/tf/dl and avgdl
-      (_field_avgdl), n_docs a cached literal;
-    - the DisMax fusion max_f + tie·(Σ_f − max_f) is greatest/coalesce
-      over the ≤2 field scores (a missing field, tf_f = 0, contributes
-      NULL — excluded exactly as the inline scorer's absent (doc, field)
-      row).
-
-    The whole query is the pruned scan + one doc_id aggregation —
-    corpus-size-independent, the same plan class as bm25_scores_indexed."""
-    _force_bucketed_scan(spark)
-    q_terms = sorted(set(_py_tokenize(query)))
-    if not q_terms:
-        raise ValueError("empty query after tokenization")
-    n_docs, _avgdl, _ = _df_stats_literals(spark, table_prefix, [])
-    avgdl_of = _field_avgdl(spark, table_prefix)
-
-    def field_score(field: str) -> Column:
-        f = field[0]  # the column suffix: t(itle), b(ody)
-        _idf, ts = bm25_term_score(
-            n_docs, avgdl_of[field], f"df_{f}", f"tf_{f}", f"dl_{f}", k1, b
-        )
-        return F.when(F.col(f"tf_{f}") > 0, ts)
-
-    staged = _field_postings(spark, table_prefix, q_terms).select(
-        "*",
-        *[
-            F.expr(f"count(CASE WHEN tf_{f} > 0 THEN 1 END) OVER (PARTITION BY term)")
-            .alias(f"df_{f}")
-            for f in ("t", "b")
-        ],
-    ).select(
-        "doc_id",
-        field_score("title").alias("s_t"),
-        field_score("body").alias("s_b"),
-    )
-    best = F.greatest(F.col("s_t"), F.col("s_b"))
-    dm = best + F.lit(tie) * (
-        F.coalesce(F.col("s_t"), F.lit(0.0))
-        + F.coalesce(F.col("s_b"), F.lit(0.0))
-        - best
-    )
-    return (
-        staged.select("doc_id", dm.alias("dm"))
-        .groupBy("doc_id")
-        .agg(F.round(F.sum("dm"), 4).alias("score"))
-    )
+    """Disjunction-max (doc_id, score) over the persisted index:
+    fulltext.dismax_scores, the body inline dismax_search runs, over
+    _field_source — ONE pruned scan + one doc_id aggregation, zero joins,
+    no Spark job to build once the literals are cached."""
+    src = _field_source(spark, table_prefix)
+    return dismax_scores(*src, query, tie, BM25F_TITLE_LEN, k1, b)
 
 
 def dismax_search_indexed(
@@ -523,8 +435,7 @@ def dismax_search_indexed(
     tie: float = 0.3,
 ) -> DataFrame:
     """DisMax top-k over the persisted index (TakeOrderedAndProject heap)."""
-    scored = dismax_scores_indexed(spark, query, table_prefix, k1, b, tie)
-    return scored.orderBy(F.col("score").desc(), F.col("doc_id")).limit(k)
+    return top_k(dismax_scores_indexed(spark, query, table_prefix, k1, b, tie), k)
 
 
 def phrase_match_indexed(
@@ -533,68 +444,14 @@ def phrase_match_indexed(
     table_prefix: str = "sftq_index",
     slop: int = 0,
 ) -> DataFrame:
-    """Exact-phrase match off the persisted positional index: read ONLY the
-    phrase terms' buckets (SelectedBucketsCount pruning), gather each slot
-    term's stored position array per doc in ONE aggregation, and count the
-    start positions p where slot i's array contains p+i — pure array
-    expressions inside codegen, no posexplode and no positional join (the
-    r03 form exploded each slot's positions and equi-joined per phrase
-    word; at k slots that was k-1 joins over tf-expanded relations).
+    """Phrase match off the persisted positional index: fulltext.phrase_counts
+    over _postings — exact at ``slop`` 0, the ordered sloppy phrase above.
     Returns (doc_id, n_occurrences).
 
     At 100 TB a phrase query touches |phrase terms| buckets of the postings
     table — independent of corpus size (reference bucketed-read behavior,
     DataFrameWriter.scala:170 + FileSourceScanExec bucket pruning)."""
-    _force_bucketed_scan(spark)
-    terms = _py_tokenize(phrase)
-    if not terms:
-        raise ValueError("empty phrase")
-    uniq = sorted(set(terms))
-    post = spark.table(f"{table_prefix}_postings").filter(F.col("term").isin(uniq))
-    # one row per doc: the position array of each distinct phrase term
-    slots = post.groupBy("doc_id").agg(
-        *[
-            F.max(F.when(F.col("term") == t, F.col("positions"))).alias(f"_pos_{i}")
-            for i, t in enumerate(uniq)
-        ]
-    )
-    col_of = {t: f"_pos_{i}" for i, t in enumerate(uniq)}
-    # a doc lacking any slot term can't match (its array is NULL)
-    for t in uniq:
-        slots = slots.filter(F.col(col_of[t]).isNotNull())
-    if slop:
-        # ordered sloppy phrase off the stored position arrays — the same
-        # greedy-chain exists-semantics as fulltext.slop_starts_expr
-        from sparkfulltextquery_spark.functions.fulltext import slop_starts_expr
-
-        starts = slop_starts_expr(
-            {t: F.col(col_of[t]) for t in uniq}, terms, slop
-        )
-    else:
-        starts = F.filter(
-            F.col(col_of[terms[0]]),
-            lambda p: reduce_and(
-                [
-                    F.array_contains(F.col(col_of[t]), p + F.lit(i))
-                    for i, t in enumerate(terms[1:], start=1)
-                ]
-            ),
-        )
-    return (
-        slots.select("doc_id", F.size(starts).alias("n_occurrences"))
-        .filter(F.col("n_occurrences") > 0)
-    )
-
-
-def reduce_and(conds):
-    """AND-fold a non-empty list of Columns (single-word phrases fold to
-    the always-true literal: every occurrence of the word is a match)."""
-    if not conds:
-        return F.lit(True)
-    out = conds[0]
-    for c in conds[1:]:
-        out = out & c
-    return out
+    return phrase_counts(_postings(spark, table_prefix), _py_tokenize(phrase), slop or None)
 
 
 def proximity_match_indexed(
@@ -604,41 +461,10 @@ def proximity_match_indexed(
     window: int = 5,
     table_prefix: str = "sftq_index",
 ) -> DataFrame:
-    """NEAR/k proximity off the persisted positional index: read only the
-    two terms' buckets, gather both stored position arrays per doc in one
-    aggregation, and count/min the |pa-pb| <= window pairs with array
-    expressions — no explode, no join (r03 exploded both arrays and
-    theta-joined on doc_id). Same corpus-size-independent bucket pruning
-    as phrase_match_indexed. Returns (doc_id, n_pairs, min_distance)."""
-    _force_bucketed_scan(spark)
-    post = spark.table(f"{table_prefix}_postings").filter(
-        F.col("term").isin(sorted({term_a, term_b}))
-    )
-    both = (
-        post.groupBy("doc_id")
-        .agg(
-            F.max(F.when(F.col("term") == term_a, F.col("positions"))).alias("pa"),
-            F.max(F.when(F.col("term") == term_b, F.col("positions"))).alias("pb"),
-        )
-        .filter(F.col("pa").isNotNull() & F.col("pb").isNotNull())
-    )
-    dists = F.flatten(
-        F.transform(
-            F.col("pa"),
-            lambda p: F.transform(
-                F.filter(F.col("pb"), lambda q: F.abs(q - p) <= F.lit(window)),
-                lambda q: F.abs(q - p),
-            ),
-        )
-    )
-    return (
-        both.select(
-            "doc_id",
-            F.size(dists).alias("n_pairs"),
-            F.array_min(dists).alias("min_distance"),
-        )
-        .filter(F.col("n_pairs") > 0)
-    )
+    """NEAR/k proximity off the persisted positional index:
+    fulltext.proximity_pairs over the term-bucketed postings, reading only
+    the two terms' buckets. Returns (doc_id, n_pairs, min_distance)."""
+    return proximity_pairs(_postings(spark, table_prefix), term_a, term_b, window)
 
 
 def suggest_terms(
@@ -725,7 +551,6 @@ def _search_indexed_build(
 ) -> DataFrame:
     from sparkfulltextquery_spark.functions import querylang as QL
 
-    _force_bucketed_scan(spark)
     ast = QL.parse_query(query)
     # expansion atoms resolve against the persisted term DICTIONARY first
     # (Lucene MultiTermQuery rewrites to concrete term disjunctions before
@@ -752,12 +577,12 @@ def _ranked_search_indexed(
     doc ids as the pure-negation universe."""
     from sparkfulltextquery_spark.functions import querylang as QL
 
-    n_docs, avgdl, _ = _df_stats_literals(spark, table_prefix, [])
+    post, stats = _index_source(spark, table_prefix)
     return QL.ranked_search(
-        spark.table(f"{table_prefix}_postings"),
+        post,
         ast,
         boosts,
-        (n_docs, avgdl),
+        stats,
         lambda: spark.table(f"{table_prefix}_dl").select("doc_id"),
         k,
         expansion,
@@ -853,7 +678,6 @@ def simple_search_indexed(
     literals are cached."""
     from sparkfulltextquery_spark.functions.querylang import simple_query_ast
 
-    _force_bucketed_scan(spark)
     ast, boosts = simple_query_ast(query)
     return _ranked_search_indexed(spark, table_prefix, ast, boosts, k, k1=k1, b=b)
 
@@ -865,44 +689,11 @@ def bm25f_scores_indexed(
     k1: float = BM25_K1,
     b: float = BM25_B,
 ) -> DataFrame:
-    """BM25F (doc_id, score) over the persisted index — the indexed twin
-    of fulltext.bm25f_search (Zaragoza/Robertson simple-BM25F: per-field
-    length-normalized tf fused BEFORE the saturating idf product). Same
-    one-pass shape as dismax_scores_indexed: per-field tf and dl per
-    posting row (_field_postings), per-field avgdl from _field_avgdl, and
-    a DOC-LEVEL idf (a term's df counts docs where it appears in ANY
-    field, exactly the posting-row count — df_over_term, in plan) from
-    fulltext.bm25_term_score. ONE pruned scan + one doc_id aggregation,
-    zero joins, no Spark job to build once the stats literals are
-    cached."""
-    from sparkfulltextquery_spark.functions.fulltext import BM25F_W_BODY, BM25F_W_TITLE
-
-    _force_bucketed_scan(spark)
-    q_terms = sorted(set(_py_tokenize(query)))
-    if not q_terms:
-        raise ValueError("empty query after tokenization")
-    n_docs, avgdl, _ = _df_stats_literals(spark, table_prefix, [])
-    avgdl_of = _field_avgdl(spark, table_prefix)
-    idf, _ts = bm25_term_score(n_docs, avgdl, k1=k1, b=b)
-
-    def part(weight: float, f: str):
-        # matches the inline `w * tf / (1 - b + b * dl/avgdl)` exactly;
-        # a field with tf_f = 0 has no inline row — contribute 0
-        tf_col, dl_col = F.col(f"tf_{f[0]}"), F.col(f"dl_{f[0]}")
-        return F.when(
-            tf_col > 0,
-            F.lit(weight)
-            * tf_col
-            / (F.lit(1 - b) + F.lit(b) * dl_col / F.lit(avgdl_of[f])),
-        ).otherwise(F.lit(0.0))
-
-    tfw = part(BM25F_W_TITLE, "title") + part(BM25F_W_BODY, "body")
-    scored = (
-        _field_postings(spark, table_prefix, q_terms)
-        .select("*", df_over_term().alias("df"))
-        .select("doc_id", (idf * tfw / (F.lit(k1) + tfw)).alias("ts"))
-    )
-    return scored.groupBy("doc_id").agg(F.round(F.sum("ts"), 4).alias("score"))
+    """BM25F (doc_id, score) over the persisted index: fulltext.bm25f_scores,
+    the body inline bm25f_search runs, over _field_source — ONE pruned
+    scan + one doc_id aggregation, zero joins, no Spark job to build once
+    the literals are cached."""
+    return bm25f_scores(*_field_source(spark, table_prefix), query, k1=k1, b=b)
 
 
 def bm25f_search_indexed(
@@ -914,8 +705,7 @@ def bm25f_search_indexed(
     b: float = BM25_B,
 ) -> DataFrame:
     """BM25F top-k over the persisted index (TakeOrderedAndProject heap)."""
-    scored = bm25f_scores_indexed(spark, query, table_prefix, k1, b)
-    return scored.orderBy(F.col("score").desc(), F.col("doc_id")).limit(k)
+    return top_k(bm25f_scores_indexed(spark, query, table_prefix, k1, b), k)
 
 
 # r7 file-size split: streaming index maintenance lives in index_stream;

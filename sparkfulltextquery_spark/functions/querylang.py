@@ -63,12 +63,15 @@ from sparkfulltextquery_spark.functions.fulltext import (
     BM25F_TITLE_LEN,
     _py_tokenize,
     bm25_term_score,
+    corpus_stats,
     df_over_term,
     doc_len,
     exact_starts_expr,
     field_pos_pred,
     positional_postings,
     slop_starts_expr,
+    top_k,
+    with_stats,
 )
 from sparkfulltextquery_spark.functions.text import tokenize
 
@@ -688,10 +691,11 @@ def ranked_search(
 
     ``post`` is a posting relation carrying (doc_id, term, tf, dl,
     positions); ``stats`` is ``(n_docs, avgdl)`` as literals (the index's
-    cached stats) or a one-row relation with those columns (inline),
-    joined in as the plan's one join; ``universe()`` returns every doc id,
-    read only for pure negation; ``expansion`` maps the query's expansion
-    keys to resolved vocabulary terms (compile_queries).
+    cached stats) or a one-row fulltext.corpus_stats relation (inline),
+    attached by fulltext.with_stats — the plan's one join; ``universe()``
+    returns every doc id, read only for pure negation; ``expansion`` maps
+    the query's expansion keys to resolved vocabulary terms
+    (compile_queries).
 
     The plan: df counted in plan over the posting scan (df_over_term) →
     ONE per-doc aggregation computing the query's flags and position
@@ -705,10 +709,8 @@ def ranked_search(
     chunk = compile_queries({0: ast}, expansion or {})
     score = F.lit(0.0)
     if boosts:
-        post = post.select("*", df_over_term().alias("df"))
-        if isinstance(stats, DataFrame):
-            post, stats = post.crossJoin(F.broadcast(stats)), ("n_docs", "avgdl")
-        _idf, ts = bm25_term_score(*stats, k1=k1, b=b, boosts=boosts)
+        post, (n_docs, avgdl, *_) = with_stats(post.select("*", df_over_term().alias("df")), stats)
+        _idf, ts = bm25_term_score(n_docs, avgdl, k1=k1, b=b, boosts=boosts)
         score = F.when(F.col("term").isin(sorted(boosts)), ts).otherwise(F.lit(0.0))
     per_doc = chunk.per_doc(post, [F.round(F.sum(score), 4).alias("score")], boosts)
     if _eval_empty(ast):
@@ -717,12 +719,7 @@ def ranked_search(
             .join(per_doc, "doc_id", "left")
             .fillna(0, subset=[*chunk.flags, "score"])
         )
-    return (
-        per_doc.filter(chunk.match_of[0])
-        .select("doc_id", "score")
-        .orderBy(F.col("score").desc(), F.col("doc_id"))
-        .limit(k)
-    )
+    return top_k(per_doc.filter(chunk.match_of[0]).select("doc_id", "score"), k)
 
 
 def _inline_index(docs: DataFrame, id_col: str, text_col: str):
@@ -730,19 +727,16 @@ def _inline_index(docs: DataFrame, id_col: str, text_col: str):
     tokenized once and STAGED behind a lazy localCheckpoint barrier (one
     row per doc with its token array), and both the positional postings
     (fulltext.positional_postings over the staged tokens, dl included) and
-    the one-row (n_docs, avgdl) stats derive from it. The stats count
-    every doc, token-empty and NULL-text ones too (dl 0), as the index's
-    stats table does. The
-    barrier keeps Catalyst from re-running the tokenize regex once per
-    consumer; it is lazy (no job at construction) and rebuilt inside every
-    run."""
+    the one-row fulltext.corpus_stats derive from it — the stats relation
+    the inline scorers join, counting every doc, token-empty and NULL-text
+    ones too (dl 0), as the index's stats table does. The barrier keeps
+    Catalyst from re-running the tokenize regex once per consumer; it is
+    lazy (no job at construction) and rebuilt inside every run."""
     staged = docs.select(
         F.col(id_col).alias("doc_id"), tokenize(F.col(text_col)).alias("_toks")
     ).localCheckpoint(eager=False)
     post = positional_postings(staged, "doc_id", "_toks")
-    stats = staged.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.avg(doc_len("_toks")).alias("avgdl")
-    )
+    stats = corpus_stats(staged.select(doc_len("_toks").alias("dl")))
     return staged, post, stats
 
 

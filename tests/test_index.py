@@ -46,10 +46,8 @@ def test_in_plan_df_equals_df_table(spark, index_tables):
     """df counted inside the BM25 plan equals the persisted df table for
     every query term: on the explain rows and on the un-truncated term
     relation."""
-    from sparkfulltextquery_spark.functions.index import (
-        bm25_explain_indexed,
-        bm25_scores_indexed,
-    )
+    from sparkfulltextquery_spark.functions.fulltext import bm25_term_scores_of
+    from sparkfulltextquery_spark.functions.index import _index_source, bm25_explain_indexed
 
     df_table = {r.term: r.df for r in spark.table("t_idx_df").collect()}
     for q in (QUERY, "spark join", "batch vector window"):
@@ -57,7 +55,7 @@ def test_in_plan_df_equals_df_table(spark, index_tables):
         assert explain, q
         for r in explain:
             assert r.df == df_table[r.term], (q, r)
-        terms = bm25_scores_indexed(spark, q, table_prefix="t_idx", explain=True)
+        terms = bm25_term_scores_of(*_index_source(spark, "t_idx"), q)
         got = {(r.term, r.df) for r in terms.select("term", "df").distinct().collect()}
         want = {(t, df_table[t]) for t in q.split() if t in df_table}
         assert got == want and want, q

@@ -889,7 +889,17 @@ def test_inline_search_matches_without_joins(spark):
     of phrase, NEAR and field atoms AND the BM25 score in one aggregation
     over positional postings (querylang.ranked_search): the only join is
     the one-row corpus stats relation's — no join per positional atom,
-    none to attach scores."""
+    none to attach scores. The inline field scorers and matchers run the
+    indexed bodies over positional postings too: BM25F and DisMax join
+    only the stats relation (4 joins each while they built their own
+    per-field df and avgdl), phrase and NEAR join nothing (2 and 1
+    positional joins before)."""
+    from sparkfulltextquery_spark.functions.fulltext import (
+        bm25f_search,
+        dismax_search,
+        phrase_match,
+        proximity_match,
+    )
     from sparkfulltextquery_spark.functions.querylang import search, simple_search
     from sparkfulltextquery_spark.sources import load_table
 
@@ -897,6 +907,10 @@ def test_inline_search_matches_without_joins(spark):
     q = '"spark join" AND (spark NEAR/3 join) AND title:spark AND "batch query"~2'
     assert _logical_joins(search(docs, q, k=10)) == 1
     assert _logical_joins(simple_search(docs, "+spark join -vector", k=10)) == 1
+    assert _logical_joins(bm25f_search(docs, "data query spark window")) == 1
+    assert _logical_joins(dismax_search(docs, "data query spark window")) == 1
+    assert _logical_joins(phrase_match(docs, "spark join data")) == 0
+    assert _logical_joins(proximity_match(docs, "spark", "join")) == 0
 
 
 def test_inline_query_language_jobs_budget(spark):

@@ -1255,8 +1255,20 @@ def test_null_text_is_a_token_empty_doc(spark, tmp_path):
     """A NULL text is a token-empty doc (dl 0) wherever the corpus stats
     are projected: over (1, "a b"), (2, NULL), (3, "") the index reads
     n_docs 3 and avgdl 2/3, and the inline BM25 paths (bm25_search's term
-    scores, search's inline index) score exactly as their indexed twins."""
-    from sparkfulltextquery_spark.functions.fulltext import bm25_search, doc_lengths
+    scores, search's inline index) score exactly as their indexed twins.
+    Over scoring docs beside a NULL one, so do inline BM25F and DisMax
+    (whose own per-field avgdl once skipped the NULL doc that n_docs
+    counts), and the inline phrase and NEAR matchers match as theirs."""
+    from sparkfulltextquery_spark.functions import index as IX
+    from sparkfulltextquery_spark.functions.fulltext import (
+        bm25_search,
+        bm25f_search,
+        dismax_search,
+        doc_lengths,
+        phrase_match,
+        proximity_match,
+        sloppy_phrase_match,
+    )
     from sparkfulltextquery_spark.functions.index import (
         bm25_search_indexed,
         build_index,
@@ -1276,6 +1288,36 @@ def test_null_text_is_a_token_empty_doc(spark, tmp_path):
     assert search(docs, "a OR zz", k=3).collect() == search_indexed(
         spark, "a OR zz", k=3, table_prefix="null_idx"
     ).collect()
+
+    docs = spark.createDataFrame(
+        [
+            (1, "spark data query engines run window functions over data and the query plan"),
+            (2, "query data"),
+            (3, "a window of spark jobs streams data to the engine for query work"),
+            (4, "nothing to see"),
+            (5, None),
+        ],
+        "doc_id long, text string",
+    )
+    build_index(docs, table_prefix="null_fidx", num_buckets=2, path=f"file://{tmp_path}/f",
+                term_vectors=False)
+    q = "data query spark window"
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    for inline, indexed in [
+        (bm25f_search(docs, q, k=5), IX.bm25f_search_indexed(spark, q, 5, "null_fidx")),
+        (dismax_search(docs, q, k=5), IX.dismax_search_indexed(spark, q, 5, "null_fidx")),
+        (phrase_match(docs, "data query"),
+         IX.phrase_match_indexed(spark, "data query", "null_fidx")),
+        (sloppy_phrase_match(docs, "spark query", 9),
+         IX.phrase_match_indexed(spark, "spark query", "null_fidx", slop=9)),
+        (proximity_match(docs, "query", "data", 3),
+         IX.proximity_match_indexed(spark, "query", "data", 3, "null_fidx")),
+    ]:
+        got = rows(inline)
+        assert got and got == rows(indexed)
 
 
 @pytest.mark.heavy
