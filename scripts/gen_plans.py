@@ -4,8 +4,7 @@ import sys
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
-# replace this script's directory: scripts/profile.py would shadow the stdlib
-sys.path[0] = str(REPO)
+sys.path.insert(0, str(REPO))
 
 from sparkfulltextquery_spark import get_spark  # noqa: E402
 from sparkfulltextquery_spark.plans import physical_plan  # noqa: E402

@@ -24,8 +24,7 @@ import tempfile
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
-# replace this script's directory: scripts/profile.py would shadow the stdlib
-sys.path[0] = str(REPO)
+sys.path.insert(0, str(REPO))
 
 _NORMALIZE = [
     (re.compile(r"\b([a-z])_\d+(?=#)"), r"\1_N"),  # lambda variables (x_12#34)

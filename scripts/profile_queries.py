@@ -10,9 +10,9 @@ job/stage counts per timed run, so "where does the wall go" is visible
 per row instead of argued.
 
 Usage:
-  python scripts/profile.py --round r13 --tag before q1_pricing_summary dedup_minhash_pairs
-  python scripts/profile.py --round r13 --tag before --headline   # the 19 benched rows
-  python scripts/profile.py --round r13 --tag before --extra      # the extra set
+  python scripts/profile_queries.py --round r13 --tag before q1_pricing_summary dedup_minhash_pairs
+  python scripts/profile_queries.py --round r13 --tag before --headline   # the 19 benched rows
+  python scripts/profile_queries.py --round r13 --tag before --extra      # the extra set
 """
 
 from __future__ import annotations

@@ -8,6 +8,7 @@ in the text pipeline.
 
 from sparkfulltextquery_spark.functions import fulltext, hashes, text  # noqa: F401
 from sparkfulltextquery_spark.functions import fulltext_queries  # noqa: F401  (registers)
+from sparkfulltextquery_spark.functions import percolate  # noqa: F401
 # the r7 split of fulltext_queries.py (file-size hygiene): these import
 # AFTER fulltext_queries — the indexed twins reuse inline rows' oracles via
 # the registry, so the inline rows must already be registered

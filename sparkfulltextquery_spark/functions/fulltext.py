@@ -23,7 +23,7 @@ within the Spark framework") rebuilt Spark-first (SURVEY.md §7 steps 3-4):
 The BM25 term weight is ONE expression, ``bm25_term_score``, shared by
 every BM25, BM25F and DisMax score, query-language and simple-syntax
 search and the percolator. At 100 TB the posting table is persisted
-bucketed by term (sources.tables.write_bucketed) so per-query term lookups
+bucketed by term (functions.index.build_index) so per-query term lookups
 are pruned scans with zero shuffle. Nothing here ever collects unbounded
 data to the driver.
 

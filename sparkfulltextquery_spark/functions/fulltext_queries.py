@@ -934,20 +934,3 @@ def fulltext_highlight_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "score", _highlight_expr(["join", "spark"]).alias("highlighted"))
         .orderBy(F.col("score").desc(), F.col("doc_id"))
     )
-
-
-# r8 file-size split: the percolation surface lives in percolate.py;
-# imported at the END (it consumes this module's CTE constants) and
-# re-exported so existing import sites keep working
-from sparkfulltextquery_spark.functions.percolate import (  # noqa: E402,F401
-    _percolate_bool,
-    add_percolator_queries,
-    percolate_from_table,
-    remove_percolator_queries,
-    percolate_matches,
-    percolate_scored,
-    read_scored_alerts,
-    register_percolator_queries,
-    stream_percolate_alerts,
-    stream_percolate_scored,
-)

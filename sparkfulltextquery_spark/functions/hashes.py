@@ -45,11 +45,3 @@ def h28(col: Column | str) -> Column:
 def h28_duck(expr: str) -> str:
     return f"('0x' || substr(md5({expr}), 1, 7))::BIGINT"
 
-
-def minhash_perm(h: Column, a: int, b: int) -> Column:
-    """One MinHash permutation value: (a*h + b) mod p, for h = h28(token)."""
-    return (F.lit(a) * h + F.lit(b)) % F.lit(MINHASH_PRIME)
-
-
-def minhash_perm_duck(h_expr: str, a: int, b: int) -> str:
-    return f"(({a} * {h_expr} + {b}) % {MINHASH_PRIME})"

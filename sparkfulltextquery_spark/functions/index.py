@@ -41,6 +41,7 @@ from sparkfulltextquery_spark.functions.fulltext import (
     proximity_pairs,
     top_k,
 )
+from sparkfulltextquery_spark.sources.tables import drop_managed_table
 
 
 _AUTO_BUCKETED_CONF = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
@@ -126,23 +127,14 @@ def build_index(
     if term_vectors:
         names["tvec"] = f"{table_prefix}_tvec"
         names["norms"] = f"{table_prefix}_norms"
-    # managed-table overwrite must also adopt a location ORPHANED by a
-    # previous session/process (r9, surfaced by the README quickstart:
-    # catalog metadata is per-session in-memory here, the warehouse
-    # directory is not — saveAsTable refuses the unowned directory with
-    # LOCATION_ALREADY_EXISTS). Same drop + Hadoop-FS delete protocol as
-    # register_percolator_queries; external builds (path=...) overwrite
-    # their explicit location and only need the catalog drop.
-    jvm = spark.sparkContext._jvm
-    wh = spark.conf.get("spark.sql.warehouse.dir")
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    # every table is dropped before any is written, so a failed build never
+    # leaves tables of two generations; an external build (path=...)
+    # overwrites its explicit location and only needs the catalog drop
     for t in names.values():
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        if not path:
-            loc = jvm.org.apache.hadoop.fs.Path(f"{wh}/{t.lower()}")
-            fs = loc.getFileSystem(hconf)
-            if fs.exists(loc):
-                fs.delete(loc, True)
+        if path:
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+        else:
+            drop_managed_table(spark, t)
 
     def writer(df: DataFrame, name: str):
         w = df.write.mode("overwrite")

@@ -12,6 +12,8 @@ differ only in the per-chunk output they build. The conjunctive form
 
 from __future__ import annotations
 
+import re
+import uuid
 from functools import partial, reduce
 
 from pyspark.sql import DataFrame, SparkSession
@@ -25,6 +27,7 @@ from sparkfulltextquery_spark.functions.fulltext_queries import (
 )
 from sparkfulltextquery_spark.registry import query
 from sparkfulltextquery_spark.sources import load_table
+from sparkfulltextquery_spark.sources.tables import drop_managed_table
 
 
 # stored percolator queries: (query_id, required terms) — conjunctive
@@ -211,7 +214,8 @@ def _resolve_expansions(keys: set, vocab: DataFrame | None) -> dict:
     return resolve_expansions_over(vocab.select("term"), keys)
 
 
-#: Schema of the persisted percolator query-term index: one row per
+#: Schema of an in-memory (ad-hoc or stream) query-term index; the
+#: persisted ``{table}_terms`` adds REG_STAMP_COL. One row per
 #: (stored query, positive concrete term); a NULL term marks a query with
 #: a positive EXPANSION atom (prefix/fuzzy/range/regex/wildcard), which is
 #: always a prefilter candidate — its concrete terms depend on the vocab
@@ -236,8 +240,8 @@ TERM_INDEX_BUCKETS = 16
 #: (term-bucketed) index side streams.
 PREFILTER_INDEX_BROADCAST_MAX_ROWS = 500_000
 
-#: Registration stamp column (r12, ADVICE r11): registry + term index are
-#: two tables written non-atomically; a shared fresh-per-write stamp lets
+#: Registration stamp column: registry + term index are two tables
+#: written non-atomically; a stamp shared by every row of both lets
 #: readers detect a crash between the writes (stamp mismatch → fall back
 #: to an index built from the registry itself) instead of prefiltering
 #: off a stale index and silently missing alerts.
@@ -588,67 +592,25 @@ def register_percolator_queries(
     vocab: DataFrame | None = None,
 ) -> str:
     """Persist a percolator registry as a TABLE (Elasticsearch stores
-    percolator queries in an index; Lucene Monitor in a query store) —
-    with the validation contract enforced at WRITE time, where a real
-    alerting system wants the failure: every query must parse, have a
-    positive atom (matchable), use only supported atom kinds, and — when
-    a ``vocab`` relation is supplied — its expansion atoms must resolve
-    under the ``max_expansions`` cap. A bad stored query rejected at
-    percolate time would silently take the whole registry down with it.
+    percolator queries in an index; Lucene Monitor in a query store),
+    replacing any registry of that name. The contract is enforced at
+    WRITE time, where an alerting system wants the failure: every query
+    must parse, have a positive atom (matchable), carry a distinct id and
+    use only supported atom kinds, and, when a ``vocab`` relation is
+    supplied, its expansion atoms must resolve under the
+    ``max_expansions`` cap. A bad stored query rejected at percolate time
+    would take the whole registry down with it.
 
-    The registry is intentionally small relative to the corpus (thousands
-    of queries vs billions of documents); readers collect it to the
-    driver to compile the shared-scan plan, the same bounded transfer as
-    ES loading stored queries into the percolator's memory index.
-
-    r11 (VERDICT r10 #1): registration ALSO persists the query-term
-    index as a sibling ``{table}_terms`` relation (TERM_INDEX_SCHEMA,
-    bucketed by term — r12) — the rows _prefilter_candidates_indexed
-    joins against the batch's terms, so percolate-time cost is
-    proportional to the CANDIDATE slice and the driver parses only
-    candidates; the whole registry is parsed exactly once, here, at
-    write time.
-
-    Crash-consistency contract (r12, ADVICE r11): the two tables are NOT
-    one atomic write, so both carry a shared ``reg_stamp`` column written
-    fresh per registration; the TERM INDEX is written FIRST, then the
-    registry — a crash between the writes leaves the old registry paired
-    with a new-stamped index, which readers detect (stamp mismatch) and
-    fall back to an index built from the registry itself instead of
-    silently missing alerts off a stale index. See _usable_term_index."""
-    import re
-    import uuid
-
-    # the name is interpolated into SQL and into the managed-location
-    # path below (ADVICE r08): restrict it to a bare safe identifier —
-    # a database-qualified name (db.tbl) would compute the wrong
-    # warehouse path, and anything else is injectable
-    if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", table):
-        raise ValueError(
-            f"percolator registry table name {table!r} must be an "
-            "unqualified identifier ([A-Za-z_][A-Za-z0-9_]*) — "
-            "database-qualified or quoted names are not supported"
-        )
+    The registry is ``table`` ``(query_id, query, reg_stamp)`` plus its
+    query-term index ``{table}_terms`` ``(query_id, term, reg_stamp)``,
+    bucketed by term: the rows the percolate prefilter joins against a
+    batch's terms, so the driver parses only candidates. Both carry one
+    fresh ``reg_stamp`` (see _write_registry). The registry is small
+    relative to the corpus; readers collect the candidate slice of it to
+    the driver to compile, as Elasticsearch loads stored queries into the
+    percolator's memory index."""
     rows = _validate_registry(spark, queries, vocab)
-    stamp = uuid.uuid4().hex
-    _overwrite_managed_table(
-        spark,
-        f"{table}_terms",
-        spark.createDataFrame(
-            [(qid, t, stamp) for qid, t in rows],
-            TERM_INDEX_STAMPED_SCHEMA,
-        ),
-        buckets=TERM_INDEX_BUCKETS,
-        bucket_col="term",
-    )
-    _overwrite_managed_table(
-        spark,
-        table,
-        spark.createDataFrame(
-            [(qid, q, stamp) for qid, q in queries],
-            f"query_id int, query string, {REG_STAMP_COL} string",
-        ),
-    )
+    _write_registry(spark, table, queries, rows, uuid.uuid4().hex, "overwrite")
     return table
 
 
@@ -687,31 +649,50 @@ def _validate_registry(
     return rows
 
 
-def _overwrite_managed_table(
+def _write_registry(
     spark: SparkSession,
-    name: str,
-    df: DataFrame,
-    buckets: int | None = None,
-    bucket_col: str | None = None,
-):
-    """Overwrite a managed registry table, also adopting a location
-    ORPHANED by another session/process (catalog metadata is per-session
-    in-memory here, the warehouse directory is not) — saveAsTable refuses
-    an existing unowned directory (LOCATION_ALREADY_EXISTS), so drop +
-    delete the leftover through the Hadoop FS API (portable to HDFS/S3A).
-    ``buckets`` writes the table bucketed+sorted by ``bucket_col`` (the
-    build_index posting discipline — r12, for the term index)."""
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    jvm = spark.sparkContext._jvm
-    wh = spark.conf.get("spark.sql.warehouse.dir")
-    loc = jvm.org.apache.hadoop.fs.Path(f"{wh}/{name.lower()}")
-    fs = loc.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    if fs.exists(loc):
-        fs.delete(loc, True)
-    w = df.write.mode("overwrite")
-    if buckets is not None:
-        w = w.bucketBy(buckets, bucket_col).sortBy(bucket_col)
-    w.saveAsTable(name)
+    table: str,
+    queries: list[tuple[int, str]],
+    term_rows: list[tuple[int, str | None]],
+    stamp: str,
+    mode: str,
+) -> None:
+    """The one registry writer: the term index ``{table}_terms`` first,
+    then the registry ``table``, both under ``stamp``. ``overwrite``
+    drops each table (and any orphaned location) just before writing
+    it; ``append`` adds rows under the same bucket spec.
+
+    The two writes are not atomic. A crash between them leaves a term
+    index that _usable_term_index still trusts only when every index row
+    carries the registry's stamp: an overwrite's fresh stamp then shows
+    as a mismatch, and an append under the registry's stamp leaves only
+    extra index rows, which candidates intersected with the registry
+    drop."""
+    # the name is interpolated into SQL and into the managed location
+    if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", table):
+        raise ValueError(
+            f"percolator registry table name {table!r} must be an "
+            "unqualified identifier ([A-Za-z_][A-Za-z0-9_]*) — "
+            "database-qualified or quoted names are not supported"
+        )
+    terms_tbl = f"{table}_terms"
+    if mode == "overwrite":
+        drop_managed_table(spark, terms_tbl)
+    (
+        spark.createDataFrame(
+            [(qid, t, stamp) for qid, t in term_rows], TERM_INDEX_STAMPED_SCHEMA
+        )
+        .write.mode(mode)
+        .bucketBy(TERM_INDEX_BUCKETS, "term")
+        .sortBy("term")
+        .saveAsTable(terms_tbl)
+    )
+    if mode == "overwrite":
+        drop_managed_table(spark, table)
+    spark.createDataFrame(
+        [(qid, q, stamp) for qid, q in queries],
+        f"query_id int, query string, {REG_STAMP_COL} string",
+    ).write.mode(mode).saveAsTable(table)
 
 
 def add_percolator_queries(
@@ -720,84 +701,37 @@ def add_percolator_queries(
     table: str = "sftq_percolator",
     vocab: DataFrame | None = None,
 ) -> str:
-    """Incrementally ADD stored queries to a persisted registry (the
-    Elasticsearch register-one-more-percolator-document shape) — without
-    rewriting the existing entries. The same write-time contract applies
-    to the new batch (parse, matchable, supported atoms, expansion
-    resolution under the cap), PLUS a registry-wide id-collision gate:
-    an id already stored raises before anything is appended (a silent
-    overwrite would silently re-route alerts). One bounded append — the
-    sibling ``{table}_terms`` index gets the new batch's rows appended in
-    the same call, so the prefilter relation stays consistent (r11; a
-    legacy registry without a term index gets one built from the full
-    post-add registry).
-
-    r12 (ADVICE r11): the TERM-INDEX rows append FIRST, carrying the
-    registry's current ``reg_stamp`` — a crash between the appends
-    leaves extra term rows under a matching stamp, which is harmless
-    (candidate ids are intersected with the registry), never a query
-    present in the registry but missing from the index (the silent-miss
-    direction)."""
-    new_terms = _validate_registry(spark, queries, vocab)
+    """Incrementally ADD stored queries to a registry written by
+    register_percolator_queries (the Elasticsearch
+    register-one-more-percolator-document shape), without rewriting the
+    stored entries. The new batch meets the same write-time contract,
+    and an id already stored raises before anything is written (a
+    silent overwrite would re-route alerts). A table pair without a
+    ``reg_stamp`` column or without ``{table}_terms`` was not written by
+    this module and raises. The new rows append to both tables under
+    the registry's current stamp (a fresh one if it is empty)."""
+    term_rows = _validate_registry(spark, queries, vocab)
+    terms_tbl = f"{table}_terms"
     main = spark.table(table)
-    existing = {int(r.query_id) for r in main.select("query_id").collect()}
-    clash = sorted(existing & {qid for qid, _q in queries})
+    if not (
+        spark.catalog.tableExists(terms_tbl)
+        and REG_STAMP_COL in main.columns
+        and REG_STAMP_COL in spark.table(terms_tbl).columns
+    ):
+        raise ValueError(
+            f"{table} is not a stamped percolator registry with a "
+            f"{terms_tbl} term index — write it with "
+            "register_percolator_queries"
+        )
+    stored = main.select("query_id", REG_STAMP_COL).collect()
+    clash = sorted({int(r.query_id) for r in stored} & {qid for qid, _q in queries})
     if clash:
         raise ValueError(
             f"query_id(s) {clash} already registered in {table} — remove "
             "first or use distinct ids"
         )
-    stamped = REG_STAMP_COL in main.columns
-    stamp = None
-    if stamped:
-        head = main.select(REG_STAMP_COL).head()
-        stamp = head[0] if head is not None else None
-    terms_tbl = f"{table}_terms"
-    if spark.catalog.tableExists(terms_tbl):
-        if REG_STAMP_COL in spark.table(terms_tbl).columns:
-            # stamped tables are bucketed (written together since r12);
-            # appends must declare the same bucket spec
-            (
-                spark.createDataFrame(
-                    [(qid, t, stamp) for qid, t in new_terms],
-                    TERM_INDEX_STAMPED_SCHEMA,
-                )
-                .write.mode("append")
-                .bucketBy(TERM_INDEX_BUCKETS, "term")
-                .sortBy("term")
-                .saveAsTable(terms_tbl)
-            )
-        else:
-            (
-                spark.createDataFrame(new_terms, TERM_INDEX_SCHEMA)
-                .write.mode("append")
-                .saveAsTable(terms_tbl)
-            )
-    else:
-        full = [
-            (int(r.query_id), r.query)
-            for r in main.orderBy("query_id").collect()
-        ] + list(queries)
-        rows = term_index_rows(full)
-        if stamped:
-            tdf = spark.createDataFrame(
-                [(qid, t, stamp) for qid, t in rows],
-                TERM_INDEX_STAMPED_SCHEMA,
-            )
-        else:
-            tdf = spark.createDataFrame(rows, TERM_INDEX_SCHEMA)
-        _overwrite_managed_table(
-            spark, terms_tbl, tdf,
-            buckets=TERM_INDEX_BUCKETS, bucket_col="term",
-        )
-    if stamped:
-        mdf = spark.createDataFrame(
-            [(qid, q, stamp) for qid, q in queries],
-            f"query_id int, query string, {REG_STAMP_COL} string",
-        )
-    else:
-        mdf = spark.createDataFrame(queries, "query_id int, query string")
-    mdf.write.mode("append").saveAsTable(table)
+    stamp = stored[0][REG_STAMP_COL] if stored else uuid.uuid4().hex
+    _write_registry(spark, table, queries, term_rows, stamp, "append")
     return table
 
 
@@ -806,46 +740,22 @@ def remove_percolator_queries(
     ids: list[int],
     table: str = "sftq_percolator",
 ) -> int:
-    """Remove stored queries by id. The registry is bounded-small (the
-    collect-to-compile contract), so removal is a validated rewrite of
-    the surviving rows rather than tombstones; an id that is not
-    registered raises (a no-op delete usually means an alerting
-    misconfiguration). Returns the number removed."""
-    import uuid
-
+    """Remove stored queries by id. The registry is bounded-small, so
+    removal rewrites the kept rows (and their term index) under a fresh
+    stamp rather than writing tombstones. An id that is not registered
+    raises: a no-op delete usually means an alerting misconfiguration.
+    Returns the number removed."""
     rows = [
         (int(r.query_id), r.query)
         for r in spark.table(table).orderBy("query_id").collect()
     ]
-    existing = {qid for qid, _q in rows}
-    missing = sorted(set(ids) - existing)
+    missing = sorted(set(ids) - {qid for qid, _q in rows})
     if missing:
         raise ValueError(f"query_id(s) {missing} not registered in {table}")
-    keep = [(qid, q) for qid, q in rows if qid not in set(ids)]
-    # rewrite order (r12, ADVICE r11): REGISTRY first under a FRESH stamp
-    # — a crash before the term-index rewrite leaves mismatched stamps,
-    # so readers rebuild the index from the registry instead of serving
-    # removed-id candidates off the stale index (harmless either way,
-    # but the stamp keeps the pair's consistency observable); both
-    # tables upgrade to the stamped schema on rewrite
-    stamp = uuid.uuid4().hex
-    (
-        spark.createDataFrame(
-            [(qid, q, stamp) for qid, q in keep],
-            f"query_id int, query string, {REG_STAMP_COL} string",
-        )
-        .write.mode("overwrite")
-        .saveAsTable(table)
-    )
-    _overwrite_managed_table(
-        spark,
-        f"{table}_terms",
-        spark.createDataFrame(
-            [(qid, t, stamp) for qid, t in term_index_rows(keep)],
-            TERM_INDEX_STAMPED_SCHEMA,
-        ),
-        buckets=TERM_INDEX_BUCKETS,
-        bucket_col="term",
+    drop = set(ids)
+    keep = [(qid, q) for qid, q in rows if qid not in drop]
+    _write_registry(
+        spark, table, keep, term_index_rows(keep), uuid.uuid4().hex, "overwrite"
     )
     return len(rows) - len(keep)
 
@@ -853,41 +763,29 @@ def remove_percolator_queries(
 def _usable_term_index(
     spark: SparkSession, table: str
 ) -> tuple[DataFrame | None, int | None]:
-    """Read-time consistency guard for the persisted query-term index
-    (r12, ADVICE r11): the registry and its ``{table}_terms`` sibling are
-    written non-atomically, so before trusting the index for
-    prefiltering, verify the pair is consistent — stamped pairs compare
-    their shared ``reg_stamp`` (one head() row per table; adds append
-    under the same stamp, register/remove rewrite fresh); legacy
-    unstamped pairs verify the index's id set COVERS the registry (one
-    bounded anti-join count — extra index rows are harmless, a registry
-    id missing from the index would be a silently-never-candidate query,
-    the exact miss class this guards against). On any mismatch returns
-    (None, None) and callers build the index from the registry itself.
-    Otherwise returns the (query_id, term) relation and its row count —
-    the count feeds the prefilter's broadcast-side auto-select without a
-    per-percolate count job."""
+    """Read-time consistency guard for the persisted query-term index.
+    The pair is usable only when ``{table}_terms`` exists, both tables
+    carry ``reg_stamp``, and one aggregate over the index finds every
+    row under the registry's stamp (``min = max = stamp``). Then it
+    returns the ``(query_id, term)`` relation and its row count, which
+    drives the prefilter's broadcast-side choice without a count job.
+    Otherwise (a torn write, or a pair not written by this module) it
+    returns (None, None) and callers prefilter through an index built
+    from the registry itself, which is always correct."""
     terms_tbl = f"{table}_terms"
     if not spark.catalog.tableExists(terms_tbl):
         return None, None
     main = spark.table(table)
     ti = spark.table(terms_tbl)
-    if REG_STAMP_COL in main.columns and REG_STAMP_COL in ti.columns:
-        mh = main.select(REG_STAMP_COL).head()
-        th = ti.select(REG_STAMP_COL).head()
-        if (mh[0] if mh else None) != (th[0] if th else None):
-            return None, None
-    else:
-        n_missing = (
-            main.select("query_id")
-            .distinct()
-            .join(ti.select("query_id").distinct(), "query_id", "left_anti")
-            .count()
-        )
-        if n_missing:
-            return None, None
-    sel = ti.select("query_id", "term")
-    return sel, sel.count()
+    if REG_STAMP_COL not in main.columns or REG_STAMP_COL not in ti.columns:
+        return None, None
+    head = main.select(REG_STAMP_COL).head()
+    lo, hi, n = ti.agg(
+        F.min(REG_STAMP_COL), F.max(REG_STAMP_COL), F.count(F.lit(1))
+    ).head()
+    if head is None or not (lo == hi == head[0]):
+        return None, None
+    return ti.select("query_id", "term"), n
 
 
 def percolate_from_table(
@@ -897,24 +795,14 @@ def percolate_from_table(
     vocab: DataFrame | None = None,
     matches: bool = False,
 ) -> DataFrame:
-    """Percolate against a PERSISTED registry table: read the (bounded)
-    stored queries back, compile, and run — the summary form by default,
-    the (query_id, doc_id) alerting table with ``matches=True``. When the
-    registry was written with its ``{table}_terms`` query-term index
-    (r11), the prefilter runs through it — one broadcast join,
-    candidates-only parse — instead of one built from the whole registry;
-    the index is trusted only after the _usable_term_index consistency
-    guard (r12, ADVICE r11), and its pinned row count drives the
-    prefilter's broadcast-side auto-select.
-
-    r12 candidate-slice FETCH: with a usable index, even the registry
-    READBACK is candidate-bounded — the candidate-id relation semi-joins
-    the registry table Spark-side and only the matching rows collect, so
-    per-percolate driver transfer is proportional to candidates, not
-    registry size (measured at the 1M-query registry: the whole-registry
-    collect was the dominant per-call cost). Registration enforces
-    distinct ids at write time, which is what makes skipping the
-    registry-wide driver-side re-check sound here."""
+    """Percolate the postings ``rel`` against a PERSISTED registry: the
+    summary form by default, the (query_id, doc_id) alerting table with
+    ``matches=True``. When _usable_term_index trusts ``{table}_terms``,
+    the candidate-id relation joins the registry Spark-side and only the
+    candidate slice reaches the driver, so per-call driver transfer and
+    parsing track candidates, not registry size; registration's
+    distinct-id check makes skipping the driver-side re-check sound.
+    Otherwise the whole registry is read back and prefiltered in memory."""
     term_index, ti_rows = _usable_term_index(spark, table)
     fn = percolate_matches if matches else _percolate_bool
     if term_index is None:

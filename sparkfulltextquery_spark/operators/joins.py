@@ -10,8 +10,8 @@ theta (BroadcastNestedLoopJoinExec.scala:32), cartesian
 
 Scale notes: every dim-side join here broadcasts (dims are bounded); the
 orders⋈lineitem joins shuffle on the order key — at 100 TB both sides would
-be bucketed on l_orderkey/o_orderkey to eliminate that shuffle (see
-sources.tables.write_bucketed).
+be bucketed on l_orderkey/o_orderkey to eliminate that shuffle
+(DataFrameWriter.bucketBy, as functions.index.build_index does for postings).
 """
 
 from __future__ import annotations

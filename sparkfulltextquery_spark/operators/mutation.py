@@ -10,8 +10,8 @@ and dynamic partition overwrite for the write-back (see
 test_streaming.py::test_incremental_rollup_dynamic_partition_overwrite).
 
 Scale notes (100 TB): the merge key join shuffles both sides on the key —
-at scale the target is bucketed on the merge key (sources.tables
-.write_bucketed) so only the delta shuffles; the CDC-apply pattern keeps
+at scale the target is bucketed on the merge key (DataFrameWriter
+.bucketBy) so only the delta shuffles; the CDC-apply pattern keeps
 the change feed small relative to the snapshot, and latest-wins collapse
 is a partial-aggregable min(struct) — no window sort over the snapshot.
 """

@@ -96,11 +96,6 @@ def _lit_d(x: float) -> str:
     return f"{v!r}D"
 
 
-def vec_sql(values) -> str:
-    """SQL literal for a double array."""
-    return "array(" + ", ".join(_lit_d(x) for x in values) + ")"
-
-
 def dot_sql(a: str, b: str, dim: int) -> str:
     """Unrolled Σ aᵢ·bᵢ over two SQL vector fragments (left-associated)."""
     if dim < 1:

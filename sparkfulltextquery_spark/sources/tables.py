@@ -60,25 +60,20 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_col: str,
-    num_buckets: int = 64,
-    sort_col: str | None = None,
-    path: str | None = None,
-) -> None:
-    """Persist a table bucketed on a key so later joins/lookups on that key
-    are shuffle-free (reference: DataFrameWriter.bucketBy/sortBy,
-    sql/core/.../DataFrameWriter.scala:170,184). Used for the posting index:
-    bucketBy(term) makes term lookups a pruned scan, not a shuffle.
-    """
-    w = df.write.mode("overwrite").bucketBy(num_buckets, bucket_col)
-    if sort_col:
-        w = w.sortBy(sort_col)
-    if path:
-        w = w.option("path", path)
-    w.saveAsTable(table_name)
+def drop_managed_table(spark: SparkSession, name: str) -> None:
+    """Drop the managed table ``name`` and delete its warehouse location,
+    also one ORPHANED by another session or process: the catalog is
+    per-session and in memory here, the warehouse directory is not, and
+    saveAsTable refuses an existing unowned directory
+    (LOCATION_ALREADY_EXISTS). The delete goes through the Hadoop FS API,
+    so it works on HDFS and S3A too. ``name`` must be unqualified: a
+    ``db.tbl`` name would compute the wrong location."""
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
+    wh = spark.conf.get("spark.sql.warehouse.dir")
+    loc = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(f"{wh}/{name.lower()}")
+    fs = loc.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    if fs.exists(loc):
+        fs.delete(loc, True)
 
 
 def compact_files(

@@ -96,6 +96,18 @@ def test_readme_quickstart_executes(spark):
     assert {q for q, _d in rows} <= {1, 2}
 
 
+def test_no_script_shadows_a_stdlib_module():
+    """`python scripts/<name>.py` puts scripts/ first on sys.path, so a
+    script named like a stdlib module (profile.py) replaces that module
+    for every sibling script — `import pyspark` then dies."""
+    shadowing = sorted(
+        p.name
+        for p in (REPO / "scripts").glob("*.py")
+        if p.stem in sys.stdlib_module_names
+    )
+    assert not shadowing, f"scripts shadow stdlib modules: {shadowing}"
+
+
 def test_sdist_builds_and_ships_every_module(tmp_path):
     """PEP 517 sdist build (r10, VERDICT r09 #7): build_sdist produces an
     archive containing EVERY package module (the real packaging risk: a

@@ -595,8 +595,7 @@ def test_percolator_indexed_prefilter_broadcast_flip_equals(spark, monkeypatch):
 def test_percolator_registry_crash_consistency_guard(spark):
     """r12 (ADVICE r11, medium): the registry and its term index are two
     non-atomic writes; a crash between them must NEVER cause silently
-    missed alerts. Stamped pairs detect the torn state via reg_stamp
-    mismatch; legacy unstamped pairs via id-coverage — in both cases
+    missed alerts. A torn pair shows as a reg_stamp mismatch, and
     percolate_from_table falls back to the in-memory prefilter and still
     produces the exact unfiltered result for the CURRENT registry."""
     from sparkfulltextquery_spark.functions import fulltext as FT
@@ -647,40 +646,6 @@ def test_percolator_registry_crash_consistency_guard(spark):
     }
     assert via_table == direct and direct
 
-    # legacy unstamped pair with a COVERAGE hole: terms table misses ids
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}_terms")
-    (
-        spark.createDataFrame(reg_b, "query_id int, query string")
-        .write.mode("overwrite")
-        .saveAsTable(tbl)
-    )
-    partial = [
-        (qid, t)
-        for qid, t in P.term_index_rows(reg_b)
-        if qid % 2 == 0  # half the registry silently missing
-    ]
-    (
-        spark.createDataFrame(partial, P.TERM_INDEX_SCHEMA)
-        .write.mode("overwrite")
-        .saveAsTable(f"{tbl}_terms")
-    )
-    ti, _rows = P._usable_term_index(spark, tbl)
-    assert ti is None
-    via_table = {
-        (int(r.query_id), int(r.doc_id))
-        for r in P.percolate_from_table(spark, rel, table=tbl, matches=True)
-        .collect()
-    }
-    assert via_table == direct
-    # legacy pair that DOES cover: guard passes
-    (
-        spark.createDataFrame(P.term_index_rows(reg_b), P.TERM_INDEX_SCHEMA)
-        .write.mode("overwrite")
-        .saveAsTable(f"{tbl}_terms")
-    )
-    ti, _rows = P._usable_term_index(spark, tbl)
-    assert ti is not None
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
     spark.sql(f"DROP TABLE IF EXISTS {tbl}_terms")
 

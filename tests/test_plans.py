@@ -163,6 +163,47 @@ def test_index_build_job_count(spark, tmp_path):
         assert n <= most, f"term_vectors={tv}: {n} jobs"
 
 
+def test_percolator_registry_write_and_guard_job_counts(spark):
+    """On a 300-query registry, register starts 2 jobs (term index, then
+    registry), add 3 (one read of the stored ids and stamp, two appends),
+    remove at most 5 (the read-back, two rewrites) and the read-time guard
+    at most 3 (the registry's stamp, one aggregate over the term index)."""
+    from sparkfulltextquery_spark.functions import fulltext as FT
+    from sparkfulltextquery_spark.functions.percolate import (
+        _usable_term_index,
+        add_percolator_queries,
+        register_percolator_queries,
+        remove_percolator_queries,
+        term_index_rows,
+    )
+    from sparkfulltextquery_spark.sources import load_table
+
+    docs = load_table(spark, SF_DIR, "documents")
+    terms = sorted(
+        t
+        for t in (r.term for r in FT.positional_postings(docs).select("term").distinct().collect())
+        if t.isalpha() and t not in ("and", "or", "not")
+    )
+    queries = [
+        (i + 1, f"{terms[7 * i % len(terms)]} OR {terms[(13 * i + 5) % len(terms)]}")
+        for i in range(310)
+    ]
+    base, extra = queries[:300], queries[300:]
+    t = "t_perc_jobs"
+    register_percolator_queries(spark, base, table=t)  # warm
+    for label, fn, most in (
+        ("register", lambda: register_percolator_queries(spark, base, table=t), 2),
+        ("add", lambda: add_percolator_queries(spark, extra, table=t), 3),
+        ("guard", lambda: _usable_term_index(spark, t), 3),
+        ("remove", lambda: remove_percolator_queries(spark, [q for q, _ in extra], table=t), 5),
+    ):
+        _out, n = _jobs_started(spark, fn)
+        assert n <= most, f"{label}: {n} jobs"
+    assert _usable_term_index(spark, t)[1] == len(term_index_rows(base))
+    spark.sql(f"DROP TABLE IF EXISTS {t}")
+    spark.sql(f"DROP TABLE IF EXISTS {t}_terms")
+
+
 def test_no_cartesian_in_equijoins(spark):
     for name in ("join_inner_broadcast", "join_using_natural", "dedup_minhash_pairs"):
         df = _q(spark, name)

@@ -812,7 +812,7 @@ def test_percolate_bool_rejects_bad_registrations(spark):
     percolator) and unsupported atom kinds fail loudly at compile time."""
     import pytest
 
-    from sparkfulltextquery_spark.functions.fulltext_queries import _percolate_bool
+    from sparkfulltextquery_spark.functions.percolate import _percolate_bool
 
     rel = spark.createDataFrame(
         [(1, "spark", [0])], "doc_id long, term string, positions array<int>"
@@ -831,7 +831,7 @@ def test_percolator_table_registration_validates_at_write(spark):
     in-memory list."""
     import pytest
 
-    from sparkfulltextquery_spark.functions.fulltext_queries import (
+    from sparkfulltextquery_spark.functions.percolate import (
         _percolate_bool,
         percolate_from_table,
         register_percolator_queries,
@@ -860,7 +860,7 @@ def test_percolator_registry_incremental_add_remove(spark):
     bounded registry and fails loudly on unknown ids."""
     import pytest
 
-    from sparkfulltextquery_spark.functions.fulltext_queries import (
+    from sparkfulltextquery_spark.functions.percolate import (
         add_percolator_queries,
         percolate_from_table,
         register_percolator_queries,
@@ -896,13 +896,108 @@ def test_percolator_registry_incremental_add_remove(spark):
     assert spark.table(t).count() == 0
 
 
+def test_percolator_registry_torn_writes_never_miss_alerts(spark, monkeypatch):
+    """The registry writer writes {table}_terms, then the registry. A
+    crash between the two writes of a register over an existing registry,
+    an add or a remove must cost no alert: percolate_from_table equals
+    unfiltered percolation of the registry as stored. Each torn index
+    below would drop a stored query's alerts if it were trusted. A
+    hand-written pair without reg_stamp is never trusted."""
+    import pytest
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from sparkfulltextquery_spark.functions.percolate import (
+        TERM_INDEX_SCHEMA,
+        _usable_term_index,
+        add_percolator_queries,
+        percolate_from_table,
+        percolate_matches,
+        register_percolator_queries,
+        remove_percolator_queries,
+        term_index_rows,
+    )
+
+    rel = spark.createDataFrame(
+        [(1, "spark", [0]), (1, "join", [1]), (2, "vector", [0]), (3, "stream", [0])],
+        "doc_id long, term string, positions array<int>",
+    )
+    base = [(1, "spark AND join"), (2, "vector")]
+    t = "t_perc_torn"
+    real_save = DataFrameWriter.saveAsTable
+
+    def crash_after_first_write(write):
+        written = []
+
+        def save(self, name, *args, **kwargs):
+            real_save(self, name, *args, **kwargs)
+            written.append(name)
+            raise RuntimeError("simulated crash between the registry writes")
+
+        with monkeypatch.context() as m:
+            m.setattr(DataFrameWriter, "saveAsTable", save)
+            with pytest.raises(RuntimeError, match="simulated crash"):
+                write()
+        assert written == [f"{t}_terms"]
+
+    def assert_exact(expected_registry):
+        stored = [
+            (int(r.query_id), r.query)
+            for r in spark.table(t).orderBy("query_id").collect()
+        ]
+        assert stored == expected_registry
+        via_table = {
+            tuple(r) for r in percolate_from_table(spark, rel, t, matches=True).collect()
+        }
+        direct = {
+            tuple(r) for r in percolate_matches(rel, stored, prefilter=False).collect()
+        }
+        assert via_table == direct == {(1, 1), (2, 2)}
+
+    # register over an existing registry: a fresh-stamped index of ids
+    # the stored registry does not hold
+    register_percolator_queries(spark, base, table=t)
+    crash_after_first_write(
+        lambda: register_percolator_queries(spark, [(3, "stream")], table=t)
+    )
+    assert _usable_term_index(spark, t) == (None, None)
+    assert_exact(base)
+
+    # add: extra index rows under the registry's stamp stay usable
+    register_percolator_queries(spark, base, table=t)
+    crash_after_first_write(
+        lambda: add_percolator_queries(spark, [(3, "stream")], table=t)
+    )
+    assert _usable_term_index(spark, t)[0] is not None
+    assert_exact(base)
+
+    # remove: the rewritten index lacks id 2, the registry still holds it
+    register_percolator_queries(spark, base, table=t)
+    crash_after_first_write(lambda: remove_percolator_queries(spark, [2], table=t))
+    assert _usable_term_index(spark, t) == (None, None)
+    assert_exact(base)
+
+    # hand-written unstamped pair whose index misses id 2
+    for name in (t, f"{t}_terms"):
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+    spark.createDataFrame(base, "query_id int, query string").write.saveAsTable(t)
+    spark.createDataFrame(
+        [r for r in term_index_rows(base) if r[0] == 1], TERM_INDEX_SCHEMA
+    ).write.saveAsTable(f"{t}_terms")
+    assert _usable_term_index(spark, t) == (None, None)
+    assert_exact(base)
+    with pytest.raises(ValueError, match="not a stamped percolator registry"):
+        add_percolator_queries(spark, [(3, "stream")], table=t)
+    for name in (t, f"{t}_terms"):
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
 def test_percolator_rejects_duplicate_query_ids(spark):
     """ADVICE r08: a duplicate query_id used to silently overwrite the
     earlier stored query — silently missed alerts. Both the compile path
     and table registration must fail loudly."""
     import pytest
 
-    from sparkfulltextquery_spark.functions.fulltext_queries import (
+    from sparkfulltextquery_spark.functions.percolate import (
         _percolate_bool,
         register_percolator_queries,
     )
@@ -925,7 +1020,7 @@ def test_percolator_registry_table_name_validated(spark):
     unsafe names are rejected before any catalog mutation."""
     import pytest
 
-    from sparkfulltextquery_spark.functions.fulltext_queries import (
+    from sparkfulltextquery_spark.functions.percolate import (
         register_percolator_queries,
     )
 

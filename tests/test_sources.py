@@ -93,6 +93,44 @@ def test_save_modes(spark, tmp_path):
         assert "already exists" in str(e)
 
 
+def test_managed_writes_adopt_an_orphaned_location(spark):
+    """A warehouse directory with no catalog entry (left by another
+    session: the catalog is per-session, the warehouse is not) makes a
+    plain saveAsTable fail with LOCATION_ALREADY_EXISTS. Registry
+    registration and build_index both adopt it and read back exactly."""
+    from pathlib import Path
+    from urllib.parse import urlparse
+
+    from sparkfulltextquery_spark.functions import fulltext as FT
+    from sparkfulltextquery_spark.functions.index import build_index
+    from sparkfulltextquery_spark.functions.percolate import register_percolator_queries
+
+    wh = Path(urlparse(spark.conf.get("spark.sql.warehouse.dir")).path)
+    reg, prefix = "t_orphan_reg", "t_orphan_idx"
+    names = [reg, f"{reg}_terms"] + [
+        f"{prefix}_{s}" for s in ("postings", "df", "dl", "stats", "tvec", "norms")
+    ]
+    for name in names:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+        (wh / name).mkdir(parents=True, exist_ok=True)
+        (wh / name / "junk").write_text("left by another session")
+
+    queries = [(1, "spark AND join"), (2, "vector")]
+    register_percolator_queries(spark, queries, table=reg)
+    stored = [(int(r.query_id), r.query) for r in spark.table(reg).orderBy("query_id").collect()]
+    assert stored == queries
+
+    docs = load_table(spark, SF_DIR, "documents")
+    build_index(docs, table_prefix=prefix, num_buckets=4)
+    assert spark.table(f"{prefix}_stats").head().n_docs == docs.count()
+    want = FT.positional_postings(docs).select("doc_id", "term", "tf")
+    got = spark.table(f"{prefix}_postings").select("doc_id", "term", "tf")
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+    for name in names:
+        assert not (wh / name / "junk").exists()
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
 def test_compaction_merges_small_files(spark, tmp_path):
     """64-way fragmented write → compact_files rewrites at the target size
     with a narrow (shuffle-free) coalesce; rows and values survive."""

@@ -1013,7 +1013,7 @@ def test_streaming_percolation_alerts_equal_batch(spark, tmp_path):
     no duplicate alerts, no missed ones — and survive a restart cycle
     via the checkpoint."""
     from sparkfulltextquery_spark.functions import fulltext as FT
-    from sparkfulltextquery_spark.functions.fulltext_queries import (
+    from sparkfulltextquery_spark.functions.percolate import (
         percolate_matches,
     )
     from sparkfulltextquery_spark.sources import load_table
